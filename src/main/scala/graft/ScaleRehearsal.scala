@@ -696,7 +696,7 @@ object ScaleRehearsal {
     // namespace, so linear in copies EXACTLY
     val expected = copies * (nBase + nSub)
     val mergedRows = sources.zipnum.ZipNumReader
-      .lines(spark, s"$base/merged").count()
+      .localLines(conf, s"$base/merged").size
     require(mergedRows == expected,
       s"spine invariant violated: merged rows $mergedRows != " +
         s"copies×(nBase+nSub) = $expected — day cap or merge lost/dup'd rows")
@@ -719,8 +719,8 @@ object ScaleRehearsal {
     val prunedBlocks = idx.prune(Some(servStart), Some(servEnd)).size
     r0 = read.get; w0 = write.get
     val t2 = System.nanoTime()
-    val served = sources.zipnum.ZipNumReader
-      .lines(spark, s"$base/merged", Some(servStart), Some(servEnd)).count()
+    val served = operators.ClusterOps
+      .range(conf, Some(servStart), Some(servEnd), Seq(s"$base/merged")).size
     val serveWall = (System.nanoTime() - t2) / 1e9
     graftshim.ListenerShim.drain(spark.sparkContext)
     val (serveRead, serveWrite) = (read.get - r0, write.get - w0)

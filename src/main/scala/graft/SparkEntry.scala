@@ -465,8 +465,9 @@ object SparkEntry {
     // own design note, hadoop/cdx/notes.txt:1-36: bounds are raw-line
     // string compares), so the q19 writer and the summary-pruned range
     // serve take CDXJ lines unchanged; only the per-line codec differs.
-    // Serving path: driver-side summary prune → one task per block
-    // slice → limit-3 split + JSON extract (all codegen'd builtins).
+    // Serving path: summary prune and block-slice read on the driver
+    // (as `cluster-range` serves) → limit-3 split + JSON extract (all
+    // codegen'd builtins).
     "q135_cdxj_zipnum" -> ((s, dir) => {
       import s.implicits._
       val base = tmpDir("q135", dir)
@@ -482,8 +483,9 @@ object SparkEntry {
           graft.operators.Boundaries.sample(lines, 8),
           linesPerBlock = 500, overwrite = true)
       }
-      val served = s.createDataset(graft.sources.zipnum.ZipNumReader
-        .lines(s, out, Some("org,site1"), Some("org,site2"))).toDF("line")
+      val served = graft.sources.zipnum.ZipNumReader.localLines(
+        s.sparkContext.hadoopConfiguration, out,
+        Some("org,site1"), Some("org,site2")).toSeq.toDF("line")
       served.select(col("line") +: graft.model.CdxJ.parseCols(col("line")): _*)
     }),
 

@@ -128,9 +128,9 @@ object GraftCli {
         graft.operators.ClusterOps.mergeFromArgs(spark, rest)
         spark.stop()
       case "cluster-range" =>
-        val spark = session("cluster-range")
-        graft.operators.ClusterOps.rangeFromArgs(spark, rest)
-        spark.stop()
+        // cluster-range <start|-> <end|-> <in...> — driver-local, no session
+        graft.operators.ClusterOps.rangeFromArgs(
+          new org.apache.hadoop.conf.Configuration(), rest)
       case "file-search" =>
         // file-search <sorted-file> <start> [<end>] — binary-searched dump
         val stf = new graft.sources.SortedTextFile(rest(0),

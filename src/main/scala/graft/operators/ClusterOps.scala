@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 
@@ -15,8 +16,9 @@ import graft.sources.zipnum.{ZipNumFormat, ZipNumIndex, ZipNumReader, ZipNumWrit
  *          (jobs/MergeClusters.java:68-152 had a map-side merge; here each
  *          output partition block-prunes its key range from every input,
  *          heap-merges, and streams cleanup state over the sorted run).
- * range  — [start, end) dump, blocks pruned via ALL.summary, k-way merged
- *          driver-side like cdx/CDXClusterRangeDumper.java:39-74.
+ * range  — [start, end) dump, blocks pruned via ALL.summary, read and
+ *          k-way merged on the driver with no Spark job, like the
+ *          single-process cdx/CDXClusterRangeDumper.java:39-74.
  */
 object ClusterOps {
 
@@ -79,15 +81,24 @@ object ClusterOps {
       overwrite = overwrite)
   }
 
-  /** Stream [start, end) of one or more clusters, globally sorted: each
-    * cluster's partition-ordered pruned scan is k-way merged driver-side —
-    * only the requested range ever leaves the executors. */
+  /** Stream [start, end) of one or more clusters, globally sorted. */
   def range(spark: SparkSession, start: Option[String], end: Option[String],
-            dirs: Seq[String]): Iterator[String] = {
-    val streams = dirs.map(d =>
-      ZipNumReader.lines(spark, d, start, end).toLocalIterator)
-    SortedMerge.mergeIterators(streams)
-  }
+            dirs: Seq[String]): Iterator[String] =
+    range(spark.sparkContext.hadoopConfiguration, start, end, dirs)
+
+  /** Stream [start, end) of one or more clusters, globally sorted: each
+    * cluster's pruned block slices are read on the calling thread and
+    * k-way merged in byte order — no Spark job, one open gzip stream per
+    * cluster at a time. */
+  def range(conf: Configuration, start: Option[String], end: Option[String],
+            dirs: Seq[String]): Iterator[String] =
+    mergeRanges(conf, start, end, dirs.map(ZipNumIndex.load(_, conf)))
+
+  private def mergeRanges(conf: Configuration, start: Option[String],
+                          end: Option[String],
+                          indexes: Seq[ZipNumIndex.ClusterIndex]): Iterator[String] =
+    SortedMerge.mergeIterators(
+      indexes.map(ZipNumReader.localLines(conf, _, start, end)))(graft.util.KeyOrder)
 
   // ------------------------------------------------------------------ CLI
 
@@ -143,22 +154,23 @@ object ClusterOps {
   }
 
   /** cluster-range <start|-> <end|-> <in...> — dump to stdout; block-prune
-    * stats to stderr. */
-  def rangeFromArgs(spark: SparkSession, args: Array[String]): Unit = {
+    * stats to stderr. Needs no SparkSession. */
+  def rangeFromArgs(conf: Configuration, args: Array[String],
+                    stdout: java.io.OutputStream = System.out,
+                    stderr: java.io.PrintStream = System.err): Unit = {
     require(args.length >= 3,
       "usage: cluster-range <start|-> <end|-> <in...>")
     val start = Option(args(0)).filter(_ != "-")
     val end = Option(args(1)).filter(_ != "-")
-    val dirs = args.drop(2).toSeq
-    val conf = spark.sparkContext.hadoopConfiguration
-    dirs.foreach { d =>
-      val idx = ZipNumIndex.load(d, conf)
-      System.err.println(
-        s"$d: ${idx.prune(start, end).size}/${idx.blocks.size} blocks in range")
+    val indexes = args.drop(2).toSeq.map(ZipNumIndex.load(_, conf))
+    indexes.foreach { idx =>
+      stderr.println(s"${idx.dir}: ${idx.prune(start, end).size}/" +
+        s"${idx.blocks.size} blocks in range")
     }
     val out = new java.io.BufferedWriter(
-      new java.io.OutputStreamWriter(System.out, "UTF-8"), 1 << 16)
-    range(spark, start, end, dirs).foreach { l => out.write(l); out.write('\n') }
+      new java.io.OutputStreamWriter(stdout, "UTF-8"), 1 << 16)
+    mergeRanges(conf, start, end, indexes)
+      .foreach { l => out.write(l); out.write('\n') }
     out.flush()
   }
 

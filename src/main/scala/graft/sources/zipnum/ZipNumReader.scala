@@ -1,7 +1,5 @@
 package graft.sources.zipnum
 
-import java.io.InputStream
-import java.nio.charset.StandardCharsets.UTF_8
 import java.util.zip.GZIPInputStream
 
 import org.apache.hadoop.conf.Configuration
@@ -13,44 +11,33 @@ import org.apache.spark.util.SerializableConfiguration
 import graft.sources.zipnum.ZipNumIndex.Slice
 
 /**
- * Distributed ZipNum cluster reader — the serving path (SURVEY §2 S5/Q1/Q2,
- * §3.3). Planning happens driver-side over `ALL.summary`; each task streams
- * one byte slice of a shard through a single open stream (gzip members are
- * concatenated, `GZIPInputStream` walks them natively), splits on LF only
- * (interior CR is data), and residual-trims to [start, end) — inclusive
- * start / exclusive end, the bound semantics of
+ * ZipNum cluster reader (SURVEY §2 S5/Q1/Q2, §3.3). Planning happens over
+ * `ALL.summary`; each slice of a shard streams through a single open
+ * stream (gzip members are concatenated, `GZIPInputStream` walks them
+ * natively), splits on LF only (interior CR is data), and residual-trims
+ * to [start, end) — inclusive start / exclusive end, the bound semantics of
  * /root/reference/src/main/java/org/archive/hadoop/cdx/ClusterRange.java:57-62
  * (StartBoundedStringIterator / BoundedStringIterator over raw lines).
+ *
+ * Key-range lookups read driver-local ([[localLines]]), like the
+ * reference's single-process range dumper; whole-cluster distributed
+ * reads go through [[rangesRdd]] (merge) or the DSv2 `zipnum` scan.
  */
 object ZipNumReader {
 
-  /** Lines of `[start, end)` from one cluster. Partitions are in cluster key
-    * order and each partition is internally sorted, so
-    * `rdd.toLocalIterator` streams the range fully ordered. */
-  def lines(spark: SparkSession, dir: String,
-            start: Option[String] = None, end: Option[String] = None,
-            maxSliceBytes: Long = ZipNumIndex.DefaultMaxSliceBytes): RDD[String] = {
-    val index = ZipNumIndex.load(dir, spark.sparkContext.hadoopConfiguration)
-    val slices = index.slices(index.prune(start, end), maxSliceBytes)
-    slicesRdd(spark, slices, start, end)
-  }
+  /** Lines of `[start, end)` from one cluster, in cluster key order, read
+    * on the calling thread with no Spark job. */
+  def localLines(conf: Configuration, dir: String,
+                 start: Option[String] = None,
+                 end: Option[String] = None): Iterator[String] =
+    localLines(conf, ZipNumIndex.load(dir, conf), start, end)
 
-  /** Lines of the given slices, residual-trimmed to [start, end).
-    *
-    * `parallelize(seq, n)` with `seq.length == n` deterministically
-    * places element i in partition i (ParallelCollectionRDD slices at
-    * `i*len/numSlices`), so the slice descriptions need NO partitionBy —
-    * an earlier IdentityPartitioner pass here was a real (if tiny,
-    * metadata-only) shuffle stage per read that broke the literal
-    * zero-shuffle contract the merge pipeline advertises, and an extra
-    * stage barrier per input cluster. */
-  def slicesRdd(spark: SparkSession, slices: Seq[Slice],
-                start: Option[String], end: Option[String]): RDD[String] = {
-    val conf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
-    spark.sparkContext
-      .parallelize(slices, math.max(1, slices.size))
-      .mapPartitions(_.flatMap(readSlice(conf.value, _, start, end)))
-  }
+  /** [[localLines]] over an already-loaded summary. Slices open lazily, one
+    * at a time, and each closes once exhausted. */
+  def localLines(conf: Configuration, index: ZipNumIndex.ClusterIndex,
+                 start: Option[String], end: Option[String]): Iterator[String] =
+    index.slices(index.prune(start, end)).iterator
+      .flatMap(readSlice(conf, _, start, end))
 
   /**
    * RDD whose partition i holds the merged-ready key range
@@ -72,9 +59,10 @@ object ZipNumReader {
         val hi = if (i == nPart - 1) None else Some(boundaries(i))
         (lo, hi, index.slices(index.prune(lo, hi)))
       }
-    // parallelize with parts.length == nPart puts range i in partition i
-    // deterministically (see slicesRdd) — no partitioner, no shuffle, no
-    // extra stage barrier per input cluster
+    // `parallelize(seq, n)` with `seq.length == n` deterministically
+    // places element i in partition i (ParallelCollectionRDD slices at
+    // `i*len/numSlices`), so range i lands in partition i with no
+    // partitioner, no shuffle and no extra stage barrier per input cluster
     spark.sparkContext
       .parallelize(parts, nPart)
       .mapPartitions(_.flatMap { case (lo, hi, ss) =>

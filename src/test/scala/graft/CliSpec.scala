@@ -1,12 +1,14 @@
 package graft
 
-import java.io.{ByteArrayOutputStream, PrintWriter, StringWriter}
+import java.io.{ByteArrayOutputStream, PrintStream, PrintWriter, StringWriter}
 import java.nio.file.{Files, Paths}
 
 import org.apache.hadoop.conf.Configuration
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.cli.{FsTools, GraftCli}
+import graft.operators.ClusterOps
+import graft.sources.zipnum.ZipNumFormat
 
 /** The JobDriver-parity utility verbs (fs-lsr/mv/sync/cat, the
   * http-import line grammar) — logic-level tests; the HTTP/range
@@ -142,6 +144,35 @@ class CliSpec extends AnyFunSuite {
     // while HDFS throws — same user error, opposite outcomes)
     val e2 = intercept[java.io.IOException](cat(f.toString, "99"))
     assert(e2.getMessage.contains("past EOF"))
+  }
+
+  test("cluster-range needs no SparkSession: the range goes to stdout " +
+      "and one prune line per cluster to stderr") {
+    val d = tmpDir("crange").resolve("cluster")
+    Files.createDirectories(d)
+    val b0 = Seq("org,a)/ 20120101000000 x0", "org,a)/ 20120102000000 x1")
+    val b1 = Seq("org,b)/ 20120101000000 y0", "org,c)/ 20120101000000 y1")
+    def member(ls: Seq[String]) =
+      ZipNumFormat.gzipMember(ls.mkString("", "\n", "\n").getBytes("UTF-8"))
+    val (m0, m1) = (member(b0), member(b1))
+    Files.write(d.resolve("part-a-00000.gz"), m0 ++ m1)
+    Files.writeString(d.resolve("ALL.summary"), Seq(
+      ZipNumFormat.Block(ZipNumFormat.summaryKey(b0.head), "part-a-00000",
+        0, m0.length),
+      ZipNumFormat.Block(ZipNumFormat.summaryKey(b1.head), "part-a-00000",
+        m0.length, m1.length))
+      .map(ZipNumFormat.formatSummaryLine).mkString("", "\n", "\n"))
+    def run(args: String*): (String, String) = {
+      val out = new ByteArrayOutputStream(); val err = new ByteArrayOutputStream()
+      ClusterOps.rangeFromArgs(conf, args.toArray, out,
+        new PrintStream(err, true, "UTF-8"))
+      (out.toString("UTF-8"), err.toString("UTF-8"))
+    }
+    // [start, end) trims inside the one block the summary keeps
+    assert(run("org,a)/ 20120102", "org,b", d.toString) ==
+      ("org,a)/ 20120102000000 x1\n", s"$d: 1/2 blocks in range\n"))
+    assert(run("-", "-", d.toString) ==
+      ((b0 ++ b1).mkString("", "\n", "\n"), s"$d: 2/2 blocks in range\n"))
   }
 
   test("http-import line grammar: bare URL takes the basename, " +

@@ -7,8 +7,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.model.Cdx
 import graft.operators.{Boundaries, BoundaryPartitioner, ClusterOps, SortedMerge}
 import graft.sources.zipnum.{ZipNumIndex, ZipNumReader}
+import graft.util.KeyOrder
 
 class ClusterOpsSpec extends AnyFunSuite with SparkTestSession {
+
+  private lazy val conf = spark.sparkContext.hadoopConfiguration
 
   private def tmp(prefix: String): String =
     Files.createTempDirectory(
@@ -47,8 +50,8 @@ class ClusterOpsSpec extends AnyFunSuite with SparkTestSession {
       new java.io.File(d).listFiles().map(f =>
         f.getName -> Files.readAllBytes(f.toPath).toSeq).toMap
     assert(shardBytes(d1) == shardBytes(d2))
-    // all lines present and globally sorted across partition-ordered read
-    val back = ZipNumReader.lines(spark, d1).toLocalIterator.toSeq
+    // all lines present and globally sorted across the slice-ordered read
+    val back = ZipNumReader.localLines(conf, d1).toSeq
     assert(back == lines.sorted)
     // 4 shards from 3 interior boundaries (all ranges non-empty here)
     val idx = ZipNumIndex.load(d1, spark.sparkContext.hadoopConfiguration)
@@ -67,7 +70,7 @@ class ClusterOpsSpec extends AnyFunSuite with SparkTestSession {
       linesPerBlock = 50)
     val out = tmp("mout") + "/c"
     ClusterOps.merge(spark, Seq(da, db), out, nShards = 3)
-    val back = ZipNumReader.lines(spark, out).toLocalIterator.toSeq
+    val back = ZipNumReader.localLines(conf, out).toSeq
     assert(back == (a ++ b).sorted)
   }
 
@@ -97,12 +100,10 @@ class ClusterOpsSpec extends AnyFunSuite with SparkTestSession {
     try {
       val out = tmp("zout") + "/c"
       ClusterOps.merge(spark, Seq(da, db), out, nShards = 3)
-      // snapshot BEFORE the verification count — Dataset.count() itself
-      // exchanges per-partition partials (that's the count's shuffle,
-      // not the merge's)
+      // snapshot BEFORE the verification read, so only the merge counts
       org.apache.spark.sql.graftshim.ListenerShim.drain(spark.sparkContext)
       val mergeMoved = moved.get
-      assert(ZipNumReader.lines(spark, out).count() == 500)
+      assert(ZipNumReader.localLines(conf, out).size == 500)
       assert(mergeMoved == 0,
         s"the zero-shuffle merge moved $mergeMoved bytes through a shuffle")
     } finally spark.sparkContext.removeSparkListener(l)
@@ -119,7 +120,7 @@ class ClusterOpsSpec extends AnyFunSuite with SparkTestSession {
     }
     val out = tmp("m5out") + "/c"
     ClusterOps.merge(spark, dirs, out, nShards = 2)
-    val back = ZipNumReader.lines(spark, out).toLocalIterator.toSeq
+    val back = ZipNumReader.localLines(conf, out).toSeq
     assert(back == sets.flatten.sorted)
   }
 
@@ -134,7 +135,7 @@ class ClusterOpsSpec extends AnyFunSuite with SparkTestSession {
     val out = tmp("capout") + "/c"
     ClusterOps.merge(spark, Seq(d), out, nShards = 1, globalCdx = true,
       dayLimit = 2)
-    val back = ZipNumReader.lines(spark, out).collect().toSeq.sorted
+    val back = ZipNumReader.localLines(conf, out).toSeq.sorted
     assert(back.size == 3)
     // digest truncated to 3 chars by the global rules
     assert(back.forall(_.contains(" DIG ")))
@@ -151,8 +152,61 @@ class ClusterOpsSpec extends AnyFunSuite with SparkTestSession {
       IndexedSeq("org,s1"), linesPerBlock = 30)
     val got = ClusterOps.range(spark, Some("org,s1"), Some("org,s2"),
       Seq(da, db)).toSeq
-    val expected = (a ++ b).filter(l => l >= "org,s1" && l < "org,s2").sorted
+    val expected = (a ++ b).filter(l => l >= "org,s1" && l < "org,s2")
+      .sorted(KeyOrder)
     assert(got == expected)
+  }
+
+  test("range merges clusters in byte order: a supplementary-plane key " +
+      "sorts after U+FFFD, unlike UTF-16 String order") {
+    val emoji = "org,\uD83D\uDE00)/ 20120101000000 http://e.org/ a"
+    val fffd = "org,\uFFFD)/ 20120101000000 http://f.org/ b"
+    val fffd2 = "org,\uFFFD)/ 20120102000000 http://f.org/ c"
+    // UTF-16 order would put the emoji (a surrogate pair) first
+    assert(emoji < fffd && KeyOrder.gt(emoji, fffd))
+    val da = tmp("utfa") + "/c"
+    val db = tmp("utfb") + "/c"
+    ClusterOps.build(spark, spark.sparkContext.parallelize(Seq(emoji), 1),
+      da, IndexedSeq.empty, linesPerBlock = 1)
+    ClusterOps.build(spark, spark.sparkContext.parallelize(Seq(fffd2, fffd), 1),
+      db, IndexedSeq.empty, linesPerBlock = 1)
+    assert(ClusterOps.range(spark, None, None, Seq(da, db)).toSeq ==
+      Seq(fffd, fffd2, emoji))
+    assert(ClusterOps.range(spark, Some("org,\uFFFD)/ 20120102"), Some("org-"),
+      Seq(da, db)).toSeq == Seq(fffd2, emoji))
+  }
+
+  test("range runs on the driver: 0 Spark jobs and 0 tasks over two " +
+      "clusters (listener-counted)") {
+    val a = mkLines(200, _ % 3)
+    val b = mkLines(150, i => i % 3 + 1)
+    val da = tmp("ja") + "/c"
+    val db = tmp("jb") + "/c"
+    ClusterOps.build(spark, spark.sparkContext.parallelize(a, 2), da,
+      IndexedSeq("org,s1"), linesPerBlock = 20)
+    ClusterOps.build(spark, spark.sparkContext.parallelize(b, 2), db,
+      IndexedSeq("org,s2"), linesPerBlock = 20)
+    org.apache.spark.sql.graftshim.ListenerShim.drain(spark.sparkContext)
+    val jobs = new java.util.concurrent.atomic.AtomicLong
+    val tasks = new java.util.concurrent.atomic.AtomicLong
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+      override def onTaskStart(
+          e: org.apache.spark.scheduler.SparkListenerTaskStart): Unit =
+        tasks.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val got = ClusterOps.range(spark, Some("org,s1"), Some("org,s3"),
+        Seq(da, db)).toVector
+      org.apache.spark.sql.graftshim.ListenerShim.drain(spark.sparkContext)
+      assert(got == (a ++ b).filter(x => x >= "org,s1" && x < "org,s3")
+        .sorted(KeyOrder))
+      assert(jobs.get == 0 && tasks.get == 0,
+        s"range submitted ${jobs.get} jobs and ${tasks.get} tasks")
+    } finally spark.sparkContext.removeSparkListener(l)
   }
 
   test("Boundaries.sample is deterministic; quantiles are sorted distinct") {
@@ -170,7 +224,7 @@ class ClusterOpsSpec extends AnyFunSuite with SparkTestSession {
     val d = tmp("surt") + "/c"
     ClusterOps.build(spark, spark.sparkContext.parallelize(legacy, 1), d,
       IndexedSeq.empty, linesPerBlock = 10, surtOutput = true)
-    val keys = ZipNumReader.lines(spark, d).collect().map(_.split(" ")(0)).toSet
+    val keys = ZipNumReader.localLines(conf, d).map(_.split(" ")(0)).toSet
     assert(keys == Set("com,example)/a", "org,other)/"))
   }
 }

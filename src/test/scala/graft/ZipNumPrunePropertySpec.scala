@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.scalacheck.Gen
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.operators.ClusterOps
 import graft.sources.zipnum.{ZipNumIndex, ZipNumReader, ZipNumWriter}
 
 /** Property-based pin of the serving-path bound semantics, generalizing
@@ -14,7 +15,9 @@ import graft.sources.zipnum.{ZipNumIndex, ZipNumReader, ZipNumWriter}
   * block boundaries and tied firstKeys are routine) — and ANY
   * [start, end) drawn from the key population (block firstKeys
   * included, the exact tie class that lost data for 18 rounds),
-  * `ZipNumReader.lines` must equal a brute-force filter of every line.
+  * `ZipNumReader.localLines` must equal a brute-force filter of every
+  * line, and `ClusterOps.range` over a pair of such clusters must equal
+  * the filtered union in exact byte order.
   * Deterministic seeds, same pattern as [[SketchPropertySpec]]; cluster
   * writes are the expensive part, so a handful of generated clusters
   * each serve many probes. */
@@ -33,14 +36,19 @@ class ZipNumPrunePropertySpec extends AnyFunSuite with SparkTestSession {
     * content equality is multiset-exact. */
   private case class Shape(lines: Seq[String], linesPerBlock: Int, parts: Int)
 
-  private val shapeGen: Gen[Shape] = for {
+  /** `fams`: one family tag per cluster; `segs`: the path segment after
+    * it, cycling over the cluster's keys. */
+  private def shapeGen(fams: IndexedSeq[String] = IndexedSeq("k0", "k1", "k2"),
+                       segs: IndexedSeq[String] = IndexedSeq("p0", "p1", "p2", "p3"))
+      : Gen[Shape] = for {
     nKeys <- Gen.chooseNum(3, 14)
     runs <- Gen.listOfN(nKeys, Gen.chooseNum(1, 7))
     lpb <- Gen.chooseNum(1, 5)
     parts <- Gen.chooseNum(1, 3)
-    fam <- Gen.chooseNum(0, 2)
+    fam <- Gen.chooseNum(0, fams.size - 1)
   } yield {
-    val keys = (0 until nKeys).map(i => f"org,k${fam}%d)/p${i % 4}%d/$i%03d")
+    val keys = (0 until nKeys).map(i =>
+      f"org,${fams(fam)})/${segs(i % segs.size)}/$i%03d")
     val lines = keys.zip(runs).flatMap { case (k, r) =>
       // at most TWO timestamps per key run: duplicate (urlkey, ts) pairs
       // are the tie fuel — they make adjacent summary firstKeys EQUAL
@@ -50,7 +58,7 @@ class ZipNumPrunePropertySpec extends AnyFunSuite with SparkTestSession {
       // mutation: `lteq` in ClusterIndex.prune must fail here)
       (0 until r).map(j =>
         s"$k 2012010100000${j.min(1)} row-$k-$j")
-    }.sorted
+    }.sorted(graft.util.KeyOrder)
     Shape(lines, lpb, parts)
   }
 
@@ -66,6 +74,31 @@ class ZipNumPrunePropertySpec extends AnyFunSuite with SparkTestSession {
     s"$d/cluster"
   }
 
+  private lazy val conf = spark.sparkContext.hadoopConfiguration
+
+  /** Probe population: every block firstKey (the r18 tie class), bare
+    * urlkeys, keys nudged past a run ("~" sorts after digits/space), and
+    * the open bound. */
+  private def boundGen(shapes: Seq[Shape],
+                       dirs: Seq[String]): Gen[(Option[String], Option[String])] = {
+    val firstKeys = dirs.flatMap(ZipNumIndex.load(_, conf).blocks.map(_.firstKey))
+    val bareKeys = shapes.flatMap(_.lines.map(_.takeWhile(_ != ' '))).distinct
+    val population: Seq[Option[String]] =
+      firstKeys.map(Some(_)) ++ bareKeys.map(Some(_)) ++
+        bareKeys.map(k => Some(k + "~")) ++ Seq(None)
+    for {
+      s <- Gen.oneOf(population)
+      e <- Gen.oneOf(population)
+    } yield (s, e)
+  }
+
+  /** An inverted [start, end) is vacuous; probes skip it. */
+  private def wellFormed(s: Option[String], e: Option[String]): Boolean =
+    (s, e) match {
+      case (Some(a), Some(b)) => graft.util.KeyOrder.lteq(a, b)
+      case _ => true
+    }
+
   private def brute(lines: Seq[String], start: Option[String],
                     end: Option[String]): Seq[String] =
     lines.filter(l =>
@@ -75,30 +108,13 @@ class ZipNumPrunePropertySpec extends AnyFunSuite with SparkTestSession {
   test("lines(start, end) == brute-force filter for random clusters and " +
       "random bounds (firstKey ties, mid-run starts, open ends)") {
     (0 until 6).foreach { seed =>
-      val sh = sample(shapeGen, seed.toLong)
+      val sh = sample(shapeGen(), seed.toLong)
       val dir = writeCluster(sh)
-      val idx = ZipNumIndex.load(dir, spark.sparkContext.hadoopConfiguration)
-      // probe population: every block firstKey (the r18 tie class), bare
-      // urlkeys, keys nudged past a run ("~" sorts after digits/space),
-      // and the open bound
-      val firstKeys = idx.blocks.map(_.firstKey)
-      val bareKeys = sh.lines.map(_.takeWhile(_ != ' ')).distinct
-      val population: Seq[Option[String]] =
-        firstKeys.map(Some(_)) ++ bareKeys.map(Some(_)) ++
-          bareKeys.map(k => Some(k + "~")) ++ Seq(None)
-      val probeGen = for {
-        s <- Gen.oneOf(population)
-        e <- Gen.oneOf(population)
-      } yield (s, e)
+      val probeGen = boundGen(Seq(sh), Seq(dir))
       (0 until 15).foreach { p =>
         val (s0, e0) = sample(probeGen, seed * 1000L + p)
-        // keep [start, end) well-formed; an inverted pair is vacuous
-        val ok = (s0, e0) match {
-          case (Some(a), Some(b)) => graft.util.KeyOrder.lteq(a, b)
-          case _ => true
-        }
-        if (ok) {
-          val got = ZipNumReader.lines(spark, dir, s0, e0).collect()
+        if (wellFormed(s0, e0)) {
+          val got = ZipNumReader.localLines(conf, dir, s0, e0)
             .toSeq.sorted(graft.util.KeyOrder)
           val want = brute(sh.lines, s0, e0)
           assert(got == want,
@@ -109,10 +125,35 @@ class ZipNumPrunePropertySpec extends AnyFunSuite with SparkTestSession {
     }
   }
 
+  test("ClusterOps.range over cluster pairs == brute-force filter of the " +
+      "union in exact byte order (ties, supplementary-plane keys)") {
+    // one family, so the pair's key ranges interleave; the segments
+    // straddle the UTF-16 vs byte-order split (U+FFFD sorts below a
+    // surrogate pair in byte order, above it in UTF-16)
+    val gen = shapeGen(IndexedSeq("k0"),
+      IndexedSeq("p0", "\uFFFD", "\uD83D\uDE00", "p1"))
+    (0 until 6).foreach { seed =>
+      val shapes = Seq(sample(gen, 300L + seed), sample(gen, 400L + seed))
+      val dirs = shapes.map(writeCluster)
+      val union = shapes.flatMap(_.lines)
+      val probeGen = boundGen(shapes, dirs)
+      (0 until 15).foreach { p =>
+        val (s0, e0) = sample(probeGen, 5000L + seed * 1000L + p)
+        if (wellFormed(s0, e0)) {
+          val got = ClusterOps.range(spark, s0, e0, dirs).toVector
+          val want = brute(union, s0, e0).sorted(graft.util.KeyOrder)
+          assert(got == want,
+            s"seed=$seed lpb=${shapes.map(_.linesPerBlock)} " +
+              s"start=$s0 end=$e0: got ${got.size} want ${want.size}")
+        }
+      }
+    }
+  }
+
   test("rangesRdd partitions tile the cluster exactly against random " +
       "boundaries (the merge path's aligned-read contract)") {
     (0 until 3).foreach { seed =>
-      val sh = sample(shapeGen, 100L + seed)
+      val sh = sample(shapeGen(), 100L + seed)
       val dir = writeCluster(sh)
       val bareKeys = sh.lines.map(_.takeWhile(_ != ' ')).distinct
       val bGen = Gen.someOf(bareKeys).map(_.sorted(graft.util.KeyOrder))

@@ -17,6 +17,7 @@ class ZipNumRoundtripSpec extends AnyFunSuite with SparkTestSession {
       s"$key $ts http://site${i % 7}.org/p/$i text/html 200 DIG$i - - ${100 + i} ${i * 1000} f.warc.gz"
     }.sorted
 
+  private lazy val conf = spark.sparkContext.hadoopConfiguration
   private lazy val lines = mkLines(2000)
   private lazy val dir: String = {
     val d = Files.createTempDirectory(
@@ -30,7 +31,7 @@ class ZipNumRoundtripSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("full write→read roundtrip is the identity") {
-    val back = ZipNumReader.lines(spark, dir).collect().toSeq.sorted
+    val back = ZipNumReader.localLines(conf, dir).toSeq.sorted
     assert(back == lines)
   }
 
@@ -60,8 +61,8 @@ class ZipNumRoundtripSpec extends AnyFunSuite with SparkTestSession {
     val start = "org,site2)/p/000500"
     val end = "org,site4)/p/001000"
     val expected = lines.filter(l => l >= start && l < end)
-    val got = ZipNumReader.lines(spark, dir, Some(start), Some(end))
-      .collect().toSeq.sorted
+    val got = ZipNumReader.localLines(conf, dir, Some(start), Some(end))
+      .toSeq.sorted
     assert(got == expected)
     val index = ZipNumIndex.load(dir, spark.sparkContext.hadoopConfiguration)
     val pruned = index.prune(Some(start), Some(end))
@@ -71,8 +72,8 @@ class ZipNumRoundtripSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("ordered dump: partition-ordered iteration is globally sorted") {
-    val rdd = ZipNumReader.lines(spark, dir, Some("org,site1"), Some("org,site3"))
-    val streamed = rdd.toLocalIterator.toSeq
+    val streamed = ZipNumReader.localLines(conf, dir, Some("org,site1"),
+      Some("org,site3")).toSeq
     assert(streamed == streamed.sorted)
     assert(streamed == lines.filter(l => l >= "org,site1" && l < "org,site3"))
   }
@@ -163,7 +164,7 @@ class ZipNumRoundtripSpec extends AnyFunSuite with SparkTestSession {
     }
     write(Seq("a 1 old", "b 1 old", "c 1 old"))
     write(Seq("a 1 new", "d 1 new"))
-    assert(ZipNumReader.lines(spark, cluster).collect().toSeq.sorted ==
+    assert(ZipNumReader.localLines(conf, cluster).toSeq.sorted ==
       Seq("a 1 new", "d 1 new"))
     val parent = new java.io.File(d).list().toSet
     assert(!parent.exists(_.contains("__stage")) &&
@@ -181,7 +182,7 @@ class ZipNumRoundtripSpec extends AnyFunSuite with SparkTestSession {
     fs.rename(new org.apache.hadoop.fs.Path(cluster + ".__old"),
       new org.apache.hadoop.fs.Path(cluster))
     write(Seq("x 1 z"))
-    assert(ZipNumReader.lines(spark, cluster).collect().toSeq == Seq("x 1 z"))
+    assert(ZipNumReader.localLines(conf, cluster).toSeq == Seq("x 1 z"))
   }
 
   test("range serve with start == a block firstKey returns the key run's " +
@@ -203,8 +204,8 @@ class ZipNumRoundtripSpec extends AnyFunSuite with SparkTestSession {
       .repartitionByRange(1, org.apache.spark.sql.functions.col("value"))
       .sortWithinPartitions("value")
     ZipNumWriter.write(ds, s"$d/cluster", linesPerBlock = 2, overwrite = true)
-    val got = ZipNumReader.lines(spark, s"$d/cluster",
-      Some("org,b)/x 20120101000000"), Some("org,c")).collect().toSeq.sorted
+    val got = ZipNumReader.localLines(conf, s"$d/cluster",
+      Some("org,b)/x 20120101000000"), Some("org,c")).toSeq.sorted
     assert(got == ls.slice(1, 5), // r1..r4 — r1 lives in block0's tail
       "the previous block's same-key tail must be served")
   }

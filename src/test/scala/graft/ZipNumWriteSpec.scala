@@ -44,7 +44,7 @@ class ZipNumWriteSpec extends AnyFunSuite with SparkTestSession {
     assert(names.contains("ALL.summary") && names.contains("manifest.txt"))
     assert(!names.contains("_tmp"))
     // read back through both surfaces
-    assert(ZipNumReader.lines(spark, dir).collect().toSeq.sorted == lines.sorted)
+    assert(ZipNumReader.localLines(spark.sparkContext.hadoopConfiguration, dir).toSeq.sorted == lines.sorted)
     val df = spark.read.format("zipnum").load(dir)
     assert(df.count() == 300)
     assert(df.where(col("urlkey") === "org,w0042)/").count() == 1)
