@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Benchmark main — one JSON line with per-query wall times.
  *
@@ -19,31 +17,27 @@ import org.apache.spark.sql.SparkSession
  *    must succeed on EVERY rep to bench at all (any failed rep → -1);
  *  - failures are NOT swallowed: a failed query records `-1` AND the error
  *    is reported in an `errors` map (a broken query must never bench green);
- *  - AQE + UTC session config matches GraftCli.session.
+ *  - the session IS GraftCli.session (the one factory every main and
+ *    test uses), plus two measured single-host sizing settings;
+ *  - per-query job and stage counts (phase-free, unlike wall time) are
+ *    read from a listener after each query's first pass, outside the
+ *    timed window, and written to the sidecar report as `jobs`/`stages`.
  */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // GRAFT_BENCH_AQE=false is a diagnostic toggle only. Measured
-      // (round 9, 10-query subset, min-of-5): AQE OFF is 33% SLOWER
-      // (5.24 → 6.96 s; q60 0.60 → 1.61, q21 0.86 → 1.47) — runtime
-      // partition coalescing pays for its re-planning jobs even at
-      // sf0.1, so the production setting is also the fast local one.
-      // only the exact strings "false"/"0" disable; any other value
-      // (incl. malformed) keeps the default — the session must never
-      // die on a bad env var ("a bench must always emit its report")
-      .config("spark.sql.adaptive.enabled",
-        (!sys.env.get("GRAFT_BENCH_AQE").map(_.trim.toLowerCase)
-          .exists(v => v == "false" || v == "0")).toString)
+    val cpus = graft.cli.GraftCli.defaultCpus
+    // AQE stays on (GraftCli.session's default). Measured (round 9,
+    // 10-query subset, min-of-5): AQE OFF is 33% SLOWER (5.24 → 6.96 s;
+    // q60 0.60 → 1.61, q21 0.86 → 1.47) — runtime partition coalescing
+    // pays for its re-planning jobs even at sf0.1, so the production
+    // setting is also the fast local one.
+    val spark = graft.cli.GraftCli.session("graft-bench", cpus, Map(
       // 72 queries × many stages ≫ the default 100-entry generated-class
       // cache; at 100 every cross-query pass recompiles nearly every stage
       // (the round-8 interleave experiment measured +35% total from exactly
       // this). With all passes' classes resident, rep order stops mattering.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
+      "spark.sql.codegen.cache.maxEntries" -> "10000",
       // Local-mode shuffle blocks are KB-to-low-MB and never cross a
       // network, so lz4 costs more CPU than the page-cache I/O it saves:
       // measured on the then-current full suite (94 queries,
@@ -51,16 +45,8 @@ object Bench {
       // each, interleaved). A multi-host cluster
       // shipping shuffle over the wire keeps the Spark default (ON) —
       // this is a single-host sizing knob, same class as
-      // shuffle.partitions=32. GRAFT_BENCH_SHUFFLE_COMPRESS=true
-      // restores the default for A/B.
-      .config("spark.shuffle.compress",
-        sys.env.get("GRAFT_BENCH_SHUFFLE_COMPRESS").map(_.trim.toLowerCase)
-          .exists(v => v == "true" || v == "1").toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      // shuffle.partitions=32.
+      "spark.shuffle.compress" -> "false"))
 
     def materialize(name: String): Unit =
       SparkEntry.queries(name)(spark, sfDir)
@@ -69,6 +55,24 @@ object Bench {
     // Warmup: a cheap scan+agg, untimed. A warmup failure must not kill
     // the report — the timed loop will surface the same error in-band.
     try materialize("q01_agg") catch { case _: Throwable => () }
+
+    // Job/stage counts per query (first pass only). stageInfos includes
+    // stages the job skips (reused shuffle output), as the Spark UI does.
+    val jobCount = new java.util.concurrent.atomic.AtomicInteger
+    val stageCount = new java.util.concurrent.atomic.AtomicInteger
+    spark.sparkContext.addSparkListener(
+      new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          jobCount.incrementAndGet(); stageCount.addAndGet(j.stageInfos.size)
+        }
+      })
+    // listener events are async: drain so each query's delta starts clean
+    def drain(): Unit =
+      org.apache.spark.sql.graftshim.ListenerShim.drain(spark.sparkContext)
+    drain()
+    val jobs = scala.collection.mutable.LinkedHashMap.empty[String, Int]
+    val stages = scala.collection.mutable.LinkedHashMap.empty[String, Int]
 
     // tolerate a malformed env value: a bench must always emit its report.
     // 5 reps: 3 was not enough — the round-7 report showed q21 at 3.17s
@@ -112,7 +116,8 @@ object Bench {
     val names = selected.map(_._1)
     val samples = scala.collection.mutable.LinkedHashMap[String, List[Double]](
       names.map(_ -> List.empty[Double]): _*)
-    for (_ <- 1 to reps; name <- names) {
+    for (rep <- 1 to reps; name <- names) {
+      val (j0, s0) = (jobCount.get, stageCount.get)
       val t0 = System.nanoTime()
       try {
         materialize(name)
@@ -120,6 +125,11 @@ object Bench {
       } catch { case e: Throwable =>
         errors.getOrElseUpdate(name,
           e.toString.takeWhile(_ != '\n').take(200))
+      }
+      if (rep == 1) {
+        drain()
+        jobs(name) = jobCount.get - j0
+        stages(name) = stageCount.get - s0
       }
     }
     // EVERY rep must succeed — a query that crashed on any rep benches
@@ -150,6 +160,8 @@ object Bench {
       else String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     val qs = results.map { case (k, v) => s"${jstr(k)}:${jnum(v)}" }.mkString("{", ",", "}")
     val errJson = errors.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
+    def counts(m: collection.Map[String, Int]): String =
+      m.map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
     val total = results.collect { case (_, v) if v >= 0 => v }.sum
     // Local comparison denominator: only the DuckDB TOTAL inline (the
     // per-query numbers live in DUCK_BENCH.json, committed in the repo).
@@ -170,9 +182,7 @@ object Bench {
     // answer — structural floors, kept in the headline total with the
     // ex-streaming decomposition stated in-band rather than footnoted
     // out (STATUS.md §bench).
-    val streamingQs = Set("q51_stream_daycap", "q92_stream_dedup",
-      "q104_stream_windows", "q110_stream_sessions", "q113_stream_zipnum",
-      "q134_stream_hll")
+    val streamingQs = SparkEntry.streamingQueries
     val streamTotal = results
       .collect { case (n, v) if streamingQs(n) && v >= 0 => v }.sum
     val notes = s"the ${streamingQs.size} streaming surfaces " +
@@ -207,8 +217,8 @@ object Bench {
     import scala.util.control.NonFatal
     // cpus in-band (r22): the driver benches at two core counts; the
     // report must say which one produced it (additive field).
-    val cpusField = cpus.toIntOption.map(c => s""","cpus":$c""").getOrElse("")
-    val report = s"""{"metric":"total","value":${jnum(total)},"unit":"sec"$cpusField,"queries":$qs,"errors":$errJson,"notes":${jstr(notes)},"sf":${jstr(sfDir)}$duckField}"""
+    val cpusField = s""","cpus":$cpus"""
+    val report = s"""{"metric":"total","value":${jnum(total)},"unit":"sec"$cpusField,"queries":$qs,"errors":$errJson,"jobs":${counts(jobs)},"stages":${counts(stages)},"notes":${jstr(notes)},"sf":${jstr(sfDir)}$duckField}"""
     // Short stdout line: everything an auditor of the committed tail needs —
     // totals, counts, the duck denominator, the ratio, and where the full
     // per-query map lives. Must stay well under the driver's 2000-char tail.

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump formatted physical plans for scale-sensitive queries —
   * the explain-audit loop (broadcasts present? filters pushed? shuffles
   * where expected?). Usage: runMain graft.Explain [sfDir] [query...] */
@@ -14,24 +12,11 @@ object Explain {
         "q25_ann_ivf", "q36_embed_neardup", "q40_sorted_merge",
         "q43_ann_ivf_assign", "q54_ann_hyperplane", "q55_revisit_resolve", "q73_ann_multiprobe",
         "q56_vocab", "q60_tfidf", "q72_decontaminate")
-    // GRAFT_EXPLAIN_CPUS: plan shapes that are parallelism-gated (the
-    // fanOut of single-row-group scans fires only when the scan's
-    // partition count is far below defaultParallelism) need a
-    // bench-shaped session to show their bench-shaped plan.
-    // r22 advice fix: validated — a non-numeric/non-positive value gave
-    // a confusing session-construction failure from local[$cpus]
-    val cpus = sys.env.get("GRAFT_EXPLAIN_CPUS")
-      .map(v => v.trim.toIntOption.filter(_ > 0).getOrElse(
-        sys.error(s"GRAFT_EXPLAIN_CPUS='$v' must be a positive integer")))
-      .getOrElse(4)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // SPARK_GRAFT_CPUS sets the core count: plan shapes that are
+    // parallelism-gated (the fanOut of single-row-group scans fires only
+    // when the scan's partition count is far below defaultParallelism)
+    // need a bench-shaped session to show their bench-shaped plan.
+    val spark = graft.cli.GraftCli.session("graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
     // GRAFT_EXPLAIN_EXEC=1: materialize first, so an AQE plan prints its
     // FINAL form (runtime stage reuse, coalesced partitions) instead of

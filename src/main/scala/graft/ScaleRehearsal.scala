@@ -53,16 +53,8 @@ object ScaleRehearsal {
         case _ => 400
       })
     val sfDir = rest.lift(2).getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.cli.GraftCli.defaultCpus
+    val spark = graft.cli.GraftCli.session("graft-scale-rehearsal", cpus)
 
     val read = new AtomicLong; val write = new AtomicLong
     spark.sparkContext.addSparkListener(new SparkListener {
@@ -113,7 +105,7 @@ object ScaleRehearsal {
         col("doc_id"), col("text"))
       .select((col("doc_id") + col("__c") * 10000000L).as("doc_id"),
         col("text"))
-      .repartition(cpus.toInt) // testdata is one row group (SCALE.md caveat)
+      .repartition(cpus) // testdata is one row group (SCALE.md caveat)
 
     import graft.operators.llm.{ConnectedComponents, MinHashLsh}
     // diagnostic count BEFORE t0: it re-runs the replicated-corpus

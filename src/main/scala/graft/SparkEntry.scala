@@ -185,6 +185,13 @@ object SparkEntry {
 
   // ---------------------------------------------------------------------
 
+  /** The gates whose builders run a real Structured Streaming query
+    * (micro-batch trigger, state store, checkpoint) rather than a batch
+    * plan: Bench reports their subtotal separately, PlanSweep skips them. */
+  val streamingQueries: Set[String] = Set("q51_stream_daycap",
+    "q92_stream_dedup", "q104_stream_windows", "q110_stream_sessions",
+    "q113_stream_zipnum", "q134_stream_hll")
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // §2.7 group-by aggregation (Pig-supplied relational core → Spark built-in)
@@ -3580,19 +3587,10 @@ object SparkEntry {
     // than their per-row work buys back (q106 min 0.262 unfanned vs
     // 0.449 fanned, 7/7 pairs; q118 0.241 vs 0.271, 6/7), while every
     // heavier gate keeps the fan-out (q125 ABAB/bench ~2-3x win).
-    // graft.media.nofan=1: diagnostic-only A/B toggle (graft.tools.AbQuery
-    // flips it inside ONE JVM — the only protocol this host's 2-3x
-    // cross-JVM phase swings cannot corrupt); never set in production
-    (if (!fan || sys.props.get("graft.media.nofan").contains("1")) base
-     else fanOut(base)).as[Long]
+    (if (fan) fanOut(base) else base).as[Long]
   }
 
   private def fanOut(df: DataFrame, keys: Column*): DataFrame = {
-    // graft.fan.nofan=1: diagnostic-only toggle (graft.tools.AbQuery's
-    // one-JVM ABAB flips it) so ANY fanned query can be probed through
-    // the real registry instead of a pasted copy (r21 ADVICE); never
-    // set by Bench, Verify, or validate.sh
-    if (sys.props.get("graft.fan.nofan").contains("1")) return df
     val target = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions * 4 >= target) df
     else if (keys.isEmpty) df.repartition(target)

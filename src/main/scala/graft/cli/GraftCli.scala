@@ -11,16 +11,27 @@ import org.apache.spark.sql.functions._
  */
 object GraftCli {
 
-  def session(appName: String): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
+  /** Local core count: `SPARK_GRAFT_CPUS`, or 32 when unset. */
+  def defaultCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(32) { v =>
+    v.trim.toIntOption.filter(_ > 0).getOrElse(
+      sys.error(s"SPARK_GRAFT_CPUS='$v' must be a positive integer"))
+  }
+
+  /** The one session factory: every main, tool and test session is built
+    * here, so their configs cannot drift apart. `conf` adds settings on
+    * top of the shared ones (Bench's measured sizing knobs, the test
+    * warehouse dir). */
+  def session(appName: String, cpus: Int = defaultCpus,
+              conf: Map[String, String] = Map.empty): SparkSession = {
+    val builder = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
       .appName(appName)
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.ui.enabled", "false")
+    val spark = conf.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.functions.CdxFunctions.register(spark)

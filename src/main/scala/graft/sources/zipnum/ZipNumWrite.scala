@@ -62,30 +62,9 @@ private[zipnum] class ZipNumBatchWrite(dir: String,
   @volatile private var preserveStageOnAbort: Boolean = false
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    val fs = out.getFileSystem(conf.value)
-    val preExisting = fs.exists(out)
-    if (preExisting) {
-      require(truncate,
-        s"zipnum: target $dir exists; use mode(overwrite) to replace it")
-    }
-    // Same atomic-replace discipline as ZipNumWriter.writeRdd (the r18
-    // advice fix, ported to the DSv2 path in r19 — this commit() used to
-    // DELETE the old cluster before renaming the new one in, so a
-    // mid-commit IO failure lost both): stage the complete new cluster
-    // in a sibling directory and swap via two renames, with the .__old
-    // guard for a crash between them.
-    val oldPath = new Path(dir + ".__old")
-    if (fs.exists(oldPath)) {
-      require(preExisting, s"zipnum: $oldPath exists but $dir does not — " +
-        "a previous overwrite crashed mid-swap; recover by renaming " +
-        s"$oldPath back to $dir")
-      fs.delete(oldPath, true)
-    }
-    if (preExisting) {
-      stageDir = dir + ".__stage"
-      fs.delete(new Path(stageDir), true) // stale stage from a crashed run
-    }
-    fs.mkdirs(new Path(stageDir, "_tmp"))
+    // the same atomic-replace staging as ZipNumWriter.writeRdd
+    stageDir = ZipNumShardIO.prepareStage(out.getFileSystem(conf.value),
+      dir, truncate)
     new ZipNumWriterFactory(stageDir, conf, linesPerBlock)
   }
 
@@ -96,28 +75,13 @@ private[zipnum] class ZipNumBatchWrite(dir: String,
     ZipNumShardIO.commitShards(fs, stageDir,
       winners.map(m => (m.part, m.tmpName)).toSeq)
     if (stageDir != dir) {
-      val oldPath = new Path(dir + ".__old")
       // commitShards already completed: the staged cluster is whole, so
-      // it must survive the abort() Spark fires when this require throws
+      // it must survive the abort() Spark fires when the swap throws
       // (r21 advice fix — previously preserveStageOnAbort was still
       // false here, so the message pointed at a stage dir that abort
       // had just deleted)
       preserveStageOnAbort = true
-      require(fs.rename(out, oldPath),
-        s"zipnum: swap rename $dir -> $oldPath failed " +
-          s"(old cluster untouched; new cluster complete at $stageDir)")
-      if (!fs.rename(new Path(stageDir), out)) {
-        // report what ACTUALLY happened: the restore rename can itself
-        // fail (r20 advice — the old message asserted "restored"
-        // without checking)
-        val restored = fs.rename(oldPath, out) // never leave the target empty
-        throw new IllegalStateException(
-          s"zipnum: swap rename $stageDir -> $dir failed; " +
-            (if (restored) s"old cluster restored at $dir"
-             else s"restore rename ALSO failed — old cluster at $oldPath") +
-            s"; new cluster left complete at $stageDir")
-      }
-      fs.delete(oldPath, true)
+      ZipNumShardIO.swapIn(fs, dir, stageDir)
     }
   }
 

@@ -40,33 +40,8 @@ object ZipNumWriter {
                overwrite: Boolean = false): Unit = {
     val conf = new SerializableConfiguration(
       spark.sparkContext.hadoopConfiguration)
-    val out = new Path(outDir)
-    val fs = out.getFileSystem(conf.value)
-    val preExisting = fs.exists(out)
-    require(!preExisting || overwrite, s"ZipNumWriter: target $outDir " +
-      "exists; pass overwrite=true to replace it")
-    // Overwrite never touches the old cluster until the NEW one is
-    // complete: the whole replacement (shards + ALL.summary + manifest)
-    // is staged in a SIBLING directory and swapped in via two directory
-    // renames (old → .__old, stage → out). At no point does the data
-    // exist in fewer than one complete cluster — a crash between the
-    // renames leaves the old cluster intact at .__old (recovered by the
-    // guard below or by hand), unlike the previous delete-then-rename
-    // commit whose mid-commit IO failure could lose both (r18 advice).
-    val oldPath = new Path(outDir + ".__old")
-    if (fs.exists(oldPath)) {
-      // out present → a previous swap completed but its backup delete
-      // didn't; out absent → a previous run crashed BETWEEN renames and
-      // .__old holds the only copy: never delete it silently
-      require(preExisting, s"ZipNumWriter: $oldPath exists but $outDir " +
-        "does not — a previous overwrite crashed mid-swap; recover by " +
-        s"renaming $oldPath back to $outDir")
-      fs.delete(oldPath, true)
-    }
-    val stageDir = if (preExisting) outDir + ".__stage" else outDir
-    val stage = new Path(stageDir)
-    if (preExisting) fs.delete(stage, true) // stale stage from a crashed run
-    fs.mkdirs(new Path(stage, "_tmp"))
+    val fs = new Path(outDir).getFileSystem(conf.value)
+    val stageDir = ZipNumShardIO.prepareStage(fs, outDir, overwrite)
 
     // Each partition → one shard, written executor-side.
     val shardInfos = lines.mapPartitionsWithIndex { (pid, iter) =>
@@ -94,19 +69,6 @@ object ZipNumWriter {
     // Commit: rename shards into place, concatenate -idx → ALL.summary.
     ZipNumShardIO.commitShards(fs, stageDir,
       shardInfos.map { case (_, part, tmpName, _) => (part, tmpName) })
-    if (preExisting) {
-      // the swap: two renames, old cluster always whole somewhere
-      require(fs.rename(out, oldPath),
-        s"ZipNumWriter: swap rename $outDir -> $oldPath failed " +
-          s"(old cluster untouched; new cluster complete at $stageDir)")
-      if (!fs.rename(stage, out)) {
-        // roll the old cluster back so the target is never left empty
-        fs.rename(oldPath, out)
-        throw new IllegalStateException(
-          s"ZipNumWriter: swap rename $stageDir -> $outDir failed; " +
-            s"old cluster restored, new cluster left at $stageDir")
-      }
-      fs.delete(oldPath, true)
-    }
+    if (stageDir != outDir) ZipNumShardIO.swapIn(fs, outDir, stageDir)
   }
 }

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Full-registry plan-shape sweep (the r21 verdict asked for this as a
   * committed artifact, not prose): one line per declared query with the
   * physical operator SEQUENCE (treeString order, AQE initial plan) plus
@@ -15,13 +13,9 @@ import org.apache.spark.sql.SparkSession
   * batch plan of the sink read is not a shape worth pinning) — they are
   * listed with "STREAMING" so the line count stays at the registry size.
   *
-  *   GRAFT_EXPLAIN_CPUS=32 sbt "runMain graft.tools.PlanSweep /root/testdata/sf0.1 out.tsv"
+  *   SPARK_GRAFT_CPUS=32 sbt "runMain graft.tools.PlanSweep <sfDir> out.tsv"
   */
 object PlanSweep {
-  private val StreamingQs = Set("q51_stream_daycap", "q92_stream_dedup",
-    "q104_stream_windows", "q110_stream_sessions", "q113_stream_zipnum",
-    "q134_stream_hll")
-
   // "   +- *(3) BroadcastHashJoin [..." -> "BroadcastHashJoin";
   // "Exchange hashpartitioning(...)" -> "Exchange"; "Scan parquet t" -> "Scan"
   private val OpName =
@@ -31,21 +25,12 @@ object PlanSweep {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse("/tmp/plan_sweep.tsv")
     // bench-shaped session: parallelism-gated shapes (fanOut) only show
-    // at the bench's core count — same knob as Explain
-    val cpus = sys.env.get("GRAFT_EXPLAIN_CPUS")
-      .flatMap(_.toIntOption).filter(_ > 0).getOrElse(32)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // at the bench's core count (SPARK_GRAFT_CPUS, default 32)
+    val spark = graft.cli.GraftCli.session("graft-plansweep")
     spark.sparkContext.setLogLevel("ERROR")
 
     val lines = graft.SparkEntry.queries.toSeq.sortBy(_._1).map {
-      case (name, _) if StreamingQs(name) => s"$name\tSTREAMING\t-"
+      case (name, _) if graft.SparkEntry.streamingQueries(name) => s"$name\tSTREAMING\t-"
       case (name, build) =>
         try {
           val tree = build(spark, sfDir).queryExecution.executedPlan.treeString

@@ -17,6 +17,12 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestSession {
     assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
   }
 
+  test("every streaming gate named by the shared list is a registered query") {
+    val unknown = SparkEntry.streamingQueries -- SparkEntry.queries.keySet
+    assert(SparkEntry.streamingQueries.nonEmpty && unknown.isEmpty,
+      s"streamingQueries names unregistered gates: $unknown")
+  }
+
   test("scale pins: shuffle budgets and broadcast-join shapes hold") {
     // The load-bearing scale properties of SCALE.md, pinned so a rewrite
     // cannot silently regress them: each pipeline's shuffle-exchange

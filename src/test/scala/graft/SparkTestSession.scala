@@ -3,16 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all Spark-backed specs (sbt forks a single
-  * test JVM; SparkSession.builder reuses the active session). */
+  * test JVM; the session factory reuses the active session). */
 trait SparkTestSession {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.sql.warehouse.dir", "target/test-warehouse")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.cli.GraftCli.session("graft-test",
+    cpus = 4, conf = Map("spark.sql.warehouse.dir" -> "target/test-warehouse"))
 }

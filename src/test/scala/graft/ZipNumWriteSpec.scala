@@ -27,6 +27,10 @@ class ZipNumWriteSpec extends AnyFunSuite with SparkTestSession {
 
   import spark.implicits._
 
+  private def msgs(t: Throwable): Seq[String] =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+      .map(e => Option(e.getMessage).getOrElse("")).toSeq
+
   private def mkLines(n: Int): Seq[String] =
     (0 until n).map(i =>
       f"org,w$i%04d)/ 20120101000000 http://w$i.org/ text/html 200 D$i - - 1 $i f.gz")
@@ -82,71 +86,76 @@ class ZipNumWriteSpec extends AnyFunSuite with SparkTestSession {
     }
   }
 
-  test("a failed swap-in rename preserves BOTH copies: old cluster " +
-      "restored at the target, complete staged cluster kept through " +
-      "abort (r20 fault injection)") {
+  /** Fault-injected overwrite swap over `fault://`, shared by both
+    * writers: `write(dir, n)` overwrites the cluster at `dir` with
+    * mkLines(n). */
+  private def swapFaultScenarios(name: String,
+                                 write: (String, Int) => Unit): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
+    def served(dir: String): Seq[String] =
+      ZipNumReader.localLines(conf, dir).toSeq
     conf.setClass("fs.fault.impl", classOf[FaultRenameFs],
       classOf[org.apache.hadoop.fs.FileSystem])
-    val local = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "faultw").resolve("c").toString
+    val local = Files.createTempDirectory(Paths.get("target"), name)
+      .toAbsolutePath.resolve("c").toString
     val dir = s"fault://$local"
+    val stage = new java.io.File(s"$local.__stage")
+    val old = new java.io.File(s"$local.__old")
     FaultRenameFs.failWhen = (_, _) => false
-    mkLines(10).toDF("line").coalesce(1).sortWithinPartitions("line")
-      .write.format("zipnum").mode("overwrite").save(dir)
-    assert(spark.read.format("zipnum").load(dir).count() == 10)
+    write(dir, 10)
+    assert(served(dir) == mkLines(10))
 
     // Scenario A: the stage -> target rename fails; the restore works.
     FaultRenameFs.failWhen = (src, _) => src.getName.endsWith(".__stage")
-    val eA = intercept[Exception] {
-      mkLines(5).toDF("line").coalesce(1).sortWithinPartitions("line")
-        .write.format("zipnum").mode("overwrite").save(dir)
-    }
-    def msgs(t: Throwable): Seq[String] =
-      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
-        .map(e => Option(e.getMessage).getOrElse("")).toSeq
-    assert(msgs(eA).exists(_.contains("old cluster restored")), msgs(eA))
+    val eA = intercept[Exception](write(dir, 5))
     FaultRenameFs.failWhen = (_, _) => false
+    assert(msgs(eA).exists(_.contains("old cluster restored")), msgs(eA))
     // the target still serves the OLD cluster (restored whole) ...
-    assert(spark.read.format("zipnum").load(dir).count() == 10)
-    // ... and the COMPLETE new cluster survived Spark's abort() in the
-    // stage dir (the r20 preserve-on-abort fix: before it, abort
-    // deleted the only copy of the new data)
-    val stage = new java.io.File(s"$local.__stage")
-    assert(stage.isDirectory, "staged cluster must survive the abort")
+    assert(served(dir) == mkLines(10))
+    // ... and the COMPLETE new cluster survived in the stage dir (for
+    // DSv2 through Spark's abort(): the r20 preserve-on-abort fix;
+    // before it, abort deleted the only copy of the new data)
+    assert(stage.isDirectory, "staged cluster must survive the failure")
     assert(stage.list().contains("ALL.summary"),
       "staged cluster must be complete (commitShards finished)")
     // a clean retry sweeps the stale stage and lands the new data
-    mkLines(5).toDF("line").coalesce(1).sortWithinPartitions("line")
-      .write.format("zipnum").mode("overwrite").save(dir)
-    assert(spark.read.format("zipnum").load(dir).count() == 5)
-    assert(!stage.exists() && !new java.io.File(s"$local.__old").exists())
+    write(dir, 5)
+    assert(served(dir) == mkLines(5))
+    assert(!stage.exists() && !old.exists())
 
     // Scenario B: the restore rename ALSO fails — the message must say
     // so (not claim "restored"), and the old data must sit at .__old.
     FaultRenameFs.failWhen = (src, _) =>
       src.getName.endsWith(".__stage") || src.getName.endsWith(".__old")
-    val eB = intercept[Exception] {
-      mkLines(3).toDF("line").coalesce(1).sortWithinPartitions("line")
-        .write.format("zipnum").mode("overwrite").save(dir)
-    }
+    val eB = intercept[Exception](write(dir, 3))
     FaultRenameFs.failWhen = (_, _) => false
     assert(msgs(eB).exists(_.contains("restore rename ALSO failed")), msgs(eB))
-    assert(new java.io.File(s"$local.__old").isDirectory,
-      "old cluster must be recoverable at .__old")
+    assert(old.isDirectory, "old cluster must be recoverable at .__old")
     assert(!new java.io.File(local).exists(), "target empty after double failure")
     // the next write refuses to run while .__old is the only copy,
     // naming the recovery move
-    val eC = intercept[Exception] {
-      mkLines(3).toDF("line").coalesce(1).sortWithinPartitions("line")
-        .write.format("zipnum").mode("overwrite").save(dir)
-    }
+    val eC = intercept[Exception](write(dir, 3))
     assert(msgs(eC).exists(_.contains("mid-swap")), msgs(eC))
     // manual recovery, then life goes on
-    val ffs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
-    assert(ffs.rename(new org.apache.hadoop.fs.Path(s"$dir.__old"),
-      new org.apache.hadoop.fs.Path(dir)))
-    assert(spark.read.format("zipnum").load(dir).count() == 5)
+    assert(old.renameTo(new java.io.File(local)))
+    assert(served(dir) == mkLines(5))
+  }
+
+  test("a failed swap-in rename preserves BOTH copies: old cluster " +
+      "restored at the target, complete staged cluster kept through " +
+      "abort (r20 fault injection)") {
+    swapFaultScenarios("faultw",
+      (dir, n) => mkLines(n).toDF("line").coalesce(1)
+        .sortWithinPartitions("line")
+        .write.format("zipnum").mode("overwrite").save(dir))
+  }
+
+  test("cluster-build --overwrite (the RDD writer) shares the swap: a " +
+      "failed swap-in restores the old cluster, or says the restore failed") {
+    swapFaultScenarios("faultrdd",
+      (dir, n) => graft.operators.ClusterOps.build(spark,
+        spark.sparkContext.parallelize(mkLines(n), 2), dir,
+        IndexedSeq("org,w0002)/"), linesPerBlock = 2, overwrite = true))
   }
 
   test("WAT rows render the JSON metadata envelope") {
