@@ -15,8 +15,7 @@ class CdxStreamSpec extends AnyFunSuite with SparkTestSession {
   // certifies append mode; this pin just covers the mode's wiring.
   test("streaming windowed host counts over a file-backed stream") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "stream-in")
+    val dir = SparkTestSession.tmpDir("stream-in")
     java.nio.file.Files.writeString(dir.resolve("batch1.cdx"), Seq(
       line("org,a)/x", "20120101000500", 0),
       line("org,a)/y", "20120101003000", 1),
@@ -42,8 +41,7 @@ class CdxStreamSpec extends AnyFunSuite with SparkTestSession {
   test("windowed host counts in APPEND mode: watermark flushes every " +
       "closed window and EVICTS its state (bounded state)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "stream-append")
+    val dir = SparkTestSession.tmpDir("stream-append")
     // batch 1: the real data (two 1-hour windows on 2012-01-01)
     val f1 = dir.resolve("batch1.cdx")
     java.nio.file.Files.writeString(f1, Seq(
@@ -107,8 +105,7 @@ class CdxStreamSpec extends AnyFunSuite with SparkTestSession {
   test("sessionizedHostVisits MERGES a session across micro-batches and " +
       "emits it once, closed, in append mode") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "stream-sess")
+    val dir = SparkTestSession.tmpDir("stream-sess")
     // batch 1: two events 10 min apart; batch 2: a third event 10 min
     // later — inside the first session's [start, last+30min) window, so
     // the session state must MERGE across the batch boundary; plus an
@@ -296,8 +293,7 @@ class CdxStreamSpec extends AnyFunSuite with SparkTestSession {
   test("zipnumGenerations: each micro-batch lands as a queryable cluster") {
     import spark.implicits._
     implicit val sql = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "stream-gen")
+    val root = SparkTestSession.tmpDir("stream-gen")
     val out = root.resolve("clusters").toString
     val ms = MemoryStream[String]
     // fixed boundaries → generations partition-align with each other
@@ -330,8 +326,7 @@ class CdxStreamSpec extends AnyFunSuite with SparkTestSession {
       "byte-identical to a batch build on the pinned boundaries") {
     import spark.implicits._
     implicit val sql = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "stream-gen-pin")
+    val root = SparkTestSession.tmpDir("stream-gen-pin")
     val lines = (0 until 400).map { i =>
       val key = f"org,s${i % 13}%d)/p/$i%05d"
       s"$key 201201010${i % 10}0000 http://s${i % 13}.org/p/$i " +
@@ -389,8 +384,7 @@ class CdxStreamSpec extends AnyFunSuite with SparkTestSession {
       "of the same lines") {
     import spark.implicits._
     implicit val sql = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "stream-gen-bytes")
+    val root = SparkTestSession.tmpDir("stream-gen-bytes")
     val lines = (0 until 500).map { i =>
       val key = f"org,s${i % 11}%d)/p/$i%05d"
       s"$key 201201010${i % 10}0000 http://s${i % 11}.org/p/$i " +

@@ -19,7 +19,7 @@ class CliSpec extends AnyFunSuite {
   private val conf = new Configuration()
 
   private def tmpDir(prefix: String) =
-    Files.createTempDirectory(Paths.get("/root/repo/target"), prefix)
+    SparkTestSession.tmpDir(prefix)
 
   test("fs-lsr recurses and emits BASENAME<tab>PATH per FILE only") {
     val root = tmpDir("lsr")

@@ -14,8 +14,7 @@ class ClusterOpsSpec extends AnyFunSuite with SparkTestSession {
   private lazy val conf = spark.sparkContext.hadoopConfiguration
 
   private def tmp(prefix: String): String =
-    Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), prefix).toString
+    SparkTestSession.tmpDir(prefix).toString
 
   private def mkLines(n: Int, site: Int => Int = _ % 5): Seq[String] =
     (0 until n).map { i =>
@@ -186,27 +185,12 @@ class ClusterOpsSpec extends AnyFunSuite with SparkTestSession {
       IndexedSeq("org,s1"), linesPerBlock = 20)
     ClusterOps.build(spark, spark.sparkContext.parallelize(b, 2), db,
       IndexedSeq("org,s2"), linesPerBlock = 20)
-    org.apache.spark.sql.graftshim.ListenerShim.drain(spark.sparkContext)
-    val jobs = new java.util.concurrent.atomic.AtomicLong
-    val tasks = new java.util.concurrent.atomic.AtomicLong
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-      override def onTaskStart(
-          e: org.apache.spark.scheduler.SparkListenerTaskStart): Unit =
-        tasks.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val got = ClusterOps.range(spark, Some("org,s1"), Some("org,s3"),
-        Seq(da, db)).toVector
-      org.apache.spark.sql.graftshim.ListenerShim.drain(spark.sparkContext)
-      assert(got == (a ++ b).filter(x => x >= "org,s1" && x < "org,s3")
-        .sorted(KeyOrder))
-      assert(jobs.get == 0 && tasks.get == 0,
-        s"range submitted ${jobs.get} jobs and ${tasks.get} tasks")
-    } finally spark.sparkContext.removeSparkListener(l)
+    val (got, jobs, tasks) = jobsAndTasks(
+      ClusterOps.range(spark, Some("org,s1"), Some("org,s3"), Seq(da, db)).toVector)
+    assert(got == (a ++ b).filter(x => x >= "org,s1" && x < "org,s3")
+      .sorted(KeyOrder))
+    assert(jobs == 0 && tasks == 0,
+      s"range submitted $jobs jobs and $tasks tasks")
   }
 
   test("Boundaries.sample is deterministic; quantiles are sorted distinct") {

@@ -73,7 +73,7 @@ class CollectAuditSpec extends AnyFunSuite {
     "graft/cli/GraftCli.scala" -> 1)
 
   test("every driver-side collect() site is inventoried with its bound") {
-    val root = Paths.get("/root/repo/src/main/scala")
+    val root = Paths.get("src/main/scala")
     val pattern = "\\.collect\\(\\)".r
     val found = Files.walk(root).iterator().asScala
       .filter(p => p.toString.endsWith(".scala"))

@@ -1,7 +1,7 @@
 package graft
 
 import java.io.ByteArrayOutputStream
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 import org.apache.hadoop.conf.Configuration
 import org.scalacheck.Gen
@@ -26,8 +26,7 @@ class FsAndGzRangePropertySpec extends AnyFunSuite {
 
   test("fs-cat: any in-bounds (offset, length) returns exactly that " +
       "slice; offset→EOF returns the suffix") {
-    val dir = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "catprop")
+    val dir = SparkTestSession.tmpDir("catprop")
     val gen = for {
       data <- Gen.nonEmptyListOf(Gen.chooseNum(0, 255)).map(_.map(_.toByte))
       off <- Gen.chooseNum(0, data.length)
@@ -51,8 +50,7 @@ class FsAndGzRangePropertySpec extends AnyFunSuite {
   test("gz-range client rotation algebra: payload stream is preserved " +
       "in order, every rotated file opens with the header, and a file " +
       "exceeds maxFileBytes only when one header+member alone does") {
-    val root = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "gzprop")
+    val root = SparkTestSession.tmpDir("gzprop")
     def gz(s: String): Array[Byte] = {
       val bos = new ByteArrayOutputStream()
       val g = new java.util.zip.GZIPOutputStream(bos)
@@ -72,8 +70,7 @@ class FsAndGzRangePropertySpec extends AnyFunSuite {
       try {
         val base = s"http://127.0.0.1:${server.getAddress.getPort}"
         val date = java.time.Instant.parse("2012-01-01T00:00:00Z")
-        val outDir = Files.createTempDirectory(
-          Paths.get("/root/repo/target"), s"gzpropout$run")
+        val outDir = SparkTestSession.tmpDir(s"gzpropout$run")
         val client = new GzRangeClient(outDir.toString, "p",
           maxFileBytes = budget.toLong,
           headerFor = Some(n => GzRangeClient.warcinfoHeader(n, date)))

@@ -1,7 +1,7 @@
 package graft
 
 import java.net.InetSocketAddress
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.scalatest.BeforeAndAfterAll
@@ -21,14 +21,13 @@ class GzRangeAndHttpFsSpec extends AnyFunSuite with SparkTestSession
   }
 
   test("K12: server hands out member ranges; client rotates output archives") {
-    val root = Files.createTempDirectory(Paths.get("/root/repo/target"), "gzr")
+    val root = SparkTestSession.tmpDir("gzr")
     val m = (0 until 5).map(i => gz(s"member-$i\n"))
     Files.write(root.resolve("src.warc.gz"), m.flatten.toArray)
     val server = GzRangeServer.start(root.toString)
     try {
       val base = s"http://127.0.0.1:${server.getAddress.getPort}"
-      val outDir = Files.createTempDirectory(
-        Paths.get("/root/repo/target"), "gzrout")
+      val outDir = SparkTestSession.tmpDir("gzrout")
       // rotate after ~2 members
       val client = new GzRangeClient(outDir.toString, "rebuilt",
         maxFileBytes = m.head.length * 2 + 1)
@@ -48,14 +47,13 @@ class GzRangeAndHttpFsSpec extends AnyFunSuite with SparkTestSession
   }
 
   test("K12: file names with spaces and '&' survive the fetch URL") {
-    val root = Files.createTempDirectory(Paths.get("/root/repo/target"), "gzre")
+    val root = SparkTestSession.tmpDir("gzre")
     val m = gz("tricky\n")
     Files.write(root.resolve("a b&c.warc.gz"), m)
     val server = GzRangeServer.start(root.toString)
     try {
       val base = s"http://127.0.0.1:${server.getAddress.getPort}"
-      val outDir = Files.createTempDirectory(
-        Paths.get("/root/repo/target"), "gzreout")
+      val outDir = SparkTestSession.tmpDir("gzreout")
       val client = new GzRangeClient(outDir.toString, "enc", 1 << 20)
       client.fetchAndAppend(base, "a b&c.warc.gz", 0, m.length.toLong)
       val files = client.close()
@@ -67,8 +65,7 @@ class GzRangeAndHttpFsSpec extends AnyFunSuite with SparkTestSession
 
   test("K12: the server refuses path escapes — ../ traversal AND the " +
       "bare-prefix sibling trick both 500, in-root stays 200") {
-    val base0 = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "gzesc")
+    val base0 = SparkTestSession.tmpDir("gzesc")
     val root = Files.createDirectory(base0.resolve("root"))
     // a sibling whose name has the root as a PREFIX: startsWith on the
     // bare canonical path (no separator) would wrongly allow it
@@ -96,14 +93,13 @@ class GzRangeAndHttpFsSpec extends AnyFunSuite with SparkTestSession
 
   test("K12: per-file warcinfo header opens every rotated file with its " +
       "OWN name, and the member stream after it is intact") {
-    val root = Files.createTempDirectory(Paths.get("/root/repo/target"), "gzrw")
+    val root = SparkTestSession.tmpDir("gzrw")
     val m = (0 until 3).map(i => gz(s"member-$i\n"))
     Files.write(root.resolve("src.warc.gz"), m.flatten.toArray)
     val server = GzRangeServer.start(root.toString)
     try {
       val base = s"http://127.0.0.1:${server.getAddress.getPort}"
-      val outDir = Files.createTempDirectory(
-        Paths.get("/root/repo/target"), "gzrwout")
+      val outDir = SparkTestSession.tmpDir("gzrwout")
       val date = java.time.Instant.parse("2012-01-01T00:00:00Z")
       // rotate per member: budget = one header + one member, so the
       // second fetch always overflows (header sizes are name-length

@@ -54,7 +54,7 @@ class HttpSourcesSpec extends AnyFunSuite with SparkTestSession
 
   test("K13: import copies once, skips when lengths match, re-copies on drift") {
     import spark.implicits._
-    val dir = Files.createTempDirectory(Paths.get("/root/repo/target"), "himp")
+    val dir = SparkTestSession.tmpDir("himp")
     val dest = dir.resolve("data.bin").toString
     val tasks = Seq(HttpSources.ImportTask(
       s"http://127.0.0.1:$port/data.bin", dest)).toDS()

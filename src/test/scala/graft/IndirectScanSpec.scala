@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,7 +13,7 @@ class IndirectScanSpec extends AnyFunSuite with SparkTestSession {
   import spark.implicits._
 
   private def tmpDir(p: String) =
-    Files.createTempDirectory(Paths.get("/root/repo/target"), p)
+    SparkTestSession.tmpDir(p)
 
   private def gzBytes(s: String): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()

@@ -51,7 +51,7 @@ class KeyOrderSpec extends AnyFunSuite with SparkTestSession {
     val keys = Seq(s"k$Smiley", s"k$PrivateUse", "ka", "k", "kz")
     val lines = keys.map(k => s"$k 20120101000000 http://x.org/ text/html " +
       "200 DIGESTXX - - 10 0 f.warc.gz")
-    val out = "/root/repo/target/tmp/keyorder_cluster"
+    val out = SparkTestSession.tmpDir("keyorder").resolve("c").toString
     graft.operators.ClusterOps.build(spark,
       spark.sparkContext.parallelize(lines, 2), out,
       interior = IndexedSeq(s"k$PrivateUse"), // boundary in the tricky range

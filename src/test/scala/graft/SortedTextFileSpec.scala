@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 import org.apache.hadoop.conf.Configuration
 import org.scalatest.funsuite.AnyFunSuite
@@ -13,8 +13,7 @@ class SortedTextFileSpec extends AnyFunSuite {
 
   private def mkSorted(n: Int): (String, Seq[String]) = {
     val lines = (0 until n).map(i => f"key$i%06d value-$i")
-    val f = Files.createTempFile(
-      Paths.get("/root/repo/target"), "sorted", ".txt")
+    val f = SparkTestSession.tmpFile("sorted", ".txt")
     Files.writeString(f, lines.mkString("", "\n", "\n"))
     (f.toString, lines)
   }
@@ -56,8 +55,7 @@ class SortedTextFileSpec extends AnyFunSuite {
   }
 
   private def writeSplit(content: String): String = {
-    val f = java.nio.file.Files.createTempFile(
-      java.nio.file.Paths.get("/root/repo/target"), "split", ".txt")
+    val f = SparkTestSession.tmpFile("split", ".txt")
     java.nio.file.Files.writeString(f, content)
     f.toString
   }
@@ -84,8 +82,7 @@ class SortedTextFileSpec extends AnyFunSuite {
   }
 
   private def writeJson(content: String): String = {
-    val f = java.nio.file.Files.createTempFile(
-      java.nio.file.Paths.get("/root/repo/target"), "splits", ".json")
+    val f = SparkTestSession.tmpFile("splits", ".json")
     java.nio.file.Files.writeString(f, content)
     f.toString
   }

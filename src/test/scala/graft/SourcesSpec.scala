@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class SourcesSpec extends AnyFunSuite with SparkTestSession {
 
   private def mkTree(): java.nio.file.Path = {
-    val root = Files.createTempDirectory(Paths.get("/root/repo/target"), "lsr")
+    val root = SparkTestSession.tmpDir("lsr")
     Files.createDirectories(root.resolve("a/b"))
     Files.writeString(root.resolve("top.cdx"), "top\n")
     Files.writeString(root.resolve("a/mid.cdx"), "mid\n")
@@ -185,7 +185,7 @@ class SourcesSpec extends AnyFunSuite with SparkTestSession {
 
   test("K6: SequenceFile write -> read roundtrip, null-safe") {
     import spark.implicits._
-    val dir = Files.createTempDirectory(Paths.get("/root/repo/target"), "seq")
+    val dir = SparkTestSession.tmpDir("seq")
       .resolve("out").toString
     val data = Seq(("k1", "v1"), ("k2", "v2"), (null, "v3"))
     graft.sources.SequenceFileSink.write(data.toDS(), dir)
@@ -195,7 +195,7 @@ class SourcesSpec extends AnyFunSuite with SparkTestSession {
 
   test("K7 concept: bulk KV sink shards align with explicit boundaries") {
     import spark.implicits._
-    val dir = Files.createTempDirectory(Paths.get("/root/repo/target"), "bulk")
+    val dir = SparkTestSession.tmpDir("bulk")
       .resolve("out").toString
     val kv = (0 until 100).map(i => (f"k$i%03d", s"v$i"))
     graft.sources.BulkKvSink.write(
@@ -217,7 +217,7 @@ class SourcesSpec extends AnyFunSuite with SparkTestSession {
 
   test("S17 concept: KV range read prunes shards via _boundaries") {
     import spark.implicits._
-    val dir = Files.createTempDirectory(Paths.get("/root/repo/target"), "bulkr")
+    val dir = SparkTestSession.tmpDir("bulkr")
       .resolve("out").toString
     val kv = (0 until 100).map(i => (f"k$i%03d", s"v$i"))
     graft.sources.BulkKvSink.write(
@@ -246,7 +246,7 @@ class SourcesSpec extends AnyFunSuite with SparkTestSession {
 
   test("K8 concept: versioned bulk writes sort (rowkey asc, ts DESC)") {
     import spark.implicits._
-    val dir = Files.createTempDirectory(Paths.get("/root/repo/target"), "bulkv")
+    val dir = SparkTestSession.tmpDir("bulkv")
       .resolve("out").toString
     val rows = Seq(("a", 10L, "old"), ("a", 30L, "new"), ("a", 20L, "mid"),
       ("b", 5L, "only"))

@@ -1,7 +1,7 @@
 package graft
 
 import java.io.ByteArrayInputStream
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -199,7 +199,7 @@ class WarcSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("extract dispatches ARC members: filedesc skipped, CDX fields exact") {
-    val dir = Files.createTempDirectory(Paths.get("/root/repo/target"), "arc")
+    val dir = SparkTestSession.tmpDir("arc")
     val f = dir.resolve("test-00000.arc.gz")
     val fd = gz(ArcRecords.filedescPayload("test-00000.arc.gz", "20050101000000"))
     val m1 = gz(arcHttp("http://example.com/a", "20050101000001", "aaa"))
@@ -224,7 +224,7 @@ class WarcSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("revisit records extract with warc/revisit mime and the payload digest") {
-    val dir = Files.createTempDirectory(Paths.get("/root/repo/target"), "revisit")
+    val dir = SparkTestSession.tmpDir("revisit")
     val origDigest = WarcRecords.sha1Base32("original body".getBytes("UTF-8"))
     val revisit = ("WARC/1.0\r\nWARC-Type: revisit\r\n" +
       "WARC-Target-URI: http://a.org/r\r\n" +
@@ -249,7 +249,7 @@ class WarcSpec extends AnyFunSuite with SparkTestSession {
   test("ARC repackage: synthesized filedesc lead + raw member copy re-extracts") {
     // the ArchiveFileExtractor shape for .arc.gz outputs: a new archive
     // gets a synthesized filedesc:// lead record, then byte-copied members
-    val dir = Files.createTempDirectory(Paths.get("/root/repo/target"), "arcrepack")
+    val dir = SparkTestSession.tmpDir("arcrepack")
     val src = dir.resolve("src.arc.gz")
     val m1 = gz(arcHttp("http://a.org/1", "20050101000001", "one"))
     val m2 = gz(arcHttp("http://b.org/2", "20050101000002", "two"))
@@ -278,7 +278,7 @@ class WarcSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("mixed-format input: ARC and WARC members in one scan") {
-    val dir = Files.createTempDirectory(Paths.get("/root/repo/target"), "mixed")
+    val dir = SparkTestSession.tmpDir("mixed")
     val fa = dir.resolve("a.arc.gz")
     val fw = dir.resolve("w.warc.gz")
     Files.write(fa, gz(arcHttp("http://arc.org/1", "20050101000001", "A")))
@@ -306,7 +306,7 @@ class WarcSpec extends AnyFunSuite with SparkTestSession {
     assert(WarcRecords.parseAll(noLen).flatMap(_.targetUri) ==
       Seq("http://m.org/c"))
     // end-to-end: a file whose middle member holds TWO records
-    val dir = Files.createTempDirectory(Paths.get("/root/repo/target"), "warcmulti")
+    val dir = SparkTestSession.tmpDir("warcmulti")
     val f = dir.resolve("multi-00000.warc.gz")
     Files.write(f,
       gz(warcResponse("http://m.org/x", "2012-01-03T08:00:00Z", "xxx")) ++
@@ -366,7 +366,7 @@ class WarcSpec extends AnyFunSuite with SparkTestSession {
       PlainWarc.iterate(new ByteArrayInputStream(damaged)), _ => bad += 1)
     assert(soft.toVector.length == 2 && bad == 1)
     // extract() dispatches by magic: same rows from plain and gzip files
-    val dir = Files.createTempDirectory(Paths.get("/root/repo/target"), "plainwarc")
+    val dir = SparkTestSession.tmpDir("plainwarc")
     val fp = dir.resolve("p-00000.warc"); Files.write(fp, file)
     val fg = dir.resolve("g-00000.warc.gz")
     Files.write(fg, gz(r1) ++ gz(r2))
@@ -409,7 +409,7 @@ class WarcSpec extends AnyFunSuite with SparkTestSession {
 
   test("chunked response: digest covers the DE-CHUNKED entity (equals " +
       "the plain form's digest); damaged framing keeps raw bytes") {
-    val dir = Files.createTempDirectory(Paths.get("/root/repo/target"), "warcchunk")
+    val dir = SparkTestSession.tmpDir("warcchunk")
     val plain = warcResponse("http://c.org/p", "2012-01-03T08:45:08Z", "doc body")
     def chunked(framed: String): Array[Byte] = {
       val http = "HTTP/1.1 200 OK\r\n" +
@@ -467,7 +467,7 @@ class WarcSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("extract: response records only, CDX fields populated") {
-    val dir = Files.createTempDirectory(Paths.get("/root/repo/target"), "warc")
+    val dir = SparkTestSession.tmpDir("warc")
     val f = dir.resolve("test-00000.warc.gz")
     Files.write(f, gz(warcinfo) ++
       gz(warcResponse("http://example.com/a", "2012-01-03T08:45:08Z", "aaa")) ++
@@ -486,7 +486,7 @@ class WarcSpec extends AnyFunSuite with SparkTestSession {
 
   test("payloadRows: binary entities byte-exact, chunked bodies " +
       "de-chunked to the same bytes, revisits/warcinfo skipped") {
-    val dir = Files.createTempDirectory(Paths.get("/root/repo/target"), "pay")
+    val dir = SparkTestSession.tmpDir("pay")
     val f = dir.resolve("media-00000.warc.gz")
     // a binary entity with interior \r\n\r\n and gzip-magic bytes: the
     // header split must stop at the FIRST separator, not the body's
@@ -530,7 +530,7 @@ class WarcSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("extract -soft: corrupt member counted, good prefix recovered") {
-    val dir = Files.createTempDirectory(Paths.get("/root/repo/target"), "warcbad")
+    val dir = SparkTestSession.tmpDir("warcbad")
     val good = gz(warcResponse("http://ok.org/", "2012-01-03T08:45:08Z", "ok"))
     val corrupt = gz(warcinfo).take(20) // truncated member
     val f = dir.resolve("bad-00000.warc.gz")
@@ -544,7 +544,7 @@ class WarcSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("extractToFiles: per-input .cdx side files via TMP->rename") {
-    val dir = Files.createTempDirectory(Paths.get("/root/repo/target"), "warcout")
+    val dir = SparkTestSession.tmpDir("warcout")
     val f = dir.resolve("in-00001.warc.gz")
     Files.write(f,
       gz(warcResponse("http://b.org/x", "2012-01-03T08:45:08Z", "x")) ++
@@ -560,8 +560,7 @@ class WarcSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("metadataRows: one output family selected, payload + geometry exact") {
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "warcmeta")
+    val dir = SparkTestSession.tmpDir("warcmeta")
     val f = dir.resolve("m.warc.gz")
     val m1 = gz(warcinfo)
     val m2 = gz(warcResponse("http://a.org/", "2012-01-03T08:45:08Z", "x"))
@@ -648,7 +647,7 @@ class WarcSpec extends AnyFunSuite with SparkTestSession {
     val (status, mime) = rec.httpStatusAndMime
     assert(status.contains(200) && mime.contains("text/html"))
     // end-to-end: the damaged member still yields its CDX row
-    val dir = Files.createTempDirectory(Paths.get("/root/repo/target"), "warcnul")
+    val dir = SparkTestSession.tmpDir("warcnul")
     val f = dir.resolve("nul-00000.warc.gz")
     Files.write(f, gz(warcinfo) ++ gz(damaged))
     val rows = WarcExtract.extract(spark, Seq(f.toString)).rows.collect()
@@ -672,7 +671,7 @@ class WarcSpec extends AnyFunSuite with SparkTestSession {
       warcResponse("http://a.org/1", "2012-01-03T08:45:08Z", "aaa") ++ sep ++
       warcResponse("http://b.org/2", "2012-01-04T09:00:00Z", "bbb") ++ sep
     val rezipped = plain.grouped(100).map(gz).reduce(_ ++ _)
-    val dir = Files.createTempDirectory(Paths.get("/root/repo/target"), "warcrz")
+    val dir = SparkTestSession.tmpDir("warcrz")
     val f = dir.resolve("rezip-00000.warc.gz")
     Files.write(f, rezipped)
     val rows = WarcExtract.extract(spark, Seq(f.toString), soft = true)

@@ -7,8 +7,7 @@ class ZipNumOrderingSpec extends AnyFunSuite with SparkTestSession {
 
   test("reported output ordering elides per-partition sorts on the scan") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "ord").resolve("c").toString
+    val dir = SparkTestSession.tmpDir("ord").resolve("c").toString
     (0 until 200).map(i =>
       f"org,o$i%04d)/ 20120101000000 http://o$i.org/ text/html 200 D - - 1 $i f.gz")
       .toDF("line").coalesce(1).sortWithinPartitions("line")

@@ -1,12 +1,11 @@
 package graft
 
-import java.nio.file.Files
-
 import org.scalacheck.Gen
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.model.Cdx
 import graft.operators.ClusterOps
-import graft.sources.zipnum.{ZipNumIndex, ZipNumReader, ZipNumWriter}
+import graft.sources.zipnum.{DistributedZipNumScan, ZipNumIndex, ZipNumReader, ZipNumWriter}
 
 /** Property-based pin of the serving-path bound semantics, generalizing
   * the r18 strictly-below regression test in [[ZipNumRoundtripSpec]]
@@ -63,8 +62,7 @@ class ZipNumPrunePropertySpec extends AnyFunSuite with SparkTestSession {
   }
 
   private def writeCluster(sh: Shape): String = {
-    val d = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "zipnum-prop").toString
+    val d = SparkTestSession.tmpDir("zipnum-prop").toString
     import spark.implicits._
     val ds = spark.createDataset(sh.lines)(implicitly)
       .repartitionByRange(sh.parts, org.apache.spark.sql.functions.col("value"))
@@ -145,6 +143,107 @@ class ZipNumPrunePropertySpec extends AnyFunSuite with SparkTestSession {
           assert(got == want,
             s"seed=$seed lpb=${shapes.map(_.linesPerBlock)} " +
               s"start=$s0 end=$e0: got ${got.size} want ${want.size}")
+        }
+      }
+    }
+  }
+
+  /** One pushed urlkey predicate: its Column, its data-source Filter, and
+    * a brute-force reference in [[graft.util.KeyOrder]] byte order. */
+  private case class Pred(kind: String, v: String) {
+    import org.apache.spark.sql.{functions => F}
+    import org.apache.spark.sql.sources._
+    private def k = F.col("urlkey")
+    def column: org.apache.spark.sql.Column = kind match {
+      case ">=" => k >= v
+      case ">" => k > v
+      case "<" => k < v
+      case "<=" => k <= v
+      case "=" => k === v
+      case "startsWith" => k.startsWith(v)
+      case "isNotNull" => k.isNotNull
+    }
+    def filter: Filter = kind match {
+      case ">=" => GreaterThanOrEqual("urlkey", v)
+      case ">" => GreaterThan("urlkey", v)
+      case "<" => LessThan("urlkey", v)
+      case "<=" => LessThanOrEqual("urlkey", v)
+      case "=" => EqualTo("urlkey", v)
+      case "startsWith" => StringStartsWith("urlkey", v)
+      case "isNotNull" => IsNotNull("urlkey")
+    }
+    def holds(key: String): Boolean = key != null && (kind match {
+      case ">=" => graft.util.KeyOrder.gteq(key, v)
+      case ">" => graft.util.KeyOrder.gt(key, v)
+      case "<" => graft.util.KeyOrder.lt(key, v)
+      case "<=" => graft.util.KeyOrder.lteq(key, v)
+      case "=" => key == v
+      case "startsWith" => key.startsWith(v)
+      case "isNotNull" => true
+    })
+  }
+
+  test("pushed urlkey predicates are exact in the local and the " +
+      "distributed reader, with and without urlkey in the projection") {
+    import org.apache.spark.sql.execution.{FilterExec, LocalTableScanExec}
+    // the same supplementary-plane segments as the range pair property;
+    // lines become CDX-11 so the DSv2 reader parses them
+    val gen = shapeGen(IndexedSeq("k0", "k1"),
+      IndexedSeq("p0", "\uFFFD", "\uD83D\uDE00", "p1")).map { sh =>
+      sh.copy(lines = sh.lines.map { l =>
+        val Array(k, ts, tag) = l.split(" ", 3)
+        s"$k $ts http://x.org/ text/html 200 $tag - - 1 0 f.warc.gz"
+      }.sorted(graft.util.KeyOrder))
+    }
+    val projections = Seq(Cdx.schema.fieldNames.toSeq,
+      Seq("timestamp", "digest", "offset"))
+    (0 until 5).foreach { seed =>
+      val sh = sample(gen, 700L + seed)
+      val dir = writeCluster(sh)
+      val dump = ZipNumReader.localLines(conf, dir).toVector
+      assert(dump == sh.lines)
+      val cells = dump.flatMap(Cdx.splitLine(_))
+      val keys = cells.map(_(0)).distinct
+      // bare keys, nudged keys, code-point prefixes of keys and summary
+      // firstKeys ("urlkey ts": a space inside the bound value)
+      val values = (keys ++ keys.map(_ + "~") ++
+        keys.flatMap(k => (0 to k.codePointCount(0, k.length))
+          .map(n => k.substring(0, k.offsetByCodePoints(0, n)))) ++
+        ZipNumIndex.load(dir, conf).blocks.map(_.firstKey)).distinct
+      val predGen = for {
+        kind <- Gen.oneOf(">=", ">", "<", "<=", "=", "startsWith", "isNotNull")
+        v <- Gen.oneOf(values)
+      } yield Pred(kind, v)
+      val conjGen = Gen.chooseNum(1, 3).flatMap(Gen.listOfN(_, predGen))
+      (0 until 16).foreach { p =>
+        val preds = sample(conjGen, seed * 1000L + p)
+        val wantRows = cells.filter(c => preds.forall(_.holds(c(0))))
+        projections.foreach { cols =>
+          val ords = cols.map(Cdx.schema.fieldIndex)
+          val want = wantRows.map(c => ords.map(c(_)))
+          val ctx = s"seed=$seed lpb=${sh.linesPerBlock} parts=${sh.parts} " +
+            s"preds=$preds cols=${cols.mkString(",")}"
+          val q = spark.read.format("zipnum").load(dir)
+            .where(preds.map(_.column).reduce(_ && _))
+            .select(cols.map(org.apache.spark.sql.functions.col): _*)
+          val plan = q.queryExecution.executedPlan
+          assert(plan.collectFirst { case f: FilterExec => f }.isEmpty,
+            s"$ctx: urlkey predicates left a Filter\n$plan")
+          assert(plan.collectFirst { case l: LocalTableScanExec => l }.nonEmpty ==
+            preds.exists(_.kind != "isNotNull"), s"$ctx: wrong scan\n$plan")
+          val local = q.collect().toSeq.map(_.toSeq.map(v =>
+            if (v == null) null else v.toString))
+          assert(local == want, s"$ctx: format(zipnum) got ${local.size} " +
+            s"want ${want.size}")
+          val required = org.apache.spark.sql.types.StructType(
+            cols.map(c => Cdx.schema(c)))
+          val (residual, rows) = DistributedZipNumScan.rows(dir,
+            preds.map(_.filter).toArray, required)
+          assert(residual.isEmpty, s"$ctx: residual $residual")
+          val dist = rows.map(r => r.toSeq(required).map(v =>
+            if (v == null) null else v.toString))
+          assert(dist == want, s"$ctx: ZipNumScan got ${dist.size} " +
+            s"want ${want.size}")
         }
       }
     }

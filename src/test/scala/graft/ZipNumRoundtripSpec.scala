@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.zipnum.{ZipNumIndex, ZipNumReader, ZipNumWriter}
@@ -20,8 +18,7 @@ class ZipNumRoundtripSpec extends AnyFunSuite with SparkTestSession {
   private lazy val conf = spark.sparkContext.hadoopConfiguration
   private lazy val lines = mkLines(2000)
   private lazy val dir: String = {
-    val d = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "zipnum-spec").toString
+    val d = SparkTestSession.tmpDir("zipnum-spec").toString
     import spark.implicits._
     val ds = spark.createDataset(lines)(implicitly)
       .repartitionByRange(4, org.apache.spark.sql.functions.col("value"))
@@ -109,6 +106,33 @@ class ZipNumRoundtripSpec extends AnyFunSuite with SparkTestSession {
       lines.map(_.split(" ")(0)).count(_.startsWith("org,site2)/p/0001")))
   }
 
+  test("DSv2: a small bounded read is a bare LocalTableScan and runs no " +
+      "job; an unbounded read stays a distributed BatchScan") {
+    import org.apache.spark.sql.execution.LocalTableScanExec
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    import org.apache.spark.sql.functions._
+    val index = ZipNumIndex.load(dir, conf)
+    val n = index.blocks.size
+    val ((plan, got), jobs, tasks) = jobsAndTasks {
+      val q = spark.read.format("zipnum").load(dir)
+        .where(col("urlkey") === "org,site3)/p/000500")
+      (q.queryExecution.executedPlan, q.collect())
+    }
+    assert(plan.isInstanceOf[LocalTableScanExec], s"not a bare local scan:\n$plan")
+    assert(got.map(_.getString(0)).toSeq == Seq("org,site3)/p/000500"))
+    assert(jobs == 0 && tasks == 0,
+      s"bounded read submitted $jobs jobs and $tasks tasks")
+
+    val ((full, all), fullJobs, _) = jobsAndTasks {
+      val q = spark.read.format("zipnum").load(dir)
+      (q.queryExecution.executedPlan, q.collect())
+    }
+    assert(full.collectFirst { case b: BatchScanExec => b }.nonEmpty,
+      s"unbounded read must stay distributed:\n$full")
+    assert(full.toString.contains(s"blocks=$n/$n"), full.toString)
+    assert(all.length == lines.size && fullJobs >= 1)
+  }
+
   test("aligned rangesRdd partitions cover disjoint ranges in order") {
     val bounds = IndexedSeq("org,site2", "org,site5")
     val rdd = ZipNumReader.rangesRdd(spark, dir, bounds)
@@ -152,8 +176,7 @@ class ZipNumRoundtripSpec extends AnyFunSuite with SparkTestSession {
 
   test("overwrite stages a complete sibling cluster and swaps: new content " +
       "served, no .__stage/.__old leftovers, mid-swap backup is guarded") {
-    val d = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "zipnum-swap").toString
+    val d = SparkTestSession.tmpDir("zipnum-swap").toString
     val cluster = s"$d/cluster"
     import spark.implicits._
     def write(ls: Seq[String]): Unit = {
@@ -197,8 +220,7 @@ class ZipNumRoundtripSpec extends AnyFunSuite with SparkTestSession {
       "org,b)/x 20120101000000 r3",
       "org,b)/x 20120101000000 r4",
       "org,c)/x 20120101000000 r5")
-    val d = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "zipnum-keyrun").toString
+    val d = SparkTestSession.tmpDir("zipnum-keyrun").toString
     import spark.implicits._
     val ds = spark.createDataset(ls)(implicitly)
       .repartitionByRange(1, org.apache.spark.sql.functions.col("value"))

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
@@ -36,8 +36,7 @@ class ZipNumWriteSpec extends AnyFunSuite with SparkTestSession {
       f"org,w$i%04d)/ 20120101000000 http://w$i.org/ text/html 200 D$i - - 1 $i f.gz")
 
   test("df.write.format(zipnum) roundtrips through the DSv2 read path") {
-    val dir = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "dsv2w").resolve("c").toString
+    val dir = SparkTestSession.tmpDir("dsv2w").resolve("c").toString
     val lines = mkLines(300)
     lines.toDF("line")
       .repartitionByRange(3, col("line")).sortWithinPartitions("line")
@@ -55,8 +54,7 @@ class ZipNumWriteSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("overwrite replaces a previous cluster; errorifexists refuses") {
-    val dir = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "dsv2w2").resolve("c").toString
+    val dir = SparkTestSession.tmpDir("dsv2w2").resolve("c").toString
     mkLines(10).toDF("line").coalesce(1).sortWithinPartitions("line")
       .write.format("zipnum").mode("overwrite").save(dir)
     mkLines(5).toDF("line").coalesce(1).sortWithinPartitions("line")
@@ -96,8 +94,7 @@ class ZipNumWriteSpec extends AnyFunSuite with SparkTestSession {
       ZipNumReader.localLines(conf, dir).toSeq
     conf.setClass("fs.fault.impl", classOf[FaultRenameFs],
       classOf[org.apache.hadoop.fs.FileSystem])
-    val local = Files.createTempDirectory(Paths.get("target"), name)
-      .toAbsolutePath.resolve("c").toString
+    val local = SparkTestSession.tmpDir(name).resolve("c").toString
     val dir = s"fault://$local"
     val stage = new java.io.File(s"$local.__stage")
     val old = new java.io.File(s"$local.__old")
@@ -159,7 +156,7 @@ class ZipNumWriteSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("WAT rows render the JSON metadata envelope") {
-    val dir = Files.createTempDirectory(Paths.get("/root/repo/target"), "wat")
+    val dir = SparkTestSession.tmpDir("wat")
     def gz(b: Array[Byte]): Array[Byte] = {
       val bos = new java.io.ByteArrayOutputStream()
       val g = new java.util.zip.GZIPOutputStream(bos); g.write(b); g.close()
