@@ -2,9 +2,9 @@ package graft.operators
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Encoders, SparkSession}
 
-import graft.sources.zipnum.{ZipNumFormat, ZipNumIndex, ZipNumReader, ZipNumWriter}
+import graft.sources.zipnum.{ZipNumFormat, ZipNumIndex, ZipNumReader}
 
 /**
  * The three headline cluster pipelines (SURVEY §3.1–§3.3), Spark-first.
@@ -41,8 +41,7 @@ object ClusterOps {
       .map((_, null))
       .repartitionAndSortWithinPartitions(new BoundaryPartitioner(interior))
       .keys
-    ZipNumWriter.writeRdd(spark, sorted, outDir, linesPerBlock,
-      overwrite = overwrite)
+    write(spark, sorted, outDir, linesPerBlock, overwrite)
   }
 
   /** Merge sorted clusters without any shuffle: align every input to shared
@@ -77,9 +76,17 @@ object ClusterOps {
         merged.mapPartitions(GlobalCdxCleanup.streamingLine(dayLimit),
           preservesPartitioning = true)
       else merged
-    ZipNumWriter.writeRdd(spark, cleaned, outDir, linesPerBlock,
-      overwrite = overwrite)
+    write(spark, cleaned, outDir, linesPerBlock, overwrite)
   }
+
+  /** Write `lines` through the `zipnum` DSv2 sink, partition i as shard i.
+    * The Dataset hop keeps the RDD's partitions as they are (no shuffle,
+    * no sort: the sink requires no distribution or ordering). */
+  private def write(spark: SparkSession, lines: RDD[String], outDir: String,
+                    linesPerBlock: Int, overwrite: Boolean): Unit =
+    spark.createDataset(lines)(Encoders.STRING).write.format("zipnum")
+      .option("linesPerBlock", linesPerBlock.toLong)
+      .mode(if (overwrite) "overwrite" else "append").save(outDir)
 
   /** Stream [start, end) of one or more clusters, globally sorted. */
   def range(spark: SparkSession, start: Option[String], end: Option[String],

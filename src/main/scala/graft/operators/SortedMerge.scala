@@ -34,7 +34,8 @@ object SortedMerge {
 
   /** Merge partition-aligned sorted RDDs: partition i of every input covers
     * the same key range and is internally sorted ⇒ zero-shuffle merge with
-    * the same ranges, still sorted. */
+    * the same ranges, still sorted — partition i is output shard i when
+    * ClusterOps.merge writes it through the `zipnum` sink. */
   def merge(rdds: Seq[RDD[String]]): RDD[String] = {
     implicit val keyOrder: Ordering[String] = graft.util.KeyOrder
     require(rdds.nonEmpty, "nothing to merge")

@@ -47,6 +47,8 @@ object ZipNumReader {
    * (/root/reference/src/main/java/org/archive/hadoop/io/MergeClusterRangesInputFormat.java:29-173).
    * Every input cluster rendered against the SAME boundaries has aligned,
    * internally sorted partitions → zipPartitions heap-merge, zero shuffle.
+   * This is the merge's one RDD read: the DSv2 scan has one partition per
+   * pruned slice, so it cannot split clusters at shared boundaries.
    */
   def rangesRdd(spark: SparkSession, dir: String,
                 boundaries: IndexedSeq[String]): RDD[String] = {

@@ -5,12 +5,9 @@ import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /**
- * The ONE shard-writing state machine, commit fold and overwrite swap,
- * shared by the RDD writer ([[ZipNumWriter.writeRdd]]) and the DSv2
- * writer (ZipNumWrite): two copies had already drifted twice
- * (task-attempt safety existed only in the DSv2 copy; later the RDD
- * swap claimed "old cluster restored" without checking the restore
- * rename), so this logic lives here exactly once.
+ * The shard-writing state machine, commit fold and staged swap of the one
+ * ZipNum writer, the DSv2 `zipnum` sink (ZipNumWrite), which
+ * `ClusterOps.build`/`merge` write through too.
  */
 private[zipnum] final class ShardStream(fs: FileSystem, tmpDir: String,
                                         part: String, tmpName: String,
@@ -57,17 +54,17 @@ private[zipnum] final class ShardStream(fs: FileSystem, tmpDir: String,
 
 private[zipnum] object ZipNumShardIO {
 
-  /** Prepare the directory a write stages its shards in: `outDir` for a
-    * fresh cluster, the sibling `outDir.__stage` when replacing one.
+  /** Prepare `outDir.__stage`, where every write stages its cluster.
     *
-    * Overwrite never touches the old cluster until the NEW one is
-    * complete: the whole replacement (shards + ALL.summary + manifest)
-    * is staged beside it and [[swapIn]] swaps it in via two directory
-    * renames (old → .__old, stage → out). At no point does the data
-    * exist in fewer than one complete cluster — a crash between the
-    * renames leaves the old cluster intact at .__old (recovered by the
-    * guard below or by hand), unlike a delete-then-rename commit whose
-    * mid-commit IO failure could lose both (r18 advice). */
+    * The target is not touched until the new cluster (shards +
+    * ALL.summary + manifest) is complete; [[swapIn]] then moves it in by
+    * directory renames (old → .__old when replacing, stage → out). So a
+    * failed write leaves the target as it was — absent or the old cluster
+    * — never a half cluster that serves some shards' lines without error.
+    * The data never exists in fewer than one complete cluster: a crash
+    * between the renames leaves the old cluster intact at .__old
+    * (recovered by the guard below or by hand), unlike a delete-then-rename
+    * commit whose mid-commit IO failure could lose both (r18 advice). */
   def prepareStage(fs: FileSystem, outDir: String,
                    overwrite: Boolean): String = {
     val preExisting = fs.exists(new Path(outDir))
@@ -83,32 +80,34 @@ private[zipnum] object ZipNumShardIO {
         s"renaming $oldPath back to $outDir")
       fs.delete(oldPath, true)
     }
-    val stageDir = if (preExisting) outDir + ".__stage" else outDir
-    if (preExisting) fs.delete(new Path(stageDir), true) // stale stage from a crashed run
+    val stageDir = outDir + ".__stage"
+    fs.delete(new Path(stageDir), true) // stale stage from a crashed run
     fs.mkdirs(new Path(stageDir, "_tmp"))
     stageDir
   }
 
-  /** Swap a complete staged cluster (see [[prepareStage]]) in over the
-    * old one: two renames, the old cluster always whole somewhere. If
-    * the swap-in rename fails the old cluster is renamed back, and the
-    * error says whether that restore worked. */
+  /** Move a complete staged cluster (see [[prepareStage]]) to `outDir`:
+    * one rename for a fresh target; two over an old cluster, which is
+    * always whole somewhere. If the swap-in rename fails the old cluster
+    * is renamed back, and the error says whether that restore worked. */
   def swapIn(fs: FileSystem, outDir: String, stageDir: String): Unit = {
     val out = new Path(outDir)
     val oldPath = new Path(outDir + ".__old")
-    require(fs.rename(out, oldPath),
+    val replacing = fs.exists(out)
+    if (replacing) require(fs.rename(out, oldPath),
       s"zipnum: swap rename $outDir -> $oldPath failed " +
         s"(old cluster untouched; new cluster complete at $stageDir)")
     if (!fs.rename(new Path(stageDir), out)) {
       // report what ACTUALLY happened: the restore rename can itself fail
-      val restored = fs.rename(oldPath, out) // never leave the target empty
+      val state =
+        if (!replacing) s"no cluster at $outDir"
+        else if (fs.rename(oldPath, out)) s"old cluster restored at $outDir"
+        else s"restore rename ALSO failed — old cluster at $oldPath"
       throw new IllegalStateException(
-        s"zipnum: swap rename $stageDir -> $outDir failed; " +
-          (if (restored) s"old cluster restored at $outDir"
-           else s"restore rename ALSO failed — old cluster at $oldPath") +
+        s"zipnum: swap rename $stageDir -> $outDir failed; $state" +
           s"; new cluster left complete at $stageDir")
     }
-    fs.delete(oldPath, true)
+    if (replacing) fs.delete(oldPath, true)
   }
 
   /** Driver commit: rename winner shards into place (loudly failing on a

@@ -9,16 +9,24 @@ import org.apache.spark.sql.types.{StringType, StructType}
 import org.apache.spark.util.SerializableConfiguration
 
 /**
- * DSv2 write path: `lines.write.format("zipnum").mode("overwrite").save(dir)`
- * (SURVEY §2 K4 ZipNumStorage). Input contract matches the reference's
- * StoreFunc: a single STRING column of CDX lines whose partitioning/order
- * IS the shard layout (range-partition + sortWithinPartitions upstream,
- * e.g. via BoundaryPartitioner — same assumption Pig's ordered store made).
+ * The ZipNum writer: `lines.write.format("zipnum").save(dir)` (SURVEY §2
+ * K4 ZipNumStorage); `ClusterOps.build`/`merge` write through it too.
+ * Input contract matches the reference's StoreFunc: a single STRING column
+ * of CDX lines whose partitioning/order IS the shard layout (range-partition
+ * + sortWithinPartitions upstream, e.g. via BoundaryPartitioner — same
+ * assumption Pig's ordered store made). Partition i becomes shard
+ * `part-a-<i>`; an empty partition writes no shard.
  *
- * Each task writes its shard + idx under `_tmp/` with a task-attempt
- * suffix (speculative/retried attempts cannot collide); the driver commit
- * renames winners into place and folds the per-shard indexes into
- * ALL.summary + manifest.txt.
+ * Modes: `overwrite` replaces `dir` (or creates it); `append` creates
+ * `dir` and refuses if it is present — a cluster is never extended in
+ * place. Option `linesPerBlock` (default
+ * [[ZipNumFormat.DefaultLinesPerBlock]]) must be a positive integer.
+ *
+ * Each task writes its shard + idx under the stage's `_tmp/` with a
+ * task-attempt suffix (speculative/retried attempts cannot collide); the
+ * driver commit renames winners into place, folds the per-shard indexes
+ * into ALL.summary + manifest.txt, and swaps the stage in (see
+ * [[ZipNumShardIO.prepareStage]]).
  */
 private[zipnum] class ZipNumWriteBuilder(dir: String, info: LogicalWriteInfo)
     extends WriteBuilder with SupportsTruncate {
@@ -36,7 +44,11 @@ private[zipnum] class ZipNumWriteBuilder(dir: String, info: LogicalWriteInfo)
       val conf = new SerializableConfiguration(
         spark.sparkContext.hadoopConfiguration)
       val linesPerBlock = Option(info.options.get("linesPerBlock"))
-        .map(_.toInt).getOrElse(ZipNumFormat.DefaultLinesPerBlock)
+        .fold(ZipNumFormat.DefaultLinesPerBlock) { v =>
+          v.toIntOption.filter(_ >= 1).getOrElse(
+            throw new IllegalArgumentException(
+              s"zipnum: linesPerBlock must be a positive integer; got '$v'"))
+        }
       new ZipNumBatchWrite(dir, conf, linesPerBlock, doTruncate)
     }
   }
@@ -52,17 +64,15 @@ private[zipnum] class ZipNumBatchWrite(dir: String,
                                        truncate: Boolean) extends BatchWrite {
 
   private val out = new Path(dir)
-  // dir when writing fresh; dir + ".__stage" when replacing an existing
-  // cluster — set once driver-side in createBatchWriterFactory, read by
-  // commit/abort on the same instance
-  @volatile private var stageDir: String = dir
+  // dir + ".__stage" — set once driver-side in createBatchWriterFactory,
+  // read by commit/abort on the same instance
+  @volatile private var stageDir: String = _
   // set when commit() fails AFTER the staged cluster is known complete
   // (the swap-in rename failed): abort() must then NOT delete stageDir —
   // it may be the only intact copy of the new data (r20 advice)
   @volatile private var preserveStageOnAbort: Boolean = false
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    // the same atomic-replace staging as ZipNumWriter.writeRdd
     stageDir = ZipNumShardIO.prepareStage(out.getFileSystem(conf.value),
       dir, truncate)
     new ZipNumWriterFactory(stageDir, conf, linesPerBlock)
@@ -70,27 +80,22 @@ private[zipnum] class ZipNumBatchWrite(dir: String,
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val fs = out.getFileSystem(conf.value)
-    val winners = messages.collect { case m: ZipNumCommit => m }
+    // an empty partition writes no shard; its empty tmp files go with _tmp/
+    val winners = messages.collect { case m: ZipNumCommit if m.nLines > 0 => m }
       .sortBy(_.partitionId)
     ZipNumShardIO.commitShards(fs, stageDir,
       winners.map(m => (m.part, m.tmpName)).toSeq)
-    if (stageDir != dir) {
-      // commitShards already completed: the staged cluster is whole, so
-      // it must survive the abort() Spark fires when the swap throws
-      // (r21 advice fix — previously preserveStageOnAbort was still
-      // false here, so the message pointed at a stage dir that abort
-      // had just deleted)
-      preserveStageOnAbort = true
-      ZipNumShardIO.swapIn(fs, dir, stageDir)
-    }
+    // commitShards already completed: the staged cluster is whole, so it
+    // must survive the abort() Spark fires when the swap throws (r21
+    // advice fix — previously preserveStageOnAbort was still false here,
+    // so the message pointed at a stage dir that abort had just deleted)
+    preserveStageOnAbort = true
+    ZipNumShardIO.swapIn(fs, dir, stageDir)
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = out.getFileSystem(conf.value)
-    if (preserveStageOnAbort) () // complete staged cluster: sole good copy
-    else if (stageDir != dir) fs.delete(new Path(stageDir), true)
-    else fs.delete(new Path(dir, "_tmp"), true)
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    if (stageDir != null && !preserveStageOnAbort)
+      out.getFileSystem(conf.value).delete(new Path(stageDir), true)
 }
 
 private[zipnum] class ZipNumWriterFactory(dir: String,

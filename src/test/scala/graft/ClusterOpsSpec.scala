@@ -57,6 +57,28 @@ class ClusterOpsSpec extends AnyFunSuite with SparkTestSession {
     assert(idx.blocks.map(_.part).distinct.size == 4)
   }
 
+  test("build: an empty boundary range writes no shard; shard names keep " +
+      "their partition index and the manifest lists exactly those shards") {
+    val lines = mkLines(200)
+    val d = tmp("buildempty") + "/c"
+    // six interior boundaries, three empty ranges: (-inf, "a"),
+    // ["org,s1~", "org,s2") and ["zzz", +inf)
+    val interior =
+      IndexedSeq("a", "org,s1", "org,s1~", "org,s2", "org,s3", "zzz")
+    ClusterOps.build(spark, spark.sparkContext.parallelize(lines, 3), d,
+      interior, linesPerBlock = 30)
+    val shards = Seq(1, 2, 4, 5).map(i => f"part-a-$i%05d")
+    // (dot files are the local filesystem's .crc checksums)
+    assert(new java.io.File(d).list().filterNot(_.startsWith(".")).toSet ==
+      shards.flatMap(p => Seq(s"$p.gz", s"$p-idx")).toSet ++
+        Set("ALL.summary", "manifest.txt"))
+    assert(Files.readAllLines(java.nio.file.Paths.get(d, "manifest.txt"))
+      .toArray.toSeq == shards.map(_ + ".gz"))
+    assert(ZipNumIndex.load(d, conf).blocks.map(_.part).distinct ==
+      shards)
+    assert(ZipNumReader.localLines(conf, d).toSeq == lines.sorted)
+  }
+
   test("merge: zero-shuffle union of two clusters equals sorted union") {
     val a = mkLines(300, _ % 3)
     val b = mkLines(200, i => i % 3 + 2) // overlapping + disjoint keys

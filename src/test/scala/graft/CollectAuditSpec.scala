@@ -48,8 +48,6 @@ class CollectAuditSpec extends AnyFunSuite {
   //  - operators/Sketches.scala: the <= k·partitions sketch-sample merge.
   //  - operators/ArchiveRepackage.scala: one (file, bytes) report row
   //    per written archive.
-  //  - sources/zipnum/ZipNumWriter.scala: one (shard, index) row per
-  //    output shard for the commit-phase summary/manifest.
   //  - cli/GraftCli.scala: the http-import per-task report — bounded by
   //    the operator-written manifest, not by any corpus.
   private val allowed: Map[String, Int] = Map(
@@ -69,7 +67,6 @@ class CollectAuditSpec extends AnyFunSuite {
     "graft/operators/llm/ConnectedComponents.scala" -> 1,
     "graft/operators/Sketches.scala" -> 1,
     "graft/operators/ArchiveRepackage.scala" -> 1,
-    "graft/sources/zipnum/ZipNumWriter.scala" -> 1,
     "graft/cli/GraftCli.scala" -> 1)
 
   test("every driver-side collect() site is inventoried with its bound") {

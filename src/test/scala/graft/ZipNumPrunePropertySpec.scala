@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.Cdx
 import graft.operators.ClusterOps
-import graft.sources.zipnum.{DistributedZipNumScan, ZipNumIndex, ZipNumReader, ZipNumWriter}
+import graft.sources.zipnum.{DistributedZipNumScan, ZipNumIndex, ZipNumReader}
 
 /** Property-based pin of the serving-path bound semantics, generalizing
   * the r18 strictly-below regression test in [[ZipNumRoundtripSpec]]
@@ -67,8 +67,8 @@ class ZipNumPrunePropertySpec extends AnyFunSuite with SparkTestSession {
     val ds = spark.createDataset(sh.lines)(implicitly)
       .repartitionByRange(sh.parts, org.apache.spark.sql.functions.col("value"))
       .sortWithinPartitions("value")
-    ZipNumWriter.write(ds, s"$d/cluster", linesPerBlock = sh.linesPerBlock,
-      overwrite = true)
+    ds.write.format("zipnum").option("linesPerBlock", sh.linesPerBlock)
+      .mode("overwrite").save(s"$d/cluster")
     s"$d/cluster"
   }
 

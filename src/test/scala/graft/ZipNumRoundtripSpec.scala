@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.zipnum.{ZipNumIndex, ZipNumReader, ZipNumWriter}
+import graft.sources.zipnum.{ZipNumIndex, ZipNumReader}
 
 /** Write→read identity and block-pruned range scans over a real cluster
   * (SURVEY §3.1 + §3.3 composed — the spine query). */
@@ -23,7 +23,8 @@ class ZipNumRoundtripSpec extends AnyFunSuite with SparkTestSession {
     val ds = spark.createDataset(lines)(implicitly)
       .repartitionByRange(4, org.apache.spark.sql.functions.col("value"))
       .sortWithinPartitions("value")
-    ZipNumWriter.write(ds, s"$d/cluster", linesPerBlock = 100, overwrite = true)
+    ds.write.format("zipnum").option("linesPerBlock", 100)
+      .mode("overwrite").save(s"$d/cluster")
     s"$d/cluster"
   }
 
@@ -183,7 +184,8 @@ class ZipNumRoundtripSpec extends AnyFunSuite with SparkTestSession {
       val ds = spark.createDataset(ls)(implicitly)
         .repartitionByRange(2, org.apache.spark.sql.functions.col("value"))
         .sortWithinPartitions("value")
-      ZipNumWriter.write(ds, cluster, linesPerBlock = 2, overwrite = true)
+      ds.write.format("zipnum").option("linesPerBlock", 2)
+        .mode("overwrite").save(cluster)
     }
     write(Seq("a 1 old", "b 1 old", "c 1 old"))
     write(Seq("a 1 new", "d 1 new"))
@@ -225,7 +227,8 @@ class ZipNumRoundtripSpec extends AnyFunSuite with SparkTestSession {
     val ds = spark.createDataset(ls)(implicitly)
       .repartitionByRange(1, org.apache.spark.sql.functions.col("value"))
       .sortWithinPartitions("value")
-    ZipNumWriter.write(ds, s"$d/cluster", linesPerBlock = 2, overwrite = true)
+    ds.write.format("zipnum").option("linesPerBlock", 2)
+      .mode("overwrite").save(s"$d/cluster")
     val got = ZipNumReader.localLines(conf, s"$d/cluster",
       Some("org,b)/x 20120101000000"), Some("org,c")).toSeq.sorted
     assert(got == ls.slice(1, 5), // r1..r4 — r1 lives in block0's tail

@@ -84,18 +84,24 @@ class ZipNumWriteSpec extends AnyFunSuite with SparkTestSession {
     }
   }
 
-  /** Fault-injected overwrite swap over `fault://`, shared by both
-    * writers: `write(dir, n)` overwrites the cluster at `dir` with
+  private def served(dir: String): Seq[String] =
+    ZipNumReader.localLines(spark.sparkContext.hadoopConfiguration, dir).toSeq
+
+  /** A fresh cluster target under a new temp dir: (its `fault://` path,
+    * the same path on the local filesystem). */
+  private def faultTarget(name: String): (String, String) = {
+    spark.sparkContext.hadoopConfiguration.setClass("fs.fault.impl",
+      classOf[FaultRenameFs], classOf[org.apache.hadoop.fs.FileSystem])
+    val local = SparkTestSession.tmpDir(name).resolve("c").toString
+    (s"fault://$local", local)
+  }
+
+  /** Fault-injected overwrite swap over `fault://`, shared by both entry
+    * points: `write(dir, n)` overwrites the cluster at `dir` with
     * mkLines(n). */
   private def swapFaultScenarios(name: String,
                                  write: (String, Int) => Unit): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    def served(dir: String): Seq[String] =
-      ZipNumReader.localLines(conf, dir).toSeq
-    conf.setClass("fs.fault.impl", classOf[FaultRenameFs],
-      classOf[org.apache.hadoop.fs.FileSystem])
-    val local = SparkTestSession.tmpDir(name).resolve("c").toString
-    val dir = s"fault://$local"
+    val (dir, local) = faultTarget(name)
     val stage = new java.io.File(s"$local.__stage")
     val old = new java.io.File(s"$local.__old")
     FaultRenameFs.failWhen = (_, _) => false
@@ -147,12 +153,92 @@ class ZipNumWriteSpec extends AnyFunSuite with SparkTestSession {
         .write.format("zipnum").mode("overwrite").save(dir))
   }
 
-  test("cluster-build --overwrite (the RDD writer) shares the swap: a " +
-      "failed swap-in restores the old cluster, or says the restore failed") {
+  test("cluster-build --overwrite (through the same sink) shares the swap: " +
+      "a failed swap-in restores the old cluster, or says the restore failed") {
     swapFaultScenarios("faultrdd",
       (dir, n) => graft.operators.ClusterOps.build(spark,
         spark.sparkContext.parallelize(mkLines(n), 2), dir,
         IndexedSeq("org,w0002)/"), linesPerBlock = 2, overwrite = true))
+  }
+
+  /** A first write whose commit fails part-way (the rename of shard
+    * part-a-00001 fails after part-a-00000 landed) must leave no target at
+    * all: a target holding the renamed shards plus an ALL.summary would
+    * serve half the lines without error. `write(dir, n)` creates the
+    * cluster at `dir` from mkLines(n) in two partitions. */
+  private def freshTargetFaultScenario(name: String,
+                                       write: (String, Int) => Unit): Unit = {
+    val (dir, local) = faultTarget(name)
+    FaultRenameFs.failWhen = (_, dst) => dst.getName == "part-a-00001.gz"
+    val e = intercept[Exception](write(dir, 40))
+    FaultRenameFs.failWhen = (_, _) => false
+    assert(msgs(e).exists(_.contains("rename of part-a-00001.gz failed")),
+      msgs(e))
+    val left = new java.io.File(local).getParentFile.list().toSeq
+    assert(left.isEmpty,
+      s"a failed first write must leave neither target nor stage: $left")
+    // a failed stage -> target rename keeps the complete stage, no target
+    FaultRenameFs.failWhen = (src, _) => src.getName.endsWith(".__stage")
+    val eSwap = intercept[Exception](write(dir, 40))
+    FaultRenameFs.failWhen = (_, _) => false
+    assert(msgs(eSwap).exists(_.contains(s"no cluster at $dir")), msgs(eSwap))
+    assert(!new java.io.File(local).exists())
+    assert(new java.io.File(s"$local.__stage").list().contains("ALL.summary"))
+    write(dir, 40)
+    assert(served(dir) == mkLines(40))
+  }
+
+  test("a failed first write leaves no half cluster: format(zipnum) append") {
+    freshTargetFaultScenario("freshdsv2",
+      (dir, n) => mkLines(n).toDF("line")
+        .repartitionByRange(2, col("line")).sortWithinPartitions("line")
+        .write.format("zipnum").option("linesPerBlock", "5")
+        .mode("append").save(dir))
+  }
+
+  test("a failed first write leaves no half cluster: cluster-build") {
+    freshTargetFaultScenario("freshbuild",
+      (dir, n) => graft.operators.ClusterOps.build(spark,
+        spark.sparkContext.parallelize(mkLines(n), 3), dir,
+        IndexedSeq("org,w0020)/"), linesPerBlock = 5))
+  }
+
+  test("linesPerBlock < 1 or non-numeric is rejected, naming the value, " +
+      "and writes nothing") {
+    val d = SparkTestSession.tmpDir("lpb")
+    def rejected(name: String, value: String)(write: String => Unit): Unit = {
+      val dir = d.resolve(name).toString
+      val e = intercept[IllegalArgumentException](write(dir))
+      assert(e.getMessage.contains(s"linesPerBlock must be a positive " +
+        s"integer; got '$value'"), e.getMessage)
+      assert(!new java.io.File(dir).exists())
+    }
+    Seq("0", "-3", "ten").foreach { v =>
+      rejected(s"dsv2$v", v)(dir => mkLines(10).toDF("line").coalesce(1)
+        .write.format("zipnum").option("linesPerBlock", v)
+        .mode("overwrite").save(dir))
+    }
+    rejected("build0", "0")(dir => graft.operators.ClusterOps.build(spark,
+      spark.sparkContext.parallelize(mkLines(10), 2), dir,
+      IndexedSeq("org,w0005)/"), linesPerBlock = 0))
+  }
+
+  test("an empty partition writes no shard; the manifest lists only the " +
+      "written shards") {
+    val dir = SparkTestSession.tmpDir("dsv2empty").resolve("c").toString
+    val lines = mkLines(6)
+    // partitions 0 and 2 hold two sorted lines each; partition 1 is empty
+    val rdd = spark.sparkContext.parallelize(lines, 3)
+      .mapPartitionsWithIndex((i, it) => if (i == 1) Iterator.empty else it)
+    spark.createDataset(rdd).write.format("zipnum")
+      .option("linesPerBlock", "1").mode("append").save(dir)
+    // (dot files are the local filesystem's .crc checksums)
+    assert(new java.io.File(dir).list().filterNot(_.startsWith(".")).toSet ==
+      Set("ALL.summary", "manifest.txt", "part-a-00000.gz",
+        "part-a-00000-idx", "part-a-00002.gz", "part-a-00002-idx"))
+    assert(Files.readAllLines(java.nio.file.Paths.get(dir, "manifest.txt"))
+      .toArray.toSeq == Seq("part-a-00000.gz", "part-a-00002.gz"))
+    assert(served(dir) == lines.take(2) ++ lines.drop(4))
   }
 
   test("WAT rows render the JSON metadata envelope") {
