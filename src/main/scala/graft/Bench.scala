@@ -99,21 +99,8 @@ object Bench {
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     // GRAFT_BENCH_ONLY=q30_multimodal,q47_pii_scrub — diagnostic isolation
     // runs (suite-order-effect experiments); unset = the official full set.
-    val only = sys.env.get("GRAFT_BENCH_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    // same guard as Verify's GRAFT_VERIFY_ONLY: a set-but-empty or typo'd
-    // filter must abort loudly, not bench zero queries and emit a clean
-    // {"value":0.000,"n_queries":0} summary
-    only.foreach { o =>
-      require(o.nonEmpty,
-        "GRAFT_BENCH_ONLY is set but names no queries — refusing a vacuous green bench")
-      val unknown = o -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"GRAFT_BENCH_ONLY names unknown queries: ${unknown.mkString(", ")}")
-    }
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-    val names = selected.map(_._1)
+    val selected = SparkEntry.selectGates("GRAFT_BENCH_ONLY").sortBy(_.name)
+    val names = selected.map(_.name)
     val samples = scala.collection.mutable.LinkedHashMap[String, List[Double]](
       names.map(_ -> List.empty[Double]): _*)
     for (rep <- 1 to reps; name <- names) {
@@ -167,7 +154,7 @@ object Bench {
     // per-query numbers live in DUCK_BENCH.json, committed in the repo).
     val duck = scala.util.Try(
       java.nio.file.Files.readString(java.nio.file.Paths.get(
-        sys.env.getOrElse("GRAFT_DUCK_BENCH", "/root/repo/DUCK_BENCH.json"))).trim)
+        sys.env.getOrElse("GRAFT_DUCK_BENCH", "DUCK_BENCH.json"))).trim)
       .toOption.filter(_.nonEmpty)
     val duckTotal = duck.flatMap(d =>
       "\"total_sec\"\\s*:\\s*([0-9.]+)".r.findFirstMatchIn(d).map(_.group(1)))

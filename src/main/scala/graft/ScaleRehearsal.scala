@@ -202,7 +202,7 @@ object ScaleRehearsal {
         col("user_id").cast("long").as("user_id"),
         // testdata stores TIMESTAMP(MICROS, tz-less) = NTZ; the session
         // tz is pinned UTC, so this cast is value-preserving (the
-        // SparkEntry.tbl shim, locally)
+        // GateSupport.tbl shim, locally)
         col("ts").cast("timestamp").as("ts"),
         col("event_type"), col("value"))
     val ev = ev0
@@ -637,7 +637,7 @@ object ScaleRehearsal {
     val cpus = spark.sparkContext.defaultParallelism
     val conf = spark.sparkContext.hadoopConfiguration
     val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "spine-rehearsal").toString
+      java.nio.file.Paths.get("target").toAbsolutePath, "spine-rehearsal").toString
 
     val ids = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id").cast("long").as("id"))
@@ -906,7 +906,7 @@ object ScaleRehearsal {
       .select(col("doc_id").cast("long").as("id"), col("source"))
       .collect().map(r => (r.getLong(0), r.getString(1)))
     val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "stream-rehearsal")
+      java.nio.file.Paths.get("target").toAbsolutePath, "stream-rehearsal")
     val inDir = base.resolve("in")
     java.nio.file.Files.createDirectories(inDir)
     val md = java.security.MessageDigest.getInstance("MD5")

@@ -11,29 +11,14 @@ object Verify {
     // isolation (mirrors GRAFT_BENCH_ONLY); unset = the official full set.
     // The oracle dump is filtered identically so selfcheck sees a
     // consistent (queries, oracle) pair.
-    val only = sys.env.get("GRAFT_VERIFY_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    // a typo'd filter must fail loudly, not verify zero queries and
-    // exit green (the silent-vacuous-green failure mode the round-10
-    // hardening exists to prevent)
-    only.foreach { names =>
-      // set-but-empty (a typo'd `GRAFT_VERIFY_ONLY=$UNSET_VAR`) would
-      // otherwise verify ZERO queries and exit green
-      require(names.nonEmpty,
-        "GRAFT_VERIFY_ONLY is set but names no queries — refusing a vacuous green")
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"GRAFT_VERIFY_ONLY names unknown queries: ${unknown.mkString(", ")}")
-    }
+    val selected = SparkEntry.selectGates("GRAFT_VERIFY_ONLY")
     val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    selected.foreach { g =>
+      try g.run(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${g.name}")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        failed(name) = Option(e.getMessage).getOrElse(e.toString)
+        System.err.println(s"[verify] ${g.name} failed: ${e.getMessage}")
+        failed(g.name) = Option(e.getMessage).getOrElse(e.toString)
           .takeWhile(_ != '\n').take(300)
       }
     }
@@ -49,9 +34,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = selected.map(g => s"${q(g.name)}: ${q(g.oracleSql)}")
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // A query that failed to RUN must fail the verify process — round 10
     // recorded an all-green correctness file while ten queries silently

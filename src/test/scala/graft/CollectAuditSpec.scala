@@ -22,9 +22,12 @@ class CollectAuditSpec extends AnyFunSuite {
   //    r20: +3 one-row agg readbacks (joinsRehearsal invariants) and
   //    +1 sketch-summary readback (sketchesRehearsal `rows`: 1-row
   //    KMV/HLL summaries, <= 20 per-group cells).
-  //  - graft/SparkEntry.scala: fixture generation (test corpora written
-  //    once per source-table identity), the q43 codebook harvest
-  //    (8 vectors), boundary probes — all gate-scale metadata.
+  //  - graft/gates/GateSupport.scala + graft/gates/CdxGates.scala (the
+  //    gates' 8): fixture generation (test corpora written once per
+  //    source-table identity: the W/ARC and media-WARC ids, q39's part
+  //    records, q113's generation slices), the q43 codebook harvest
+  //    (8 vectors), q49's served corpus (limit maxServedLines + 1),
+  //    q50's repackaged member offsets — all gate-scale metadata.
   //  - operators/llm/CorpusModels.scala: BPE merge rounds (1 row each),
   //    vocab tables bounded by topK/nMerges, and the bm25 driver-fold
   //    pair probe HARD-CLAMPED at driverPairLimit <= 65536 (r16 guard).
@@ -57,7 +60,8 @@ class CollectAuditSpec extends AnyFunSuite {
     // r22: 9 -> 8 — the q43/q123 codebook harvest is one shared
     // harvestCoarseCodebook (8 rows, per-invocation — the cross-rep
     // TrieMap memoization is gone per the r21 verdict's adjudication)
-    "graft/SparkEntry.scala" -> 8,
+    "graft/gates/GateSupport.scala" -> 4,
+    "graft/gates/CdxGates.scala" -> 4,
     "graft/operators/llm/CorpusModels.scala" -> 7,
     "graft/operators/llm/KMeans.scala" -> 3,
     "graft/operators/llm/TextOps.scala" -> 2,
@@ -69,13 +73,20 @@ class CollectAuditSpec extends AnyFunSuite {
     "graft/operators/ArchiveRepackage.scala" -> 1,
     "graft/cli/GraftCli.scala" -> 1)
 
-  test("every driver-side collect() site is inventoried with its bound") {
+  /** Each src/main source: (path relative to src/main/scala, text). */
+  private def mainSources: Seq[(String, String)] = {
     val root = Paths.get("src/main/scala")
-    val pattern = "\\.collect\\(\\)".r
-    val found = Files.walk(root).iterator().asScala
+    Files.walk(root).iterator().asScala
       .filter(p => p.toString.endsWith(".scala"))
       .map(p => root.relativize(p).toString.replace('\\', '/') ->
-        pattern.findAllIn(Files.readString(p)).length)
+        Files.readString(p))
+      .toSeq
+  }
+
+  test("every driver-side collect() site is inventoried with its bound") {
+    val pattern = "\\.collect\\(\\)".r
+    val found = mainSources
+      .map { case (p, text) => p -> pattern.findAllIn(text).length }
       .filter(_._2 > 0)
       .toMap
     val added = (found.keySet -- allowed.keySet).toSeq.sorted
@@ -90,5 +101,17 @@ class CollectAuditSpec extends AnyFunSuite {
         "If the new site's result is small-by-construction, add it " +
         "here WITH its bound; if it is not, it does not belong on " +
         "the driver.")
+  }
+
+  test("no src/main source names the checkout's absolute path") {
+    // program paths resolve against the working directory (as the
+    // gates' scratch does), so the program runs from any checkout; the
+    // forked test JVM's working directory is the checkout root
+    val literal = scala.util.matching.Regex.quote(
+      "\"" + Paths.get("").toAbsolutePath.toString).r
+    val sites = mainSources
+      .map { case (p, text) => p -> literal.findAllIn(text).length }
+      .filter(_._2 > 0).toMap
+    assert(sites.isEmpty, s"absolute checkout path literals: $sites")
   }
 }

@@ -7,20 +7,24 @@ import org.scalatest.funsuite.AnyFunSuite
   * product (all-pairs shuffle) or a Python eval boundary (breaks
   * whole-stage codegen) — must never appear in any physical plan.
   * (BroadcastNestedLoopJoin is fine: the intended broadcast-side
-  * cross-scoring in the ANN baselines.) Also pins the driver contract:
-  * queries and oracleSql must cover exactly the same names. */
+  * cross-scoring in the ANN baselines.) Also pins the registry: one
+  * record per gate name, and which gates are streaming. */
 class PlanAuditSpec extends AnyFunSuite with SparkTestSession {
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  test("queries and oracleSql cover exactly the same names") {
-    assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
+  test("gate names are unique") {
+    // a duplicate record would vanish silently from the name-keyed views
+    val dups = SparkEntry.gates.groupBy(_.name).collect {
+      case (name, gs) if gs.size > 1 => name
+    }
+    assert(dups.isEmpty, s"gate names declared more than once: $dups")
   }
 
-  test("every streaming gate named by the shared list is a registered query") {
-    val unknown = SparkEntry.streamingQueries -- SparkEntry.queries.keySet
-    assert(SparkEntry.streamingQueries.nonEmpty && unknown.isEmpty,
-      s"streamingQueries names unregistered gates: $unknown")
+  test("the streaming flag marks exactly the six Structured Streaming gates") {
+    assert(SparkEntry.streamingQueries == Set("q51_stream_daycap",
+      "q92_stream_dedup", "q104_stream_windows", "q110_stream_sessions",
+      "q113_stream_zipnum", "q134_stream_hll"))
   }
 
   test("scale pins: shuffle budgets and broadcast-join shapes hold") {
