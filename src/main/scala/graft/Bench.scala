@@ -19,9 +19,9 @@ package graft
  *    is reported in an `errors` map (a broken query must never bench green);
  *  - the session IS GraftCli.session (the one factory every main and
  *    test uses), plus two measured single-host sizing settings;
- *  - per-query job and stage counts (phase-free, unlike wall time) are
- *    read from a listener after each query's first pass, outside the
- *    timed window, and written to the sidecar report as `jobs`/`stages`.
+ *  - every pass runs inside one `graft.util.SparkMeter` window; the
+ *    first pass's job and stage counts (phase-free, unlike wall time)
+ *    go to the sidecar report as `jobs`/`stages`.
  */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -56,23 +56,8 @@ object Bench {
     // the report — the timed loop will surface the same error in-band.
     try materialize("q01_agg") catch { case _: Throwable => () }
 
-    // Job/stage counts per query (first pass only). stageInfos includes
-    // stages the job skips (reused shuffle output), as the Spark UI does.
-    val jobCount = new java.util.concurrent.atomic.AtomicInteger
-    val stageCount = new java.util.concurrent.atomic.AtomicInteger
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobCount.incrementAndGet(); stageCount.addAndGet(j.stageInfos.size)
-        }
-      })
-    // listener events are async: drain so each query's delta starts clean
-    def drain(): Unit =
-      org.apache.spark.sql.graftshim.ListenerShim.drain(spark.sparkContext)
-    drain()
-    val jobs = scala.collection.mutable.LinkedHashMap.empty[String, Int]
-    val stages = scala.collection.mutable.LinkedHashMap.empty[String, Int]
+    val jobs = scala.collection.mutable.LinkedHashMap.empty[String, Long]
+    val stages = scala.collection.mutable.LinkedHashMap.empty[String, Long]
 
     // tolerate a malformed env value: a bench must always emit its report.
     // 5 reps: 3 was not enough — the round-7 report showed q21 at 3.17s
@@ -104,19 +89,17 @@ object Bench {
     val samples = scala.collection.mutable.LinkedHashMap[String, List[Double]](
       names.map(_ -> List.empty[Double]): _*)
     for (rep <- 1 to reps; name <- names) {
-      val (j0, s0) = (jobCount.get, stageCount.get)
-      val t0 = System.nanoTime()
-      try {
-        materialize(name)
-        samples(name) ::= (System.nanoTime() - t0) / 1e9
-      } catch { case e: Throwable =>
-        errors.getOrElseUpdate(name,
+      val (outcome, work) = graft.util.SparkMeter.measure(spark.sparkContext) {
+        try Right(materialize(name)) catch { case e: Throwable => Left(e) }
+      }
+      outcome match {
+        case Right(_) => samples(name) ::= work.wallS
+        case Left(e) => errors.getOrElseUpdate(name,
           e.toString.takeWhile(_ != '\n').take(200))
       }
       if (rep == 1) {
-        drain()
-        jobs(name) = jobCount.get - j0
-        stages(name) = stageCount.get - s0
+        jobs(name) = work.jobs
+        stages(name) = work.stages
       }
     }
     // EVERY rep must succeed — a query that crashed on any rep benches
@@ -147,7 +130,7 @@ object Bench {
       else String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     val qs = results.map { case (k, v) => s"${jstr(k)}:${jnum(v)}" }.mkString("{", ",", "}")
     val errJson = errors.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
-    def counts(m: collection.Map[String, Int]): String =
+    def counts(m: collection.Map[String, Long]): String =
       m.map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
     val total = results.collect { case (_, v) if v >= 0 => v }.sum
     // Local comparison denominator: only the DuckDB TOTAL inline (the

@@ -1,184 +1,205 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
+import java.nio.file.{Files, Path, Paths}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import scala.collection.immutable.ListMap
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim
+
+import graft.util.SparkMeter.measure
+import graft.util.Work
 
 /**
- * Scale rehearsals (SCALE.md "three measured decades"), two modes:
+ * Scale rehearsals (SCALE.md "three measured decades"): each mode
+ * replicates an input table `copies` times, runs one operator family at
+ * that size, and prints `[rehearsal…]` lines with its results, its wall
+ * time and the shuffle bytes it moved, counted by [[graft.util.SparkMeter]].
+ * The modes, their one integer parameter and its default are the rows of
+ * `modes`; each mode's method says what it measures.
  *
- *  - `dedup` (default): replicate the sf0.1 near-dup corpus N times
- *    with disjoint ids — duplication compounds ACROSS copies, the worst
- *    case for candidate generation — run MinHash-LSH → connected
- *    components → keep-min, and report wall time, SparkListener-measured
- *    shuffle volume, and the capped-bucket skip-list size.
- *  - `ann`: replicate the embeddings table N times with deterministic
- *    per-copy perturbation, then run brute-force cosine top-k and
- *    hyperplane-LSH-bucketed top-k over the same queries — the measured
- *    crossover between the exact baseline and the scale path.
- *
- * Usage: runMain graft.ScaleRehearsal [dedup] <copies> [maxBucket] [sfDir]
- *        runMain graft.ScaleRehearsal ann <copies> [numPlanes] [sfDir]
- * (dedup copies=1 ≈ 5.7k docs, 100 ≈ 570k; ann copies=100 ≈ 200k vectors.)
+ * Usage: runMain graft.ScaleRehearsal [mode] <copies> [param] [sfDir]
+ * The mode defaults to `dedup`, so a bare number means `dedup <copies>`
+ * (dedup copies=1 ≈ 5.7k docs, 100 ≈ 570k; ann copies=100 ≈ 200k
+ * vectors). Copies default to 100 and sfDir to the sf0.1 testdata. Each
+ * run gets a scratch root under `target/`, deleted when it ends.
  */
 object ScaleRehearsal {
-  def main(args: Array[String]): Unit = {
-    val (mode, rest) = args.headOption match {
-      case Some(m) if m == "ann" || m == "dedup" || m == "kmeans" ||
-          m == "substr" || m == "chunk" || m == "fuzzydecon" ||
-          m == "pagerank" || m == "stream" || m == "media" ||
-          m == "semdedup" || m == "spine" || m == "joins" ||
-          m == "sketches" =>
-        (m, args.drop(1))
+
+  /** A mode: the name and default of its parameter, and its run. */
+  private final case class Mode(param: String, default: Int,
+      run: (SparkSession, Int, Int, String, Path) => Unit)
+
+  private val modes: ListMap[String, Mode] = ListMap(
+    "dedup" -> Mode("maxBucket", 400, dedupRehearsal),
+    "ann" -> Mode("numPlanes", 12, annRehearsal),
+    "kmeans" -> Mode("k", 8, kmeansRehearsal), // seed count
+    "substr" -> Mode("k", 15, substrRehearsal), // gram window
+    "chunk" -> Mode("chunkWords", 10, chunkRehearsal), // q77's setting
+    "fuzzydecon" -> Mode("evalMod", 41, fuzzyDeconRehearsal), // q127's
+    "pagerank" -> Mode("iters", 3, pageRankRehearsal),
+    "stream" -> Mode("horizonHours", 2, streamRehearsal),
+    "media" -> Mode("stride", 8, mediaRehearsal),
+    // q81 uses k=8 at oracle scale
+    "semdedup" -> Mode("k", 64, semDedupRehearsal),
+    // every dupEvery-th doc triplicated, q45's rule
+    "spine" -> Mode("dupEvery", 10, spineRehearsal),
+    "joins" -> Mode("gapSec", 1800, joinsRehearsal), // q64's setting
+    "sketches" -> Mode("k", 256, sketchesRehearsal)) // q57's setting
+
+  /** One parsed command line. */
+  private[graft] final case class Args(mode: String, copies: Int,
+                                       param: Int, sfDir: String)
+
+  private def usage: String =
+    "usage: runMain graft.ScaleRehearsal [mode] <copies> [param] [sfDir]; " +
+      "mode [param=default] is one of " + modes.map { case (name, m) =>
+        s"$name [${m.param}=${m.default}]" }.mkString(", ") +
+      "; the mode defaults to dedup"
+
+  /** The command line as one mode's run, or the usage line. A first
+    * argument that is neither a mode nor a number is rejected, as is a
+    * copies or param argument that is not a number. */
+  private[graft] def parse(args: Seq[String]): Either[String, Args] = {
+    val (mode, rest) = args match {
+      case m +: tail if modes.contains(m) => (m, tail)
       case _ => ("dedup", args)
     }
-    val copies = rest.headOption.flatMap(_.toIntOption).getOrElse(100)
-    val maxBucket = rest.lift(1).flatMap(_.toIntOption)
-      .getOrElse(mode match {
-        case "ann" => 12 // numPlanes
-        case "kmeans" => 8 // k (seed count)
-        case "substr" => 15 // gram window k
-        case "chunk" => 10 // chunk width, words (q77's setting)
-        case "fuzzydecon" => 41 // eval modulus (every 41st doc, q127)
-        case "pagerank" => 3 // iters
-        case "stream" => 2 // watermark horizon, hours
-        case "media" => 8 // frame-sampling stride
-        case "semdedup" => 64 // k (seed count; q81 uses 8 at oracle scale)
-        case "spine" => 10 // dupEvery (every Nth doc triplicated, q45's rule)
-        case "joins" => 1800 // sessionize gap seconds (q64's setting)
-        case "sketches" => 256 // KMV k (q57's setting)
-        case _ => 400
-      })
     val sfDir = rest.lift(2).getOrElse("/root/testdata/sf0.1")
-    val cpus = graft.cli.GraftCli.defaultCpus
-    val spark = graft.cli.GraftCli.session("graft-scale-rehearsal", cpus)
+    def int(i: Int, default: Int): Either[String, Int] =
+      rest.lift(i).fold(Option(default))(_.toIntOption).toRight(usage)
+    for {
+      copies <- int(0, 100)
+      param <- int(1, modes(mode).default)
+    } yield Args(mode, copies, param, sfDir)
+  }
 
-    val read = new AtomicLong; val write = new AtomicLong
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-        val m = e.taskMetrics
-        if (m != null) {
-          read.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-          write.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        }
-      }
-    })
+  def main(args: Array[String]): Unit = {
+    val a = parse(args.toSeq) match {
+      case Right(a) => a
+      case Left(usage) => System.err.println(usage); sys.exit(2)
+    }
+    val spark = graft.cli.GraftCli.session("graft-scale-rehearsal",
+      graft.cli.GraftCli.defaultCpus)
+    val scratch = Files.createTempDirectory(
+      Paths.get("target").toAbsolutePath, s"${a.mode}-rehearsal")
+    try modes(a.mode).run(spark, a.copies, a.param, a.sfDir, scratch)
+    finally {
+      spark.stop()
+      org.apache.commons.io.FileUtils.deleteDirectory(scratch.toFile)
+    }
+  }
 
-    if (mode == "ann") { annRehearsal(spark, copies, maxBucket, sfDir,
-      read, write); spark.stop(); return }
-    if (mode == "substr") { substrRehearsal(spark, copies, maxBucket,
-      sfDir, read, write); spark.stop(); return }
-    if (mode == "chunk") { chunkRehearsal(spark, copies, maxBucket,
-      sfDir, read, write); spark.stop(); return }
-    if (mode == "fuzzydecon") { fuzzyDeconRehearsal(spark, copies,
-      maxBucket, sfDir, read, write); spark.stop(); return }
-    if (mode == "pagerank") { pageRankRehearsal(spark, copies, maxBucket,
-      sfDir, read, write); spark.stop(); return }
-    if (mode == "kmeans") { kmeansRehearsal(spark, copies, maxBucket,
-      sfDir, read, write); spark.stop(); return }
-    if (mode == "stream") { streamRehearsal(spark, copies, maxBucket,
-      sfDir); spark.stop(); return }
-    if (mode == "media") { mediaRehearsal(spark, copies, maxBucket,
-      sfDir, read, write); spark.stop(); return }
-    if (mode == "semdedup") { semDedupRehearsal(spark, copies, maxBucket,
-      sfDir, read, write); spark.stop(); return }
-    if (mode == "spine") { spineRehearsal(spark, copies, maxBucket,
-      sfDir, read, write); spark.stop(); return }
-    if (mode == "joins") { joinsRehearsal(spark, copies, maxBucket,
-      sfDir, read, write); spark.stop(); return }
-    if (mode == "sketches") { sketchesRehearsal(spark, copies, maxBucket,
-      sfDir, read, write); spark.stop(); return }
+  private def mib(v: Long, places: Int = 1): String =
+    s"%.${places}f".format(v / 1048576.0)
 
+  /** A window's `shuffleRead=… MiB shuffleWrite=… MiB` fields. */
+  private def shuffle(w: Work, places: Int = 1): String =
+    s"shuffleRead=${mib(w.shuffleReadBytes, places)} MiB " +
+      s"shuffleWrite=${mib(w.shuffleWriteBytes, places)} MiB"
+
+  /** `df` with a `__c` column: each row once per copy 0 until `copies`. */
+  private def replicate(df: DataFrame, copies: Int): DataFrame =
+    df.select(explode(sequence(lit(0L), lit(copies - 1L))).as("__c"),
+      col("*"))
+
+  /** Copy c's ids are shifted by c × this stride. */
+  private val IdStride = 10000000L
+
+  /** `df` replicated `copies` times with disjoint ids (copy c adds
+    * c × [[IdStride]] to `id`, its first column), spread over the
+    * session's cores: the testdata is one row group (SCALE.md caveat). */
+  private def disjointCopies(df: DataFrame, id: String,
+                             copies: Int): DataFrame =
+    replicate(df, copies)
+      .select((col(id) + col("__c") * IdStride).as(id) +:
+        df.columns.toSeq.filter(_ != id).map(col): _*)
+      .repartition(df.sparkSession.sparkContext.defaultParallelism)
+
+  private def documents(spark: SparkSession, sfDir: String): DataFrame =
+    spark.read.parquet(s"$sfDir/documents.parquet")
+      .select(col("doc_id").cast("long").as("doc_id"), col("text"))
+
+  /** The embeddings replicated with disjoint ids and a deterministic
+    * per-copy perturbation, persisted: the modes time their plans over
+    * it, not the replication scaffolding. */
+  private def perturbedEmbeddings(spark: SparkSession, sfDir: String,
+                                  copies: Int): DataFrame =
+    replicate(spark.read.parquet(s"$sfDir/embeddings.parquet")
+        .select(col("vec_id"), col("embedding")), copies)
+      .select((col("vec_id") + col("__c") * IdStride).as("vec_id"),
+        expr("transform(embedding, (x, i) -> x + CAST((__c * 31 + i) % 13 " +
+          "AS FLOAT) * CAST(0.001 AS FLOAT))").as("embedding"))
+      .repartition(spark.sparkContext.defaultParallelism)
+      .persist()
+
+  /** Near-dup dedup decades: replicate the sf0.1 near-dup corpus N times
+    * with disjoint ids — duplication compounds ACROSS copies, the worst
+    * case for candidate generation — run MinHash-LSH → connected
+    * components → keep-min, and report wall time, shuffle volume, and
+    * the capped-bucket skip-list size. */
+  private def dedupRehearsal(spark: SparkSession, copies: Int,
+                             maxBucket: Int, sfDir: String,
+                             scratch: Path): Unit = {
+    import graft.operators.llm.{ConnectedComponents, MinHashLsh}
     // the q69 corpus rule (base + appended-text variants), replicated
     // with disjoint id spaces; every copy of a doc is a near-dup of every
     // other copy, so the near-dup graph grows superlinearly in `copies`
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id").cast("long").as("doc_id"), col("text"))
+    val docs = documents(spark, sfDir)
     val variants = docs.where(col("doc_id") % 7 === 0)
       .select((col("doc_id") + 1000000L).as("doc_id"),
         concat(col("text"), lit(" graft extra appended")).as("text"))
-    val corpus = docs.unionByName(variants)
-      .select(explode(sequence(lit(0L), lit(copies - 1L))).as("__c"),
-        col("doc_id"), col("text"))
-      .select((col("doc_id") + col("__c") * 10000000L).as("doc_id"),
-        col("text"))
-      .repartition(cpus) // testdata is one row group (SCALE.md caveat)
-
-    import graft.operators.llm.{ConnectedComponents, MinHashLsh}
-    // diagnostic count BEFORE t0: it re-runs the replicated-corpus
-    // repartition, and inside the timed window it would inflate the wall;
-    // its shuffle is excluded from the reported volumes by baselining the
-    // listener totals AFTER it (the listener is session-global)
+    val corpus = disjointCopies(docs.unionByName(variants), "doc_id", copies)
+    // diagnostic count BEFORE the window: it re-runs the replicated-corpus
+    // repartition, and inside the window it would inflate the wall and
+    // the reported shuffle volumes
     val nDocs = corpus.count()
-    // task-end events are async: drain the bus so the diagnostic count's
-    // shuffle lands in the baseline, not the measured window
-    graftshim.ListenerShim.drain(spark.sparkContext)
-    val (r0, w0) = (read.get, write.get)
-    val t0 = System.nanoTime()
-    val sh = graft.operators.llm.Shingles
-      .explodeShingles(corpus, "doc_id", "text", 3)
-    val bands = MinHashLsh.bands(
-      MinHashLsh.signature(sh, "doc_id", 6), "doc_id", 6, 2).persist()
-    val (pairs, dropped) =
-      MinHashLsh.candidatePairsCapped(bands, "doc_id", maxBucket)
-    val nDropped = dropped.agg(count(lit(1)), coalesce(sum(col("n_ids")),
-      lit(0L))).collect()(0)
-    // CC under fixed partitioning, as q69 runs it: AQE's per-iteration
-    // coalescing would break the edge-cache/label co-partitioning the
-    // iteration count amortizes
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val cc = ConnectedComponents(pairs, "doc_a", "doc_b")
-    val stats = cc.agg(count(lit(1)).as("nodes"),
-      countDistinct(col("component")).as("components")).collect()(0)
-    val lshKeep = corpus.select(col("doc_id"))
-      .join(cc.where(col("node") =!= col("component"))
-        .select(col("node").as("doc_id")), Seq("doc_id"), "left_anti")
-    val keep = lshKeep.count()
-    // capped runs stay COMPLETE: exact-dedup follow-up over the skipped
-    // buckets' member ids (the keep-set a capped production run emits —
-    // compare keptFollowup against an uncapped run's kept to validate
-    // the cap+followup pipeline at sizes where uncapped still fits)
-    // follow-up timed on its OWN clock: `wall` keeps the pre-round-9
+    val bands = MinHashLsh.bands(MinHashLsh.signature(
+      graft.operators.llm.Shingles.explodeShingles(corpus, "doc_id", "text", 3),
+      "doc_id", 6), "doc_id", 6, 2).persist()
+    val ((nDropped, stats, keep, (keepFollowup, followup)), w) =
+      measure(spark.sparkContext) {
+        val (pairs, dropped) =
+          MinHashLsh.candidatePairsCapped(bands, "doc_id", maxBucket)
+        val nDropped = dropped.agg(count(lit(1)), coalesce(sum(col("n_ids")),
+          lit(0L))).collect()(0)
+        // CC under fixed partitioning, as q69 runs it: AQE's per-iteration
+        // coalescing would break the edge-cache/label co-partitioning the
+        // iteration count amortizes
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        val cc = ConnectedComponents(pairs, "doc_a", "doc_b")
+        val stats = cc.agg(count(lit(1)).as("nodes"),
+          countDistinct(col("component")).as("components")).collect()(0)
+        val lshKeep = corpus.select(col("doc_id"))
+          .join(cc.where(col("node") =!= col("component"))
+            .select(col("node").as("doc_id")), Seq("doc_id"), "left_anti")
+        val keep = lshKeep.count()
+        // capped runs stay COMPLETE: exact-dedup follow-up over the skipped
+        // buckets' member ids (the keep-set a capped production run emits —
+        // compare keptFollowup against an uncapped run's kept to validate
+        // the cap+followup pipeline at sizes where uncapped still fits)
+        (nDropped, stats, keep, measure(spark.sparkContext) {
+          if (nDropped.getLong(0) == 0L) keep
+          else lshKeep.join(
+            MinHashLsh.exactDropWithin(corpus, "doc_id", "text",
+              bands.join(broadcast(dropped.select(col("band"), col("bh"))),
+                Seq("band", "bh")).select(col("doc_id"))),
+            Seq("doc_id"), "left_anti").count()
+        })
+      }
+    // the follow-up has its OWN clock: `wall` keeps the pre-round-9
     // definition (LSH+CC+keep only) so decade entries stay comparable
-    val tF = System.nanoTime()
-    val keepFollowup =
-      if (nDropped.getLong(0) == 0L) keep
-      else lshKeep.join(
-        MinHashLsh.exactDropWithin(corpus, "doc_id", "text",
-          bands.join(broadcast(dropped.select(col("band"), col("bh"))),
-            Seq("band", "bh")).select(col("doc_id"))),
-        Seq("doc_id"), "left_anti").count()
-    val wallFollowup = (System.nanoTime() - tF) / 1e9
-    val wall = (System.nanoTime() - t0) / 1e9 - wallFollowup
-    // snapshot the listener totals at the measurement edge — the
-    // summary's own jobs must not inflate the reported volumes (drain so
-    // the last job's bytes have actually arrived)
-    graftshim.ListenerShim.drain(spark.sparkContext)
-    val (readB, writeB) = (read.get - r0, write.get - w0)
+    val wall = w.wallS - followup.wallS
     bands.unpersist(blocking = false)
 
-    def mib(v: Long): String = f"${v / 1048576.0}%.1f"
     println(f"[rehearsal] copies=$copies docs=$nDocs " +
       f"nodes=${stats.getLong(0)} components=${stats.getLong(1)} " +
       f"kept=$keep keptFollowup=$keepFollowup " +
       f"droppedBuckets=${nDropped.getLong(0)} " +
       f"droppedIds=${nDropped.getLong(1)} wall=$wall%.1f s " +
-      f"wallFollowup=$wallFollowup%.1f s " +
-      s"shuffleRead=${mib(readB)} MiB shuffleWrite=${mib(writeB)} MiB")
-    spark.stop()
+      f"wallFollowup=${followup.wallS}%.1f s ${shuffle(w)}")
   }
 
-  /** Substring-dedup decades: replicate the documents table N times
-    * with disjoint ids — every copy duplicates EVERY span of the
-    * original, so each gram's occurrence group grows linearly in
-    * `copies` (the worst case for the keep-first window: every group is
-    * a skew group of exactly `copies` rows) and all but the first
-    * copy's text should vanish. Reports wall, shuffle volume, and the
-    * dropped-word mass (whose fraction must approach (copies-1)/copies
-    * — a built-in correctness check at every decade). */
   /** Join-family decades (r20 — the family the gate-blindness sweep
     * hardened for correctness, measured at scale): the events table
     * replicated N× with DISJOINT user/event namespaces (+c·10⁶ user,
@@ -195,7 +216,7 @@ object ScaleRehearsal {
     * scan-dominated — no quadratic term anywhere in the family. */
   private def joinsRehearsal(spark: SparkSession, copies: Int,
                              gapSec: Int, sfDir: String,
-                             read: AtomicLong, write: AtomicLong): Unit = {
+                             scratch: Path): Unit = {
     val cpus = spark.sparkContext.defaultParallelism
     val ev0 = spark.read.parquet(s"$sfDir/events.parquet")
       .select(col("event_id").cast("long").as("event_id"),
@@ -205,10 +226,7 @@ object ScaleRehearsal {
         // GateSupport.tbl shim, locally)
         col("ts").cast("timestamp").as("ts"),
         col("event_type"), col("value"))
-    val ev = ev0
-      .select(explode(sequence(lit(0L), lit(copies - 1L))).as("__c"),
-        col("event_id"), col("user_id"), col("ts"), col("event_type"),
-        col("value"))
+    val ev = replicate(ev0, copies)
       .select((col("event_id") + col("__c") * 1000000000L).as("event_id"),
         (col("user_id") + col("__c") * 1000000L).as("user_id"),
         col("ts"), col("event_type"), col("value"))
@@ -216,16 +234,9 @@ object ScaleRehearsal {
     val nEvents = ev.count()
 
     def timed(label: String)(invariant: => Unit): Unit = {
-      graftshim.ListenerShim.drain(spark.sparkContext)
-      val (r0, w0) = (read.get, write.get)
-      val t0 = System.nanoTime()
-      invariant
-      val wall = (System.nanoTime() - t0) / 1e9
-      graftshim.ListenerShim.drain(spark.sparkContext)
-      def mib(v: Long): String = f"${v / 1048576.0}%.1f"
+      val (_, w) = measure(spark.sparkContext)(invariant)
       println(f"[rehearsal-joins] $label copies=$copies events=$nEvents " +
-        f"wall=$wall%.1f s shuffleRead=${mib(read.get - r0)} MiB " +
-        s"shuffleWrite=${mib(write.get - w0)} MiB")
+        f"wall=${w.wallS}%.1f s ${shuffle(w)}")
     }
 
     // copy-0 rows are user_id < 10^6 / event_id < 10^9 by construction
@@ -302,14 +313,11 @@ object ScaleRehearsal {
     * require'd row-equal to the base corpus's, computed once outside
     * the timed sections. */
   private def sketchesRehearsal(spark: SparkSession, copies: Int, k: Int,
-                                sfDir: String, read: AtomicLong,
-                                write: AtomicLong): Unit = {
+                                sfDir: String, scratch: Path): Unit = {
     val cpus = spark.sparkContext.defaultParallelism
     val base = spark.read.parquet(s"$sfDir/orders.parquet")
       .select(col("o_custkey").cast("long").as("v"))
-    val corpus = base
-      .select(explode(sequence(lit(0L), lit(copies - 1L))).as("__c"),
-        col("v"))
+    val corpus = replicate(base, copies)
       .select(col("v")) // SAME values: duplication, not new identities
       .repartition(cpus) // testdata is one row group (SCALE.md caveat)
       // persist + materialize BEFORE timing: the fan-out repartition is
@@ -319,14 +327,14 @@ object ScaleRehearsal {
       .persist()
     val nRows = corpus.count()
 
-    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    def rows(df: DataFrame): Seq[String] =
       df.collect().map(_.toString).sorted.toSeq
 
     import graft.operators.Sketches
-    def kmv(d: org.apache.spark.sql.DataFrame) = Sketches.kmvDistinct(d, "v", k)
-    def hll(d: org.apache.spark.sql.DataFrame) = Sketches.hllDistinct(d, "v", 6)
+    def kmv(d: DataFrame) = Sketches.kmvDistinct(d, "v", k)
+    def hll(d: DataFrame) = Sketches.hllDistinct(d, "v", 6)
     val sk = udaf(Sketches.hllGroupAgg(6))
-    def hllGroups(d: org.apache.spark.sql.DataFrame) =
+    def hllGroups(d: DataFrame) =
       d.select((col("v") % 20).as("g"), Sketches.hash48Col(col("v")).as("hv"))
         .groupBy(col("g")).agg(sk(col("hv")).as("h"))
         .select(col("g"), col("h._1").as("filled"), col("h._2").as("s"),
@@ -337,19 +345,12 @@ object ScaleRehearsal {
     val baseGroups = rows(hllGroups(base))
 
     def timed(label: String)(got: => Seq[String], want: Seq[String]): Unit = {
-      graftshim.ListenerShim.drain(spark.sparkContext)
-      val (r0, w0) = (read.get, write.get)
-      val t0 = System.nanoTime()
-      val g = got
-      val wall = (System.nanoTime() - t0) / 1e9
-      graftshim.ListenerShim.drain(spark.sparkContext)
+      val (g, w) = measure(spark.sparkContext)(got)
       require(g == want,
         s"$label sketch not duplication-invariant at copies=$copies: " +
           s"got $g, want $want")
-      def mib(v: Long): String = f"${v / 1048576.0}%.1f"
       println(f"[rehearsal-sketches] $label copies=$copies rows=$nRows " +
-        f"wall=$wall%.1f s shuffleRead=${mib(read.get - r0)} MiB " +
-        s"shuffleWrite=${mib(write.get - w0)} MiB " +
+        f"wall=${w.wallS}%.1f s ${shuffle(w)} " +
         "(summary BIT-EQUAL to the base corpus's)")
     }
 
@@ -359,37 +360,30 @@ object ScaleRehearsal {
     corpus.unpersist(blocking = false)
   }
 
+  /** Substring-dedup decades: replicate the documents table N times
+    * with disjoint ids — every copy duplicates EVERY span of the
+    * original, so each gram's occurrence group grows linearly in
+    * `copies` (the worst case for the keep-first window: every group is
+    * a skew group of exactly `copies` rows) and all but the first
+    * copy's text should vanish. Reports wall, shuffle volume, and the
+    * dropped-word mass (whose fraction must approach (copies-1)/copies
+    * — a built-in correctness check at every decade). */
   private def substrRehearsal(spark: SparkSession, copies: Int, k: Int,
-                              sfDir: String, read: AtomicLong,
-                              write: AtomicLong): Unit = {
-    val cpus = spark.sparkContext.defaultParallelism
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-    val corpus = docs
-      .select(explode(sequence(lit(0L), lit(copies - 1L))).as("__c"),
-        col("doc_id"), col("text"))
-      .select((col("doc_id") + col("__c") * 10000000L).as("doc_id"),
-        col("text"))
-      .repartition(cpus) // testdata is one row group (SCALE.md caveat)
+                              sfDir: String, scratch: Path): Unit = {
+    val corpus = disjointCopies(documents(spark, sfDir), "doc_id", copies)
     val nDocs = corpus.count()
-    graftshim.ListenerShim.drain(spark.sparkContext)
-    val (r0, w0) = (read.get, write.get)
-    val t0 = System.nanoTime()
-    val out = graft.operators.llm.TextAnalysis.substringDedup(
-      corpus, "doc_id", "text", k)
-    val stats = out.agg(count(lit(1)).as("docs"),
-      sum(col("n_kept")).as("kept"),
-      sum(col("n_dropped")).as("dropped")).collect()(0)
-    val wall = (System.nanoTime() - t0) / 1e9
-    graftshim.ListenerShim.drain(spark.sparkContext)
-    val (readB, writeB) = (read.get - r0, write.get - w0)
-    def mib(v: Long): String = f"${v / 1048576.0}%.1f"
+    val (stats, w) = measure(spark.sparkContext) {
+      graft.operators.llm.TextAnalysis.substringDedup(
+        corpus, "doc_id", "text", k)
+        .agg(count(lit(1)).as("docs"),
+          sum(col("n_kept")).as("kept"),
+          sum(col("n_dropped")).as("dropped")).collect()(0)
+    }
     val kept = stats.getLong(1); val dropped = stats.getLong(2)
     println(f"[rehearsal] substr copies=$copies docs=$nDocs k=$k " +
       f"kept=$kept dropped=$dropped " +
       f"dropFrac=${dropped.toDouble / (kept + dropped)}%.4f " +
-      f"wall=$wall%.1f s shuffleRead=${mib(readB)} MiB " +
-      s"shuffleWrite=${mib(writeB)} MiB")
+      f"wall=${w.wallS}%.1f s ${shuffle(w)}")
   }
 
   /** Chunk-dedup decades ([[graft.operators.llm.TextAnalysis.chunkDedup]],
@@ -404,34 +398,18 @@ object ScaleRehearsal {
     * track the DISTINCT chunk vocabulary (~flat across copies) plus the
     * surviving docs' reassembly — NOT total occurrence volume. */
   private def chunkRehearsal(spark: SparkSession, copies: Int, cw: Int,
-                             sfDir: String, read: AtomicLong,
-                             write: AtomicLong): Unit = {
-    val cpus = spark.sparkContext.defaultParallelism
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-    val corpus = docs
-      .select(explode(sequence(lit(0L), lit(copies - 1L))).as("__c"),
-        col("doc_id"), col("text"))
-      .select((col("doc_id") + col("__c") * 10000000L).as("doc_id"),
-        col("text"))
-      .repartition(cpus) // testdata is one row group (SCALE.md caveat)
+                             sfDir: String, scratch: Path): Unit = {
+    val corpus = disjointCopies(documents(spark, sfDir), "doc_id", copies)
     val nDocs = corpus.count()
-    graftshim.ListenerShim.drain(spark.sparkContext)
-    val (r0, w0) = (read.get, write.get)
-    val t0 = System.nanoTime()
-    val out = graft.operators.llm.TextAnalysis.chunkDedup(
-      corpus, "doc_id", "text", cw)
-    val stats = out.agg(count(lit(1)).as("docsOut"),
-      sum(col("n_kept")).as("chunksKept")).collect()(0)
-    val wall = (System.nanoTime() - t0) / 1e9
-    graftshim.ListenerShim.drain(spark.sparkContext)
-    val (readB, writeB) = (read.get - r0, write.get - w0)
-    def mib(v: Long): String = f"${v / 1048576.0}%.1f"
+    val (stats, w) = measure(spark.sparkContext) {
+      graft.operators.llm.TextAnalysis.chunkDedup(corpus, "doc_id", "text", cw)
+        .agg(count(lit(1)).as("docsOut"),
+          sum(col("n_kept")).as("chunksKept")).collect()(0)
+    }
     println(f"[rehearsal] chunk copies=$copies docs=$nDocs cw=$cw " +
       f"docsOut=${stats.getLong(0)} chunksKept=${stats.getLong(1)} " +
       f"docsOutFrac=${stats.getLong(0).toDouble / nDocs}%.4f " +
-      f"wall=$wall%.1f s shuffleRead=${mib(readB)} MiB " +
-      s"shuffleWrite=${mib(writeB)} MiB")
+      f"wall=${w.wallS}%.1f s ${shuffle(w)}")
   }
 
   /** Fuzzy-decontamination decades (q127's
@@ -447,38 +425,24 @@ object ScaleRehearsal {
     * is the built-in correctness check. */
   private def fuzzyDeconRehearsal(spark: SparkSession, copies: Int,
                                   evalMod: Int, sfDir: String,
-                                  read: AtomicLong,
-                                  write: AtomicLong): Unit = {
-    val cpus = spark.sparkContext.defaultParallelism
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-    val corpus = docs
-      .select(explode(sequence(lit(0L), lit(copies - 1L))).as("__c"),
-        col("doc_id"), col("text"))
-      .select((col("doc_id") + col("__c") * 10000000L).as("doc_id"),
-        col("text"))
-      .repartition(cpus) // testdata is one row group (SCALE.md caveat)
+                                  scratch: Path): Unit = {
+    val docs = documents(spark, sfDir)
+    val corpus = disjointCopies(docs, "doc_id", copies)
     val evalDf = docs.where(col("doc_id") % evalMod === 0)
       .select(concat(col("text"), lit(" benchmark answer key"))
         .as("etext"))
     val nDocs = corpus.count()
     val nEval = evalDf.count()
-    graftshim.ListenerShim.drain(spark.sparkContext)
-    val (r0, w0) = (read.get, write.get)
-    val t0 = System.nanoTime()
-    val out = graft.operators.llm.TextAnalysis.fuzzyContamination(
-      corpus, "doc_id", "text", evalDf, "etext")
-    val stats = out.agg(count(lit(1)).as("flagged"),
-      sum(col("n_bands_hit")).as("bandHits")).collect()(0)
-    val wall = (System.nanoTime() - t0) / 1e9
-    graftshim.ListenerShim.drain(spark.sparkContext)
-    val (readB, writeB) = (read.get - r0, write.get - w0)
-    def mib(v: Long): String = f"${v / 1048576.0}%.1f"
+    val (stats, w) = measure(spark.sparkContext) {
+      graft.operators.llm.TextAnalysis.fuzzyContamination(
+        corpus, "doc_id", "text", evalDf, "etext")
+        .agg(count(lit(1)).as("flagged"),
+          sum(col("n_bands_hit")).as("bandHits")).collect()(0)
+    }
     println(f"[rehearsal] fuzzydecon copies=$copies docs=$nDocs " +
       f"evalDocs=$nEval flagged=${stats.getLong(0)} " +
       f"flaggedPerCopy=${stats.getLong(0).toDouble / copies}%.1f " +
-      f"bandHits=${stats.getLong(1)} wall=$wall%.1f s " +
-      f"shuffleRead=${mib(readB)} MiB shuffleWrite=${mib(writeB)} MiB")
+      f"bandHits=${stats.getLong(1)} wall=${w.wallS}%.1f s ${shuffle(w)}")
   }
 
   /** Media frame-sampling decades — measures the LAZINESS claim with a
@@ -494,19 +458,13 @@ object ScaleRehearsal {
     * wall(stride N) tracking the kept-frame fraction plus the O(frames)
     * container walk floor. */
   private def mediaRehearsal(spark: SparkSession, copies: Int, stride: Int,
-                             sfDir: String, read: AtomicLong,
-                             write: AtomicLong): Unit = {
+                             sfDir: String, scratch: Path): Unit = {
     import spark.implicits._
     import graft.operators.llm.{AviCodec, JpegCodec, MkvCodec, Mp4Codec,
       MultimodalOps}
-    val cpus = spark.sparkContext.defaultParallelism
     val nFrames = 24
-    val media = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id").cast("long").as("doc_id"))
-      .select(explode(sequence(lit(0L), lit(copies - 1L))).as("__c"),
-        col("doc_id"))
-      .select((col("doc_id") + col("__c") * 10000000L).as("doc_id"))
-      .repartition(cpus) // testdata is one row group (SCALE.md caveat)
+    val media = disjointCopies(
+        documents(spark, sfDir).select(col("doc_id")), "doc_id", copies)
       .as[Long]
       .map { id =>
         val frames = (0 until nFrames).map { fi =>
@@ -525,21 +483,16 @@ object ScaleRehearsal {
       }
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nDocs = media.count() // build payloads OFF the clock
-    def mib(v: Long): String = f"${v / 1048576.0}%.1f"
     Seq(1, stride).foreach { s =>
-      graftshim.ListenerShim.drain(spark.sparkContext)
-      val (r0, w0) = (read.get, write.get)
-      val t0 = System.nanoTime()
-      val stats = MultimodalOps.frameSample(media, frameSize = 64, s)
-        .agg(count(lit(1)).as("frames"),
-          sum(col("frame_bytes")).as("decodedBytes")).collect()(0)
-      val wall = (System.nanoTime() - t0) / 1e9
-      graftshim.ListenerShim.drain(spark.sparkContext)
-      val (readB, writeB) = (read.get - r0, write.get - w0)
+      val (stats, w) = measure(spark.sparkContext) {
+        MultimodalOps.frameSample(media, frameSize = 64, s)
+          .agg(count(lit(1)).as("frames"),
+            sum(col("frame_bytes")).as("decodedBytes")).collect()(0)
+      }
       println(f"[rehearsal] media copies=$copies docs=$nDocs " +
         f"framesPerDoc=$nFrames stride=$s kept=${stats.getLong(0)} " +
-        f"decodedBytes=${stats.getLong(1)} wall=$wall%.2f s " +
-        f"shuffleRead=${mib(readB)} MiB shuffleWrite=${mib(writeB)} MiB")
+        f"decodedBytes=${stats.getLong(1)} wall=${w.wallS}%.2f s " +
+        shuffle(w))
     }
     media.unpersist()
   }
@@ -565,50 +518,44 @@ object ScaleRehearsal {
     * regime), and train/prune walls are reported separately since
     * training amortizes over reruns at different thresholds. */
   private def semDedupRehearsal(spark: SparkSession, copies: Int, k: Int,
-                                sfDir: String, read: AtomicLong,
-                                write: AtomicLong): Unit = {
+                                sfDir: String, scratch: Path): Unit = {
     import graft.operators.llm.{AnnOps, KMeans}
-    val cpus = spark.sparkContext.defaultParallelism
-    val corpus = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .select(explode(sequence(lit(0L), lit(copies - 1L))).as("__c"),
-        col("vec_id"), col("embedding"))
-      .select((col("vec_id") + col("__c") * 10000000L).as("vec_id"),
-        col("embedding"))
-      .repartition(cpus) // testdata is one row group (SCALE.md caveat)
+    val corpus = disjointCopies(spark.read.parquet(s"$sfDir/embeddings.parquet")
+        .select(col("vec_id"), col("embedding")), "vec_id", copies)
       .persist()
     val n = corpus.count()
-    graftshim.ListenerShim.drain(spark.sparkContext)
-    val (r0, w0) = (read.get, write.get)
-    val t0 = System.nanoTime()
-    // seeds are copy-0 rows only (replica ids start at the 1e7 stride).
-    // The assignment is PERSISTED and materialized by the sizes agg
-    // inside the train window: the prune query consumes `clusters`
-    // twice (the join side and the keep-side anti-join), and without
-    // the cache each consumer re-derives the full-corpus argmax scan —
-    // pruneWall would charge ~2 redundant assignment passes to the
-    // quantity the decades claim to measure
-    val clusters = KMeans.lloyd(corpus, "vec_id", "embedding",
-      seedPred = col("vec_id") < k, iters = 3, localBelow = 0L).persist()
-    val sizes = clusters.groupBy(col("cluster")).count()
-      .agg(count(lit(1)).as("k"), max(col("count")).as("mx")).collect()(0)
-    val trainWall = (System.nanoTime() - t0) / 1e9
-    val tP = System.nanoTime()
-    val drops = AnnOps.withinBucketCosinePairs(
-      corpus.join(clusters, "vec_id"), "vec_id", "embedding", "cluster",
-      minCos2Bp = 500L)
-      .select(col("vec_b").as("vec_id"))
-    val stats = clusters.join(drops, Seq("vec_id"), "left_anti")
-      .agg(count(lit(1)).as("kept"), max(col("vec_id")).as("maxId"))
-      .collect()(0)
-    val pruneWall = (System.nanoTime() - tP) / 1e9
-    graftshim.ListenerShim.drain(spark.sparkContext)
-    val (readB, writeB) = (read.get - r0, write.get - w0)
-    def mib(v: Long): String = f"${v / 1048576.0}%.1f"
+    val ((clusters, sizes, train, stats, prune), w) =
+      measure(spark.sparkContext) {
+        // seeds are copy-0 rows only (replica ids start at the 1e7
+        // stride). The assignment is PERSISTED and materialized by the
+        // sizes agg inside the train window: the prune query consumes
+        // `clusters` twice (the join side and the keep-side anti-join),
+        // and without the cache each consumer re-derives the full-corpus
+        // argmax scan — pruneWall would charge ~2 redundant assignment
+        // passes to the quantity the decades claim to measure
+        val ((clusters, sizes), train) = measure(spark.sparkContext) {
+          val clusters = KMeans.lloyd(corpus, "vec_id", "embedding",
+            seedPred = col("vec_id") < k, iters = 3, localBelow = 0L).persist()
+          (clusters, clusters.groupBy(col("cluster")).count()
+            .agg(count(lit(1)).as("k"), max(col("count")).as("mx"))
+            .collect()(0))
+        }
+        val (stats, prune) = measure(spark.sparkContext) {
+          val drops = AnnOps.withinBucketCosinePairs(
+            corpus.join(clusters, "vec_id"), "vec_id", "embedding", "cluster",
+            minCos2Bp = 500L)
+            .select(col("vec_b").as("vec_id"))
+          clusters.join(drops, Seq("vec_id"), "left_anti")
+            .agg(count(lit(1)).as("kept"), max(col("vec_id")).as("maxId"))
+            .collect()(0)
+        }
+        (clusters, sizes, train, stats, prune)
+      }
     println(f"[rehearsal] semdedup copies=$copies vectors=$n k=$k " +
       f"clusters=${sizes.getLong(0)} maxCluster=${sizes.getLong(1)} " +
-      f"kept=${stats.getLong(0)} keptAllCopy0=${stats.getLong(1) < 10000000L} " +
-      f"trainWall=$trainWall%.1f s pruneWall=$pruneWall%.1f s " +
-      f"shuffleRead=${mib(readB)} MiB shuffleWrite=${mib(writeB)} MiB")
+      f"kept=${stats.getLong(0)} keptAllCopy0=${stats.getLong(1) < IdStride} " +
+      f"trainWall=${train.wallS}%.1f s pruneWall=${prune.wallS}%.1f s " +
+      shuffle(w))
     clusters.unpersist(blocking = false)
     corpus.unpersist(blocking = false)
   }
@@ -631,13 +578,11 @@ object ScaleRehearsal {
     * block-pruned reads + heap merge — a nonzero merge shuffle
     * falsifies the design), SERVE reads only pruned blocks. */
   private def spineRehearsal(spark: SparkSession, copies: Int, dupEvery: Int,
-                             sfDir: String, read: AtomicLong,
-                             write: AtomicLong): Unit = {
+                             sfDir: String, scratch: Path): Unit = {
     import spark.implicits._
     val cpus = spark.sparkContext.defaultParallelism
     val conf = spark.sparkContext.hadoopConfiguration
-    val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("target").toAbsolutePath, "spine-rehearsal").toString
+    val base = scratch.toString
 
     val ids = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id").cast("long").as("id"))
@@ -650,38 +595,29 @@ object ScaleRehearsal {
       lit(" http://c"), col("__c"), lit(".org/p/"), col("id"),
       lit(" text/html 200 DIGEST"), col("id"), lit(" - - 100 "),
       col("id") * 1000L, lit(" w.warc.gz"))
-    def corpus(sub: Boolean) = ids
-      .where(if (sub) col("id") % dupEvery === 0 else lit(true))
-      .select(explode(sequence(lit(0L), lit(copies - 1L))).as("__c"),
-        col("id"))
-      .select(lineCol.as("line")).as[String].rdd
+    def corpus(sub: Boolean) =
+      replicate(ids.where(if (sub) col("id") % dupEvery === 0 else lit(true)),
+        copies).select(lineCol.as("line")).as[String].rdd
 
     // ---- BUILD: three input clusters (full + two duplicate subsets)
-    graftshim.ListenerShim.drain(spark.sparkContext)
-    var (r0, w0) = (read.get, write.get)
-    val t0 = System.nanoTime()
-    val all = corpus(sub = false)
-    val bounds = operators.Boundaries.sample(all, cpus)
-    operators.ClusterOps.build(spark, all, s"$base/a", bounds,
-      linesPerBlock = 300, overwrite = true)
-    operators.ClusterOps.build(spark, corpus(sub = true), s"$base/b", bounds,
-      linesPerBlock = 100, overwrite = true)
-    operators.ClusterOps.build(spark, corpus(sub = true), s"$base/c", bounds,
-      linesPerBlock = 150, overwrite = true)
-    val buildWall = (System.nanoTime() - t0) / 1e9
-    graftshim.ListenerShim.drain(spark.sparkContext)
-    val (buildRead, buildWrite) = (read.get - r0, write.get - w0)
+    val (_, build) = measure(spark.sparkContext) {
+      val all = corpus(sub = false)
+      val bounds = operators.Boundaries.sample(all, cpus)
+      operators.ClusterOps.build(spark, all, s"$base/a", bounds,
+        linesPerBlock = 300, overwrite = true)
+      operators.ClusterOps.build(spark, corpus(sub = true), s"$base/b", bounds,
+        linesPerBlock = 100, overwrite = true)
+      operators.ClusterOps.build(spark, corpus(sub = true), s"$base/c", bounds,
+        linesPerBlock = 150, overwrite = true)
+    }
 
     // ---- MERGE: zero-shuffle aligned heap merge + streaming day cap
-    r0 = read.get; w0 = write.get
-    val t1 = System.nanoTime()
     val inputs = Seq(s"$base/a", s"$base/b", s"$base/c")
-    operators.ClusterOps.merge(spark, inputs, s"$base/merged", nShards = cpus,
-      globalCdx = true, dayLimit = 1, linesPerBlock = 300,
-      overwrite = true)
-    val mergeWall = (System.nanoTime() - t1) / 1e9
-    graftshim.ListenerShim.drain(spark.sparkContext)
-    val (mergeRead, mergeWrite) = (read.get - r0, write.get - w0)
+    val (_, merge) = measure(spark.sparkContext) {
+      operators.ClusterOps.merge(spark, inputs, s"$base/merged", nShards = cpus,
+        globalCdx = true, dayLimit = 1, linesPerBlock = 300,
+        overwrite = true)
+    }
 
     // closed-form output size: non-dup docs admit 1 of 1, triplicated
     // docs admit 2 of 3 (dayLimit=1 admits dayLimit+1) — per copy
@@ -709,27 +645,23 @@ object ScaleRehearsal {
     // ---- SERVE: one copy-namespace range off the merged cluster
     val (servStart, servEnd) = ("org,c1)", "org,c1*") // ')'+1 = '*'
     val prunedBlocks = idx.prune(Some(servStart), Some(servEnd)).size
-    r0 = read.get; w0 = write.get
-    val t2 = System.nanoTime()
-    val served = operators.ClusterOps
-      .range(conf, Some(servStart), Some(servEnd), Seq(s"$base/merged")).size
-    val serveWall = (System.nanoTime() - t2) / 1e9
-    graftshim.ListenerShim.drain(spark.sparkContext)
-    val (serveRead, serveWrite) = (read.get - r0, write.get - w0)
+    val (served, serve) = measure(spark.sparkContext) {
+      operators.ClusterOps
+        .range(conf, Some(servStart), Some(servEnd), Seq(s"$base/merged")).size
+    }
     require(copies < 2 || served == nBase + nSub,
       s"spine invariant violated: served $served != ${nBase + nSub} rows " +
         "for one copy namespace")
 
-    def mib(v: Long): String = f"${v / 1048576.0}%.1f"
+    def rw(w: Work): String =
+      s"${mib(w.shuffleReadBytes)}/${mib(w.shuffleWriteBytes)} MiB"
     println(f"[rehearsal] spine copies=$copies lines=${copies * (nBase + 2 * nSub)} " +
       f"mergedRows=$mergedRows (exact) " +
-      f"buildWall=$buildWall%.1f s buildShuffleRW=${mib(buildRead)}/" +
-      f"${mib(buildWrite)} MiB " +
-      f"mergeWall=$mergeWall%.1f s mergeShuffleRW=${mib(mergeRead)}/" +
-      f"${mib(mergeWrite)} MiB " +
-      f"serveWall=$serveWall%.2f s served=$served " +
+      f"buildWall=${build.wallS}%.1f s buildShuffleRW=${rw(build)} " +
+      f"mergeWall=${merge.wallS}%.1f s mergeShuffleRW=${rw(merge)} " +
+      f"serveWall=${serve.wallS}%.2f s served=$served " +
       f"prunedBlocks=$prunedBlocks/${idx.blocks.size} " +
-      f"serveShuffleRW=${mib(serveRead)}/${mib(serveWrite)} MiB")
+      f"serveShuffleRW=${rw(serve)}")
   }
 
   /** PageRank decades — the DISTRIBUTED power-iteration path
@@ -740,14 +672,9 @@ object ScaleRehearsal {
     * graph (one connected component, not an embarrassingly-parallel
     * forest). Reports wall, shuffle volume, and a rank checksum. */
   private def pageRankRehearsal(spark: SparkSession, copies: Int, iters: Int,
-                                sfDir: String, read: AtomicLong,
-                                write: AtomicLong): Unit = {
+                                sfDir: String, scratch: Path): Unit = {
     val cpus = spark.sparkContext.defaultParallelism
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id").cast("long").as("doc_id"))
-    val edges = docs
-      .select(explode(sequence(lit(0L), lit(copies - 1L))).as("__c"),
-        col("doc_id"))
+    val edges = replicate(documents(spark, sfDir).select(col("doc_id")), copies)
       .select(
         (col("doc_id") % 97 + col("__c") * 97).as("src"),
         ((col("doc_id") * 31 + 7) % 97 + col("__c") * 97).as("dst"))
@@ -756,22 +683,16 @@ object ScaleRehearsal {
         (((col("id") + 1) % copies) * 97).as("dst")))
       .repartition(cpus) // testdata is one row group (SCALE.md caveat)
     val nEdges = edges.count()
-    graftshim.ListenerShim.drain(spark.sparkContext)
-    val (r0, w0) = (read.get, write.get)
-    val t0 = System.nanoTime()
-    val pr = graft.operators.GraphOps.pageRank(edges, "src", "dst", iters)
-    val stats = pr.agg(count(lit(1)).as("n"),
-      sum(col("pr")).as("mass"), min(col("pr")).as("mn"),
-      max(col("pr")).as("mx")).collect()(0)
-    val wall = (System.nanoTime() - t0) / 1e9
-    graftshim.ListenerShim.drain(spark.sparkContext)
-    val (readB, writeB) = (read.get - r0, write.get - w0)
-    def mib(v: Long): String = f"${v / 1048576.0}%.1f"
+    val (stats, w) = measure(spark.sparkContext) {
+      graft.operators.GraphOps.pageRank(edges, "src", "dst", iters)
+        .agg(count(lit(1)).as("n"),
+          sum(col("pr")).as("mass"), min(col("pr")).as("mn"),
+          max(col("pr")).as("mx")).collect()(0)
+    }
     println(f"[rehearsal] pagerank copies=$copies edges=$nEdges " +
       f"iters=$iters nodes=${stats.getLong(0)} mass=${stats.getLong(1)} " +
       f"minPr=${stats.getLong(2)} maxPr=${stats.getLong(3)} " +
-      f"wall=$wall%.1f s shuffleRead=${mib(readB)} MiB " +
-      s"shuffleWrite=${mib(writeB)} MiB")
+      f"wall=${w.wallS}%.1f s ${shuffle(w)}")
   }
 
   /** ANN decades: brute-force cosine top-k vs hyperplane-LSH-bucketed
@@ -780,35 +701,17 @@ object ScaleRehearsal {
     * measures the exact baseline's quadratic growth against the bucketed
     * path's. */
   private def annRehearsal(spark: SparkSession, copies: Int, numPlanes: Int,
-                           sfDir: String, read: AtomicLong,
-                           write: AtomicLong): Unit = {
+                           sfDir: String, scratch: Path): Unit = {
     import graft.operators.llm.{AnnOps, KMeans}
     val dim = 64
-    val big = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .select(explode(sequence(lit(0L), lit(copies - 1L))).as("__c"),
-        col("vec_id"), col("embedding"))
-      .select((col("vec_id") + col("__c") * 10000000L).as("vec_id"),
-        expr("transform(embedding, (x, i) -> x + CAST((__c * 31 + i) % 13 " +
-          "AS FLOAT) * CAST(0.001 AS FLOAT))").as("embedding"))
-      .repartition(spark.sparkContext.defaultParallelism)
-      // both paths probe the same corpus: the rehearsal times the top-k
-      // plans, not the replication scaffolding
-      .persist()
+    val big = perturbedEmbeddings(spark, sfDir, copies)
     val n = big.count()
     val queries = col("vec_id") < 3
 
-    def timed(label: String)(df: org.apache.spark.sql.DataFrame): Unit = {
-      graftshim.ListenerShim.drain(spark.sparkContext)
-      val (r0, w0) = (read.get, write.get)
-      val t0 = System.nanoTime()
-      val rows = df.count()
-      val wall = (System.nanoTime() - t0) / 1e9
-      graftshim.ListenerShim.drain(spark.sparkContext)
-      def mib(v: Long): String = f"${v / 1048576.0}%.1f"
+    def timed(label: String)(df: DataFrame): Unit = {
+      val (rows, w) = measure(spark.sparkContext)(df.count())
       println(f"[rehearsal-ann] $label copies=$copies vectors=$n " +
-        f"rows=$rows wall=$wall%.2f s " +
-        s"shuffleRead=${mib(read.get - r0)} MiB " +
-        s"shuffleWrite=${mib(write.get - w0)} MiB")
+        f"rows=$rows wall=${w.wallS}%.2f s ${shuffle(w)}")
     }
 
     val brute = AnnOps.bruteTopK(big, "vec_id", "embedding", queries, 10)
@@ -822,17 +725,15 @@ object ScaleRehearsal {
     // (one-time ingest), then ADC search over the CODE TABLE — the
     // search plan never reads a vector. Train + encode are timed
     // separately because they amortize over every later query batch.
-    val tT = System.nanoTime()
-    val pqCbs = AnnOps.pqTrain(big, "vec_id", "embedding",
-      seedPred = col("vec_id") < 16, mSub = 4, dim = dim)
-    val trainWall = (System.nanoTime() - tT) / 1e9
+    val (pqCbs, train) = measure(spark.sparkContext) {
+      AnnOps.pqTrain(big, "vec_id", "embedding",
+        seedPred = col("vec_id") < 16, mSub = 4, dim = dim)
+    }
     val pqCodes = AnnOps.pqEncodeWithCodebooks(
       big, "vec_id", "embedding", pqCbs, dim).persist()
-    val tE = System.nanoTime()
-    pqCodes.count()
-    val encodeWall = (System.nanoTime() - tE) / 1e9
-    println(f"[rehearsal-ann] pq one-time: train=$trainWall%.2f s " +
-      f"encode=$encodeWall%.2f s (k=${pqCbs.head.length} codes/subspace)")
+    val (_, encode) = measure(spark.sparkContext)(pqCodes.count())
+    println(f"[rehearsal-ann] pq one-time: train=${train.wallS}%.2f s " +
+      f"encode=${encode.wallS}%.2f s (k=${pqCbs.head.length} codes/subspace)")
     val pq = AnnOps.pqTopKFromCodes(pqCodes, "vec_id", "codes",
       big.where(queries), "vec_id", "embedding", pqCbs, dim, 10)
     // the production recall fix: 16x over-scanned ADC shortlist,
@@ -843,11 +744,11 @@ object ScaleRehearsal {
       big, "vec_id", "embedding", queries, 10)
     // the composed billion-scale architecture (q128's shape): trained
     // coarse buckets prune candidates, trained PQ codes price the scan
-    val tC = System.nanoTime()
-    val coarseCb = KMeans.codebook(big, "vec_id", "embedding",
-      seedPred = col("vec_id") < 16, iters = 3)
-    val coarseWall = (System.nanoTime() - tC) / 1e9
-    println(f"[rehearsal-ann] ivfpq one-time: coarse train=$coarseWall%.2f s " +
+    val (coarseCb, coarse) = measure(spark.sparkContext) {
+      KMeans.codebook(big, "vec_id", "embedding",
+        seedPred = col("vec_id") < 16, iters = 3)
+    }
+    println(f"[rehearsal-ann] ivfpq one-time: coarse train=${coarse.wallS}%.2f s " +
       s"(${coarseCb.length} buckets)")
     val ivfPq = AnnOps.ivfPqTopK(big, "vec_id", "embedding", coarseCb,
       queries, pqCbs, dim, 10)
@@ -864,11 +765,11 @@ object ScaleRehearsal {
     // Top-k outputs are <= queries×k rows, so compare COLLECTED sets —
     // a join against the un-cached brute plan would re-run the exact
     // cross-scoring (the rehearsal's most expensive plan) per recall
-    def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+    def pairs(df: DataFrame): Set[(Long, Long)] =
       df.select(col("query_id"), col("cand_id")).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     val truth = pairs(brute)
-    def recall(df: org.apache.spark.sql.DataFrame): Double =
+    def recall(df: DataFrame): Double =
       if (truth.isEmpty) 1.0
       else (pairs(df) intersect truth).size.toDouble / truth.size
     println(f"[rehearsal-ann] recall@10 single=${recall(single)}%.3f " +
@@ -900,14 +801,13 @@ object ScaleRehearsal {
     *    and EVICTED every batch.
     * A growing maxState across decades would falsify both. */
   private def streamRehearsal(spark: SparkSession, copies: Int,
-                              horizonHours: Int, sfDir: String): Unit = {
+                              horizonHours: Int, sfDir: String,
+                              scratch: Path): Unit = {
     import spark.implicits._
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id").cast("long").as("id"), col("source"))
       .collect().map(r => (r.getLong(0), r.getString(1)))
-    val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("target").toAbsolutePath, "stream-rehearsal")
-    val inDir = base.resolve("in")
+    val inDir = scratch.resolve("in")
     java.nio.file.Files.createDirectories(inDir)
     val md = java.security.MessageDigest.getInstance("MD5")
     def md5hex(s: String): String = {
@@ -933,19 +833,16 @@ object ScaleRehearsal {
     }
 
     def run(label: String)(
-        xform: org.apache.spark.sql.Dataset[String] =>
-          org.apache.spark.sql.DataFrame): (Long, Long) = {
+        xform: org.apache.spark.sql.Dataset[String] => DataFrame): (Long, Long) = {
       spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "512")
       val lines = spark.readStream.option("maxFilesPerTrigger", "1")
         .text(inDir.toString).as[String]
       val q = xform(lines).writeStream.format("noop")
         .outputMode("append")
-        .option("checkpointLocation", base.resolve(s"ckpt-$label").toString)
+        .option("checkpointLocation", scratch.resolve(s"ckpt-$label").toString)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
-      val t0 = System.nanoTime()
-      q.awaitTermination()
-      val wall = (System.nanoTime() - t0) / 1e9
+      val (_, w) = measure(spark.sparkContext)(q.awaitTermination())
       val ps = q.recentProgress.filter(_.stateOperators.nonEmpty)
       val states = ps.map(_.stateOperators.head.numRowsTotal)
       val outRows = ps.map(p => Option(p.sink).map(_.numOutputRows)
@@ -956,7 +853,7 @@ object ScaleRehearsal {
         f"lines=$totalLines batches=${ps.length} outRows=$outRows " +
         f"maxState=${if (states.isEmpty) 0L else states.max} " +
         f"finalState=${if (states.isEmpty) 0L else states.last} " +
-        f"wall=$wall%.1f s " +
+        f"wall=${w.wallS}%.1f s " +
         f"avgBatchMs=${if (durations.isEmpty) 0L
           else durations.sum / durations.length} " +
         f"maxBatchMs=${if (durations.isEmpty) 0L else durations.max}")
@@ -1016,32 +913,19 @@ object ScaleRehearsal {
     * (map-side partial aggregation), so total shuffle is ~flat across
     * decades while wall grows with the scan. */
   private def kmeansRehearsal(spark: SparkSession, copies: Int, k: Int,
-                              sfDir: String, read: AtomicLong,
-                              write: AtomicLong): Unit = {
+                              sfDir: String, scratch: Path): Unit = {
     import graft.operators.llm.KMeans
-    val big = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .select(explode(sequence(lit(0L), lit(copies - 1L))).as("__c"),
-        col("vec_id"), col("embedding"))
-      .select((col("vec_id") + col("__c") * 10000000L).as("vec_id"),
-        expr("transform(embedding, (x, i) -> x + CAST((__c * 31 + i) % 13 " +
-          "AS FLOAT) * CAST(0.001 AS FLOAT))").as("embedding"))
-      .repartition(spark.sparkContext.defaultParallelism)
-      .persist()
+    val big = perturbedEmbeddings(spark, sfDir, copies)
     val n = big.count()
-    graftshim.ListenerShim.drain(spark.sparkContext)
-    val (r0, w0) = (read.get, write.get)
-    val t0 = System.nanoTime()
-    val assigned = KMeans.lloyd(big, "vec_id", "embedding",
-      col("vec_id") < k, iters = 3)
-    val sizes = assigned.groupBy(col("cluster")).count()
-      .orderBy(col("cluster")).collect()
-      .map(r => s"${r.getLong(0)}:${r.getLong(1)}").mkString(",")
-    val wall = (System.nanoTime() - t0) / 1e9
-    graftshim.ListenerShim.drain(spark.sparkContext)
-    def mib(v: Long): String = f"${(v / 1048576.0)}%.2f"
+    val (sizes, w) = measure(spark.sparkContext) {
+      KMeans.lloyd(big, "vec_id", "embedding", col("vec_id") < k, iters = 3)
+        .groupBy(col("cluster")).count()
+        .orderBy(col("cluster")).collect()
+        .map(r => s"${r.getLong(0)}:${r.getLong(1)}").mkString(",")
+    }
+    // two decimals: the decades' shuffle differs in the second place
     println(f"[rehearsal-kmeans] copies=$copies vectors=$n k=$k iters=3 " +
-      f"wall=$wall%.1f s shuffleRead=${mib(read.get - r0)} MiB " +
-      s"shuffleWrite=${mib(write.get - w0)} MiB clusters=$sizes")
+      f"wall=${w.wallS}%.1f s ${shuffle(w, places = 2)} clusters=$sizes")
     big.unpersist(blocking = false)
   }
 }

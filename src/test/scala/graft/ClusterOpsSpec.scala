@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.model.Cdx
 import graft.operators.{Boundaries, BoundaryPartitioner, ClusterOps, SortedMerge}
 import graft.sources.zipnum.{ZipNumIndex, ZipNumReader}
-import graft.util.KeyOrder
+import graft.util.{KeyOrder, SparkMeter}
 
 class ClusterOpsSpec extends AnyFunSuite with SparkTestSession {
 
@@ -105,29 +105,15 @@ class ClusterOpsSpec extends AnyFunSuite with SparkTestSession {
       linesPerBlock = 50)
     ClusterOps.build(spark, spark.sparkContext.parallelize(b, 3), db, interior,
       linesPerBlock = 50)
-    // builds above DO shuffle — drain their events, then listen
-    org.apache.spark.sql.graftshim.ListenerShim.drain(spark.sparkContext)
-    val moved = new java.util.concurrent.atomic.AtomicLong
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = e.taskMetrics
-        if (m != null) moved.addAndGet(
-          m.shuffleReadMetrics.totalBytesRead +
-            m.shuffleWriteMetrics.bytesWritten)
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val out = tmp("zout") + "/c"
+    // the builds above DO shuffle; the window holds only the merge
+    val out = tmp("zout") + "/c"
+    val (_, merge) = SparkMeter.measure(spark.sparkContext) {
       ClusterOps.merge(spark, Seq(da, db), out, nShards = 3)
-      // snapshot BEFORE the verification read, so only the merge counts
-      org.apache.spark.sql.graftshim.ListenerShim.drain(spark.sparkContext)
-      val mergeMoved = moved.get
-      assert(ZipNumReader.localLines(conf, out).size == 500)
-      assert(mergeMoved == 0,
-        s"the zero-shuffle merge moved $mergeMoved bytes through a shuffle")
-    } finally spark.sparkContext.removeSparkListener(l)
+    }
+    val mergeMoved = merge.shuffleReadBytes + merge.shuffleWriteBytes
+    assert(ZipNumReader.localLines(conf, out).size == 500)
+    assert(mergeMoved == 0,
+      s"the zero-shuffle merge moved $mergeMoved bytes through a shuffle")
   }
 
   test("merge of FIVE clusters (odd count exercises the balanced tree)") {
@@ -207,12 +193,12 @@ class ClusterOpsSpec extends AnyFunSuite with SparkTestSession {
       IndexedSeq("org,s1"), linesPerBlock = 20)
     ClusterOps.build(spark, spark.sparkContext.parallelize(b, 2), db,
       IndexedSeq("org,s2"), linesPerBlock = 20)
-    val (got, jobs, tasks) = jobsAndTasks(
+    val (got, w) = SparkMeter.measure(spark.sparkContext)(
       ClusterOps.range(spark, Some("org,s1"), Some("org,s3"), Seq(da, db)).toVector)
     assert(got == (a ++ b).filter(x => x >= "org,s1" && x < "org,s3")
       .sorted(KeyOrder))
-    assert(jobs == 0 && tasks == 0,
-      s"range submitted $jobs jobs and $tasks tasks")
+    assert(w.jobs == 0 && w.tasks == 0,
+      s"range submitted ${w.jobs} jobs and ${w.tasks} tasks")
   }
 
   test("Boundaries.sample is deterministic; quantiles are sorted distinct") {

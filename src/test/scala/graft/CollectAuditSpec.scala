@@ -54,8 +54,10 @@ class CollectAuditSpec extends AnyFunSuite {
   //  - cli/GraftCli.scala: the http-import per-task report — bounded by
   //    the operator-written manifest, not by any corpus.
   private val allowed: Map[String, Int] = Map(
-    // (12 = +2 for the semdedup mode, round 17: the cluster-size agg
-    // and the kept/maxId agg — both ONE-row aggregate readbacks)
+    // 16: joins 3, dedup 2, semdedup 2 (the cluster-size agg and the
+    // kept/maxId agg), one in each other mode but spine, which has none;
+    // all are one-row aggregates, k-row summaries or recall sets, except
+    // stream's read of the (id, source) column pair it writes as input
     "graft/ScaleRehearsal.scala" -> 16,
     // r22: 9 -> 8 — the q43/q123 codebook harvest is one shared
     // harvestCoarseCodebook (8 rows, per-invocation — the cross-rep

@@ -9,28 +9,6 @@ import org.apache.spark.sql.SparkSession
 trait SparkTestSession {
   lazy val spark: SparkSession = graft.cli.GraftCli.session("graft-test",
     cpus = 4, conf = Map("spark.sql.warehouse.dir" -> "target/test-warehouse"))
-
-  /** `f`'s result with the Spark jobs and tasks it submitted,
-    * listener-counted. */
-  def jobsAndTasks[T](f: => T): (T, Long, Long) = {
-    org.apache.spark.sql.graftshim.ListenerShim.drain(spark.sparkContext)
-    val jobs = new java.util.concurrent.atomic.AtomicLong
-    val tasks = new java.util.concurrent.atomic.AtomicLong
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-      override def onTaskStart(
-          e: org.apache.spark.scheduler.SparkListenerTaskStart): Unit =
-        tasks.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val r = f
-      org.apache.spark.sql.graftshim.ListenerShim.drain(spark.sparkContext)
-      (r, jobs.get, tasks.get)
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
 }
 
 /** Temp files of every spec, under the `target/` of the checkout the test

@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.zipnum.{ZipNumIndex, ZipNumReader}
+import graft.util.SparkMeter
 
 /** Write→read identity and block-pruned range scans over a real cluster
   * (SURVEY §3.1 + §3.3 composed — the spine query). */
@@ -114,24 +115,24 @@ class ZipNumRoundtripSpec extends AnyFunSuite with SparkTestSession {
     import org.apache.spark.sql.functions._
     val index = ZipNumIndex.load(dir, conf)
     val n = index.blocks.size
-    val ((plan, got), jobs, tasks) = jobsAndTasks {
+    val ((plan, got), bounded) = SparkMeter.measure(spark.sparkContext) {
       val q = spark.read.format("zipnum").load(dir)
         .where(col("urlkey") === "org,site3)/p/000500")
       (q.queryExecution.executedPlan, q.collect())
     }
     assert(plan.isInstanceOf[LocalTableScanExec], s"not a bare local scan:\n$plan")
     assert(got.map(_.getString(0)).toSeq == Seq("org,site3)/p/000500"))
-    assert(jobs == 0 && tasks == 0,
-      s"bounded read submitted $jobs jobs and $tasks tasks")
+    assert(bounded.jobs == 0 && bounded.tasks == 0,
+      s"bounded read submitted ${bounded.jobs} jobs and ${bounded.tasks} tasks")
 
-    val ((full, all), fullJobs, _) = jobsAndTasks {
+    val ((full, all), unbounded) = SparkMeter.measure(spark.sparkContext) {
       val q = spark.read.format("zipnum").load(dir)
       (q.queryExecution.executedPlan, q.collect())
     }
     assert(full.collectFirst { case b: BatchScanExec => b }.nonEmpty,
       s"unbounded read must stay distributed:\n$full")
     assert(full.toString.contains(s"blocks=$n/$n"), full.toString)
-    assert(all.length == lines.size && fullJobs >= 1)
+    assert(all.length == lines.size && unbounded.jobs >= 1)
   }
 
   test("aligned rangesRdd partitions cover disjoint ranges in order") {
