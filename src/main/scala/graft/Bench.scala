@@ -20,8 +20,10 @@ package graft
  *  - the session IS GraftCli.session (the one factory every main and
  *    test uses), plus two measured single-host sizing settings;
  *  - every pass runs inside one `graft.util.SparkMeter` window; the
- *    first pass's job and stage counts (phase-free, unlike wall time)
- *    go to the sidecar report as `jobs`/`stages`.
+ *    LAST pass's job and stage counts (phase-free, unlike wall time) go
+ *    to the sidecar report as `jobs`/`stages` — the first pass of a
+ *    fixture-backed gate also builds its fixtures, so with
+ *    GRAFT_BENCH_REPS=1 the counts still include those builds.
  */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -97,7 +99,7 @@ object Bench {
         case Left(e) => errors.getOrElseUpdate(name,
           e.toString.takeWhile(_ != '\n').take(200))
       }
-      if (rep == 1) {
+      if (rep == reps) {
         jobs(name) = work.jobs
         stages(name) = work.stages
       }

@@ -32,6 +32,10 @@ object Surt {
     "utm_content"
   )
 
+  // compiled once: String.replaceFirst/replaceAll recompile per call
+  private val WwwLabel = java.util.regex.Pattern.compile("^www\\d*\\.")
+  private val PathSessionId = java.util.regex.Pattern.compile(";jsessionid=[^/?]*")
+
   /** Canonicalize a URL; returns the input unchanged when it cannot be
     * parsed at all (reference keeps the raw value on canon failure —
     * CDXMapper.java:113-120). */
@@ -99,7 +103,8 @@ object Surt {
         try java.net.IDN.toASCII(authority).toLowerCase(Locale.ROOT)
         catch { case _: Exception => authority }
     // strip leading www, www1, www23 ... label
-    authority = authority.replaceFirst("^www\\d*\\.", "")
+    if (authority.startsWith("www"))
+      authority = WwwLabel.matcher(authority).replaceFirst("")
     val hostKey = authority.split('.').reverse.mkString(",")
 
     // path + query
@@ -110,7 +115,8 @@ object Surt {
 
     path = path.toLowerCase(Locale.ROOT)
     // strip path session ids: ;jsessionid=... up to next / or end
-    path = path.replaceAll(";jsessionid=[^/?]*", "")
+    if (path.contains(";jsessionid="))
+      path = PathSessionId.matcher(path).replaceAll("")
     // drop trailing slash except root
     if (path.length > 1 && path.endsWith("/")) path = path.dropRight(1)
 

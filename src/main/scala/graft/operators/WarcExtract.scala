@@ -320,21 +320,30 @@ object WarcExtract {
       // no shuffle intervenes) — buffer ONE file's rows at a time, not the
       // whole partition; memory is bounded by the largest single file
       val fs = new Path(outDir).getFileSystem(conf.value)
-      implicit val keyOrder: Ordering[String] = graft.util.KeyOrder
+      val order = Ordering.by[CdxRow, String](_.urlkey)(graft.util.KeyOrder)
+        .orElseBy(_.timestamp)(graft.util.KeyOrder)
       def flush(name: String, rows: Seq[CdxRow]): Unit = {
         val tmp = new Path(outDir, s"$name.cdx.TMP")
         val dst = new Path(outDir, s"$name.cdx")
-        val out = fs.create(tmp, true)
+        val out = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
+          fs.create(tmp, true), java.nio.charset.StandardCharsets.UTF_8), 1 << 16)
         try {
-          rows.sortBy(r => (r.urlkey, r.timestamp)).foreach { r =>
-            val line = Seq(r.urlkey, r.timestamp, r.original_url, r.mimetype,
-              r.statuscode.map(_.toString).getOrElse("-"), r.digest, "-", "-",
-              r.compressed_size.toString, r.offset.toString, r.filename)
-              .mkString(" ")
-            out.write((line + "\n").getBytes("UTF-8"))
-            n.add(1)
+          val line = new java.lang.StringBuilder(256)
+          rows.sorted(order).foreach { r =>
+            line.setLength(0)
+            line.append(r.urlkey).append(' ').append(r.timestamp).append(' ')
+              .append(r.original_url).append(' ').append(r.mimetype).append(' ')
+            r.statuscode match {
+              case Some(s) => line.append(s)
+              case None => line.append('-')
+            }
+            line.append(' ').append(r.digest).append(" - - ")
+              .append(r.compressed_size).append(' ').append(r.offset).append(' ')
+              .append(r.filename).append('\n')
+            out.append(line)
           }
         } finally out.close()
+        n.add(rows.size)
         fs.delete(dst, false)
         require(fs.rename(tmp, dst), s"commit: rename to $dst failed")
       }
@@ -449,7 +458,7 @@ object WarcExtract {
     * as-is when the framing is damaged (dechunk = None): a raw-bytes
     * digest is stable and honest, a half-decoded one is neither. */
   private def httpBody(payload: Array[Byte]): Array[Byte] = {
-    val sep = "\r\n\r\n".getBytes
+    val sep = CrLfCrLf
     var i = 0
     while (i <= payload.length - sep.length) {
       var j = 0
@@ -473,4 +482,6 @@ object WarcExtract {
     }
     payload
   }
+
+  private val CrLfCrLf = "\r\n\r\n".getBytes(java.nio.charset.StandardCharsets.US_ASCII)
 }

@@ -1,7 +1,7 @@
 package graft.sources.warc
 
 import java.io.InputStream
-import java.util.zip.Inflater
+import java.util.zip.{CRC32, Inflater}
 
 /**
  * W/ARC member-level IO (SURVEY §1.3, §3.4). The reference treats a W/ARC
@@ -19,36 +19,115 @@ object GzipMembers {
 
   /** Iterate members of a (possibly multi-member) gzip stream. Throws on a
     * corrupt member — callers wanting `-soft` semantics catch per-member
-    * via [[iterateSoft]]. */
+    * via [[iterateSoft]].
+    *
+    * One walk per stream, not per member: a single `Inflater` is `reset`
+    * between members and reads its input IN PLACE from one 64 KiB buffer
+    * (after a member ends, `getRemaining` says where the next one starts,
+    * so nothing is copied back), and output grows one reusable buffer
+    * that each payload is copied out of once, at its exact size. Archive
+    * members are typically a few hundred compressed bytes, so per-member
+    * buffers and inflaters would cost more than the inflating itself.
+    * The inflater is ended when the walk is exhausted or throws; a walk
+    * abandoned half-way leaves it to the GC's cleaner. */
   def iterate(in: InputStream): Iterator[Member] = new Iterator[Member] {
-    private val feeder = new Feeder(in)
+    private val inf = new Inflater(true)
+    private val crc = new CRC32
+    private val buf = new Array[Byte](1 << 16)
+    private var pos = 0  // next unread byte of buf
+    private var lim = 0  // end of the valid bytes in buf
+    private var out = new Array[Byte](1 << 16)
     private var offset = 0L
     private var nextMember: Member = _
     private var done = false
 
+    /** Refill `buf` from the stream; false at EOF. */
+    private def fill(): Boolean = {
+      val n = in.read(buf)
+      pos = 0; lim = math.max(n, 0)
+      n > 0
+    }
+
+    private def readByte(): Int = {
+      require(pos < lim || fill(), "unexpected EOF in gzip member")
+      val b = buf(pos) & 0xff
+      pos += 1
+      b
+    }
+
     private def advance(): Unit = {
       if (done || nextMember != null) return
-      if (feeder.atEof) { done = true; return }
+      try {
+        if (pos == lim && !fill()) { done = true; inf.end(); return }
+        nextMember = member()
+      } catch { case e: Throwable => done = true; inf.end(); throw e }
+    }
+
+    private def member(): Member = {
       val start = offset
-      val headerLen = parseHeader(feeder)
-      val (payload, deflateLen) = inflateRaw(feeder)
-      val footer = new Array[Byte](8)
-      feeder.readFully(footer)
+      val headerLen = parseHeader()
+      // raw deflate, input read in place from buf
+      inf.reset()
+      var len = 0
+      while (!inf.finished()) {
+        if (inf.needsInput) {
+          require(pos < lim || fill(), "truncated deflate stream")
+          inf.setInput(buf, pos, lim - pos)
+          pos = lim
+        }
+        if (len == out.length) out = java.util.Arrays.copyOf(out, grown(len))
+        val m = inf.inflate(out, len, out.length - len)
+        len += m
+        if (m == 0 && inf.needsDictionary())
+          throw new IllegalStateException("deflate dictionary unsupported")
+      }
+      // the tail of the last input window belongs to the footer / next member
+      pos -= inf.getRemaining
+      val deflateLen = inf.getBytesRead
+      val crcRead = le32()
+      val isize = le32()
       // verify CRC32, not only ISIZE (r19 review): a bit-flipped LITERAL
       // deflate block inflates cleanly with the right length, so without
       // the CRC a silently corrupt payload — and its digest — would flow
       // through as valid, where the reference's GZIPInputStream-based
       // stack rejects the member
-      val crc = new java.util.zip.CRC32()
-      crc.update(payload)
-      require(le32(footer, 0) == crc.getValue,
-        s"gzip CRC mismatch at offset $start")
-      val isize = le32(footer, 4)
-      require(isize == (payload.length & 0xffffffffL),
+      crc.reset()
+      crc.update(out, 0, len)
+      require(crcRead == crc.getValue, s"gzip CRC mismatch at offset $start")
+      require(isize == (len & 0xffffffffL),
         s"gzip ISIZE mismatch at offset $start")
       val total = headerLen + deflateLen + 8
       offset += total
-      nextMember = Member(start, total, payload)
+      Member(start, total, java.util.Arrays.copyOf(out, len))
+    }
+
+    /** RFC 1952 header: magic, CM, FLG, MTIME, XFL, OS + optional FEXTRA /
+      * FNAME / FCOMMENT / FHCRC. Returns the header's byte length. */
+    private def parseHeader(): Long = {
+      var n = 0L
+      def rb(): Int = { n += 1; readByte() }
+      val m0 = rb(); val m1 = rb()
+      require(m0 == 0x1f && m1 == 0x8b, f"bad gzip magic $m0%02x$m1%02x")
+      val cm = rb()
+      require(cm == 8, s"unsupported compression method $cm")
+      val flg = rb()
+      (0 until 6).foreach(_ => rb()) // MTIME, XFL, OS
+      if ((flg & 4) != 0) { // FEXTRA (e.g. our SL subfield)
+        val xlen = rb() | (rb() << 8)
+        (0 until xlen).foreach(_ => rb())
+      }
+      if ((flg & 8) != 0) while (rb() != 0) () // FNAME, NUL-terminated
+      if ((flg & 16) != 0) while (rb() != 0) () // FCOMMENT
+      if ((flg & 2) != 0) { rb(); rb() } // FHCRC
+      n
+    }
+
+    /** Little-endian uint32 from the stream (the footer's CRC32 / ISIZE). */
+    private def le32(): Long = {
+      var v = 0L
+      var i = 0
+      while (i < 4) { v |= readByte().toLong << (8 * i); i += 1 }
+      v
     }
 
     override def hasNext: Boolean = { advance(); nextMember != null }
@@ -76,100 +155,12 @@ object GzipMembers {
       override def next(): Member = it.next()
     }
 
-  /** RFC 1952 header: magic, CM, FLG, MTIME, XFL, OS + optional FEXTRA /
-    * FNAME / FCOMMENT / FHCRC. Returns the header's byte length. */
-  private def parseHeader(f: Feeder): Long = {
-    var n = 0L
-    def rb(): Int = { n += 1; f.readByte() }
-    val m0 = rb(); val m1 = rb()
-    require(m0 == 0x1f && m1 == 0x8b, f"bad gzip magic $m0%02x$m1%02x")
-    val cm = rb()
-    require(cm == 8, s"unsupported compression method $cm")
-    val flg = rb()
-    (0 until 6).foreach(_ => rb()) // MTIME, XFL, OS
-    if ((flg & 4) != 0) { // FEXTRA (e.g. our SL subfield)
-      val xlen = rb() | (rb() << 8)
-      (0 until xlen).foreach(_ => rb())
-    }
-    if ((flg & 8) != 0) while (rb() != 0) () // FNAME, NUL-terminated
-    if ((flg & 16) != 0) while (rb() != 0) () // FCOMMENT
-    if ((flg & 2) != 0) { rb(); rb() } // FHCRC
-    n
+  /** Doubled capacity for a payload buffer holding `len` bytes. */
+  private def grown(len: Int): Int = {
+    if (len >= MaxArray) throw new OutOfMemoryError("gzip member payload over 2 GiB")
+    math.min(MaxArray.toLong, 2L * len).toInt
   }
-
-  /** Inflate one raw-deflate stream; returns (payload, compressed length).
-    * Over-read bytes are pushed back to the feeder. */
-  private def inflateRaw(f: Feeder): (Array[Byte], Long) = {
-    val inf = new Inflater(true)
-    val inBuf = new Array[Byte](8192)
-    val outBuf = new Array[Byte](16384)
-    val out = new java.io.ByteArrayOutputStream(1 << 16)
-    var fed = 0L
-    var lastN = 0
-    try {
-      while (!inf.finished()) {
-        if (inf.needsInput) {
-          val n = f.readChunk(inBuf)
-          require(n > 0, "truncated deflate stream")
-          inf.setInput(inBuf, 0, n)
-          fed += n; lastN = n
-        }
-        val m = inf.inflate(outBuf)
-        out.write(outBuf, 0, m)
-        if (m == 0 && inf.needsDictionary())
-          throw new IllegalStateException("deflate dictionary unsupported")
-      }
-      // over-read tail of the last chunk belongs to the footer/next member
-      val remaining = inf.getRemaining
-      if (remaining > 0) f.unread(inBuf, lastN - remaining, remaining)
-      (out.toByteArray, fed - remaining)
-    } finally inf.end()
-  }
-
-  private def le32(b: Array[Byte], off: Int): Long =
-    (b(off) & 0xffL) | ((b(off + 1) & 0xffL) << 8) |
-      ((b(off + 2) & 0xffL) << 16) | ((b(off + 3) & 0xffL) << 24)
-
-  /** InputStream wrapper with unread support (deflate over-read pushback). */
-  private final class Feeder(in: InputStream) {
-    private var back: Array[Byte] = Array.emptyByteArray
-    private var backPos = 0
-
-    def unread(buf: Array[Byte], off: Int, len: Int): Unit = {
-      val keep = back.length - backPos
-      val merged = new Array[Byte](keep + len)
-      System.arraycopy(buf, off, merged, 0, len)
-      System.arraycopy(back, backPos, merged, len, keep)
-      back = merged; backPos = 0
-    }
-
-    def atEof: Boolean = {
-      if (backPos < back.length) return false
-      val b = in.read()
-      if (b < 0) true else { unread(Array(b.toByte), 0, 1); false }
-    }
-
-    def readByte(): Int = {
-      if (backPos < back.length) { val b = back(backPos) & 0xff; backPos += 1; b }
-      else {
-        val b = in.read()
-        require(b >= 0, "unexpected EOF in gzip member")
-        b
-      }
-    }
-
-    def readChunk(buf: Array[Byte]): Int = {
-      if (backPos < back.length) {
-        val n = math.min(buf.length, back.length - backPos)
-        System.arraycopy(back, backPos, buf, 0, n); backPos += n; n
-      } else in.read(buf)
-    }
-
-    def readFully(buf: Array[Byte]): Unit = {
-      var i = 0
-      while (i < buf.length) { buf(i) = readByte().toByte; i += 1 }
-    }
-  }
+  private val MaxArray = Int.MaxValue - 8
 }
 
 /**
@@ -318,18 +309,51 @@ object WarcRecords {
     * mixed-case header names, and parameters after the media type
     * ("text/html; charset=..."). */
   def httpStatusAndMime(payload: Array[Byte]): (Option[Int], Option[String]) = {
-    val text = new String(payload, 0, math.min(payload.length, 4096),
-      java.nio.charset.StandardCharsets.ISO_8859_1)
-    if (!text.startsWith("HTTP/")) (None, None)
-    else {
-      val lines = text.split("\n").map(_.stripSuffix("\r"))
-      val status = lines.head.split(" ").lift(1).flatMap(_.toIntOption)
-      val mime = lines.tail.takeWhile(_.nonEmpty)
-        .find(_.toLowerCase.startsWith("content-type:"))
-        .map(_.split(":", 2)(1).trim.split(";")(0).trim)
-        .filter(_.nonEmpty)
-      (status, mime)
+    // lines are walked in place up to the head's blank line (within the
+    // first 4 KiB): the body, often most of those bytes, is never decoded
+    val end = math.min(payload.length, 4096)
+    if (!startsWithAscii(payload, 0, end, "HTTP/")) return (None, None)
+    def lineEnd(from: Int): Int = {
+      var i = from
+      while (i < end && payload(i) != '\n') i += 1
+      i
     }
+    // a line's end without its trailing '\r'
+    def noCr(from: Int, to: Int): Int =
+      if (to > from && payload(to - 1) == '\r') to - 1 else to
+    def text(from: Int, until: Int): String = new String(payload, from,
+      until - from, java.nio.charset.StandardCharsets.ISO_8859_1)
+    val eol = lineEnd(0)
+    val status = text(0, noCr(0, eol)).split(" ").lift(1).flatMap(_.toIntOption)
+    var mime: Option[String] = None
+    var inHead = true
+    var from = eol + 1
+    while (inHead && from <= end) {
+      val to = lineEnd(from)
+      val until = noCr(from, to)
+      if (until == from) inHead = false // the blank line ends the head
+      else if (startsWithAscii(payload, from, until, "content-type:")) {
+        mime = Some(text(from + 13, until).trim.split(";")(0).trim)
+          .filter(_.nonEmpty)
+        inHead = false
+      } else from = to + 1
+    }
+    (status, mime)
+  }
+
+  /** Whether `b[from, until)` starts with the ASCII `prefix`, where a
+    * lower-case letter of `prefix` matches either case. */
+  private def startsWithAscii(b: Array[Byte], from: Int, until: Int,
+                              prefix: String): Boolean = {
+    if (until - from < prefix.length) return false
+    var i = 0
+    while (i < prefix.length) {
+      val p = prefix.charAt(i)
+      val c = b(from + i)
+      if (c != p && !(p >= 'a' && p <= 'z' && c == p - 32)) return false
+      i += 1
+    }
+    true
   }
 
   /** WARC magic test with leading-NUL tolerance: NUL-padded rewrites
@@ -353,17 +377,29 @@ object WarcRecords {
     * or ends the head), and header lines split on LF with trailing-CR
     * strip, which is byte-identical on conformant records. */
   def parse(bytes: Array[Byte]): Option[WarcRecord] = {
-    val sep4 = indexOf(bytes, "\r\n\r\n".getBytes)
-    // only a \n\n BEFORE the CRLF separator can win the comparison, so
-    // bound its scan there — an unbounded scan would walk a conformant
-    // record's whole (possibly multi-MB binary) payload looking for a
-    // byte pair that no longer matters
-    val sep2 = indexOf(bytes, "\n\n".getBytes,
-      end = if (sep4 >= 0) sep4 + 2 else bytes.length)
-    val (sep, sepLen) =
-      if (sep4 >= 0 && (sep2 < 0 || sep4 < sep2)) (sep4, 4)
-      else if (sep2 >= 0) (sep2, 2)
-      else return None
+    val sep = headEnd(bytes)
+    if (sep < 0) None else parseHead(bytes, sep)
+  }
+
+  /** Start of the head/block separator (see [[parse]]), or -1; its
+    * length is 4 when it starts with '\r', else 2. One pass: each '\n'
+    * either starts a `\n\n` or is second in a `\r\n\r\n`. */
+  private def headEnd(b: Array[Byte]): Int = {
+    var k = 0
+    while (k < b.length) {
+      if (b(k) == '\n') {
+        if (k >= 1 && k + 2 < b.length && b(k - 1) == '\r' &&
+            b(k + 1) == '\r' && b(k + 2) == '\n') return k - 1
+        if (k + 1 < b.length && b(k + 1) == '\n') return k
+      }
+      k += 1
+    }
+    -1
+  }
+
+  /** [[parse]] of a payload whose separator [[headEnd]] found at `sep`. */
+  private def parseHead(bytes: Array[Byte], sep: Int): Option[WarcRecord] = {
+    val sepLen = if (bytes(sep) == '\r') 4 else 2
     // mid-header NULs: disk damage and NUL-padded rewrites spatter the
     // HEAD with 0x00 bytes (leading runs before the version line,
     // interior bytes inside header text). NUL is meaningless in the
@@ -386,18 +422,30 @@ object WarcRecords {
       val i = l.indexOf(':')
       if (i < 0) None else Some(l.substring(0, i).trim -> l.substring(i + 1).trim)
     }.toMap
-    val ci = headers.map { case (k, v) => k.toLowerCase -> v }
+    // case-insensitive fields: when names differ only in case, the last
+    // in the map's order wins (as in a lower-cased copy of the map)
+    var warcType, targetUri, date, contentType, contentLength: String = null
+    headers.foreach { case (k, v) =>
+      k.toLowerCase match {
+        case "warc-type" => warcType = v
+        case "warc-target-uri" => targetUri = v
+        case "warc-date" => date = v
+        case "content-type" => contentType = v
+        case "content-length" => contentLength = v
+        case _ => ()
+      }
+    }
     // Respect Content-Length: a spec-conformant record ends with \r\n\r\n
     // INSIDE the member, after the block — without the truncation those
     // separator bytes would pollute payload digests.
     val avail = bytes.length - (sep + sepLen)
-    val blockLen = ci.get("content-length").flatMap(_.toIntOption)
+    val blockLen = Option(contentLength).flatMap(_.toIntOption)
       .filter(l => l >= 0 && l <= avail).getOrElse(avail)
     Some(WarcRecord(
-      warcType = ci.getOrElse("warc-type", "unknown"),
-      targetUri = ci.get("warc-target-uri").map(_.stripPrefix("<").stripSuffix(">")),
-      date = ci.get("warc-date"),
-      contentType = ci.get("content-type"),
+      warcType = Option(warcType).getOrElse("unknown"),
+      targetUri = Option(targetUri).map(_.stripPrefix("<").stripSuffix(">")),
+      date = Option(date),
+      contentType = Option(contentType),
       headers = headers,
       payload = java.util.Arrays.copyOfRange(bytes, sep + sepLen,
         sep + sepLen + blockLen)))
@@ -412,25 +460,29 @@ object WarcRecords {
     * falls back to single-record [[parse]] semantics — never a
     * half-walked prefix silently standing in for the member. */
   def parseAll(bytes: Array[Byte]): Seq[WarcRecord] = {
-    def single = parse(bytes).toSeq
+    val sep = headEnd(bytes)
+    if (sep < 0) return Seq.empty
+    def single = parseHead(bytes, sep).toSeq
     // fast path — almost every member holds ONE record: if the first
     // record's declared extent (head + separator + Content-Length)
     // covers the payload up to separator-newline slack, there is no
     // second record to find and the PlainWarc walk (a second full pass
     // over the member) is skipped. Members without a Content-Length
     // can't bound a second record either → single by construction.
-    val sep4 = indexOf(bytes, "\r\n\r\n".getBytes)
-    val sep2 = indexOf(bytes, "\n\n".getBytes,
-      end = if (sep4 >= 0) sep4 + 2 else bytes.length)
-    val (sep, sepLen) =
-      if (sep4 >= 0 && (sep2 < 0 || sep4 < sep2)) (sep4, 4)
-      else if (sep2 >= 0) (sep2, 2)
-      else return single
+    // The length is the first raw head line's, as PlainWarc reads it.
+    val sepLen = if (bytes(sep) == '\r') 4 else 2
     val head = new String(bytes, 0, sep,
       java.nio.charset.StandardCharsets.ISO_8859_1).replace("\u0000", "")
-    val len = head.split("\n").map(_.stripSuffix("\r"))
-      .find(_.toLowerCase.startsWith("content-length:"))
-      .flatMap(_.split(":", 2)(1).trim.toLongOption)
+    var len: Option[Long] = None
+    var from = 0
+    while (from <= head.length) {
+      val nl = head.indexOf('\n', from)
+      val to = if (nl < 0) head.length else nl
+      if (head.regionMatches(true, from, "content-length:", 0, 15)) {
+        len = head.substring(from + 15, to).trim.toLongOption
+        from = head.length + 1
+      } else from = to + 1
+    }
     len match {
       case None => single
       case Some(l) if l < 0 || sep + sepLen + l >= bytes.length - 4 =>
@@ -442,22 +494,6 @@ object WarcRecords {
           if (records.length <= 1) single
           else records.flatMap(m => parse(m.payload))
         } catch { case _: Exception => single }
-    }
-  }
-
-  /** Value of one HTTP response header (case-insensitive), with the same
-    * head tolerances as [[httpStatusAndMime]]. */
-  def httpHeaderValue(payload: Array[Byte], name: String): Option[String] = {
-    val text = new String(payload, 0, math.min(payload.length, 4096),
-      java.nio.charset.StandardCharsets.ISO_8859_1)
-    if (!text.startsWith("HTTP/")) None
-    else {
-      val prefix = name.toLowerCase + ":"
-      text.split("\n").map(_.stripSuffix("\r")).drop(1)
-        .takeWhile(_.nonEmpty)
-        .find(_.toLowerCase.startsWith(prefix))
-        .map(_.split(":", 2)(1).trim)
-        .filter(_.nonEmpty)
     }
   }
 
@@ -572,33 +608,24 @@ object WarcRecords {
 
   /** SHA1 digest in Base32 (RFC 4648, A-Z2-7) — the CDX digest convention. */
   def sha1Base32(bytes: Array[Byte]): String = {
-    val sha = java.security.MessageDigest.getInstance("SHA-1").digest(bytes)
-    val alphabet = "ABCDEFGHIJKLMNOPQRSTUVWXYZ234567"
-    val sb = new StringBuilder(32)
+    val sha = Sha1.get.digest(bytes)
+    val sb = new java.lang.StringBuilder(32)
     var buffer = 0L
     var bits = 0
     sha.foreach { b =>
       buffer = (buffer << 8) | (b & 0xffL); bits += 8
       while (bits >= 5) {
         bits -= 5
-        sb.append(alphabet(((buffer >> bits) & 0x1f).toInt))
+        sb.append(Base32.charAt(((buffer >> bits) & 0x1f).toInt))
       }
     }
     sb.toString
   }
 
-  private def indexOf(hay: Array[Byte], needle: Array[Byte],
-                      end: Int = Int.MaxValue): Int = {
-    var i = 0
-    val limit = math.min(hay.length, end) - needle.length
-    while (i <= limit) {
-      var j = 0
-      while (j < needle.length && hay(i + j) == needle(j)) j += 1
-      if (j == needle.length) return i
-      i += 1
-    }
-    -1
-  }
+  /** One SHA-1 engine per thread: `digest` resets it after each use. */
+  private val Sha1 = ThreadLocal.withInitial[java.security.MessageDigest](
+    () => java.security.MessageDigest.getInstance("SHA-1"))
+  private val Base32 = "ABCDEFGHIJKLMNOPQRSTUVWXYZ234567"
 }
 
 /**
