@@ -167,30 +167,13 @@ object GraftCli {
         // summary-generate <clusterDir> — rebuild ALL.summary + manifest
         // from the per-shard -idx files (standalone Q4/Q5 tools; normally
         // folded into the writer's commit)
-        val conf = new org.apache.hadoop.conf.Configuration()
         val dir = new org.apache.hadoop.fs.Path(rest(0))
-        val fs = dir.getFileSystem(conf)
-        val idxs = fs.listStatus(dir).map(_.getPath)
-          .filter(_.getName.endsWith("-idx")).sortBy(_.getName)
-        require(idxs.nonEmpty, s"no -idx shard indexes under $dir")
-        val sum = fs.create(
-          new org.apache.hadoop.fs.Path(dir, "ALL.summary"), true)
-        val buf = new Array[Byte](1 << 16)
-        idxs.foreach { ip =>
-          val in = fs.open(ip)
-          var n = in.read(buf)
-          while (n >= 0) { sum.write(buf, 0, n); n = in.read(buf) }
-          in.close()
-        }
-        sum.close()
-        val man = fs.create(
-          new org.apache.hadoop.fs.Path(dir, "manifest.txt"), true)
-        idxs.foreach { ip =>
-          man.write((ip.getName.stripSuffix("-idx") + ".gz\n")
-            .getBytes("UTF-8"))
-        }
-        man.close()
-        println(s"rebuilt ALL.summary + manifest.txt from ${idxs.length} shard indexes")
+        val fs = dir.getFileSystem(new org.apache.hadoop.conf.Configuration())
+        val parts = fs.listStatus(dir).map(_.getPath.getName)
+          .filter(_.endsWith("-idx")).sorted.map(_.stripSuffix("-idx"))
+        require(parts.nonEmpty, s"no -idx shard indexes under $dir")
+        graft.sources.zipnum.ZipNumShardIO.writeSummary(fs, dir, parts.toSeq)
+        println(s"rebuilt ALL.summary + manifest.txt from ${parts.length} shard indexes")
       case "wat-extract" =>
         // wat-extract <outDir> <warc...> [--soft] — WAT JSON lines
         val (flags, pos) = rest.partition(_.startsWith("--"))

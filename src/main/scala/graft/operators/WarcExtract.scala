@@ -1,10 +1,11 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
 import org.apache.spark.util.{LongAccumulator, SerializableConfiguration}
 
 import graft.sources.warc.{ArcRecords, GzipMembers, WarcRecords}
+import graft.sources.warc.GzipMembers.Member
 
 /**
  * W/ARC → CDX extraction (SURVEY §3.4; jobs/CDXGenerator.java:186-273).
@@ -25,17 +26,46 @@ object WarcExtract {
       mimetype: String, statuscode: Option[Int], digest: String,
       compressed_size: Long, offset: Long, filename: String)
 
-  final case class Extraction(rows: Dataset[CdxRow],
-                              badMembers: LongAccumulator)
+  /** A verb's rows plus its `-soft` accumulator (how many corrupt members
+    * were skipped; evaluate it AFTER an action). */
+  final case class Extraction[T](rows: Dataset[T],
+                                 badMembers: LongAccumulator)
 
-  /** Open `p` and walk its gzip members with leak-proof close discipline:
-    * idempotent close fires on exhaustion (AutoCloseIterator) AND on task
-    * completion (limit / kill / mid-file exception) — every member walk in
-    * this file must go through here. */
-  private def openMembers(p: Path, conf: SerializableConfiguration,
-                          soft: Boolean, bad: LongAccumulator)
-      : Iterator[GzipMembers.Member] = {
-    val in = p.getFileSystem(conf.value).open(p)
+  /** One archive file of a walk, with what a second pass over it needs:
+    * its file system and the walk's `-soft` rule. */
+  private final case class ArchiveFile(path: Path,
+                                       conf: SerializableConfiguration,
+                                       soft: Boolean, bad: LongAccumulator) {
+    def name: String = path.getName
+    def fs: FileSystem = path.getFileSystem(conf.value)
+    /** Soft: a bad member ends the walk and is counted, not thrown. */
+    def soften(walk: Iterator[Member]): Iterator[Member] =
+      if (soft) GzipMembers.soften(walk, _ => bad.add(1)) else walk
+  }
+
+  /** The one per-file walk of every verb here: one task per file, each
+    * file's members opened by [[openMembers]], bad members counted in the
+    * accumulator `counter`; `rowsOf` is the verb's projection of one
+    * file's member walk. */
+  private def walkFiles[T: Encoder](spark: SparkSession, paths: Seq[String],
+                                    soft: Boolean, counter: String)
+      (rowsOf: (ArchiveFile, Iterator[Member]) => Iterator[T])
+      : Extraction[T] = {
+    val sc = spark.sparkContext
+    val conf = new SerializableConfiguration(sc.hadoopConfiguration)
+    val bad = sc.longAccumulator(counter)
+    val rows = oneTaskPerFile(spark, paths).mapPartitions(_.flatMap { p =>
+      val file = ArchiveFile(new Path(p), conf, soft, bad)
+      rowsOf(file, openMembers(file))
+    })
+    Extraction(rows, bad)
+  }
+
+  /** Open `file` and walk its gzip members with leak-proof close
+    * discipline: idempotent close fires on exhaustion (AutoCloseIterator)
+    * AND on task completion (limit / kill / mid-file exception). */
+  private def openMembers(file: ArchiveFile): Iterator[Member] = {
+    val in = file.fs.open(file.path)
     var closed = false
     def closeIn(): Unit = if (!closed) {
       closed = true; try in.close() catch { case _: Exception => () }
@@ -52,91 +82,11 @@ object WarcExtract {
     val raw =
       if (b0 == 0x1f && b1 == 0x8b) GzipMembers.iterate(buf)
       else graft.sources.warc.PlainWarc.iterate(buf)
-    val members =
-      if (soft) GzipMembers.soften(raw, _ => bad.add(1)) else raw
-    new graft.util.IoUtil.AutoCloseIterator(members, () => closeIn())
+    new graft.util.IoUtil.AutoCloseIterator(file.soften(raw), () => closeIn())
   }
-
-  /** One member → its CDX rows, dispatched by content: a payload
-    * opening with "WARC/" parses as WARC records (response / resource /
-    * revisit — the three record families CDX carries, see the reference
-    * CDX mime vocabulary at `pig/CDXLoader.java:33`; a member holding
-    * SEVERAL concatenated records yields one row each via
-    * `WarcRecords.parseAll`, all sharing the member's byte extent — the
-    * smallest unit a range repackage can copy), anything else
-    * tries the legacy ARC URL-record shape (every captured record except
-    * the filedesc file header). A revisit row keeps the CDX conventions:
-    * mime `warc/revisit`, digest from the record's WARC-Payload-Digest
-    * (the ORIGINAL capture's payload hash — the revisit block itself has
-    * no payload to hash), status from the re-serialized HTTP headers
-    * when the block carries them. */
-  /** One parsed WARC record → its CDX row (response / resource /
-    * revisit only), carrying the copyable extent the caller provides —
-    * a member's extent on the normal path, the whole file's on the
-    * healed mid-record-boundary path. */
-  private def rowOfRecord(rec: WarcRecords.WarcRecord, length: Long,
-                          offset: Long, name: String): Option[CdxRow] = {
-    if (rec.warcType != "response" && rec.warcType != "resource" &&
-        rec.warcType != "revisit") None
-    else for {
-      uri <- rec.targetUri
-      ts <- rec.timestamp14
-    } yield {
-      val (status, httpMime) = rec.httpStatusAndMime
-      val body =
-        if (status.isDefined) httpBody(rec.payload) else rec.payload
-      val isRevisit = rec.warcType == "revisit"
-      val payloadDigest = rec.headers.collectFirst {
-        case (k, v) if k.equalsIgnoreCase("WARC-Payload-Digest") =>
-          if (v.toLowerCase.startsWith("sha1:")) v.substring(5) else v
-      }
-      CdxRow(
-        urlkey = graft.functions.Surt.surtLenient(uri),
-        timestamp = ts,
-        original_url = uri,
-        mimetype =
-          if (isRevisit) "warc/revisit"
-          else httpMime
-            .orElse(rec.contentType.map(_.split(";")(0).trim))
-            .getOrElse("unk"),
-        statuscode = status,
-        digest =
-          if (isRevisit)
-            payloadDigest.getOrElse(WarcRecords.sha1Base32(body))
-          else WarcRecords.sha1Base32(body),
-        compressed_size = length,
-        offset = offset,
-        filename = name)
-    }
-  }
-
-  private def arcRowsOf(m: GzipMembers.Member, name: String): Seq[CdxRow] =
-    {
-      ArcRecords.parse(m.payload).toSeq.flatMap { rec =>
-        if (rec.isFiledesc) None
-        else Some {
-          val (status, _) = rec.httpStatusAndMime
-          val body =
-            if (status.isDefined) httpBody(rec.content) else rec.content
-          CdxRow(
-            urlkey = graft.functions.Surt.surtLenient(rec.url),
-            timestamp = rec.date14,
-            original_url = rec.url,
-            // the URL-line mime IS the content type captured at crawl
-            // time — the CDX convention for ARC inputs
-            mimetype = if (rec.mime.nonEmpty) rec.mime else "unk",
-            statuscode = status.orElse(rec.statusFromHeader),
-            digest = WarcRecords.sha1Base32(body),
-            compressed_size = m.length,
-            offset = m.offset,
-            filename = name)
-        }
-      }
-    }
 
   /** EXACT one-file-per-task placement (S1): round-robin repartition can
-    * stack two files on one task and leave another empty — shared by
-    * every per-file walk in this object. */
+    * stack two files on one task and leave another empty. */
   private def oneTaskPerFile(spark: SparkSession,
                              paths: Seq[String]): Dataset[String] = {
     import spark.implicits._
@@ -151,25 +101,90 @@ object WarcExtract {
     spark.createDataset(pathsRdd)
   }
 
+  /** One captured record as CDX and payload rows see it: the entity
+    * `body` is the block after its HTTP head, de-chunked (what the CDX
+    * digest covers); `revisitDigest` is a revisit's WARC-Payload-Digest
+    * (the ORIGINAL capture's payload hash — the revisit block itself has
+    * no payload to hash). */
+  private final case class Capture(urlkey: String, timestamp: String,
+                                   url: String, mime: String,
+                                   status: Option[Int], body: Array[Byte],
+                                   revisitDigest: Option[String])
+
+  /** The one response projection: `mimeOf` picks the row's mime from
+    * the HTTP mime, `status` falls back to `headerStatus`. */
+  private def capture(url: String, timestamp: String, block: Array[Byte],
+                      mimeOf: Option[String] => String,
+                      headerStatus: Option[Int],
+                      revisitDigest: Option[String]): Capture = {
+    val head = WarcRecords.httpHead(block)
+    Capture(graft.functions.Surt.surtLenient(url), timestamp, url,
+      mimeOf(head.mime), head.status.orElse(headerStatus),
+      head.entity(block), revisitDigest)
+  }
+
+  /** A WARC response / resource / revisit record with a target URI and a
+    * date — the three record families CDX carries (see the reference CDX
+    * mime vocabulary at `pig/CDXLoader.java:33`). Mime: the HTTP one,
+    * else the WARC Content-Type, else `unk`; a revisit's is
+    * `warc/revisit`. */
+  private def warcCapture(rec: WarcRecords.WarcRecord): Option[Capture] =
+    if (rec.warcType != "response" && rec.warcType != "resource" &&
+        rec.warcType != "revisit") None
+    else for {
+      uri <- rec.targetUri
+      ts <- rec.timestamp14
+    } yield {
+      val isRevisit = rec.warcType == "revisit"
+      capture(uri, ts, rec.payload,
+        httpMime =>
+          if (isRevisit) "warc/revisit"
+          else httpMime
+            .orElse(rec.contentType.map(_.split(";")(0).trim))
+            .getOrElse("unk"),
+        headerStatus = None,
+        revisitDigest = if (!isRevisit) None else rec.headers.collectFirst {
+          case (k, v) if k.equalsIgnoreCase("WARC-Payload-Digest") =>
+            if (v.toLowerCase.startsWith("sha1:")) v.substring(5) else v
+        })
+    }
+
+  /** An ARC URL record (every captured record except the filedesc file
+    * header). The URL-line mime IS the content type captured at crawl
+    * time — the CDX convention for ARC inputs; the status falls back to
+    * the v2 URL line's Result-code. */
+  private def arcCapture(rec: ArcRecords.ArcRecord): Option[Capture] =
+    if (rec.isFiledesc) None
+    else Some(capture(rec.url, rec.date14, rec.content,
+      _ => if (rec.mime.nonEmpty) rec.mime else "unk",
+      headerStatus = rec.statusFromHeader, revisitDigest = None))
+
+  /** A capture's CDX row, carrying the copyable extent the caller
+    * provides — a member's extent on the normal path, the whole file's on
+    * the healed mid-record-boundary path. */
+  private def cdxRow(c: Capture, length: Long, offset: Long,
+                     name: String): CdxRow =
+    CdxRow(c.urlkey, c.timestamp, c.url, c.mime, c.status,
+      c.revisitDigest.getOrElse(WarcRecords.sha1Base32(c.body)),
+      length, offset, name)
+
   /** Extract response/resource/revisit records of `paths` (one task per
     * file). */
   def extract(spark: SparkSession, paths: Seq[String],
-              soft: Boolean = false): Extraction = {
+              soft: Boolean = false): Extraction[CdxRow] = {
     import spark.implicits._
-    val conf = new SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    val bad = spark.sparkContext.longAccumulator("warc.bad.members")
-    val rows = oneTaskPerFile(spark, paths)
-      .mapPartitions { pathIter =>
-        pathIter.flatMap(pathStr => fileRows(pathStr, conf, soft, bad))
-      }
-    Extraction(rows, bad)
+    walkFiles(spark, paths, soft, "warc.bad.members")(fileRows(_, _).iterator)
   }
 
-  /** All CDX rows of one archive file: the per-member walk, plus a
-    * HEALING pass for re-zipped archives whose gzip member boundaries
-    * no longer align with record boundaries (a decompress+re-gzip with
-    * arbitrary chunking — rsyncable recompression, chunked uploads).
+  /** All CDX rows of one archive file. Each member is dispatched by
+    * content: a payload opening with "WARC/" parses as WARC records (a
+    * member holding SEVERAL concatenated records yields one row each via
+    * `WarcRecords.parseAll`, all sharing the member's byte extent — the
+    * smallest unit a range repackage can copy), anything else as an ARC
+    * record. Then a HEALING pass for re-zipped archives whose gzip
+    * member boundaries no longer align with record boundaries (a
+    * decompress+re-gzip with arbitrary chunking — rsyncable
+    * recompression, chunked uploads).
     * Detection: the file leads with WARC magic but some member is
     * structurally unparseable as WARC (a continuation chunk, or a
     * chunk whose records are cut mid-payload). Repair: gzip members
@@ -181,23 +196,24 @@ object WarcExtract {
     * meaningless. The healed result only replaces the member walk's
     * rows when it recovers MORE records; per-file rows materialize in
     * memory on this path (CDX rows are ~0.02% of archive bytes). */
-  private def fileRows(pathStr: String, conf: SerializableConfiguration,
-                       soft: Boolean, bad: LongAccumulator): Seq[CdxRow] = {
-    val p = new Path(pathStr)
-    val name = p.getName
+  private def fileRows(file: ArchiveFile,
+                       members: Iterator[Member]): Seq[CdxRow] = {
+    val name = file.name
     val memberRows = scala.collection.mutable.ArrayBuffer.empty[CdxRow]
     var misaligned = false
     var firstIsWarc = false
     var first = true
-    openMembers(p, conf, soft, bad).foreach { m =>
+    members.foreach { m =>
       val isWarc = WarcRecords.looksLikeWarc(m.payload)
       if (first) { first = false; firstIsWarc = isWarc }
       if (isWarc) {
         val recs = WarcRecords.parseAll(m.payload)
         if (recs.isEmpty) misaligned = true
-        memberRows ++= recs.flatMap(rowOfRecord(_, m.length, m.offset, name))
+        memberRows ++= recs.flatMap(warcCapture)
+          .map(cdxRow(_, m.length, m.offset, name))
       } else {
-        val rows = arcRowsOf(m, name)
+        val rows = ArcRecords.parse(m.payload).flatMap(arcCapture)
+          .map(cdxRow(_, m.length, m.offset, name))
         if (rows.isEmpty && firstIsWarc) misaligned = true
         memberRows ++= rows
       }
@@ -205,9 +221,9 @@ object WarcExtract {
     if (!(misaligned && firstIsWarc)) memberRows.toVector
     else {
       try {
-        val fs = p.getFileSystem(conf.value)
-        val fileLen = fs.getFileStatus(p).getLen
-        val in = fs.open(p)
+        val fs = file.fs
+        val fileLen = fs.getFileStatus(file.path).getLen
+        val in = fs.open(file.path)
         // gz tracked so the finally can close IT (releasing the
         // Inflater's native memory immediately), not just the
         // underlying stream — the same class the r18 advice closed in
@@ -217,12 +233,10 @@ object WarcExtract {
         try {
           gz = new java.util.zip.GZIPInputStream(
             new java.io.BufferedInputStream(in, 1 << 16))
-          val walk = graft.sources.warc.PlainWarc.iterate(gz)
-          val softWalk =
-            if (soft) GzipMembers.soften(walk, _ => bad.add(1)) else walk
-          val healed = softWalk.flatMap(rm =>
-            WarcRecords.parse(rm.payload).flatMap(
-              rowOfRecord(_, fileLen, 0L, name))).toVector
+          val walk = file.soften(graft.sources.warc.PlainWarc.iterate(gz))
+          val healed = walk.flatMap(rm =>
+            WarcRecords.parse(rm.payload).flatMap(warcCapture)
+              .map(cdxRow(_, fileLen, 0L, name))).toVector
           // >= on purpose: once misaligned, the member walk's rows can
           // carry TRUNCATED payload digests (a record cut mid-body
           // still parses with Content-Length clamped to the member),
@@ -248,58 +262,27 @@ object WarcExtract {
                               original_url: String, mimetype: String,
                               payload: Array[Byte])
 
-  /** [[payloadRows]] result: the rows plus the --skip-bad accumulator
-    * (how many corrupt members `soft` silently skipped — same
-    * observable [[Extraction]] carries; evaluate it AFTER an action). */
-  final case class PayloadExtraction(rows: Dataset[PayloadRow],
-                                     badMembers: LongAccumulator)
-
   /** Extract response/resource ENTITY BYTES (one task per file, same
     * placement as extract()): the WARC → binary-column bridge a
-    * crawl-media pipeline starts from. Bodies follow the same
-    * conventions the CDX digests use — HTTP headers stripped, chunked
-    * transfer-encoding DE-chunked (damaged framing keeps raw bytes) —
-    * so the payload a codec decodes here is byte-identical to what the
-    * digest covered. Revisits (no payload) and warcinfo/metadata
-    * records are skipped by type; ARC members are skipped (media
-    * crawls are WARC-era). The flatMap stays lazy over the member
-    * walk: payload bytes live only while their row is in flight, never
-    * a whole file's worth at once. */
+    * crawl-media pipeline starts from. Bodies are the entities the CDX
+    * digests cover — HTTP headers stripped, chunked transfer-encoding
+    * DE-chunked (damaged framing keeps raw bytes) — so the payload a
+    * codec decodes here is byte-identical to what the digest covered.
+    * Revisits (no payload) and warcinfo/metadata records are skipped by
+    * type; ARC members are skipped (media crawls are WARC-era). The
+    * flatMap stays lazy over the member walk: payload bytes live only
+    * while their row is in flight, never a whole file's worth at once. */
   def payloadRows(spark: SparkSession, paths: Seq[String],
-                  soft: Boolean = false): PayloadExtraction = {
+                  soft: Boolean = false): Extraction[PayloadRow] = {
     import spark.implicits._
-    val conf = new SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    val bad = spark.sparkContext.longAccumulator("warc.bad.members.payload")
-    val rows = oneTaskPerFile(spark, paths).mapPartitions { pathIter =>
-      pathIter.flatMap { pathStr =>
-        val p = new Path(pathStr)
-        openMembers(p, conf, soft, bad).flatMap { m =>
-          if (!WarcRecords.looksLikeWarc(m.payload)) Iterator.empty
-          else WarcRecords.parseAll(m.payload).iterator.flatMap { rec =>
-            if (rec.warcType != "response" && rec.warcType != "resource")
-              None
-            else for {
-              uri <- rec.targetUri
-              ts <- rec.timestamp14
-            } yield {
-              val (status, httpMime) = rec.httpStatusAndMime
-              val body =
-                if (status.isDefined) httpBody(rec.payload) else rec.payload
-              PayloadRow(
-                urlkey = graft.functions.Surt.surtLenient(uri),
-                timestamp = ts,
-                original_url = uri,
-                mimetype = httpMime
-                  .orElse(rec.contentType.map(_.split(";")(0).trim))
-                  .getOrElse("unk"),
-                payload = body)
-            }
-          }
-        }
+    walkFiles(spark, paths, soft, "warc.bad.members.payload") { (_, members) =>
+      members.flatMap { m =>
+        if (!WarcRecords.looksLikeWarc(m.payload)) Iterator.empty
+        else WarcRecords.parseAll(m.payload).iterator
+          .filter(_.warcType != "revisit").flatMap(warcCapture)
+          .map(c => PayloadRow(c.urlkey, c.timestamp, c.url, c.mime, c.body))
       }
     }
-    PayloadExtraction(rows, bad)
   }
 
   /** Write one `<basename>.cdx` next to nothing in particular — per-input
@@ -366,39 +349,23 @@ object WarcExtract {
    * /root/reference/src/main/java/org/archive/hadoop/jobs/WARCMetadataRecordGenerator.java:144):
    * emit the PAYLOADS of records of one family — `outputType` picks
    * "warcinfo" (default) or "metadata" — with container geometry, the
-   * inputs to collection-level accounting jobs.
+   * inputs to collection-level accounting jobs. Every record of a
+   * multi-record member counts (parseAll, not parse).
    */
   def metadataRows(spark: SparkSession, paths: Seq[String],
                    outputType: String = "warcinfo",
                    soft: Boolean = false): org.apache.spark.sql.DataFrame = {
     import spark.implicits._
-    val conf = new SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    val bad = spark.sparkContext.longAccumulator("warc.bad.members.meta")
-    // parseAll, not parse: a multi-record gzip member (the r12 tolerance
-    // class extract() already walks) must yield EVERY matching record,
-    // not silently only its first; oneTaskPerFile for the same exact
-    // placement extract() uses (round-robin can stack two files on one
-    // task) — r19 review parity fixes
-    oneTaskPerFile(spark, paths)
-      .mapPartitions { pathIter =>
-        pathIter.flatMap { pathStr =>
-          val p = new Path(pathStr)
-          val name = p.getName
-          openMembers(p, conf, soft, bad).flatMap { m =>
-              WarcRecords.parseAll(m.payload).collect {
-                case rec if rec.warcType == outputType =>
-                  (name, m.offset, m.length, rec.warcType,
-                    new String(rec.payload, "UTF-8"))
-              }
-            }
+    walkFiles(spark, paths, soft, "warc.bad.members.meta") { (file, members) =>
+      members.flatMap { m =>
+        WarcRecords.parseAll(m.payload).collect {
+          case rec if rec.warcType == outputType =>
+            (file.name, m.offset, m.length, rec.warcType,
+              new String(rec.payload, "UTF-8"))
         }
       }
-      .toDF("filename", "offset", "length", "warc_type", "payload")
+    }.rows.toDF("filename", "offset", "length", "warc_type", "payload")
   }
-
-  /** One WAT-shaped row: per-record JSON metadata envelope. */
-  final case class WatRow(urlkey: String, timestamp: String, wat: String)
 
   /**
    * K14 — WAT generation: the same record walk as [[extract]], rendering
@@ -412,30 +379,20 @@ object WarcExtract {
               soft: Boolean = false): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val conf = new SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    val bad = spark.sparkContext.longAccumulator("warc.bad.members.wat")
-    // parseAll + oneTaskPerFile: same multi-record and exact-placement
-    // parity with extract() as metadataRows (r19 review)
-    val parsed = oneTaskPerFile(spark, paths)
-      .mapPartitions { pathIter =>
-        pathIter.flatMap { pathStr =>
-          val p = new Path(pathStr)
-          val name = p.getName
-          openMembers(p, conf, soft, bad).flatMap { m =>
-            WarcRecords.parseAll(m.payload).flatMap { rec =>
-              for { uri <- rec.targetUri; ts <- rec.timestamp14 } yield {
-                val (status, mime) = rec.httpStatusAndMime
-                (graft.functions.Surt.surtLenient(uri), ts, rec.warcType,
-                  rec.headers, status, mime.getOrElse("unk"),
-                  m.offset, m.length, name)
-              }
+    val parsed = walkFiles(spark, paths, soft, "warc.bad.members.wat") {
+      (file, members) =>
+        members.flatMap { m =>
+          WarcRecords.parseAll(m.payload).flatMap { rec =>
+            for { uri <- rec.targetUri; ts <- rec.timestamp14 } yield {
+              val (status, mime) = rec.httpStatusAndMime
+              (graft.functions.Surt.surtLenient(uri), ts, rec.warcType,
+                rec.headers, status, mime.getOrElse("unk"),
+                m.offset, m.length, file.name)
             }
           }
         }
-      }
-      .toDF("urlkey", "timestamp", "warc_type", "warc_headers",
-        "http_status", "mime", "offset", "length", "filename")
+    }.rows.toDF("urlkey", "timestamp", "warc_type", "warc_headers",
+      "http_status", "mime", "offset", "length", "filename")
     parsed.select(col("urlkey"), col("timestamp"),
       to_json(struct(
         struct(
@@ -449,39 +406,4 @@ object WarcExtract {
           col("length").as("Length")).as("Container")
       )).as("wat"))
   }
-
-  /** Payload after the HTTP header block (digest covers the entity body,
-    * not the headers). A `Transfer-Encoding: chunked` response stores
-    * the raw chunked stream in the record block; the digest convention
-    * (reference: webarchive-commons' payload digest) covers the
-    * DE-CHUNKED entity, so the framing is stripped here — and kept
-    * as-is when the framing is damaged (dechunk = None): a raw-bytes
-    * digest is stable and honest, a half-decoded one is neither. */
-  private def httpBody(payload: Array[Byte]): Array[Byte] = {
-    val sep = CrLfCrLf
-    var i = 0
-    while (i <= payload.length - sep.length) {
-      var j = 0
-      while (j < sep.length && payload(i + j) == sep(j)) j += 1
-      if (j == sep.length) {
-        val raw = java.util.Arrays.copyOfRange(payload, i + 4, payload.length)
-        // one head-sized decode (bytes 0..separator), not a fixed-4KB
-        // one per record — this runs for EVERY response record and the
-        // chunked case is the rare one
-        val head = new String(payload, 0, i,
-          java.nio.charset.StandardCharsets.ISO_8859_1).toLowerCase
-        val te = head.indexOf("transfer-encoding:")
-        val chunked = te >= 0 && {
-          val eol = head.indexOf('\n', te)
-          head.substring(te, if (eol < 0) head.length else eol)
-            .contains("chunked")
-        }
-        return if (chunked) WarcRecords.dechunk(raw).getOrElse(raw) else raw
-      }
-      i += 1
-    }
-    payload
-  }
-
-  private val CrLfCrLf = "\r\n\r\n".getBytes(java.nio.charset.StandardCharsets.US_ASCII)
 }

@@ -300,45 +300,88 @@ object WarcRecords {
       WarcRecords.httpStatusAndMime(payload)
   }
 
-  /** Status + Content-Type of a leading HTTP response block, if any —
-    * shared by the WARC and ARC record models (both store the raw HTTP
-    * response as record content). Tolerances, matching what archived
-    * HTTP actually contains: bare-LF header lines (pre-1.1 servers and
-    * some proxies emit LF-only; the CRLF-strict split silently lost the
-    * mime there), a status line with no reason phrase ("HTTP/1.1 200"),
-    * mixed-case header names, and parameters after the media type
-    * ("text/html; charset=..."). */
+  /** What [[httpHead]] reads of an HTTP response head; `bodyStart` is -1
+    * when no blank line ends the head. */
+  final case class HttpHead(status: Option[Int], mime: Option[String],
+                            bodyStart: Int, chunked: Boolean) {
+
+    /** The entity body of `block`, the block this head was read from:
+      * the bytes after the head's blank line, DE-chunked when chunked —
+      * the digest convention (webarchive-commons' payload digest) covers
+      * the entity, not the headers or the framing — and kept raw when
+      * the framing is damaged (a half-decoded digest is neither stable
+      * nor honest). Without a status or a blank line, the whole block. */
+    def entity(block: Array[Byte]): Array[Byte] =
+      if (status.isEmpty || bodyStart < 0) block
+      else {
+        val raw = java.util.Arrays.copyOfRange(block, bodyStart, block.length)
+        if (chunked) dechunk(raw).getOrElse(raw) else raw
+      }
+  }
+
+  private val NoHttpHead = HttpHead(None, None, -1, chunked = false)
+
+  /** Status + Content-Type of a leading HTTP response block, if any. */
   def httpStatusAndMime(payload: Array[Byte]): (Option[Int], Option[String]) = {
-    // lines are walked in place up to the head's blank line (within the
-    // first 4 KiB): the body, often most of those bytes, is never decoded
-    val end = math.min(payload.length, 4096)
-    if (!startsWithAscii(payload, 0, end, "HTTP/")) return (None, None)
+    val h = httpHead(payload)
+    (h.status, h.mime)
+  }
+
+  /** The one walk over the HTTP response head that WARC and ARC records
+    * both store ahead of the entity, line by line to its blank line.
+    * Tolerances, matching what archived HTTP actually contains: bare-LF
+    * lines (pre-1.1 servers and some proxies emit LF-only; a blank line
+    * ends the head whether it is CRLF or bare LF, so on an all-CRLF head
+    * the body starts after the first `\r\n\r\n`), a status line with no
+    * reason phrase ("HTTP/1.1 200"), mixed-case header names, and
+    * parameters after the media type ("text/html; charset=..."). The
+    * status and the mime (the first Content-Type) are read as if the
+    * block ended at 4 KiB, a line crossing that mark cut there; the body
+    * start and the first Transfer-Encoding are found however long the
+    * head is. */
+  def httpHead(block: Array[Byte]): HttpHead = {
+    if (!startsWithAscii(block, 0, block.length, "HTTP/")) return NoHttpHead
+    val window = math.min(block.length, 4096)
     def lineEnd(from: Int): Int = {
       var i = from
-      while (i < end && payload(i) != '\n') i += 1
+      while (i < block.length && block(i) != '\n') i += 1
       i
     }
     // a line's end without its trailing '\r'
     def noCr(from: Int, to: Int): Int =
-      if (to > from && payload(to - 1) == '\r') to - 1 else to
-    def text(from: Int, until: Int): String = new String(payload, from,
+      if (to > from && block(to - 1) == '\r') to - 1 else to
+    def text(from: Int, until: Int): String = new String(block, from,
       until - from, java.nio.charset.StandardCharsets.ISO_8859_1)
     val eol = lineEnd(0)
-    val status = text(0, noCr(0, eol)).split(" ").lift(1).flatMap(_.toIntOption)
+    val status = text(0, noCr(0, math.min(eol, window))).split(" ").lift(1)
+      .flatMap(_.toIntOption)
     var mime: Option[String] = None
-    var inHead = true
+    var mimeSeen, teSeen, chunked = false
+    var bodyStart = -1
     var from = eol + 1
-    while (inHead && from <= end) {
+    while (bodyStart < 0 && from < block.length) {
       val to = lineEnd(from)
       val until = noCr(from, to)
-      if (until == from) inHead = false // the blank line ends the head
-      else if (startsWithAscii(payload, from, until, "content-type:")) {
-        mime = Some(text(from + 13, until).trim.split(";")(0).trim)
-          .filter(_.nonEmpty)
-        inHead = false
-      } else from = to + 1
+      if (until == from) { // the blank line ends the head
+        if (to < block.length) bodyStart = to + 1
+        from = block.length
+      } else {
+        val inWindow = noCr(from, math.min(to, window))
+        if (!mimeSeen && from < window &&
+            startsWithAscii(block, from, inWindow, "content-type:")) {
+          mimeSeen = true
+          mime = Some(text(from + 13, inWindow).trim.split(";")(0).trim)
+            .filter(_.nonEmpty)
+        }
+        if (!teSeen &&
+            startsWithAscii(block, from, until, "transfer-encoding:")) {
+          teSeen = true
+          chunked = text(from + 18, until).toLowerCase.contains("chunked")
+        }
+        from = to + 1
+      }
     }
-    (status, mime)
+    HttpHead(status, mime, bodyStart, chunked)
   }
 
   /** Whether `b[from, until)` starts with the ASCII `prefix`, where a

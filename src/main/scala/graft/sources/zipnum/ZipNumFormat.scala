@@ -2,7 +2,7 @@ package graft.sources.zipnum
 
 import java.io.{ByteArrayOutputStream, OutputStream}
 import java.nio.charset.StandardCharsets.UTF_8
-import java.util.zip.{CRC32, Deflater, DeflaterOutputStream, GZIPInputStream}
+import java.util.zip.{CRC32, Deflater, DeflaterOutputStream}
 
 /**
  * ZipNum on-disk format (SURVEY §1.2, FIXTURES §2):
@@ -110,18 +110,5 @@ object ZipNumFormat {
   private def writeIntLE(o: OutputStream, v: Int): Unit = {
     o.write(v & 0xff); o.write((v >> 8) & 0xff)
     o.write((v >> 16) & 0xff); o.write((v >> 24) & 0xff)
-  }
-
-  /** Inflate one member's bytes back to its text lines. */
-  def gunzipLines(member: Array[Byte]): Iterator[String] = {
-    val in = new GZIPInputStream(new java.io.ByteArrayInputStream(member), 64 * 1024)
-    val buf = new ByteArrayOutputStream(member.length * 4)
-    // finally, not straight-line: a corrupt member throws out of copy and
-    // the Inflater's native memory must not wait on GC (r19 sweep)
-    try graft.util.IoUtil.copy(in, buf)
-    finally in.close()
-    val text = new String(buf.toByteArray, UTF_8)
-    // LF-only splitting: interior CR is data
-    text.split("\n", -1).iterator.filter(_.nonEmpty)
   }
 }

@@ -52,7 +52,7 @@ private[zipnum] final class ShardStream(fs: FileSystem, tmpDir: String,
   }
 }
 
-private[zipnum] object ZipNumShardIO {
+private[graft] object ZipNumShardIO {
 
   /** Prepare `outDir.__stage`, where every write stages its cluster.
     *
@@ -112,33 +112,33 @@ private[zipnum] object ZipNumShardIO {
 
   /** Driver commit: rename winner shards into place (loudly failing on a
     * false rename — a cluster whose summary cites missing shards must
-    * never commit), fold per-shard idx files into ALL.summary, write
-    * manifest.txt, drop `_tmp/`. `shards` = (part, tmpName) in shard
-    * order. */
+    * never commit), write the summary and manifest ([[writeSummary]]),
+    * drop `_tmp/`. `shards` = (part, tmpName) in shard order. */
   def commitShards(fs: FileSystem, outDir: String,
                    shards: Seq[(String, String)]): Unit = {
     val out = new Path(outDir)
-    val summary = fs.create(new Path(out, "ALL.summary"), true)
-    // close-on-failure (r20 review): a rename failing mid-fold used to
-    // leave both the summary stream and the current idx stream open —
-    // the r19 leak-sweep class, on the commit path itself. The failure
-    // still propagates; the caller's abort cleans the directory.
-    try {
-      shards.foreach { case (part, tmpName) =>
-        require(fs.rename(new Path(s"$outDir/_tmp/$tmpName.gz"),
-          new Path(out, s"$part.gz")), s"commit: rename of $part.gz failed")
-        val idxTmp = new Path(s"$outDir/_tmp/$tmpName-idx")
-        val in = fs.open(idxTmp)
-        try graft.util.IoUtil.copy(in, summary) finally in.close()
-        require(fs.rename(idxTmp, new Path(out, s"$part-idx")),
-          s"commit: rename of $part-idx failed")
-      }
-    } finally summary.close()
-    val manifest = fs.create(new Path(out, "manifest.txt"), true)
-    shards.foreach { case (part, _) =>
-      manifest.write(s"$part.gz\n".getBytes(UTF_8))
+    shards.foreach { case (part, tmpName) =>
+      require(fs.rename(new Path(s"$outDir/_tmp/$tmpName.gz"),
+        new Path(out, s"$part.gz")), s"commit: rename of $part.gz failed")
+      require(fs.rename(new Path(s"$outDir/_tmp/$tmpName-idx"),
+        new Path(out, s"$part-idx")), s"commit: rename of $part-idx failed")
     }
-    manifest.close()
+    writeSummary(fs, out, shards.map(_._1))
     fs.delete(new Path(outDir, "_tmp"), true)
+  }
+
+  /** Fold the shard indexes `<part>-idx` of cluster `dir` into
+    * ALL.summary and list the shards in manifest.txt, both in `parts`
+    * order — the writer's commit and the `summary-generate` verb. Every
+    * stream is closed on failure too; the failure propagates. */
+  def writeSummary(fs: FileSystem, dir: Path, parts: Seq[String]): Unit = {
+    val summary = fs.create(new Path(dir, "ALL.summary"), true)
+    try parts.foreach { part =>
+      val in = fs.open(new Path(dir, s"$part-idx"))
+      try graft.util.IoUtil.copy(in, summary) finally in.close()
+    } finally summary.close()
+    val manifest = fs.create(new Path(dir, "manifest.txt"), true)
+    try parts.foreach(part => manifest.write(s"$part.gz\n".getBytes(UTF_8)))
+    finally manifest.close()
   }
 }

@@ -11,10 +11,10 @@ import graft.operators.ClusterOps
 import graft.sources.zipnum.ZipNumFormat
 
 /** The JobDriver-parity utility verbs (fs-lsr/mv/sync/cat, the
-  * http-import line grammar) — logic-level tests; the HTTP/range
+  * http-import line grammar, summary-generate) — logic-level tests; the HTTP/range
   * library ops behind http-import and gz-range-* have their own
   * suites (HttpSourcesSpec, GzRangeAndHttpFsSpec). */
-class CliSpec extends AnyFunSuite {
+class CliSpec extends AnyFunSuite with SparkTestSession {
 
   private val conf = new Configuration()
 
@@ -173,6 +173,23 @@ class CliSpec extends AnyFunSuite {
       ("org,a)/ 20120102000000 x1\n", s"$d: 1/2 blocks in range\n"))
     assert(run("-", "-", d.toString) ==
       ((b0 ++ b1).mkString("", "\n", "\n"), s"$d: 2/2 blocks in range\n"))
+  }
+
+  test("summary-generate rebuilds ALL.summary and manifest.txt " +
+      "byte-identical to the writer's") {
+    val d = tmpDir("sumgen").resolve("cluster")
+    val lines = (0 until 60).map(i => f"org,h$i%02d)/ 20120101000000 x$i")
+    ClusterOps.build(spark, spark.sparkContext.parallelize(lines, 3),
+      d.toString, interior = IndexedSeq("org,h20)/", "org,h40)/"),
+      linesPerBlock = 7)
+    val names = Seq("ALL.summary", "manifest.txt")
+    val written = names.map(n => Files.readAllBytes(d.resolve(n)))
+    assert(new String(written(1), "UTF-8").linesIterator.size == 3)
+    names.foreach(n => Files.delete(d.resolve(n)))
+    GraftCli.main(Array("summary-generate", d.toString))
+    names.zip(written).foreach { case (n, w) =>
+      assert(Files.readAllBytes(d.resolve(n)).sameElements(w), n)
+    }
   }
 
   test("http-import line grammar: bare URL takes the basename, " +

@@ -97,14 +97,14 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
-  test("gzipMember → gunzipLines is the identity on arbitrary line sets") {
+  test("gzipMember → the reader's decode chain is the identity on arbitrary line sets") {
     val lines = Gen.listOf(Gen.nonEmptyListOf(
       Gen.frequency(9 -> Gen.alphaNumChar, 1 -> Gen.const('\r')))
       .map(_.mkString))
     forAll(lines) { ls =>
       val payload = ls.map(_ + "\n").mkString.getBytes("UTF-8")
-      assert(ZipNumFormat.gunzipLines(
-        ZipNumFormat.gzipMember(payload)).toSeq == ls)
+      assert(ZipNumFormatSpec.memberLines(
+        ZipNumFormat.gzipMember(payload)) == ls)
     }
   }
 

@@ -14,7 +14,15 @@ import graft.sources.warc.WarcRecords.WarcRecord
   * records: bare-LF and mixed heads, status lines without a reason
   * phrase, `Content-Type:` text after the HTTP blank line, heads longer
   * than 4096 bytes, leading and interior NULs, folded headers, odd
-  * Content-Length lines and multi-record members. */
+  * Content-Length lines and multi-record members.
+  *
+  * The entity body is compared on all-CRLF heads only. Two classes
+  * differ from the oracle's `\r\n\r\n` split on purpose: bare-LF and
+  * mixed heads, whose body now starts after a bare-LF blank line too
+  * (the oracle digested the head with it), and a `transfer-encoding:`
+  * that is not a header name (`X-Crawler-Transfer-Encoding: chunked`, a
+  * value naming it), which the oracle's head-wide substring search took
+  * for chunked framing. */
 class WarcParseEquivalenceSpec extends AnyFunSuite {
 
   private object Oracle {
@@ -31,6 +39,34 @@ class WarcParseEquivalenceSpec extends AnyFunSuite {
           .filter(_.nonEmpty)
         (status, mime)
       }
+    }
+
+    /** The entity body: the block after the first `\r\n\r\n` when the
+      * status parses, de-chunked when the head names chunked. */
+    def entity(payload: Array[Byte]): Array[Byte] =
+      if (httpStatusAndMime(payload)._1.isEmpty) payload
+      else httpBody(payload)
+
+    def httpBody(payload: Array[Byte]): Array[Byte] = {
+      val sep = "\r\n\r\n".getBytes(ISO_8859_1)
+      var i = 0
+      while (i <= payload.length - sep.length) {
+        var j = 0
+        while (j < sep.length && payload(i + j) == sep(j)) j += 1
+        if (j == sep.length) {
+          val raw = java.util.Arrays.copyOfRange(payload, i + 4, payload.length)
+          val head = new String(payload, 0, i, ISO_8859_1).toLowerCase
+          val te = head.indexOf("transfer-encoding:")
+          val chunked = te >= 0 && {
+            val eol = head.indexOf('\n', te)
+            head.substring(te, if (eol < 0) head.length else eol)
+              .contains("chunked")
+          }
+          return if (chunked) WarcRecords.dechunk(raw).getOrElse(raw) else raw
+        }
+        i += 1
+      }
+      payload
     }
 
     def parse(bytes: Array[Byte]): Option[WarcRecord] = {
@@ -199,6 +235,72 @@ class WarcParseEquivalenceSpec extends AnyFunSuite {
       "HTTP/1.1 200", "Content-Length: 4", "content-type: x/y", "ÿ")
     (0 until r.nextInt(40)).map(_ => tokens(r.nextInt(tokens.length)))
       .mkString.getBytes(ISO_8859_1)
+  }
+
+  /** An HTTP block whose head ends every line with CRLF: status lines
+    * with and without a reason phrase, NULs, heads past 4 KiB, chunked
+    * (`Transfer-Encoding` in any case, intact and damaged framing) and
+    * plain bodies, bodies holding `\r\n\r\n`, heads with no blank line. */
+  private def crlfHttp(r: Random): Array[Byte] = {
+    val sb = new StringBuilder
+    sb ++= Seq("HTTP/1.1 200 OK", "HTTP/1.0 404", "HTTP/1.1 abc",
+      "HTTP/1.1 200\r", "HTTP/1.1", "HTTP/1.1 200 O\u0000K",
+      "http/1.1 200")(r.nextInt(7)) ++= "\r\n"
+    var chunked = false
+    (0 until r.nextInt(5)).foreach { _ =>
+      sb ++= (r.nextInt(8) match {
+        case 0 => chunked = true; "Transfer-Encoding: chunked"
+        case 1 => chunked = true; "TRANSFER-encoding: gzip, Chunked"
+        case 2 => "Transfer-Encoding: identity"
+        case 3 => "Content-Type: text/html; charset=utf-8"
+        case 4 => "X-N\u0000ul: \u0000v"
+        case 5 => "X-Folded: a\r\n b"
+        case 6 => s"X-Pad: ${"p" * (2000 + r.nextInt(3000))}"
+        case _ => "Server: x\ry"
+      }) ++= "\r\n"
+    }
+    val blank = r.nextInt(8) != 0
+    if (blank) sb ++= "\r\n"
+    sb ++= (r.nextInt(6) match {
+      case 0 => ""
+      case 1 => "body\r\n\r\nmore"
+      case 2 => "5\r\nhello\r\n6;x=1\r\n world\r\n0\r\n\r\n"
+      case 3 => "5\r\nhel" // framing cut short
+      case 4 => "zz\r\nabc\r\n0\r\n\r\n"
+      // bare-LF framing after the blank line only: without one it
+      // would be a bare-LF head line
+      case _ => if (chunked && blank) "3\nabc\n0\n\n" else "x" * 5000
+    })
+    sb.toString.getBytes(ISO_8859_1)
+  }
+
+  test("the entity body matches the \\r\\n\\r\\n split on all-CRLF heads") {
+    val r = new Random(13L)
+    var dechunked = 0
+    (1 to 3000).foreach { _ =>
+      val b = crlfHttp(r)
+      val want = Oracle.entity(b)
+      val head = WarcRecords.httpHead(b)
+      assert(head.entity(b).toSeq == want.toSeq,
+        new String(b, ISO_8859_1).take(300))
+      if (head.chunked && head.status.isDefined && head.bodyStart >= 0 &&
+          WarcRecords.dechunk(b.drop(head.bodyStart)).isDefined) dechunked += 1
+    }
+    assert(dechunked > 100, s"only $dechunked de-chunked bodies generated")
+  }
+
+  test("a bare-LF head and a non-header transfer-encoding differ on purpose") {
+    def bytes(s: String) = s.getBytes(ISO_8859_1)
+    def entity(b: Array[Byte]) = WarcRecords.httpHead(b).entity(b).toSeq
+    val lf = bytes("HTTP/1.0 200 OK\nContent-Type: text/html\n\nbody")
+    assert(entity(lf) == bytes("body").toSeq)
+    assert(Oracle.entity(lf).toSeq == lf.toSeq) // the head was digested
+    // an already de-chunked body under a renamed header stays as it is;
+    // the substring search de-chunked it to nothing
+    val renamed = bytes("HTTP/1.1 200 OK\r\n" +
+      "X-Crawler-Transfer-Encoding: chunked\r\n\r\n0\r\n\r\nabc")
+    assert(entity(renamed) == bytes("0\r\n\r\nabc").toSeq)
+    assert(Oracle.entity(renamed).isEmpty)
   }
 
   test("httpStatusAndMime matches the full-window split on generated blocks") {

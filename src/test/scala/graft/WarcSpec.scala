@@ -158,6 +158,37 @@ class WarcSpec extends AnyFunSuite with SparkTestSession {
     assert(httpStatusAndMime("<html>".getBytes("ISO-8859-1")) == (None, None))
     assert(httpStatusAndMime("HTTP/1.1 200\r\nContent-Type: \r\n\r\n"
       .getBytes("ISO-8859-1")) == (Some(200), None))
+    // the entity body follows the head's blank line, bare LF or CRLF:
+    // the CDX digest covers it and payloadRows returns it, in a WARC
+    // response, a mixed head de-chunked, and an ARC record
+    val dir = SparkTestSession.tmpDir("lfhead")
+    val (w, a) = (dir.resolve("lf-00000.warc.gz"), dir.resolve("lf-00000.arc.gz"))
+    def response(uri: String, http: String) = gz((
+      s"WARC/1.0\r\nWARC-Type: response\r\nWARC-Target-URI: $uri\r\n" +
+        s"WARC-Date: 2012-01-03T08:45:08Z\r\nContent-Length: ${http.length}" +
+        "\r\n\r\n" + http).getBytes("ISO-8859-1"))
+    Files.write(w, response("http://a.org/lf",
+      "HTTP/1.0 200 OK\nContent-Type: text/html\n\nlf body") ++
+      response("http://a.org/chunked", "HTTP/1.1 200 OK\r\n" +
+        "Transfer-Encoding: chunked\nContent-Type: text/plain\n\n" +
+        "7\r\nchunked\r\n5\r\n body\r\n0\r\n\r\n"))
+    val arcHttp = "HTTP/1.0 404 Not Found\nContent-Type: text/html\n\narc body"
+    Files.write(a, gz(("http://a.org/arc 1.2.3.4 20050101000001 text/html " +
+      s"${arcHttp.length}\n$arcHttp").getBytes("ISO-8859-1")))
+    val entity = Map("http://a.org/lf" -> "lf body",
+      "http://a.org/chunked" -> "chunked body", "http://a.org/arc" -> "arc body")
+    val cdx = WarcExtract.extract(spark, Seq(w.toString, a.toString)).rows
+      .collect()
+    assert(cdx.map(r => (r.original_url, r.statuscode, r.mimetype)).toSet ==
+      Set(("http://a.org/lf", Some(200), "text/html"),
+        ("http://a.org/chunked", Some(200), "text/plain"),
+        ("http://a.org/arc", Some(404), "text/html")))
+    cdx.foreach(r => assert(r.digest ==
+      WarcRecords.sha1Base32(entity(r.original_url).getBytes("ISO-8859-1")),
+      r.original_url))
+    val payloads = WarcExtract.payloadRows(spark, Seq(w.toString)).rows
+      .collect().map(p => p.original_url -> new String(p.payload, "ISO-8859-1"))
+    assert(payloads.toMap == entity - "http://a.org/arc")
   }
 
   private def arcHttp(url: String, date14: String, body: String,

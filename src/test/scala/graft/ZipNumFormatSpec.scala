@@ -12,13 +12,13 @@ import graft.sources.zipnum.ZipNumFormat.Block
   * and ClusterRange.java:57-62 for pruning). */
 class ZipNumFormatSpec extends AnyFunSuite {
 
-  test("gzipMember → gunzipLines roundtrip, incl. interior CR") {
+  test("gzipMember → reader decode chain roundtrip, incl. interior CR") {
     val lines = Seq(
       "com,a)/ 20120101000000 http://a.com/ text/html 200 D - - 1 0 f.gz",
       "com,b)/x 20120102000000 http://b.com/x text/html 302 D http://b.com/y\rz - 2 10 f.gz")
     val payload = lines.map(_ + "\n").mkString.getBytes("UTF-8")
     val member = ZipNumFormat.gzipMember(payload)
-    assert(ZipNumFormat.gunzipLines(member).toSeq == lines)
+    assert(ZipNumFormatSpec.memberLines(member) == lines)
   }
 
   test("member is readable by a stock GZIPInputStream (SL field is ignorable)") {
@@ -122,5 +122,15 @@ class ZipNumFormatSpec extends AnyFunSuite {
       Block("c", "p0", 200, 100))
     val s = ZipNumIndex.ClusterIndex("/c", blocks).slices(blocks, maxSliceBytes = 200)
     assert(s.map(_.nBlocks) == Seq(2, 1))
+  }
+}
+
+object ZipNumFormatSpec {
+  /** A member's lines through the reader's decode chain (gzip stream +
+    * LF-only line split, as `ZipNumReader.readSliceWithCloser` reads). */
+  def memberLines(member: Array[Byte]): Seq[String] = {
+    val gz = new java.util.zip.GZIPInputStream(
+      new java.io.ByteArrayInputStream(member), 64 * 1024)
+    try new graft.util.IoUtil.LfLineIterator(gz).toList finally gz.close()
   }
 }
