@@ -101,112 +101,11 @@ object ClusterOps {
             dirs: Seq[String]): Iterator[String] =
     mergeRanges(conf, start, end, dirs.map(ZipNumIndex.load(_, conf)))
 
-  private def mergeRanges(conf: Configuration, start: Option[String],
-                          end: Option[String],
-                          indexes: Seq[ZipNumIndex.ClusterIndex]): Iterator[String] =
+  /** [[range]] over indexes already loaded (the `cluster-range` verb
+    * reports each one's pruned block count first). */
+  private[graft] def mergeRanges(conf: Configuration, start: Option[String],
+                                 end: Option[String],
+                                 indexes: Seq[ZipNumIndex.ClusterIndex]): Iterator[String] =
     SortedMerge.mergeIterators(
       indexes.map(ZipNumReader.localLines(conf, _, start, end)))(graft.util.KeyOrder)
-
-  // ------------------------------------------------------------------ CLI
-
-  /** cluster-build <splits|-> <input-text> <out> [--shards N]
-    *   [--zipnum-lines N] [--surt-output] [--overwrite]
-    * `splits` dispatches on suffix like the reference
-    * (ZipNumPartitioner.java:164-168): `.json` → JSON splits (P2(c)),
-    * else alpha/NAME-START-END text. */
-  def buildFromArgs(spark: SparkSession, args: Array[String]): Unit = {
-    val (flags, pos) = splitArgs(args, Set("--shards", "--zipnum-lines"))
-    require(pos.length == 3,
-      "usage: cluster-build <splits|-> <input> <out> [--shards N] " +
-        "[--zipnum-lines N] [--surt-output] [--overwrite]")
-    val Array(splits, input, out) = pos
-    val lines = spark.read.option("lineSep", "\n").textFile(input).rdd
-    val nShards = flagValue(flags, "--shards")
-      .map(_.toInt).getOrElse(spark.sparkContext.defaultParallelism)
-    val interior =
-      if (splits == "-") Boundaries.sample(lines, nShards)
-      else Boundaries.fromAnySplitFile(splits,
-        spark.sparkContext.hadoopConfiguration)
-    build(spark, lines, out, interior,
-      linesPerBlock = flagValue(flags, "--zipnum-lines").map(_.toInt)
-        .getOrElse(ZipNumFormat.DefaultLinesPerBlock),
-      surtOutput = flags.contains("--surt-output"),
-      overwrite = flags.contains("--overwrite"))
-    println(s"built $out")
-  }
-
-  /** cluster-merge <out> <in1> <in2...> [--shards N] [--global-cdx]
-    *   [--day-limit N] [--zipnum-lines N] [--splits FILE] [--overwrite]
-    * `--splits` takes boundaries from a file instead of the inputs' own
-    * summary quantiles — `.json` → JSON splits (P2(c),
-    * ZipNumPartitioner.java:204-233), else alpha text. */
-  def mergeFromArgs(spark: SparkSession, args: Array[String]): Unit = {
-    val (flags, pos) = splitArgs(args,
-      Set("--shards", "--day-limit", "--zipnum-lines", "--splits"))
-    require(pos.length >= 2,
-      "usage: cluster-merge <out> <in...> [--shards N] [--global-cdx] " +
-        "[--day-limit N] [--zipnum-lines N] [--splits FILE] [--overwrite]")
-    merge(spark, pos.tail.toSeq, pos.head,
-      nShards = flagValue(flags, "--shards").map(_.toInt)
-        .getOrElse(spark.sparkContext.defaultParallelism),
-      boundaries = flagValue(flags, "--splits").map(
-        Boundaries.fromAnySplitFile(_, spark.sparkContext.hadoopConfiguration)),
-      globalCdx = flags.contains("--global-cdx"),
-      dayLimit = flagValue(flags, "--day-limit").map(_.toInt)
-        .getOrElse(GlobalCdxCleanup.DefaultDayLimit),
-      linesPerBlock = flagValue(flags, "--zipnum-lines").map(_.toInt)
-        .getOrElse(ZipNumFormat.DefaultLinesPerBlock),
-      overwrite = flags.contains("--overwrite"))
-    println(s"merged ${pos.tail.mkString(",")} -> ${pos.head}")
-  }
-
-  /** cluster-range <start|-> <end|-> <in...> — dump to stdout; block-prune
-    * stats to stderr. Needs no SparkSession. */
-  def rangeFromArgs(conf: Configuration, args: Array[String],
-                    stdout: java.io.OutputStream = System.out,
-                    stderr: java.io.PrintStream = System.err): Unit = {
-    require(args.length >= 3,
-      "usage: cluster-range <start|-> <end|-> <in...>")
-    val start = Option(args(0)).filter(_ != "-")
-    val end = Option(args(1)).filter(_ != "-")
-    val indexes = args.drop(2).toSeq.map(ZipNumIndex.load(_, conf))
-    indexes.foreach { idx =>
-      stderr.println(s"${idx.dir}: ${idx.prune(start, end).size}/" +
-        s"${idx.blocks.size} blocks in range")
-    }
-    val out = new java.io.BufferedWriter(
-      new java.io.OutputStreamWriter(stdout, "UTF-8"), 1 << 16)
-    mergeRanges(conf, start, end, indexes)
-      .foreach { l => out.write(l); out.write('\n') }
-    out.flush()
-  }
-
-  private def flagValue(flags: Array[String], name: String): Option[String] =
-    flags.collectFirst {
-      case f if f.startsWith(name + "=") => f.substring(name.length + 1)
-    }
-
-  /** Flags taking a value: accepts both `--flag=v` and `--flag v` (the
-    * usage strings advertise the space form). Returns (flags normalized
-    * to `--flag=v`, positionals). */
-  private[operators] def splitArgs(args: Array[String],
-                                   valueFlags: Set[String]): (Array[String], Array[String]) = {
-    val flags = Array.newBuilder[String]
-    val pos = Array.newBuilder[String]
-    var i = 0
-    while (i < args.length) {
-      val a = args(i)
-      if (a.startsWith("--")) {
-        val name = a.takeWhile(_ != '=')
-        if (a.contains('=') || !valueFlags.contains(name)) flags += a
-        else {
-          require(i + 1 < args.length, s"$name needs a value")
-          flags += s"$name=${args(i + 1)}"
-          i += 1
-        }
-      } else pos += a
-      i += 1
-    }
-    (flags.result(), pos.result())
-  }
 }

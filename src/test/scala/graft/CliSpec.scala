@@ -164,8 +164,8 @@ class CliSpec extends AnyFunSuite with SparkTestSession {
       .map(ZipNumFormat.formatSummaryLine).mkString("", "\n", "\n"))
     def run(args: String*): (String, String) = {
       val out = new ByteArrayOutputStream(); val err = new ByteArrayOutputStream()
-      ClusterOps.rangeFromArgs(conf, args.toArray, out,
-        new PrintStream(err, true, "UTF-8"))
+      assert(GraftCli.run("cluster-range" +: args, new PrintStream(out),
+        new PrintStream(err, true, "UTF-8")) == 0)
       (out.toString("UTF-8"), err.toString("UTF-8"))
     }
     // [start, end) trims inside the one block the summary keeps
