@@ -83,10 +83,11 @@ object GraftCli {
     * more (last), `[x]` an optional positional (after the required
     * ones), `a|b` a literal choice, `[--f]` or `[-d]` a boolean flag,
     * `[--f V]` a flag with a value, given as `--f V` or `--f=V`. A name
-    * ending `:int` or `:long` must parse as that number: a malformed
-    * number aborts with usage rather than fall back to a default, which
-    * would silently change what the run does. Flags may come anywhere;
-    * any other argument starting `--` is rejected. */
+    * ending `:int` or `:long` must parse as that number, and one ending
+    * `:int>=K` must also be at least K: a malformed or out-of-range
+    * number aborts with usage rather than fall back to a default or fail
+    * once the work has started. Flags may come anywhere; any other
+    * argument starting `--` is rejected. */
   private final case class Verb(grammar: String, help: String,
                                 session: Boolean = false)(
       val body: (Invocation, Env) => Unit) {
@@ -120,7 +121,9 @@ object GraftCli {
                   if (eq.nonEmpty) (Some(eq.tail), tail)
                   else (tail.headOption, tail.drop(1))
                 v.filter(slot.ok) match {
-                  case Some(value) => go(next, pos, given.updated(name, value))
+                  case Some(value) if slot.fits(value) =>
+                    go(next, pos, given.updated(name, value))
+                  case Some(value) => Left(s"$name must be >= ${slot.min}: $value")
                   case None => Left(s"$name needs a ${slot.name} value")
                 }
             }
@@ -131,7 +134,10 @@ object GraftCli {
               Left("too many arguments")
             else pos.zipWithIndex
               .map { case (v, i) => (positional(i min positional.length - 1), v) }
-              .collectFirst { case (s, v) if !s.ok(v) => s"bad ${s.name}: $v" }
+              .collectFirst {
+                case (s, v) if !s.ok(v) => s"bad ${s.name}: $v"
+                case (s, v) if !s.fits(v) => s"${s.name} must be >= ${s.min}: $v"
+              }
               .toLeft(Invocation(verb, pos, given))
         }
       go(args, Vector.empty, Map.empty)
@@ -141,15 +147,24 @@ object GraftCli {
   /** A grammar token; groups: 1 a flag, 2 its value's name, 3 a required
     * positional, 4 an optional one, 5 a literal choice. */
   private val Token =
-    """\[(-[\w-]+)(?: (\S+))?\]|<([^>]+)>|\[([^\]\s]+)\]|(\S+)""".r
+    """\[(-[\w-]+)(?: (\S+))?\]|<((?:[^>]|>=)+)>|\[([^\]\s]+)\]|(\S+)""".r
 
-  /** One argument's name (as in the grammar) and its check. */
-  private final case class Slot(name: String, ok: String => Boolean)
+  /** One argument's name (as in the grammar, less any `>=K`), its check,
+    * and the least value a number may take. */
+  private final case class Slot(name: String, ok: String => Boolean,
+                                min: Long = Long.MinValue) {
+    /** Whether a value that passed [[ok]] is in range. */
+    def fits(v: String): Boolean = min == Long.MinValue || v.toLong >= min
+  }
 
-  private def slot(name: String): Slot = Slot(name,
-    if (name.endsWith(":int")) _.toIntOption.nonEmpty
-    else if (name.endsWith(":long")) _.toLongOption.nonEmpty
-    else _ => true)
+  private def slot(token: String): Slot = {
+    val name = token.takeWhile(_ != '>')
+    Slot(name,
+      if (name.endsWith(":int")) _.toIntOption.nonEmpty
+      else if (name.endsWith(":long")) _.toLongOption.nonEmpty
+      else _ => true,
+      token.drop(name.length + 2).toLongOption.getOrElse(Long.MinValue))
+  }
 
   /** A command line that passed its verb's grammar: the positionals in
     * order and the flags given (a boolean flag maps to ""). The number
@@ -192,8 +207,8 @@ object GraftCli {
     "surt" -> Verb("<url>", "canonicalize a URL") { (a, env) =>
       env.out.println(graft.functions.Surt.surtLenient(a(0)))
     },
-    "cluster-build" -> Verb("<splits|-> <in> <out> [--shards N:int] " +
-        "[--zipnum-lines N:int] [--surt-output] [--overwrite]",
+    "cluster-build" -> Verb("<splits|-> <in> <out> [--shards N:int>=1] " +
+        "[--zipnum-lines N:int>=1] [--surt-output] [--overwrite]",
         "sorted ZipNum cluster from CDX text (splits: a .json or " +
           "alpha/NAME-START-END split file, or - to sample)",
         session = true) { (a, env) =>
@@ -213,8 +228,8 @@ object GraftCli {
         overwrite = a.has("--overwrite"))
       env.out.println(s"built ${a(2)}")
     },
-    "cluster-merge" -> Verb("<out> <in...> [--shards N:int] [--global-cdx] " +
-        "[--day-limit N:int] [--zipnum-lines N:int] [--splits FILE] " +
+    "cluster-merge" -> Verb("<out> <in...> [--shards N:int>=1] [--global-cdx] " +
+        "[--day-limit N:int>=0] [--zipnum-lines N:int>=1] [--splits FILE] " +
         "[--overwrite]",
         "merge clusters (global-cdx rules; --splits: boundaries from a " +
           "split file, not the inputs' summaries)",

@@ -93,7 +93,7 @@ object Boundaries {
       // also fine; the warning just makes the dropped key visible).
       if (lines.head.nonEmpty)
         System.err.println(s"NOTE: split file $path leads with a real key " +
-          s"('${lines.head.take(40)}') — dropped as shard 0's START " +
+          s"('${lines.head.take(40)}'), dropped as shard 0's START " +
           "(AlphaPartitioner format, since r18); a pre-r18 graft split " +
           "file intending it as an interior boundary must be regenerated")
       lines.tail // line 0 = shard 0's start; getPartition clamps below it
@@ -139,7 +139,7 @@ object Boundaries {
       val s = splits.get(i)
       if (!s.isTextual || s.asText.nonEmpty)
         System.err.println(s"WARN: splits file $path entry $i is " +
-          s"${s.toString.take(40)} — the format's first/last entries are " +
+          s"${s.toString.take(40)}; the format's first/last entries are " +
           "empty sentinels and are always dropped")
     }
     val out = (1 until splits.size - 1).map { i =>

@@ -96,9 +96,7 @@ object BulkKvSink {
     // would misparse a store key that happens to contain two separators;
     // _boundaries is strictly one-boundary-per-line (written above)
     val bp = new org.apache.hadoop.fs.Path(dir, "_boundaries")
-    val in = fs.open(bp)
-    val interior = (try new String(in.readAllBytes(), "UTF-8") finally in.close())
-      .split("\n").toIndexedSeq.filter(_.nonEmpty)
+    val interior = graft.util.IoUtil.readLines(bp, conf)
     require(interior == interior.sorted(graft.util.KeyOrder),
       s"$bp: boundaries must be sorted (byte-wise)")
     val part = new BoundaryPartitioner(interior)

@@ -11,6 +11,9 @@ import graft.util.IoUtil
  * also backs the ALL.summary search). Seek-based bisection over byte
  * offsets: O(log n) seeks to land within a 4 KiB window of the first
  * matching line, then a linear scan — no index required beyond sortedness.
+ * The file must be sorted in [[graft.util.KeyOrder]] byte order (the
+ * contract ZipNum summary pruning relies on too): the scan skips lines
+ * below the start key undecoded and stops at the first line >= the end.
  */
 final class SortedTextFile(path: String, conf: Configuration) {
 
@@ -22,24 +25,11 @@ final class SortedTextFile(path: String, conf: Configuration) {
     * reference's String.compareTo ordering). The stream closes on
     * exhaustion; a caller that abandons the iterator mid-way should use
     * [[range]], which closes on its own bound. */
-  def iterateFrom(key: String): Iterator[String] = {
-    val (it, close) = linesFrom(key)
-    new IoUtil.AutoCloseIterator(it, close)
-  }
+  def iterateFrom(key: String): Iterator[String] = range(key, None)
 
   /** Lines in [start, end) — inclusive/exclusive, like ClusterRange. The
-    * bound check happens INSIDE the closing wrapper, so hitting `end`
-    * closes the stream (a takeWhile outside it would leak the handle). */
+    * reader stops at the first line >= `end` and the stream closes there. */
   def range(start: String, end: Option[String]): Iterator[String] = {
-    val (it, close) = linesFrom(start)
-    val bounded = end match {
-      case None => it
-      case Some(e) => it.takeWhile(graft.util.KeyOrder.lt(_, e))
-    }
-    new IoUtil.AutoCloseIterator(bounded, close)
-  }
-
-  private def linesFrom(key: String): (Iterator[String], () => Unit) = {
     val in = fs.open(p)
     var lo = 0L
     var hi = fileLen
@@ -48,14 +38,14 @@ final class SortedTextFile(path: String, conf: Configuration) {
       in.seek(mid)
       skipPartialLine(in)
       readLine(in) match {
-        case Some(l) if graft.util.KeyOrder.lt(l, key) => lo = mid
+        case Some(l) if graft.util.KeyOrder.lt(l, start) => lo = mid
         case _ => hi = mid
       }
     }
     in.seek(lo)
     if (lo > 0) skipPartialLine(in)
-    (new IoUtil.LfLineIterator(in).dropWhile(graft.util.KeyOrder.lt(_, key)),
-      () => in.close())
+    new IoUtil.AutoCloseIterator(
+      new IoUtil.LfLineIterator(in, Some(start), end), () => in.close())
   }
 
   private def skipPartialLine(in: java.io.InputStream): Unit = {
@@ -91,14 +81,10 @@ object SplitFile {
       }
     }
 
-  def load(path: String, conf: Configuration): Seq[SplitRange] = {
-    val p = new Path(path)
-    val in = p.getFileSystem(conf).open(p)
-    val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+  def load(path: String, conf: Configuration): Seq[SplitRange] =
     // CR-strip like Boundaries.fromSplitFile: a CRLF spec file would
     // otherwise carry '\r' in every END field and silently skew ranges
-    parse(text.split("\n").toSeq.map(_.stripSuffix("\r")))
-  }
+    parse(IoUtil.readLines(new Path(path), conf).map(_.stripSuffix("\r")))
 
   /** Interior boundaries for [[graft.operators.BoundaryPartitioner]]: each
     * range's START except the global minimum. */

@@ -1,7 +1,5 @@
 package graft.sources.zipnum
 
-import java.nio.charset.StandardCharsets.UTF_8
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 
@@ -106,20 +104,7 @@ object ZipNumIndex {
     * parquet scan of the same data would choose. */
   val DefaultMaxSliceBytes: Long = 128L * 1024 * 1024
 
-  def load(dir: String, conf: Configuration): ClusterIndex = {
-    val p = new Path(dir, "ALL.summary")
-    val fs = p.getFileSystem(conf)
-    val in = fs.open(p)
-    val bytes = try {
-      val buf = new java.io.ByteArrayOutputStream(1 << 16)
-      graft.util.IoUtil.copy(in, buf)
-      buf.toByteArray
-    } finally in.close()
-    val blocks = new String(bytes, UTF_8)
-      .split("\n").iterator
-      .filter(_.nonEmpty)
-      .map(ZipNumFormat.parseSummaryLine)
-      .toIndexedSeq
-    ClusterIndex(dir, blocks)
-  }
+  def load(dir: String, conf: Configuration): ClusterIndex =
+    ClusterIndex(dir, graft.util.IoUtil.readLines(new Path(dir, "ALL.summary"), conf)
+      .map(ZipNumFormat.parseSummaryLine))
 }

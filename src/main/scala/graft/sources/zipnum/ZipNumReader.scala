@@ -19,6 +19,10 @@ import graft.sources.zipnum.ZipNumIndex.Slice
  * /root/reference/src/main/java/org/archive/hadoop/cdx/ClusterRange.java:57-62
  * (StartBoundedStringIterator / BoundedStringIterator over raw lines).
  *
+ * The trim relies on the cluster being sorted in [[graft.util.KeyOrder]]
+ * byte order, as summary pruning does: lines below `start` are skipped
+ * undecoded, and a slice stops inflating at its first line >= `end`.
+ *
  * Key-range lookups read driver-local ([[localLines]]), like the
  * reference's single-process range dumper; whole-cluster distributed
  * reads go through [[rangesRdd]] (merge) or the DSv2 `zipnum` scan.
@@ -89,25 +93,14 @@ object ZipNumReader {
     in.seek(slice.offset)
     val bounded = new graft.util.IoUtil.BoundedInputStream(in, slice.length)
     val gz = new GZIPInputStream(bounded, 64 * 1024)
-    val it = new graft.util.IoUtil.LfLineIterator(gz)
-    val trimmed = (start, end) match {
-      case (None, None) => it
-      case _ =>
-        // Whole-line string compare: a line is "urlkey ts rest"; comparing
-        // it against a bare "urlkey" (or "urlkey ts") bound is exactly the
-        // reference's raw-line bound check.
-        val lo = start.orNull
-        val hi = end.orNull
-        it.filter(l => (lo == null || graft.util.KeyOrder.gteq(l, lo)) &&
-          (hi == null || graft.util.KeyOrder.lt(l, hi)))
-    }
+    val it = new graft.util.IoUtil.LfLineIterator(gz, start, end)
     var closed = false
     val closer = () => if (!closed) {
       closed = true
       try gz.close() catch { case _: Exception => () }
       try in.close() catch { case _: Exception => () }
     }
-    (new graft.util.IoUtil.AutoCloseIterator(trimmed, closer), closer)
+    (new graft.util.IoUtil.AutoCloseIterator(it, closer), closer)
   }
 
 }

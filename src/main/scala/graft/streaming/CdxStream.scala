@@ -130,12 +130,7 @@ object CdxStream {
     val conf = spark.sparkContext.hadoopConfiguration
     val pin = new org.apache.hadoop.fs.Path(outDir, "_gen_boundaries")
     val fs = pin.getFileSystem(conf)
-    def read(): IndexedSeq[String] = {
-      val in = fs.open(pin)
-      val text = try new String(in.readAllBytes(), "UTF-8")
-        finally in.close()
-      text.split("\n", -1).toIndexedSeq.filter(_.nonEmpty)
-    }
+    def read() = graft.util.IoUtil.readLines(pin, conf)
     if (fs.exists(pin)) read()
     else {
       val b = sample()

@@ -175,6 +175,27 @@ class CliSpec extends AnyFunSuite with SparkTestSession {
       ((b0 ++ b1).mkString("", "\n", "\n"), s"$d: 2/2 blocks in range\n"))
   }
 
+  test("cluster-build's split-file notes on stderr are pure ASCII (a " +
+      "POSIX-locale stderr prints anything else as ?)") {
+    val dir = tmpDir("splitnote")
+    val alpha = dir.resolve("alpha.txt")
+    Files.writeString(alpha, "com,a)/\ncom,m)/\n")
+    val json = dir.resolve("splits.json")
+    Files.writeString(json, """[3, ["x", "com,m)/", ""]]""")
+    val err = new ByteArrayOutputStream()
+    val saved = System.err
+    System.setErr(new PrintStream(err, true, "UTF-8"))
+    try Seq(alpha, json).foreach(p =>
+      assert(graft.operators.Boundaries.fromAnySplitFile(p.toString, conf) ==
+        IndexedSeq("com,m)/")))
+    finally System.setErr(saved)
+    // only the two notes: a Spark thread may log meanwhile
+    val notes = err.toString("UTF-8").linesIterator.filter(l =>
+      l.startsWith("NOTE: split file") || l.startsWith("WARN: splits file")).toSeq
+    assert(notes.size == 2)
+    notes.foreach(n => assert(n.forall(_ < 0x80), n))
+  }
+
   test("summary-generate rebuilds ALL.summary and manifest.txt " +
       "byte-identical to the writer's") {
     val d = tmpDir("sumgen").resolve("cluster")

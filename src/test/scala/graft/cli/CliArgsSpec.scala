@@ -129,6 +129,30 @@ class CliArgsSpec extends AnyFunSuite {
     bad.foreach { case (args, why) => rejected(args: _*)(why) }
   }
 
+  test("a number below its slot's bound exits 2 before any work starts; " +
+      "the bound itself parses") {
+    val low: Seq[(Seq[String], String)] = Seq(
+      Seq("cluster-build", "-", "in", "out", "--shards", "0") ->
+        "--shards must be >= 1: 0",
+      Seq("cluster-build", "-", "in", "out", "--zipnum-lines=0") ->
+        "--zipnum-lines must be >= 1: 0",
+      Seq("cluster-build", "-", "in", "out", "--shards", "-3") ->
+        "--shards must be >= 1: -3",
+      Seq("cluster-merge", "out", "a", "--shards=0") ->
+        "--shards must be >= 1: 0",
+      Seq("cluster-merge", "out", "a", "--zipnum-lines", "-1") ->
+        "--zipnum-lines must be >= 1: -1",
+      Seq("cluster-merge", "out", "a", "--day-limit", "-1") ->
+        "--day-limit must be >= 0: -1")
+    low.foreach { case (args, why) => rejected(args: _*)(why) }
+    assert(parse("cluster-build", "-", "in", "out", "--shards", "1",
+      "--zipnum-lines", "1").isRight)
+    assert(parse("cluster-merge", "out", "a", "--day-limit", "0",
+      "--shards=1").isRight)
+    assert(GraftCli.usage.contains("[--shards N:int>=1]"))
+    assert(GraftCli.usage.contains("[--day-limit N:int>=0]"))
+  }
+
   test("a value flag reads the same as --f v and --f=v, anywhere on the " +
       "line") {
     val spaced = parse("cluster-merge", "out", "a", "--shards", "4", "b",
