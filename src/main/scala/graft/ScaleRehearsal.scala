@@ -307,8 +307,9 @@ object ScaleRehearsal {
     * BIT-IDENTICAL at every decade (KMV mins are the bottom-k distinct
     * hashes; HLL registers are per-bucket rank maxima — both are
     * functions of the distinct value SET alone), while shuffle stays
-    * ~flat (bounded mergeable buffers: ≤ k×partitions rows for KMV,
-    * ≤ m registers per bucket group for HLL — never the row count).
+    * ~flat (bounded mergeable buffers: one ≤ k-hash buffer per
+    * partition for KMV, m registers per partition and group for HLL —
+    * never the row count).
     * Both claims asserted in-run: the replicated corpus's summaries are
     * require'd row-equal to the base corpus's, computed once outside
     * the timed sections. */

@@ -220,7 +220,7 @@ object GraftCli {
       // (ZipNumPartitioner.java:164-168)
       val interior =
         if (a(0) == "-") Boundaries.sample(lines, nShards)
-        else Boundaries.fromAnySplitFile(a(0), env.conf)
+        else Boundaries.fromAnySplitFile(a(0), env.conf, env.err)
       ClusterOps.build(spark, lines, a(2), interior,
         linesPerBlock = a.int("--zipnum-lines")
           .getOrElse(ZipNumFormat.DefaultLinesPerBlock),
@@ -239,7 +239,7 @@ object GraftCli {
         nShards = a.int("--shards")
           .getOrElse(spark.sparkContext.defaultParallelism),
         boundaries = a.flags.get("--splits")
-          .map(Boundaries.fromAnySplitFile(_, env.conf)),
+          .map(Boundaries.fromAnySplitFile(_, env.conf, env.err)),
         globalCdx = a.has("--global-cdx"),
         dayLimit = a.int("--day-limit")
           .getOrElse(GlobalCdxCleanup.DefaultDayLimit),
@@ -645,17 +645,23 @@ object GraftCli {
 
   /** Run one command line and return its exit status: 2 for a usage
     * error, else what the verb reports (0 unless it says otherwise).
-    * The session, for verbs declared with one, is stopped however the
-    * body ends. */
+    * A verb declared with a session runs on the JVM's live session when
+    * there is one (an embedding application's, a test's) and leaves it
+    * running; otherwise it starts its own and stops it however the body
+    * ends. */
   def run(args: Seq[String], stdout: PrintStream = System.out,
           stderr: PrintStream = System.err): Int = parse(args) match {
     case Left(text) => stderr.println(text); 2
     case Right(a) =>
       val verb = verbs(a.verb)
-      val spark = if (verb.session) Some(session(a.verb)) else None
+      val live = SparkSession.getActiveSession
+        .orElse(SparkSession.getDefaultSession)
+        .filterNot(_.sparkContext.isStopped)
+      val spark = if (verb.session) Some(live.getOrElse(session(a.verb)))
+        else None
       val env = new Env(spark, stdout, stderr)
       try { verb.body(a, env); env.status }
-      finally spark.foreach(_.stop())
+      finally if (live.isEmpty) spark.foreach(_.stop())
   }
 
   def main(args: Array[String]): Unit = {

@@ -1076,9 +1076,10 @@ object CdxGates {
     },
 
     // KMV distinct-count sketch: k smallest distinct 48-bit hashes of
-    // o_custkey — per-partition bounded heap, merge sees <= k*partitions
-    // rows; deterministic (same value set ⇒ same sketch in any engine),
-    // unlike HLL. Estimate within ~1/sqrt(k) of exact.
+    // o_custkey — one typed aggregate, per-partition partial buffers of
+    // <= k hashes merged over one exchange; deterministic (same value
+    // set ⇒ same sketch in any engine), unlike HLL. Estimate within
+    // ~1/sqrt(k) of exact.
     Gate("q57_kmv_distinct",
       """WITH hv AS (SELECT DISTINCT CAST(concat('0x',
         |    substring(md5(CAST(o_custkey AS VARCHAR)), 1, 12)) AS BIGINT)
@@ -1383,12 +1384,6 @@ object CdxGates {
     // sample with exact counts, all-integer probe lookup — a pure
     // function of the value multiset, replayed bit-for-bit by the
     // oracle (percentile_approx could never be).
-    // default plan = the one-pass counting heap (exact counts ride the
-    // per-partition bottom-k summaries; one scan, k·partitions wire) —
-    // A/B'd at sf0.1 against preAggregate=true (distinct-count groupBy
-    // first): the near-unique synthetic price domain makes the distinct
-    // set ~the corpus, so the heap wins (1.09 -> 1.01 isolated); a
-    // heavily-duplicated production domain can flip preAggregate on
     Gate("q74_kmv_quantiles",
       """WITH v AS (SELECT CAST(round(l_extendedprice * 100) AS BIGINT) AS v
         |  FROM lineitem WHERE l_extendedprice IS NOT NULL),
@@ -1409,7 +1404,7 @@ object CdxGates {
       graft.operators.Sketches.kmvQuantiles(
         tbl(s, dir, "lineitem")
           .select(cents(col("l_extendedprice")).as("price_cents")),
-        "price_cents", k = 512, preAggregate = false)
+        "price_cents", k = 512)
     },
 
     // Streaming exact dedup (incremental-ingest counterpart of q05/q20):
@@ -1679,11 +1674,11 @@ object CdxGates {
 
     // HyperLogLog — the FIXED-SIZE mergeable distinct sketch (KMV's
     // q57 carries k hash values; HLL carries m <=6-bit registers that
-    // merge by max): register build is one bounded groupBy(bucket)
-    // agg, and the raw estimator is ALL-INTEGER (truncation order
-    // pinned in Sketches.hllDistinct's contract) so the oracle replays
-    // it bit-for-bit — including length(bin(suffix)) as the
-    // leading-zeros rank, an idiom both engines share.
+    // merge by max): one typed aggregate whose per-partition partial is
+    // the m-byte register array, and the raw estimator is ALL-INTEGER
+    // (truncation order pinned in Sketches.hllDistinct's contract) so
+    // the oracle replays it bit-for-bit — its length(bin(suffix))
+    // leading-zeros rank is the same integer as the engine's bit length.
     Gate("q131_hll_distinct",
       """WITH hv AS (SELECT CAST(concat('0x',
         |    substring(md5(CAST(o_custkey AS VARCHAR)), 1, 12)) AS BIGINT)
@@ -1823,7 +1818,7 @@ object CdxGates {
           java.nio.file.Paths.get(splitsPath),
           """[0, ["", "org,site12)", "org,site18)", "org,site4)", ""]]""")
         val interior = graft.operators.Boundaries.fromAnySplitFile(
-          splitsPath, s.sparkContext.hadoopConfiguration)
+          splitsPath, s.sparkContext.hadoopConfiguration, System.err)
         val lines = cdxLines(s, dir).as[String].rdd
         graft.operators.ClusterOps.build(s, lines, out, interior,
           linesPerBlock = 400, overwrite = true)

@@ -67,8 +67,10 @@ object Boundaries {
     * callers with such keys should pass boundaries programmatically
     * (BulkKvSink does exactly that, see BulkKvSink.scala:95). Lines are
     * CR-stripped: a CRLF split file used to yield boundaries with a
-    * trailing \r that silently skewed shard ranges ('\r' < ' '). */
-  def fromSplitFile(path: String, conf: Configuration): IndexedSeq[String] = {
+    * trailing \r that silently skewed shard ranges ('\r' < ' '). The
+    * dropped-first-key NOTE goes to `err` (the calling verb's stderr). */
+  def fromSplitFile(path: String, conf: Configuration,
+                    err: java.io.PrintStream): IndexedSeq[String] = {
     val p = new Path(path)
     val in = p.getFileSystem(conf).open(p)
     val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
@@ -92,7 +94,7 @@ object Boundaries {
       // reinterpreted (a reference-format file with a real first key is
       // also fine; the warning just makes the dropped key visible).
       if (lines.head.nonEmpty)
-        System.err.println(s"NOTE: split file $path leads with a real key " +
+        err.println(s"NOTE: split file $path leads with a real key " +
           s"('${lines.head.take(40)}'), dropped as shard 0's START " +
           "(AlphaPartitioner format, since r18); a pre-r18 graft split " +
           "file intending it as an interior boundary must be regenerated")
@@ -110,7 +112,8 @@ object Boundaries {
     * entry aborts loudly (the reference's JSONException, minus its
     * swallowed printStackTrace); a NON-empty first/last entry warns — the
     * reference drops it silently, which loses a real boundary if a
-    * producer ever deviates from the convention.
+    * producer ever deviates from the convention. The WARN goes to `err`
+    * (the calling verb's stderr).
     *
     * Tie semantics note: the reference's partitioner sends a key EQUAL to
     * a split to the earlier partition (`key <= split → index`,
@@ -118,7 +121,8 @@ object Boundaries {
     * partition AT its boundary. Either way a bare-urlkey split never
     * splits a urlkey group — the group lands one partition earlier there
     * than here, a layout shift, not a correctness difference. */
-  def fromJsonSplits(path: String, conf: Configuration): IndexedSeq[String] = {
+  def fromJsonSplits(path: String, conf: Configuration,
+                     err: java.io.PrintStream): IndexedSeq[String] = {
     val p = new Path(path)
     val in = p.getFileSystem(conf).open(p)
     val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
@@ -138,7 +142,7 @@ object Boundaries {
     Seq(0, splits.size - 1).foreach { i =>
       val s = splits.get(i)
       if (!s.isTextual || s.asText.nonEmpty)
-        System.err.println(s"WARN: splits file $path entry $i is " +
+        err.println(s"WARN: splits file $path entry $i is " +
           s"${s.toString.take(40)}; the format's first/last entries are " +
           "empty sentinels and are always dropped")
     }
@@ -155,9 +159,10 @@ object Boundaries {
 
   /** Suffix dispatch matching the reference (ZipNumPartitioner.java:164-168):
     * `.json` → [[fromJsonSplits]], anything else → [[fromSplitFile]]. */
-  def fromAnySplitFile(path: String, conf: Configuration): IndexedSeq[String] =
-    if (path.endsWith(".json")) fromJsonSplits(path, conf)
-    else fromSplitFile(path, conf)
+  def fromAnySplitFile(path: String, conf: Configuration,
+                       err: java.io.PrintStream): IndexedSeq[String] =
+    if (path.endsWith(".json")) fromJsonSplits(path, conf, err)
+    else fromSplitFile(path, conf, err)
 
   /** Interior boundaries as every (total/n)-th key of the concatenated
     * summaries of existing clusters — n output partitions shaped like the

@@ -1,13 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Encoders}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders}
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
 /**
- * Mergeable cardinality sketch (beyond-reference surface): K-minimum-values
- * (KMV) distinct-count estimation — the sketch family behind "how many
- * distinct urlkeys / digests / hosts" at 100 TB, where an exact
- * countDistinct shuffles every distinct value.
+ * Mergeable sketches (beyond-reference surface). The K-minimum-values
+ * (KMV) distinct count is the sketch behind "how many distinct urlkeys /
+ * digests / hosts" at 100 TB, where an exact countDistinct shuffles
+ * every distinct value.
  *
  * Why KMV and not HyperLogLog: identical inputs give identical sketches in
  * ANY engine that can md5 — the k smallest distinct hash values are a pure
@@ -20,13 +21,15 @@ import org.apache.spark.sql.functions._
  * distinct 48-bit hashes, est = (k-1) * 2^48 / h_k; when fewer than k
  * distinct hashes exist the sketch is exact.
  *
- * Scale shape: one codegen'd projection computes the 48-bit hash, a
- * per-partition bounded heap keeps each partition's k smallest DISTINCT
- * hashes (mapPartitions — emits <= k rows per partition, the only
- * non-codegen step and it runs on already-projected longs), and the
- * global merge sees <= k * numPartitions rows. No shuffle ever carries
- * more than that; an exact distinct would shuffle every distinct value.
- * The per-partition sketch is the mergeable form — unions of sketches
+ * One implementation per sketch: KMV distinct, KMV quantiles and HLL are
+ * each ONE typed Aggregator — buffer, merge and estimator in Scala. The
+ * per-group forms ([[kmvGroupAgg]], [[kmvQuantilesGroupAgg]],
+ * [[hllGroupAgg]]) register it with `udaf` inside a groupBy; the global
+ * forms ([[kmvDistinct]], [[kmvQuantiles]], [[hllDistinct]]) run the same
+ * aggregator over one group. Scale shape either way: the 48-bit hash is
+ * a codegen'd projection, each partition folds its rows into a bounded
+ * buffer (the map-side partial), and the one exchange carries one buffer
+ * per partition and group — never the distinct set. Unions of sketches
  * (cross-file, cross-day) compose by the same merge.
  */
 object Sketches {
@@ -45,22 +48,26 @@ object Sketches {
   private def hash48(value: org.apache.spark.sql.Column) =
     graft.functions.Md5Functions.md5Prefix48(value.cast("string"))
 
+  /** The sketch's input hash as a public projection (the same 48-bit
+    * md5 prefix as the global sketch — oracle-replayable). */
+  def hash48Col(value: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    hash48(value)
+
+  private def longs3: Encoder[(Long, Long, Long)] =
+    Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong)
+
   /** One-row estimate: (n_mins, h_k, est_distinct) over the distinct set
-    * of `valueCol`. Exact (est = count) below k distinct values. NULLs are
+    * of `valueCol` — [[kmvGroupAgg]] over one group. Exact (est = count)
+    * below k distinct values; h_k is NULL on empty input. NULLs are
     * excluded from the estimate — the same semantics as countDistinct
     * (and md5(NULL) would otherwise poison the non-nullable hash pipe). */
   def kmvDistinct(df: DataFrame, valueCol: String, k: Int): DataFrame = {
-    require(k >= 2 && k <= 32768, s"k must be in [2, 32768], got $k")
-    val hashes = df.where(col(valueCol).isNotNull)
-      .select(hash48(col(valueCol)).as("hv"))
-      .as(Encoders.scalaLong)
-    val partMins = hashes.mapPartitions(bottomK(_, k))(Encoders.scalaLong)
-    val mins = partMins.toDF("hv").distinct().orderBy(col("hv")).limit(k)
-    mins.agg(count(lit(1)).as("n_mins"), max(col("hv")).as("h_k"))
-      .select(col("n_mins"), col("h_k"),
-        when(col("n_mins") < k, col("n_mins")).otherwise(
-          expr(s"CAST(${k - 1} AS BIGINT) * ${1L << HashBits} DIV h_k"))
-          .as("est_distinct"))
+    val sk = udaf(kmvGroupAgg(k))
+    df.where(col(valueCol).isNotNull)
+      .agg(sk(hash48(col(valueCol))).as("s"))
+      .select(col("s._1").as("n_mins"),
+        when(col("s._1") > 0, col("s._2")).as("h_k"),
+        col("s._3").as("est_distinct"))
   }
 
   /** Deterministic mergeable approximate quantiles over an integer
@@ -72,112 +79,35 @@ object Sketches {
     * partition-order-specific) it is a PURE FUNCTION of the value set +
     * counts, so an external engine replays it bit-for-bit.
     *
-    * Construction: the sample is the k distinct values with the
-    * smallest (48-bit md5 hash, value) pairs — the same KMV bottom-k
-    * idea as [[kmvDistinct]], so it is deterministic and mergeable
-    * (union of samples, re-truncated to k, is the sample of the
-    * union). Exact counts for JUST the sampled values come from a
-    * second pass whose aggregation carries at most k groups. The
-    * p-basis-point quantile estimate is the smallest sampled value
-    * whose cumulative sampled count reaches p/10000 of the total
-    * sampled count — an all-integer ratio estimator (distinct-value
-    * sampling, Beyer et al. SIGMOD'07 lineage): exact when the domain
-    * has <= k distinct values, and at larger domains its error follows
-    * the count-variance of the uniform value sample.
+    * Construction: [[kmvQuantilesGroupAgg]]'s counting buffer over one
+    * group — the k distinct values with the smallest (48-bit md5 hash,
+    * value) pairs, each with its exact occurrence count ([[KmvQBuf]]
+    * says why evicted counts never matter). The p-basis-point quantile
+    * estimate is the smallest sampled value whose cumulative sampled
+    * count reaches p/10000 of the total sampled count — an all-integer
+    * ratio estimator (distinct-value sampling, Beyer et al. SIGMOD'07
+    * lineage): exact when the domain has <= k distinct values, and at
+    * larger domains its error follows the count-variance of the uniform
+    * value sample.
     *
-    * Scale shape, two selectable plans with identical output:
-    *
-    *  - `preAggregate = false` (default, unbounded domains): ONE scan
-    *    through per-partition COUNTING heaps — each partition's k
-    *    smallest distinct (hash, value) pairs with exact local
-    *    occurrence counts (see the in-body proof that evicted pairs
-    *    can't be global survivors), merged by a count-summing heap over
-    *    one exchange of <= k·partitions rows.
-    *  - `preAggregate = true` (bounded domains — prices, lengths,
-    *    scores: the common quantile targets): one `groupBy(value)`
-    *    count first (map-side partial, wire = per-partition distinct
-    *    values), then hash + bottom-k run over the distinct table and
-    *    the counts ride the same rows — ONE scan, no broadcast, no
-    *    second pass. Wins whenever shuffling the distinct set is
-    *    cheaper than re-scanning the corpus; loses on near-unique
-    *    domains where the distinct set IS the corpus.
-    *
-    * The final cumulative fold runs on <= k rows either way. */
+    * Output: one (p_bp INT, value BIGINT) row per probe; no rows on
+    * empty input (never NULL probes). */
   def kmvQuantiles(df: DataFrame, valueCol: String, k: Int,
                    probesBp: Seq[Int] = Seq(100, 1000, 2500, 5000,
-                     7500, 9000, 9900),
-                   preAggregate: Boolean = false): DataFrame = {
-    require(k >= 2 && k <= 32768, s"k must be in [2, 32768], got $k")
+                     7500, 9000, 9900)): DataFrame = {
     require(probesBp.nonEmpty && probesBp.forall(p => p >= 1 && p <= 10000),
       s"probesBp must be basis points in [1, 10000], got $probesBp")
-    import df.sparkSession.implicits._
-    val vals = df.where(col(valueCol).isNotNull)
-      .select(col(valueCol).cast("long").as("v"))
-    val counts: DataFrame = if (preAggregate) {
-      // one-scan plan: distinct counts first, then hash + bottom-k over
-      // the (already distinct) value table — counts ride the heap rows
-      val enc3 = Encoders.tuple(
-        Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong)
-      val byValue = vals.groupBy(col("v")).agg(count(lit(1)).as("cnt"))
-        .select(hash48(col("v")).as("hv"), col("v"), col("cnt"))
-        .as(enc3)
-      // (hv, v) is unique after the groupBy, so the lexicographic
-      // (hv, v, cnt) ordering never reaches cnt — same admission order
-      // as the two-pass plan
-      byValue.mapPartitions(bottomK(_, k))(enc3)
-        .repartition(1)
-        .mapPartitions(bottomK(_, k))(enc3)
-        .toDF("hv", "v", "cnt")
-        .select(col("v"), col("cnt"))
-    } else {
-      // ONE-pass counting heap: each partition keeps its k smallest
-      // DISTINCT (hash, value) pairs WITH exact local occurrence counts
-      // (value in the order key breaks 48-bit collisions
-      // deterministically). Local counts are exact for every GLOBAL
-      // survivor: a pair rejected or evicted by partition p's heap has k
-      // distinct smaller pairs inside p alone, so it cannot be among the
-      // global k smallest — and rejection is permanent (the heap's max
-      // only decreases), so every occurrence of a locally-surviving pair
-      // was counted while it sat in the heap. The global merge is the
-      // same heap SUMMING counts of equal pairs across partitions, over
-      // one exchange of <= k-per-partition rows. One corpus scan, wire
-      // bounded by k·partitions — replaces the former two-scan plan
-      // (sample pass + broadcast-semi count pass), which read the corpus
-      // twice for the same output.
-      val enc3 = Encoders.tuple(
-        Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong)
-      val hashed = vals.select(hash48(col("v")).as("hv"), col("v"))
-        .as(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
-      hashed.mapPartitions(bottomKCounting(_, k))(enc3)
-        // NOT coalesce(1), which would narrowly fuse the per-partition
-        // heaps into a single serial task
-        .repartition(1)
-        .mapPartitions(bottomKSumming(_, k))(enc3)
-        .toDF("hv", "v", "cnt")
-        .select(col("v"), col("cnt"))
-    }
-    // <= k rows: collapse the cumulative distribution + probe lookup
-    // into ONE single-partition aggregation and one codegen'd projection
-    // over the sorted (v, cnt) array — a window + probe-crossJoin +
-    // groupBy tail re-shuffles these k rows twice for the same result
-    val probesArr = array(probesBp.map(p => lit(p)): _*)
-    counts
-      .agg(sort_array(collect_list(struct(col("v"), col("cnt")))).as("a"))
-      .where(size(col("a")) > 0) // empty input -> 0 rows, not null probes
-      .select(explode(probesArr).as("p_bp"), col("a"),
-        aggregate(col("a"), lit(0L), (acc, x) => acc + x("cnt")).as("total"))
-      .select(col("p_bp"),
-        // smallest sampled v whose cumulative count reaches p/10000 of
-        // the total: fold with (cum, found) state, keep the first hit
-        aggregate(col("a"),
-          struct(lit(0L).as("cum"), lit(null).cast("long").as("found")),
-          (s, x) => {
-            val cum = s("cum") + x("cnt")
-            struct(cum.as("cum"),
-              coalesce(s("found"),
-                when(cum * 10000 >= col("p_bp") * col("total"), x("v")))
-                .as("found"))
-          }).getField("found").as("value"))
+    val sk = udaf(new KmvQuantilesAgg[Seq[(Int, Long)]](k) {
+      override def finish(b: KmvQBuf): Seq[(Int, Long)] =
+        if (b.hs.isEmpty) Seq.empty else probesBp.zip(probes(b, probesBp))
+      override def outputEncoder: Encoder[Seq[(Int, Long)]] =
+        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
+    })
+    val v = col(valueCol).cast("long")
+    df.where(col(valueCol).isNotNull)
+      .agg(sk(hash48(v), v).as("q"))
+      .select(explode(col("q")).as("e"))
+      .select(col("e._1").as("p_bp"), col("e._2").as("value"))
   }
 
   /** EXACT heavy hitters — every value whose count strictly exceeds
@@ -359,10 +289,11 @@ object Sketches {
   }
 
   /** HyperLogLog registers + the RAW estimator, all-integer (Flajolet
-    * et al. '07): the 48-bit value hash splits into a 2^bucketBits-way
-    * register index (top bits) and a suffix whose leading-zeros rank
-    * (zeros+1 = suffixBits+1 - length(bin(suffix)), an integer both
-    * engines compute identically) each register MAXes over — bounded
+    * et al. '07) — [[hllGroupAgg]] over one group: the 48-bit value hash
+    * splits into a 2^bucketBits-way register index (top bits) and a
+    * suffix whose leading-zeros rank (zeros+1 = suffixBits+1 −
+    * bitLength(suffix); the oracle computes the same integer as
+    * `length(bin(suffix))`) each register MAXes over — bounded
     * mergeable state (m registers, <= 6 bits each; sketches over
     * disjoint corpora merge register-wise by max, the HLL contract KMV
     * lacks a fixed-size analogue of). The harmonic denominator
@@ -386,55 +317,35 @@ object Sketches {
     * Output one row: (m, filled, s, est_distinct). */
   def hllDistinct(df: DataFrame, valueCol: String,
                   bucketBits: Int = 6): DataFrame = {
-    require(bucketBits >= 2 && bucketBits <= 8,
-      s"bucketBits must be in [2, 8], got $bucketBits")
-    val m = 1L << bucketBits
-    val suffixBits = HashBits - bucketBits
-    val sb1 = suffixBits + 1
-    val twoSuf = 1L << suffixBits
-    val hv = hash48(col(valueCol))
-    val regs = df.where(col(valueCol).isNotNull)
-      .select(shiftrightunsigned(hv, suffixBits).as("bucket"),
-        (hv % lit(twoSuf)).as("suffix"))
-      .select(col("bucket"),
-        when(col("suffix") === 0, lit(sb1))
-          .otherwise(lit(sb1) - length(bin(col("suffix")))).as("rank"))
-      .groupBy(col("bucket")).agg(max(col("rank")).as("mj"))
-    regs
-      .agg(count(lit(1)).as("filled"),
-        sum(expr(s"shiftleft(CAST(1 AS BIGINT), CAST($sb1 - mj AS INT))"))
-          .as("sobs"))
-      .select(lit(m).as("m"), col("filled"),
-        (coalesce(col("sobs"), lit(0L)) +
-          (lit(m) - col("filled")) * lit(1L << sb1)).as("s"))
-      .select(col("m"), col("filled"), col("s"),
-        expr(s"(709 * ((${m * m} * CAST(${1L << sb1} AS BIGINT)) DIV s)) " +
-          "DIV 1000").as("est_distinct"))
+    val sk = udaf(hllGroupAgg(bucketBits))
+    df.where(col(valueCol).isNotNull)
+      .agg(sk(hash48(col(valueCol))).as("h"))
+      .select(lit(1L << bucketBits).as("m"), col("h._1").as("filled"),
+        col("h._2").as("s"), col("h._3").as("est_distinct"))
   }
 
-  /** Fixed-size HLL register buffer for the per-group tier: m bytes,
-    * period — unlike [[KmvBuffer]] it never grows with the data, so a
-    * billion-group aggregation carries exactly m bytes per group
-    * through the hash-agg. */
+  /** Fixed-size HLL register buffer: m bytes, period — unlike
+    * [[KmvBuffer]] it never grows with the data, so a billion-group
+    * aggregation carries exactly m bytes per group through the
+    * hash-agg. */
   final case class HllBuffer(regs: Array[Byte])
 
-  /** Per-group [[hllDistinct]] as a typed Aggregator over pre-hashed
-    * 48-bit values ([[hash48Col]] — same input convention as
+  /** The HLL sketch ([[hllDistinct]]) as a typed Aggregator over
+    * pre-hashed 48-bit values ([[hash48Col]] — same input convention as
     * [[kmvGroupAgg]]): registers max in place, partials merge
-    * register-wise (the HLL merge), and finish computes the IDENTICAL
-    * all-integer raw estimator as the one-shot form (same truncation
-    * order, so the two tiers and any external replay agree exactly).
-    * Output per group: (filled, s, est_distinct). */
-  def hllGroupAgg(bucketBits: Int): org.apache.spark.sql.expressions
-      .Aggregator[java.lang.Long, HllBuffer, (Long, Long, Long)] = {
+    * register-wise (the HLL merge), and finish computes the all-integer
+    * raw estimator documented on [[hllDistinct]] (fixed truncation
+    * order, so any external replay agrees exactly). Output per group:
+    * (filled, s, est_distinct). */
+  def hllGroupAgg(bucketBits: Int)
+      : Aggregator[java.lang.Long, HllBuffer, (Long, Long, Long)] = {
     require(bucketBits >= 2 && bucketBits <= 8,
       s"bucketBits must be in [2, 8], got $bucketBits")
     val m = 1 << bucketBits
     val suffixBits = HashBits - bucketBits
     val sb1 = suffixBits + 1
     val mask = (1L << suffixBits) - 1
-    new org.apache.spark.sql.expressions
-        .Aggregator[java.lang.Long, HllBuffer, (Long, Long, Long)] {
+    new Aggregator[java.lang.Long, HllBuffer, (Long, Long, Long)] {
       override def zero: HllBuffer = HllBuffer(new Array[Byte](m))
       override def reduce(b: HllBuffer, hv: java.lang.Long): HllBuffer = {
         if (hv == null) return b
@@ -466,12 +377,9 @@ object Sketches {
         }
         (filled, s, 709L * ((m.toLong * m * (1L << sb1)) / s) / 1000L)
       }
-      override def bufferEncoder: org.apache.spark.sql.Encoder[HllBuffer] =
-        org.apache.spark.sql.Encoders.product[HllBuffer]
-      override def outputEncoder
-          : org.apache.spark.sql.Encoder[(Long, Long, Long)] =
-        Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
-          Encoders.scalaLong)
+      override def bufferEncoder: Encoder[HllBuffer] =
+        Encoders.product[HllBuffer]
+      override def outputEncoder: Encoder[(Long, Long, Long)] = longs3
     }
   }
 
@@ -500,63 +408,66 @@ object Sketches {
     counters.keySet().iterator().asScala.toList.iterator
   }
 
-  /** PER-GROUP KMV distinct sketch as a typed [[org.apache.spark.sql
-    * .expressions.Aggregator]] — the custom-aggregate extension tier:
-    * the GLOBAL sketch ([[kmvDistinct]]) runs as a mapPartitions heap,
-    * but "distinct urlkeys per HOST over 100 TB" needs the sketch to
-    * live INSIDE a groupBy aggregation buffer so Spark's hash aggregate
-    * owns the grouping (map-side partial sketches merge exactly — KMV's
-    * union-then-truncate IS its merge). Register with
-    * `functions.udaf(kmvGroupAgg(k))`; input is the 48-bit value hash
-    * (project [[hash48Col]] first so the crypto work stays in codegen),
-    * output the same (n_mins, h_k, est_distinct) struct as the global
-    * sketch.
-    *
-    * Buffer = sorted distinct Array[Long] capped at k: admission is a
-    * binary search; the O(k) arraycopy only runs on admission, which
-    * after warm-up is rare (the k-th smallest of n hashes admits with
-    * probability ~k/n). */
+  /** KMV distinct buffer: the sorted distinct Array[Long] of the k
+    * smallest hashes seen. Admission is a binary search; the O(k)
+    * arraycopy only runs on admission, which after warm-up is rare (the
+    * k-th smallest of n hashes admits with probability ~k/n). */
   final case class KmvBuffer(mins: Array[Long])
 
-  def kmvGroupAgg(k: Int): org.apache.spark.sql.expressions
-      .Aggregator[java.lang.Long, KmvBuffer, (Long, Long, Long)] = {
+  /** The one KMV distinct fold — [[kmvGroupAgg]] reduces it to the
+    * estimate, [[kmvSetOps]] keeps the mins. Map-side partial sketches
+    * merge exactly: KMV's union-then-truncate IS its merge. */
+  private abstract class KmvAgg[OUT](k: Int)
+      extends Aggregator[java.lang.Long, KmvBuffer, OUT] {
     require(k >= 2 && k <= 32768, s"k must be in [2, 32768], got $k")
-    new org.apache.spark.sql.expressions
-        .Aggregator[java.lang.Long, KmvBuffer, (Long, Long, Long)] {
-      override def zero: KmvBuffer = KmvBuffer(Array.empty[Long])
-      private def insert(b: KmvBuffer, hv: Long): KmvBuffer = {
-        val a = b.mins
-        val pos = java.util.Arrays.binarySearch(a, hv)
-        if (pos >= 0) return b                       // already present
-        if (a.length >= k && hv > a(a.length - 1)) return b
-        val ins = -pos - 1
-        val n = math.min(a.length + 1, k)
-        val out = new Array[Long](n)
-        System.arraycopy(a, 0, out, 0, ins)
-        out(ins) = hv
-        System.arraycopy(a, ins, out, ins + 1, n - ins - 1)
-        KmvBuffer(out)
+    override def zero: KmvBuffer = KmvBuffer(Array.empty[Long])
+    override def reduce(b: KmvBuffer, hv: java.lang.Long): KmvBuffer = {
+      if (hv == null) return b
+      val h = hv.longValue()
+      val a = b.mins
+      val pos = java.util.Arrays.binarySearch(a, h)
+      val ins = -pos - 1
+      if (pos >= 0 || ins >= k) return b       // held, or beyond the k-th
+      val n = math.min(a.length + 1, k)
+      val out = new Array[Long](n)
+      System.arraycopy(a, 0, out, 0, ins)
+      out(ins) = h
+      System.arraycopy(a, ins, out, ins + 1, n - ins - 1)
+      KmvBuffer(out)
+    }
+    override def merge(x: KmvBuffer, y: KmvBuffer): KmvBuffer = {
+      // both sides are sorted+distinct: one linear merge-and-truncate
+      // (an element-wise insert fold would be O(k^2) copies per merge
+      // — the hot path of map-side partial combination)
+      val a = x.mins; val b = y.mins
+      if (a.isEmpty) return y
+      if (b.isEmpty) return x
+      val out = new Array[Long](math.min(a.length + b.length, k))
+      var i = 0; var j = 0; var o = 0
+      while (o < out.length && (i < a.length || j < b.length)) {
+        val takeA = j >= b.length || (i < a.length && a(i) <= b(j))
+        val v = if (takeA) a(i) else b(j)
+        if (takeA) i += 1 else j += 1
+        if (o == 0 || out(o - 1) != v) { out(o) = v; o += 1 }
       }
-      override def reduce(b: KmvBuffer, hv: java.lang.Long): KmvBuffer =
-        if (hv == null) b else insert(b, hv.longValue())
-      override def merge(x: KmvBuffer, y: KmvBuffer): KmvBuffer = {
-        // both sides are sorted+distinct: one linear merge-and-truncate
-        // (an element-wise insert fold would be O(k^2) copies per merge
-        // — the hot path of map-side partial combination)
-        val a = x.mins; val b = y.mins
-        if (a.isEmpty) return y
-        if (b.isEmpty) return x
-        val out = new Array[Long](math.min(a.length + b.length, k))
-        var i = 0; var j = 0; var o = 0
-        while (o < out.length && (i < a.length || j < b.length)) {
-          val takeA = j >= b.length || (i < a.length && a(i) <= b(j))
-          val v = if (takeA) a(i) else b(j)
-          if (takeA) i += 1 else j += 1
-          if (o == 0 || out(o - 1) != v) { out(o) = v; o += 1 }
-        }
-        KmvBuffer(if (o == out.length) out
-          else java.util.Arrays.copyOf(out, o))
-      }
+      KmvBuffer(if (o == out.length) out
+        else java.util.Arrays.copyOf(out, o))
+    }
+    override def bufferEncoder: Encoder[KmvBuffer] =
+      Encoders.product[KmvBuffer]
+  }
+
+  /** The KMV distinct sketch ([[kmvDistinct]]) as a typed Aggregator —
+    * the custom-aggregate extension tier: "distinct urlkeys per HOST
+    * over 100 TB" needs the sketch to live INSIDE a groupBy aggregation
+    * buffer so Spark's hash aggregate owns the grouping. Register with
+    * `functions.udaf(kmvGroupAgg(k))`; input is the 48-bit value hash
+    * (project [[hash48Col]] first so the crypto work stays in codegen),
+    * output the (n_mins, h_k, est_distinct) estimate, (0, 0, 0) for an
+    * empty group. */
+  def kmvGroupAgg(k: Int)
+      : Aggregator[java.lang.Long, KmvBuffer, (Long, Long, Long)] =
+    new KmvAgg[(Long, Long, Long)](k) {
       override def finish(b: KmvBuffer): (Long, Long, Long) = {
         val n = b.mins.length.toLong
         if (n == 0L) (0L, 0L, 0L)
@@ -566,144 +477,122 @@ object Sketches {
           (n, hk, est)
         }
       }
-      override def bufferEncoder: org.apache.spark.sql.Encoder[KmvBuffer] =
-        org.apache.spark.sql.Encoders.product[KmvBuffer]
-      override def outputEncoder
-          : org.apache.spark.sql.Encoder[(Long, Long, Long)] =
-        Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
-          Encoders.scalaLong)
+      override def outputEncoder: Encoder[(Long, Long, Long)] = longs3
     }
-  }
 
-  /** The sketch's input hash as a public projection (the same 48-bit
-    * md5 prefix as the global sketch — oracle-replayable). */
-  def hash48Col(value: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    hash48(value)
+  /** Counting-KMV buffer: the k smallest distinct (hash, value) pairs,
+    * sorted by hash then value (the value breaks 48-bit hash ties, as
+    * the oracles' `ORDER BY hv, v` does), each with its EXACT occurrence
+    * count. Evicted counts never matter: a pair refused by or evicted
+    * from a partial had k smaller pairs in that partial alone, which
+    * survive every merge, so it can never be a final survivor — and
+    * refusal is permanent (the k-th pair only decreases), so every
+    * occurrence of a surviving pair was counted while it was held. */
+  final case class KmvQBuf(hs: Array[Long], vs: Array[Long],
+                           cs: Array[Long])
+
+  /** The one counting-KMV fold behind [[kmvQuantiles]] and
+    * [[kmvQuantilesGroupAgg]]; each reads its own probes in `finish`.
+    * Input is the (hash48, value) pair — hash in codegen via
+    * [[hash48Col]], never a digest per row inside the buffer. */
+  private abstract class KmvQuantilesAgg[OUT](k: Int)
+      extends Aggregator[(Long, Long), KmvQBuf, OUT] {
+    require(k >= 2 && k <= 32768, s"k must be in [2, 32768], got $k")
+    override def zero: KmvQBuf =
+      KmvQBuf(Array.empty, Array.empty, Array.empty)
+
+    private def cmp(h1: Long, v1: Long, h2: Long, v2: Long): Int = {
+      val c = java.lang.Long.compare(h1, h2)
+      if (c != 0) c else java.lang.Long.compare(v1, v2)
+    }
+
+    /** Index of (h, v) in `b`, else -(insertion point) - 1 — the
+      * `Arrays.binarySearch` contract on the (hash, value) order. */
+    private def search(b: KmvQBuf, h: Long, v: Long): Int = {
+      var lo = 0; var hi = b.hs.length - 1
+      while (lo <= hi) {
+        val mid = (lo + hi) >>> 1
+        val c = cmp(b.hs(mid), b.vs(mid), h, v)
+        if (c == 0) return mid
+        if (c < 0) lo = mid + 1 else hi = mid - 1
+      }
+      -lo - 1
+    }
+
+    override def reduce(b: KmvQBuf, in: (Long, Long)): KmvQBuf = {
+      val (h, v) = in
+      val pos = search(b, h, v)
+      val ins = -pos - 1
+      if (pos >= 0) { b.cs(pos) += 1L; b }        // exact count bump
+      else if (ins >= k) b                        // beyond the k-th pair
+      else {
+        val n = math.min(b.hs.length + 1, k)
+        val hs = new Array[Long](n); val vs = new Array[Long](n)
+        val cs = new Array[Long](n)
+        System.arraycopy(b.hs, 0, hs, 0, ins)
+        System.arraycopy(b.vs, 0, vs, 0, ins)
+        System.arraycopy(b.cs, 0, cs, 0, ins)
+        hs(ins) = h; vs(ins) = v; cs(ins) = 1L
+        System.arraycopy(b.hs, ins, hs, ins + 1, n - ins - 1)
+        System.arraycopy(b.vs, ins, vs, ins + 1, n - ins - 1)
+        System.arraycopy(b.cs, ins, cs, ins + 1, n - ins - 1)
+        KmvQBuf(hs, vs, cs)
+      }
+    }
+
+    /** Both sides sorted: one linear merge-and-truncate, counts of equal
+      * (hash, value) pairs summed. */
+    override def merge(x: KmvQBuf, y: KmvQBuf): KmvQBuf = {
+      if (x.hs.isEmpty) return y
+      if (y.hs.isEmpty) return x
+      val n = math.min(x.hs.length + y.hs.length, k)
+      val hs = new Array[Long](n); val vs = new Array[Long](n)
+      val cs = new Array[Long](n)
+      var i = 0; var j = 0; var o = 0
+      while (o < n && (i < x.hs.length || j < y.hs.length)) {
+        val c = if (i >= x.hs.length) 1 else if (j >= y.hs.length) -1
+          else cmp(x.hs(i), x.vs(i), y.hs(j), y.vs(j))
+        if (c <= 0) {
+          hs(o) = x.hs(i); vs(o) = x.vs(i); cs(o) = x.cs(i); i += 1
+          if (c == 0) { cs(o) += y.cs(j); j += 1 }
+        } else {
+          hs(o) = y.hs(j); vs(o) = y.vs(j); cs(o) = y.cs(j); j += 1
+        }
+        o += 1
+      }
+      if (o == n) KmvQBuf(hs, vs, cs)
+      else KmvQBuf(java.util.Arrays.copyOf(hs, o),
+        java.util.Arrays.copyOf(vs, o), java.util.Arrays.copyOf(cs, o))
+    }
+
+    /** Per probe p (basis points), the smallest sampled value whose
+      * cumulative count reaches p/10000 of the sampled total
+      * (cum·10⁴ ≥ p·total). `b` must be non-empty. */
+    protected def probes(b: KmvQBuf, ps: Seq[Int]): Seq[Long] = {
+      val order = b.vs.indices.sortBy(b.vs(_))
+      val cum = order.scanLeft(0L)(_ + b.cs(_)).tail
+      ps.map(p => b.vs(order(cum.indexWhere(_ * 10000L >= p * cum.last))))
+    }
+
+    override def bufferEncoder: Encoder[KmvQBuf] = Encoders.product[KmvQBuf]
+  }
 
   /** Per-group KMV approximate QUANTILES as a typed Aggregator — the
     * missing cell next to q74 (global approx) and q58 (per-group
     * exact): "p50/p99 doc length per source" without sorting whole
-    * groups. The buffer is a counting KMV: the group's k smallest
-    * distinct values by 48-bit hash, each with its EXACT occurrence
-    * count — the same eviction-soundness argument as the global
-    * one-pass heap, group-scoped (a value evicted from or refused by a
-    * partial had k group-local smaller hashes in that partition, which
-    * survive every merge, so it can never be a global survivor and its
-    * lost counts never matter). Finish sorts the sample by VALUE and
-    * probes the cumulative counts at 2500/5000/9900 bp with the q74
-    * convention (smallest v with cum·10⁴ ≥ p·total). Input is the
-    * (hash48, value) pair — hash in codegen via [[hash48Col]], never a
-    * digest per row inside the buffer. */
-  final case class KmvQBuf(hs: Array[Long], vs: Array[Long],
-                           cs: Array[Long])
-
-  def kmvQuantilesGroupAgg(k: Int): org.apache.spark.sql.expressions
-      .Aggregator[(Long, Long), KmvQBuf, (Long, Long, Long)] = {
-    require(k >= 2 && k <= 32768, s"k must be in [2, 32768], got $k")
-    new org.apache.spark.sql.expressions
-        .Aggregator[(Long, Long), KmvQBuf, (Long, Long, Long)] {
-      override def zero: KmvQBuf =
-        KmvQBuf(Array.empty, Array.empty, Array.empty)
-
-      override def reduce(b: KmvQBuf, in: (Long, Long)): KmvQBuf = {
-        val (hv, v) = in
-        val pos = java.util.Arrays.binarySearch(b.hs, hv)
-        if (pos >= 0) { b.cs(pos) += 1L; b }        // exact count bump
-        else if (b.hs.length >= k && hv > b.hs(b.hs.length - 1)) b
-        else {
-          val ins = -pos - 1
-          val n = math.min(b.hs.length + 1, k)
-          val hs = new Array[Long](n); val vs = new Array[Long](n)
-          val cs = new Array[Long](n)
-          System.arraycopy(b.hs, 0, hs, 0, ins)
-          System.arraycopy(b.vs, 0, vs, 0, ins)
-          System.arraycopy(b.cs, 0, cs, 0, ins)
-          hs(ins) = hv; vs(ins) = v; cs(ins) = 1L
-          System.arraycopy(b.hs, ins, hs, ins + 1, n - ins - 1)
-          System.arraycopy(b.vs, ins, vs, ins + 1, n - ins - 1)
-          System.arraycopy(b.cs, ins, cs, ins + 1, n - ins - 1)
-          KmvQBuf(hs, vs, cs)
+    * groups. The buffer is the group's counting KMV ([[KmvQBuf]]);
+    * finish probes the cumulative counts at 2500/5000/9900 bp with the
+    * [[kmvQuantiles]] convention, (0, 0, 0) for an empty group. */
+  def kmvQuantilesGroupAgg(k: Int)
+      : Aggregator[(Long, Long), KmvQBuf, (Long, Long, Long)] =
+    new KmvQuantilesAgg[(Long, Long, Long)](k) {
+      override def finish(b: KmvQBuf): (Long, Long, Long) =
+        if (b.hs.isEmpty) (0L, 0L, 0L)
+        else probes(b, Seq(2500, 5000, 9900)) match {
+          case Seq(p25, p50, p99) => (p25, p50, p99)
         }
-      }
-
-      override def merge(x: KmvQBuf, y: KmvQBuf): KmvQBuf = {
-        if (x.hs.isEmpty) return y
-        if (y.hs.isEmpty) return x
-        val n = math.min(x.hs.length + y.hs.length, k)
-        val hs = new Array[Long](n); val vs = new Array[Long](n)
-        val cs = new Array[Long](n)
-        var i = 0; var j = 0; var o = 0
-        while (o < n && (i < x.hs.length || j < y.hs.length)) {
-          val takeX = j >= y.hs.length ||
-            (i < x.hs.length && x.hs(i) <= y.hs(j))
-          if (takeX && j < y.hs.length && i < x.hs.length &&
-              x.hs(i) == y.hs(j)) {
-            hs(o) = x.hs(i); vs(o) = x.vs(i); cs(o) = x.cs(i) + y.cs(j)
-            i += 1; j += 1; o += 1
-          } else if (takeX) {
-            hs(o) = x.hs(i); vs(o) = x.vs(i); cs(o) = x.cs(i)
-            i += 1; o += 1
-          } else {
-            hs(o) = y.hs(j); vs(o) = y.vs(j); cs(o) = y.cs(j)
-            j += 1; o += 1
-          }
-        }
-        if (o == n) KmvQBuf(hs, vs, cs)
-        else KmvQBuf(java.util.Arrays.copyOf(hs, o),
-          java.util.Arrays.copyOf(vs, o), java.util.Arrays.copyOf(cs, o))
-      }
-
-      override def finish(b: KmvQBuf): (Long, Long, Long) = {
-        if (b.hs.isEmpty) return (0L, 0L, 0L)
-        val order = b.vs.indices.sortBy(b.vs(_))
-        val total = b.cs.sum
-        def probe(pBp: Long): Long = {
-          var cum = 0L
-          var out = b.vs(order.last)
-          var found = false
-          order.foreach { idx =>
-            if (!found) {
-              cum += b.cs(idx)
-              if (cum * 10000L >= pBp * total) { out = b.vs(idx); found = true }
-            }
-          }
-          out
-        }
-        (probe(2500L), probe(5000L), probe(9900L))
-      }
-
-      override def bufferEncoder: org.apache.spark.sql.Encoder[KmvQBuf] =
-        org.apache.spark.sql.Encoders.product[KmvQBuf]
-      override def outputEncoder
-          : org.apache.spark.sql.Encoder[(Long, Long, Long)] =
-        Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
-          Encoders.scalaLong)
+      override def outputEncoder: Encoder[(Long, Long, Long)] = longs3
     }
-  }
-
-  /** Per-group KMV MIN-SET aggregator — identical admission/merge
-    * machinery to [[kmvGroupAgg]], but the finish keeps the sorted min
-    * ARRAY (wrapped in the buffer struct) instead of reducing it: the
-    * carrier for sketch SET OPERATIONS ([[kmvSetOps]]), where the mins
-    * themselves are the mergeable summary. Internal-facing — gate
-    * queries only ever emit scalar reductions of it. */
-  def kmvMinsAgg(k: Int): org.apache.spark.sql.expressions
-      .Aggregator[java.lang.Long, KmvBuffer, KmvBuffer] = {
-    val inner = kmvGroupAgg(k)
-    new org.apache.spark.sql.expressions
-        .Aggregator[java.lang.Long, KmvBuffer, KmvBuffer] {
-      override def zero: KmvBuffer = inner.zero
-      override def reduce(b: KmvBuffer, hv: java.lang.Long): KmvBuffer =
-        inner.reduce(b, hv)
-      override def merge(x: KmvBuffer, y: KmvBuffer): KmvBuffer =
-        inner.merge(x, y)
-      override def finish(b: KmvBuffer): KmvBuffer = b
-      override def bufferEncoder: org.apache.spark.sql.Encoder[KmvBuffer] =
-        org.apache.spark.sql.Encoders.product[KmvBuffer]
-      override def outputEncoder: org.apache.spark.sql.Encoder[KmvBuffer] =
-        org.apache.spark.sql.Encoders.product[KmvBuffer]
-    }
-  }
 
   /** KMV sketch SET OPERATIONS per group — distinct-count estimates for
     * two corpus versions, their union, their intersection, and a Jaccard
@@ -726,8 +615,11 @@ object Sketches {
     * jaccard_bp, est_intersect). */
   def kmvSetOps(a: DataFrame, b: DataFrame, groupCol: String,
                 hvCol: String, k: Int): DataFrame = {
-    require(k >= 2 && k <= 32768, s"k must be in [2, 32768], got $k")
-    val sk = org.apache.spark.sql.functions.udaf(kmvMinsAgg(k))
+    val sk = udaf(new KmvAgg[KmvBuffer](k) {
+      override def finish(b: KmvBuffer): KmvBuffer = b
+      override def outputEncoder: Encoder[KmvBuffer] =
+        Encoders.product[KmvBuffer]
+    })
     def side(df: DataFrame, out: String): DataFrame =
       df.groupBy(col(groupCol)).agg(sk(col(hvCol)).as(out))
     // SQL-string form so the intersect estimate composes under integer
@@ -763,11 +655,10 @@ object Sketches {
     * cross-engine). Output: the rank-ordered (score, id) pairs. */
   final case class TopKBuffer(scores: Array[Long], ids: Array[Long])
 
-  def topKGroupAgg(k: Int): org.apache.spark.sql.expressions
-      .Aggregator[(Long, Long), TopKBuffer, Seq[(Long, Long)]] = {
+  def topKGroupAgg(k: Int)
+      : Aggregator[(Long, Long), TopKBuffer, Seq[(Long, Long)]] = {
     require(k >= 1 && k <= 4096, s"k must be in [1, 4096], got $k")
-    new org.apache.spark.sql.expressions
-        .Aggregator[(Long, Long), TopKBuffer, Seq[(Long, Long)]] {
+    new Aggregator[(Long, Long), TopKBuffer, Seq[(Long, Long)]] {
       // ranksBefore: (s1, i1) outranks (s2, i2)
       private def before(s1: Long, i1: Long, s2: Long, i2: Long): Boolean =
         s1 > s2 || (s1 == s2 && i1 < i2)
@@ -806,73 +697,10 @@ object Sketches {
       }
       override def finish(b: TopKBuffer): Seq[(Long, Long)] =
         b.scores.toIndexedSeq.zip(b.ids.toIndexedSeq)
-      override def bufferEncoder: org.apache.spark.sql.Encoder[TopKBuffer] =
-        org.apache.spark.sql.Encoders.product[TopKBuffer]
-      override def outputEncoder
-          : org.apache.spark.sql.Encoder[Seq[(Long, Long)]] =
+      override def bufferEncoder: Encoder[TopKBuffer] =
+        Encoders.product[TopKBuffer]
+      override def outputEncoder: Encoder[Seq[(Long, Long)]] =
         org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
     }
-  }
-
-  /** Per-partition bounded bottom-k over DISTINCT elements: a TreeSet
-    * holds the partition's <= k smallest (dedup by membership, strict-lt
-    * admission so equal elements never evict, poll after add); O(log k)
-    * per element, O(k) memory. Shared by both KMV sketches so the
-    * admission invariants live in exactly one place. */
-  private def bottomK[T](it: Iterator[T], k: Int)
-                        (implicit ord: Ordering[T]): Iterator[T] = {
-    val heap = new java.util.TreeSet[T](ord)
-    it.foreach { e =>
-      if (heap.size < k) heap.add(e)
-      else if (ord.lt(e, heap.last())) {
-        heap.add(e); if (heap.size > k) heap.pollLast()
-      }
-    }
-    import scala.jdk.CollectionConverters._
-    heap.iterator().asScala
-  }
-
-  /** Bounded heap of the k smallest (hash, value) pairs with exact
-    * occurrence counts for the pairs currently held. Re-occurrences of a
-    * held pair increment in O(1) (hash lookup, no tree op); admission /
-    * eviction touch the tree only. See the kmvQuantiles one-pass plan
-    * for why evicted counts are safely discarded. */
-  private def bottomKCounting(it: Iterator[(Long, Long)], k: Int)
-      : Iterator[(Long, Long, Long)] = {
-    val ord = Ordering.Tuple2[Long, Long]
-    val heap = new java.util.TreeMap[(Long, Long), Array[Long]](ord)
-    val counts = new java.util.HashMap[(Long, Long), Array[Long]]()
-    it.foreach { e =>
-      val held = counts.get(e)
-      if (held != null) held(0) += 1L
-      else if (heap.size < k || ord.lt(e, heap.lastKey())) {
-        val c = Array(1L)
-        heap.put(e, c); counts.put(e, c)
-        if (heap.size > k) counts.remove(heap.pollLastEntry().getKey)
-      }
-    }
-    import scala.jdk.CollectionConverters._
-    heap.entrySet().iterator().asScala
-      .map(en => (en.getKey._1, en.getKey._2, en.getValue()(0)))
-  }
-
-  /** Merge stage of the counting heap: same bottom-k order, counts of
-    * equal (hash, value) pairs SUMMED across partition summaries. */
-  private def bottomKSumming(it: Iterator[(Long, Long, Long)], k: Int)
-      : Iterator[(Long, Long, Long)] = {
-    val ord = Ordering.Tuple2[Long, Long]
-    val heap = new java.util.TreeMap[(Long, Long), Array[Long]](ord)
-    it.foreach { case (hv, v, cnt) =>
-      val key = (hv, v)
-      val held = heap.get(key)
-      if (held != null) held(0) += cnt
-      else if (heap.size < k || ord.lt(key, heap.lastKey())) {
-        heap.put(key, Array(cnt))
-        if (heap.size > k) heap.pollLastEntry()
-      }
-    }
-    import scala.jdk.CollectionConverters._
-    heap.entrySet().iterator().asScala
-      .map(en => (en.getKey._1, en.getKey._2, en.getValue()(0)))
   }
 }

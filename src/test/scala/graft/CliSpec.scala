@@ -182,17 +182,25 @@ class CliSpec extends AnyFunSuite with SparkTestSession {
     Files.writeString(alpha, "com,a)/\ncom,m)/\n")
     val json = dir.resolve("splits.json")
     Files.writeString(json, """[3, ["x", "com,m)/", ""]]""")
+    val in = dir.resolve("in.cdx")
+    Files.writeString(in, "com,a)/ 20120101000000 a\ncom,z)/ 20120101000000 z\n")
+    // the verb's own stderr carries the notes: System.err is not swapped
     val err = new ByteArrayOutputStream()
-    val saved = System.err
-    System.setErr(new PrintStream(err, true, "UTF-8"))
-    try Seq(alpha, json).foreach(p =>
-      assert(graft.operators.Boundaries.fromAnySplitFile(p.toString, conf) ==
-        IndexedSeq("com,m)/")))
-    finally System.setErr(saved)
-    // only the two notes: a Spark thread may log meanwhile
-    val notes = err.toString("UTF-8").linesIterator.filter(l =>
-      l.startsWith("NOTE: split file") || l.startsWith("WARN: splits file")).toSeq
+    Seq(alpha, json).foreach { p =>
+      val out = new ByteArrayOutputStream()
+      val cluster = dir.resolve(s"cluster-${p.getFileName}")
+      assert(GraftCli.run(Seq("cluster-build", p.toString, in.toString,
+        cluster.toString, "--shards", "2"), new PrintStream(out),
+        new PrintStream(err, true, "UTF-8")) == 0)
+      assert(out.toString("UTF-8") == s"built $cluster\n")
+      // both files load the one boundary com,m)/: two populated shards
+      assert(graft.sources.zipnum.ZipNumIndex.load(cluster.toString, conf)
+        .blocks.map(_.part).distinct.size == 2)
+    }
+    val notes = err.toString("UTF-8").linesIterator.toSeq
     assert(notes.size == 2)
+    assert(notes(0).startsWith("NOTE: split file"), notes(0))
+    assert(notes(1).startsWith("WARN: splits file"), notes(1))
     notes.foreach(n => assert(n.forall(_ < 0x80), n))
   }
 

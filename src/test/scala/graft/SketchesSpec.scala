@@ -124,24 +124,29 @@ class SketchesSpec extends AnyFunSuite with SparkTestSession {
     assert(math.abs(a(5000) - median).toDouble / median < 0.15)
   }
 
-  test("kmv quantiles: preAggregate plan is value-identical to two-pass") {
-    // duplicated + skewed multiset, multiple partitions: the one-scan
-    // distinct-count plan and the two-scan bounded-wire plan must agree
-    // bit for bit (same sample, same counts, same fold)
-    val vals = (1 to 5000).flatMap(i => Seq.fill(1 + i % 7)((i * 31) % 400))
-    for (parts <- Seq(1, 13)) {
-      val df = vals.toDF("x").repartition(parts)
-      val two = Sketches.kmvQuantiles(df, "x", k = 64)
-        .as[(Int, Long)].collect().toMap
-      val one = Sketches.kmvQuantiles(df, "x", k = 64, preAggregate = true)
-        .as[(Int, Long)].collect().toMap
-      assert(one == two, s"parts=$parts")
-    }
-    // empty input: both plans produce zero rows, not null probes
+  test("kmv quantiles: empty input yields zero rows, not null probes") {
     val empty = Seq.empty[Int].toDF("x")
     assert(Sketches.kmvQuantiles(empty, "x", k = 8).count() == 0)
-    assert(Sketches.kmvQuantiles(empty, "x", k = 8,
-      preAggregate = true).count() == 0)
+  }
+
+  test("kmvQuantilesGroupAgg: equal hashes with different values stay " +
+      "separate samples, in reduce and in merge") {
+    import org.apache.spark.sql.functions.udaf
+    // pre-hashed (hv, v) rows: one 48-bit hash shared by v=1 (once) and
+    // v=2 (three times). Keyed on (hv, v): p25 = 1, p50 = p99 = 2; keyed
+    // on the hash alone both would merge into v=1 with count 4.
+    val rows = Seq(("g", 5L, 1L)) ++ Seq.fill(3)(("g", 5L, 2L))
+    val sk = udaf(Sketches.kmvQuantilesGroupAgg(8))
+    val got = rows.toDF("g", "hv", "v").repartition(1)
+      .groupBy($"g").agg(sk($"hv", $"v").as("q"))
+      .select($"q._1", $"q._2", $"q._3").as[(Long, Long, Long)].collect()
+    assert(got.toSeq == Seq((1L, 2L, 2L)))
+    // merge: the tied hash arrives from two partials, in either order
+    val agg = Sketches.kmvQuantilesGroupAgg(8)
+    val one = agg.reduce(agg.zero, (5L, 1L))
+    val three = Seq.fill(3)((5L, 2L)).foldLeft(agg.zero)(agg.reduce)
+    for ((x, y) <- Seq((one, three), (three, one)))
+      assert(agg.finish(agg.merge(x, y)) == ((1L, 2L, 2L)))
   }
 
   test("kmvQuantilesGroupAgg: exact weighted quantiles below k; " +

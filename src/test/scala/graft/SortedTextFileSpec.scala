@@ -10,6 +10,9 @@ import graft.sources.{SortedTextFile, SplitFile}
 class SortedTextFileSpec extends AnyFunSuite {
 
   private val conf = new Configuration()
+  // the loaders' NOTE/WARN lines; CliSpec checks where a verb sends them
+  private val notes = new java.io.PrintStream(
+    new java.io.ByteArrayOutputStream(), true, "UTF-8")
 
   private def mkSorted(n: Int): (String, Seq[String]) = {
     val lines = (0 until n).map(i => f"key$i%06d value-$i")
@@ -65,19 +68,19 @@ class SortedTextFileSpec extends AnyFunSuite {
     import graft.operators.Boundaries
     // real first key: the reference clamps keys below 'a' into shard 0
     // (AlphaPartitioner.java:34-38) — interiors are lines 2..n
-    assert(Boundaries.fromSplitFile(writeSplit("a\nm\nt\n"), conf) ==
+    assert(Boundaries.fromSplitFile(writeSplit("a\nm\nt\n"), conf, notes) ==
       IndexedSeq("m", "t"))
     // conventional empty first line: same interiors
-    assert(Boundaries.fromSplitFile(writeSplit("\nm\nt\n"), conf) ==
+    assert(Boundaries.fromSplitFile(writeSplit("\nm\nt\n"), conf, notes) ==
       IndexedSeq("m", "t"))
     // one line = one shard, no interior boundaries
-    assert(Boundaries.fromSplitFile(writeSplit("a\n"), conf).isEmpty)
+    assert(Boundaries.fromSplitFile(writeSplit("a\n"), conf, notes).isEmpty)
   }
 
   test("fromSplitFile strips CR (a CRLF split file used to yield \\r-" +
       "tainted boundaries that silently skewed shard ranges)") {
     import graft.operators.Boundaries
-    assert(Boundaries.fromSplitFile(writeSplit("a\r\nm\r\nt\r\n"), conf) ==
+    assert(Boundaries.fromSplitFile(writeSplit("a\r\nm\r\nt\r\n"), conf, notes) ==
       IndexedSeq("m", "t"))
   }
 
@@ -93,10 +96,10 @@ class SortedTextFileSpec extends AnyFunSuite {
     import graft.operators.Boundaries
     assert(Boundaries.fromJsonSplits(
       writeJson("""[12345, ["", "com,example)/", "org,example)/", ""]]"""),
-      conf) == IndexedSeq("com,example)/", "org,example)/"))
+      conf, notes) == IndexedSeq("com,example)/", "org,example)/"))
     // only the two sentinels: zero interior boundaries = one partition
     assert(Boundaries.fromJsonSplits(
-      writeJson("""[0, ["", ""]]"""), conf).isEmpty)
+      writeJson("""[0, ["", ""]]"""), conf, notes).isEmpty)
   }
 
   test("fromJsonSplits aborts loudly on malformed roots and non-string " +
@@ -104,31 +107,31 @@ class SortedTextFileSpec extends AnyFunSuite {
     import graft.operators.Boundaries
     // not JSON at all
     intercept[IllegalArgumentException] {
-      Boundaries.fromJsonSplits(writeJson("not json"), conf)
+      Boundaries.fromJsonSplits(writeJson("not json"), conf, notes)
     }
     // root is an object, not the [lineCount, splits] array
     intercept[IllegalArgumentException] {
-      Boundaries.fromJsonSplits(writeJson("""{"splits": []}"""), conf)
+      Boundaries.fromJsonSplits(writeJson("""{"splits": []}"""), conf, notes)
     }
     // root array too short / element 1 not an array
     intercept[IllegalArgumentException] {
-      Boundaries.fromJsonSplits(writeJson("""[5]"""), conf)
+      Boundaries.fromJsonSplits(writeJson("""[5]"""), conf, notes)
     }
     intercept[IllegalArgumentException] {
-      Boundaries.fromJsonSplits(writeJson("""[5, "nope"]"""), conf)
+      Boundaries.fromJsonSplits(writeJson("""[5, "nope"]"""), conf, notes)
     }
     // splits array without its sentinels
     intercept[IllegalArgumentException] {
-      Boundaries.fromJsonSplits(writeJson("""[5, []]"""), conf)
+      Boundaries.fromJsonSplits(writeJson("""[5, []]"""), conf, notes)
     }
     // a non-string interior entry (reference getString JSONException)
     intercept[IllegalArgumentException] {
-      Boundaries.fromJsonSplits(writeJson("""[5, ["", 42, ""]]"""), conf)
+      Boundaries.fromJsonSplits(writeJson("""[5, ["", 42, ""]]"""), conf, notes)
     }
     // unsorted split points would silently mis-shard downstream
     intercept[IllegalArgumentException] {
       Boundaries.fromJsonSplits(
-        writeJson("""[5, ["", "org,b)/", "com,a)/", ""]]"""), conf)
+        writeJson("""[5, ["", "org,b)/", "com,a)/", ""]]"""), conf, notes)
     }
   }
 
@@ -136,8 +139,8 @@ class SortedTextFileSpec extends AnyFunSuite {
       "reference (ZipNumPartitioner.java:164-168)") {
     import graft.operators.Boundaries
     assert(Boundaries.fromAnySplitFile(
-      writeJson("""[9, ["", "m", "t", ""]]"""), conf) == IndexedSeq("m", "t"))
-    assert(Boundaries.fromAnySplitFile(writeSplit("a\nm\nt\n"), conf) ==
+      writeJson("""[9, ["", "m", "t", ""]]"""), conf, notes) == IndexedSeq("m", "t"))
+    assert(Boundaries.fromAnySplitFile(writeSplit("a\nm\nt\n"), conf, notes) ==
       IndexedSeq("m", "t"))
   }
 
@@ -145,11 +148,11 @@ class SortedTextFileSpec extends AnyFunSuite {
     import graft.operators.Boundaries
     // all-3-field = NAME START END (unchanged)
     assert(Boundaries.fromSplitFile(
-      writeSplit("shard0  d\nshard1 d m\nshard2 m \n"), conf) ==
+      writeSplit("shard0  d\nshard1 d m\nshard2 m \n"), conf, notes) ==
       IndexedSeq("d", "m"))
     // mixed 3-field and plain lines must fail loudly, not misparse
     intercept[IllegalArgumentException] {
-      Boundaries.fromSplitFile(writeSplit("a b c\nm\nt\n"), conf)
+      Boundaries.fromSplitFile(writeSplit("a b c\nm\nt\n"), conf, notes)
     }
   }
 }
