@@ -167,7 +167,7 @@ object ScaleRehearsal {
         // coalescing would break the edge-cache/label co-partitioning the
         // iteration count amortizes
         spark.conf.set("spark.sql.adaptive.enabled", "false")
-        val cc = ConnectedComponents(pairs, "doc_a", "doc_b")
+        val cc = ConnectedComponents.distributed(pairs, "doc_a", "doc_b")
         val stats = cc.agg(count(lit(1)).as("nodes"),
           countDistinct(col("component")).as("components")).collect()(0)
         val lshKeep = corpus.select(col("doc_id"))
@@ -351,7 +351,8 @@ object ScaleRehearsal {
         s"$label sketch not duplication-invariant at copies=$copies: " +
           s"got $g, want $want")
       println(f"[rehearsal-sketches] $label copies=$copies rows=$nRows " +
-        f"wall=${w.wallS}%.1f s ${shuffle(w)} " +
+        f"wall=${w.wallS}%.1f s shuffleRead=${w.shuffleReadBytes} B " +
+        f"shuffleWrite=${w.shuffleWriteBytes} B " +
         "(summary BIT-EQUAL to the base corpus's)")
     }
 
@@ -515,9 +516,9 @@ object ScaleRehearsal {
     * so pair count grows ~copies² — the quadratic a production SemDeDup
     * bounds by scaling K with the corpus (cluster size held constant);
     * the decades measure that quadratic honestly rather than hiding it.
-    * localBelow=0 keeps Lloyd on the distributed path (the 100 TB
-    * regime), and train/prune walls are reported separately since
-    * training amortizes over reruns at different thresholds. */
+    * Training calls Lloyd's distributed body (the 100 TB regime), and
+    * train/prune walls are reported separately since training
+    * amortizes over reruns at different thresholds. */
   private def semDedupRehearsal(spark: SparkSession, copies: Int, k: Int,
                                 sfDir: String, scratch: Path): Unit = {
     import graft.operators.llm.{AnnOps, KMeans}
@@ -535,8 +536,8 @@ object ScaleRehearsal {
         // argmax scan — pruneWall would charge ~2 redundant assignment
         // passes to the quantity the decades claim to measure
         val ((clusters, sizes), train) = measure(spark.sparkContext) {
-          val clusters = KMeans.lloyd(corpus, "vec_id", "embedding",
-            seedPred = col("vec_id") < k, iters = 3, localBelow = 0L).persist()
+          val clusters = KMeans.lloydDistributed(corpus, "vec_id",
+            "embedding", seedPred = col("vec_id") < k, iters = 3).persist()
           (clusters, clusters.groupBy(col("cluster")).count()
             .agg(count(lit(1)).as("k"), max(col("count")).as("mx"))
             .collect()(0))
@@ -665,8 +666,8 @@ object ScaleRehearsal {
       f"serveShuffleRW=${rw(serve)}")
   }
 
-  /** PageRank decades — the DISTRIBUTED power-iteration path
-    * (localBelow = 0, the plan q96's endgame bypasses at oracle scale):
+  /** PageRank decades — the DISTRIBUTED power-iteration path (the
+    * distributed body, the plan q96's endgame bypasses at oracle scale):
     * each copy contributes a disjoint 97-node subgraph plus a chain
     * edge into the next copy's subgraph, so node and edge counts BOTH
     * scale linearly and the rank mass still flows across the whole
@@ -685,7 +686,7 @@ object ScaleRehearsal {
       .repartition(cpus) // testdata is one row group (SCALE.md caveat)
     val nEdges = edges.count()
     val (stats, w) = measure(spark.sparkContext) {
-      graft.operators.GraphOps.pageRank(edges, "src", "dst", iters)
+      graft.operators.GraphOps.pageRankDistributed(edges, "src", "dst", iters)
         .agg(count(lit(1)).as("n"),
           sum(col("pr")).as("mass"), min(col("pr")).as("mn"),
           max(col("pr")).as("mx")).collect()(0)
@@ -727,7 +728,7 @@ object ScaleRehearsal {
     // search plan never reads a vector. Train + encode are timed
     // separately because they amortize over every later query batch.
     val (pqCbs, train) = measure(spark.sparkContext) {
-      AnnOps.pqTrain(big, "vec_id", "embedding",
+      AnnOps.pqTrainDistributed(big, "vec_id", "embedding",
         seedPred = col("vec_id") < 16, mSub = 4, dim = dim)
     }
     val pqCodes = AnnOps.pqEncodeWithCodebooks(
@@ -746,8 +747,9 @@ object ScaleRehearsal {
     // the composed billion-scale architecture (q128's shape): trained
     // coarse buckets prune candidates, trained PQ codes price the scan
     val (coarseCb, coarse) = measure(spark.sparkContext) {
-      KMeans.codebook(big, "vec_id", "embedding",
+      KMeans.codebookWithCountsDistributed(big, "vec_id", "embedding",
         seedPred = col("vec_id") < 16, iters = 3)
+        .map { case (id, _, s) => (id, s) }
     }
     println(f"[rehearsal-ann] ivfpq one-time: coarse train=${coarse.wallS}%.2f s " +
       s"(${coarseCb.length} buckets)")
@@ -907,8 +909,8 @@ object ScaleRehearsal {
       f"(batch-exact) maxState=$capMaxState <= $stateBound")
   }
 
-  /** k-means decades: distributed Lloyd (localBelow = 0 — the endgame
-    * stays off; this measures the path a 100 TB corpus runs) over the
+  /** k-means decades: Lloyd's distributed body (the endgame stays
+    * off; this measures the path a 100 TB corpus runs) over the
     * replicated perturbed embeddings. The claim under test: per-round
     * shuffle stays K rows × (dim+1) longs REGARDLESS of corpus size
     * (map-side partial aggregation), so total shuffle is ~flat across
@@ -919,7 +921,8 @@ object ScaleRehearsal {
     val big = perturbedEmbeddings(spark, sfDir, copies)
     val n = big.count()
     val (sizes, w) = measure(spark.sparkContext) {
-      KMeans.lloyd(big, "vec_id", "embedding", col("vec_id") < k, iters = 3)
+      KMeans.lloydDistributed(big, "vec_id", "embedding", col("vec_id") < k,
+        iters = 3)
         .groupBy(col("cluster")).count()
         .orderBy(col("cluster")).collect()
         .map(r => s"${r.getLong(0)}:${r.getLong(1)}").mkString(",")

@@ -381,9 +381,9 @@ object GraftCli {
       expr.listFiles(root.getFileSystem(env.conf), root, a.opt(2).getOrElse(""))
         .foreach(p => env.out.println(p.toString))
     },
-    "dedup" -> Verb("<corpus> <out> [id] [text] [cap:int] [localBelow:long]",
-        "near-dup dedup (LSH -> CC -> keep-min; localBelow>0 finishes " +
-          "small graphs in one union-find task)", session = true) { (a, env) =>
+    "dedup" -> Verb("<corpus> <out> [id] [text] [cap:int]",
+        "near-dup dedup (LSH -> CC -> keep-min; a small graph finishes " +
+          "in one union-find task)", session = true) { (a, env) =>
       // The bucket cap defaults ON (10k ids): the uncapped expansion
       // measurably OOMs on duplication-heavy corpora (SCALE.md third-decade
       // control run). A capped run still emits ONE COMPLETE keep-set:
@@ -395,10 +395,6 @@ object GraftCli {
       val idCol = a.opt(2).getOrElse("doc_id")
       val textCol = a.opt(3).getOrElse("text")
       val maxBucket = a.int(4).getOrElse(10000)
-      // 0 (default) = distributed fixpoint; a per-shard / small-corpus
-      // run passes an edge count below which CC finishes in one
-      // union-find task (ConnectedComponents.localBelow)
-      val localBelow = a.long(5).getOrElse(0L)
       val corpus = spark.read.parquet(a(0)).select(col(idCol), col(textCol))
       import graft.operators.llm.MinHashLsh
       val bands = MinHashLsh.bands(MinHashLsh.signature(
@@ -420,8 +416,7 @@ object GraftCli {
           s"skipped; their member ids -> ${a(1)}_skiplist " +
           "(exact-dedup follow-up applied to the keep-set)")
       }
-      val cc = graft.operators.llm.ConnectedComponents(
-        pairs, "doc_a", "doc_b", localBelow = localBelow)
+      val cc = graft.operators.llm.ConnectedComponents(pairs, "doc_a", "doc_b")
       val lshKeep = corpus.select(col(idCol))
         .join(cc.where(col("node") =!= col("component"))
           .select(col("node").as(idCol)), Seq(idCol), "left_anti")

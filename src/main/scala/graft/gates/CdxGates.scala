@@ -1466,8 +1466,7 @@ object CdxGates {
       val id = col("doc_id").cast("long")
       val edges = tbl(s, dir, "documents")
         .select((id % 97).as("src"), ((id * 31 + 7) % 97).as("dst"))
-      graft.operators.GraphOps.pageRank(edges, "src", "dst", iters = 3,
-        localBelow = LocalKmeansRows)
+      graft.operators.GraphOps.pageRank(edges, "src", "dst", iters = 3)
     },
 
     // Streaming windowed aggregation under the oracle gate (the third

@@ -438,22 +438,6 @@ private[graft] object GateSupport {
     s"$dir/$table.parquet ${src.length()} ${src.lastModified()}"
   }
 
-  /** CC small-graph endgame threshold for the oracle-scale queries
-    * (q52/q68/q69): below this many cached edges the fixpoint is pure
-    * job-scheduling overhead, so the operator finishes with one
-    * union-find task (ConnectedComponents.localBelow). 4M edges ≈ a few
-    * hundred MB of boxed union-find state — comfortably one task's
-    * working set; a production web-scale run passes 0 and keeps the
-    * distributed fixpoint. */
-  val LocalCcEdges = 1L << 22
-
-  /** Lloyd small-input endgame threshold for q80/q81: below this many
-    * vectors the per-round assign+agg+collect cycle is pure job
-    * overhead, so training runs in-driver on one take() (KMeans.lloyd
-    * localBelow — labels identical, pinned). 128k × 64-dim longs ≈
-    * 64 MB of driver heap; production corpora pass 0. */
-  val LocalKmeansRows = 1L << 17
-
   /** q43/q123's coarse IVF codebook: the 8 seed vectors, quantized,
     * collected per INVOCATION (one 8-row job). r22 honesty fix: the
     * former JVM-lifetime TrieMap keyed on table identity excluded this

@@ -323,11 +323,8 @@ object TextGates {
       withScopedConf(s,
         "spark.sql.adaptive.enabled" -> "false",
         "spark.sql.shuffle.partitions" -> "8") {
-        // the LSH candidate graph at this scale is a few thousand edges:
-        // take the operator's small-graph endgame (single-task
-        // union-find) instead of paying fixpoint rounds in job overhead
-        graft.operators.llm.ConnectedComponents(pairs, "doc_a", "doc_b",
-          localBelow = LocalCcEdges)
+        // a few thousand edges at this scale: CC's union-find endgame
+        graft.operators.llm.ConnectedComponents(pairs, "doc_a", "doc_b")
           .select(col("node").as("doc_id"), col("component"))
       }
     },
@@ -486,15 +483,13 @@ object TextGates {
       withScopedConf(s,
         "spark.sql.adaptive.enabled" -> "false",
         "spark.sql.shuffle.partitions" -> "1") {
-        // A 127-edge graph is the operator's small-graph endgame: one
-        // union-find task, not driver rounds. The distributed deep-chain
-        // machinery this query used to time (4 jumps/round pointer
-        // doubling + broadcast jump tables, 3 rounds for depth 128) is
-        // what a >localBelow graph gets, and stays pinned by the
-        // depth-equality property tests in LlmOpsSpec.
+        // A 127-edge graph takes CC's union-find endgame, so these
+        // pointer-doubling knobs (4 jumps/round + broadcast jump tables,
+        // 3 rounds for depth 128) only run past its edge limit; the
+        // depth-equality tests in LlmOpsSpec pin that path.
         graft.operators.llm.ConnectedComponents(pairs, "doc_a", "doc_b",
           maxIter = 40, shortcut = true, jumpsPerRound = 4,
-          broadcastJumpTable = true, localBelow = LocalCcEdges)
+          broadcastJumpTable = true)
           .select(col("node").as("doc_id"), col("component"))
       }
     },
@@ -539,8 +534,7 @@ object TextGates {
       val cc = withScopedConf(s,
         "spark.sql.adaptive.enabled" -> "false",
         "spark.sql.shuffle.partitions" -> "8") {
-        graft.operators.llm.ConnectedComponents(pairs, "doc_a", "doc_b",
-          localBelow = LocalCcEdges)
+        graft.operators.llm.ConnectedComponents(pairs, "doc_a", "doc_b")
       }
       val nonCanonical = cc.where(col("node") =!= col("component"))
         .select(col("node").as("doc_id"))
@@ -642,7 +636,7 @@ object TextGates {
         tbl(s, dir, "documents")
           .select(col("doc_id"),
             TextAnalysis.tokenCount(col("text")).cast("long").as("n_tok")),
-        "doc_id", "n_tok", budget = 4096L, localBelow = LocalKmeansRows)
+        "doc_id", "n_tok", budget = 4096L)
         .groupBy(col("seq_id"))
         .agg(count(lit(1)).as("n_docs"),
           min(col("doc_id")).as("first_doc"),
@@ -691,8 +685,7 @@ object TextGates {
         |FROM r GROUP BY 1""".stripMargin) { (s, dir) =>
       graft.operators.llm.Sampling.deterministicShard(
         tbl(s, dir, "documents").select(col("doc_id")),
-        "doc_id", salt = "ord", shardSize = 64L,
-        localBelow = LocalKmeansRows)
+        "doc_id", salt = "ord", shardSize = 64L)
         .groupBy(col("shard"))
         .agg(count(lit(1)).as("n_docs"),
           min(col("rank")).as("first_rank"),
@@ -715,8 +708,7 @@ object TextGates {
         |FROM r WHERE rn <= 17 GROUP BY 1""".stripMargin) { (s, dir) =>
       graft.operators.llm.Sampling.capPerStratum(
         tbl(s, dir, "documents").select(col("doc_id"), col("source")),
-        "doc_id", "source", salt = "cap", cap = 17L, prefixLen = 2,
-        localBelow = LocalKmeansRows)
+        "doc_id", "source", salt = "cap", cap = 17L, prefixLen = 2)
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_kept"),
           sum(col("doc_id")).as("sum_ids"))
@@ -903,8 +895,7 @@ object TextGates {
       // packed rows alone — no join back against `mixed`, whose
       // regex-heavy quality lineage would otherwise run a second time
       val packed = graft.operators.llm.Packing.byTokenBudget(
-        mixed, "doc_id", "n_tok", budget = 2048L,
-        localBelow = LocalKmeansRows)
+        mixed, "doc_id", "n_tok", budget = 2048L)
       packed.groupBy(col("seq_id"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tokens"),
           min(col("doc_id")).as("first_doc"))

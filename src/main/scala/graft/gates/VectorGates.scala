@@ -270,8 +270,7 @@ object VectorGates {
         |SELECT vec_id, cid AS cluster FROM a3""".stripMargin) { (s, dir) =>
       graft.operators.llm.KMeans.lloyd(
         tbl(s, dir, "embeddings"), "vec_id", "embedding",
-        seedPred = col("vec_id") < 8, iters = 3,
-        localBelow = LocalKmeansRows)
+        seedPred = col("vec_id") < 8, iters = 3)
     },
 
     // SemDeDup-shaped semantic dedup: cluster with TRAINED k-means
@@ -334,8 +333,7 @@ object VectorGates {
         |WHERE vec_id NOT IN (SELECT vb FROM drops)""".stripMargin) { (s, dir) =>
       val emb = tbl(s, dir, "embeddings")
       val clusters = graft.operators.llm.KMeans.lloyd(
-        emb, "vec_id", "embedding", seedPred = col("vec_id") < 8, iters = 3,
-        localBelow = LocalKmeansRows)
+        emb, "vec_id", "embedding", seedPred = col("vec_id") < 8, iters = 3)
       // no distinct on drops: left_anti is duplicate-insensitive
       val drops = graft.operators.llm.AnnOps.withinBucketCosinePairs(
         emb.join(clusters, "vec_id"), "vec_id", "embedding", "cluster",
@@ -588,8 +586,7 @@ object VectorGates {
       val emb = tbl(s, dir, "embeddings")
       val cbs = graft.operators.llm.AnnOps.pqTrain(
         emb, "vec_id", "embedding",
-        seedPred = col("vec_id") < 8, mSub = 2, dim = 64, iters = 2,
-        localBelow = LocalKmeansRows)
+        seedPred = col("vec_id") < 8, mSub = 2, dim = 64, iters = 2)
       graft.operators.llm.AnnOps.pqTopKWithCodebooks(
         emb, "vec_id", "embedding",
         queryPred = col("vec_id") % 101 === 0, cbs, dim = 64, k = 5)
@@ -624,7 +621,7 @@ object VectorGates {
       // shares the probe; outputs pinned identical (LlmOpsSpec).
       val (coarse, cbs) = graft.operators.llm.AnnOps.pqTrainWithCoarse(
         emb, "vec_id", "embedding", seedPred = col("vec_id") < 8,
-        mSub = 2, dim = 64, iters = 2, localBelow = LocalKmeansRows)
+        mSub = 2, dim = 64, iters = 2)
       graft.operators.llm.AnnOps.ivfPqTopK(
         emb, "vec_id", "embedding", coarse,
         queryPred = col("vec_id") % 101 === 0, cbs, dim = 64, k = 5)
@@ -701,7 +698,7 @@ object VectorGates {
       // ONE training probe for both codebooks (r21 opt — see q128)
       val (coarse, cbs) = graft.operators.llm.AnnOps.pqTrainWithCoarse(
         emb, "vec_id", "embedding", seedPred = col("vec_id") < 8,
-        mSub = 2, dim = 64, iters = 2, localBelow = LocalKmeansRows)
+        mSub = 2, dim = 64, iters = 2)
       // The exact brute side appears ONCE in the plan (r16 verdict #3:
       // the old per-method recallOf joined `exact` in two union
       // branches, so each branch re-ran the brute corpus scan + top-k —

@@ -36,59 +36,52 @@ object GraphOps {
     * mass is dropped, not redistributed (the common simplification;
     * stated so the oracle matches by construction).
     *
-    * `localBelow = n` (opt-in) finishes SMALL graphs in the driver —
-    * the [[graft.operators.llm.KMeans]] / ConnectedComponents endgame
-    * applied to power iteration: one take(n+1) both guards the edge
-    * count and IS the data, so iters × (join + agg) rounds collapse to
-    * one job plus in-driver rounds over the same integer sums in the
-    * same deterministic order (per-node contribution lists sorted by
-    * src) — ranks bit-identical (pinned). Production graphs keep 0 and
-    * never pay the probe. */
+    * A graph of at most [[SmallInput.Rows]] edges finishes in the
+    * driver — the [[graft.operators.llm.KMeans]] endgame applied to
+    * power iteration: the one probe both guards the edge count and IS
+    * the data, so iters × (join + agg) rounds collapse to one job plus
+    * in-driver rounds over the same integer sums in the same
+    * deterministic order (per-node contribution lists sorted by src) —
+    * ranks bit-identical to [[pageRankDistributed]] (pinned). */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
-               iters: Int, scale: Long = 1000000000000L,
-               localBelow: Long = 0L): DataFrame = {
-    require(iters >= 1, s"iters must be >= 1, got $iters")
-    require(scale >= 100L, s"scale must be >= 100, got $scale")
-    require(localBelow < Int.MaxValue, "localBelow must fit an Int take()")
-    // a NULL endpoint is a malformed edge, dropped in BOTH paths — so
-    // the local/distributed outputs stay identical, and the local
-    // branch's primitive getLong never sees a null
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst"))
-      .where(col("src").isNotNull && col("dst").isNotNull)
-
-    if (localBelow > 0L) {
-      val probe = e.take(localBelow.toInt + 1)
-      if (probe.length <= localBelow) {
-        val es = probe.map(r => (r.getLong(0), r.getLong(1)))
-        if (es.isEmpty) {
-          // empty graph: the distributed path's node spine is empty too
-          import edges.sparkSession.implicits._
-          return Seq.empty[(Long, Long)].toDF("node", "pr")
-        }
-        val nodes = (es.map(_._1) ++ es.map(_._2)).distinct.sorted
-        val n = nodes.length.toLong
-        val deg = es.groupBy(_._1).view.mapValues(_.length.toLong).toMap
-        // incoming edge multiplicities per dst — summation order is
-        // irrelevant for exactness (integer adds commute), kept sorted
-        // for reproducible iteration anyway
-        val in = es.groupBy(_._2).view
-          .mapValues(_.groupBy(_._1).view.mapValues(_.length.toLong)
-            .toSeq.sortBy(_._1)).toMap
-        val base = (15L * scale) / (100L * n)
-        var pr = nodes.map(_ -> scale / n).toMap
-        for (_ <- 1 to iters) {
-          pr = nodes.map { v =>
-            val inSum = in.getOrElse(v, Seq.empty).iterator.map {
-              case (u, m) => m * ((pr(u) * 85L) / (100L * deg(u)))
-            }.sum
-            v -> (base + inSum)
-          }.toMap
-        }
+               iters: Int, scale: Long = 1000000000000L): DataFrame =
+    SmallInput.probe(edgeList(edges, srcCol, dstCol, iters, scale),
+        SmallInput.Rows) match {
+      case None => pageRankDistributed(edges, srcCol, dstCol, iters, scale)
+      case Some(probe) =>
         import edges.sparkSession.implicits._
-        return nodes.map(v => (v, pr(v))).toSeq.toDF("node", "pr")
-      }
+        val es = probe.map(r => (r.getLong(0), r.getLong(1)))
+        // empty graph: the distributed path's node spine is empty too
+        if (es.isEmpty) Seq.empty[(Long, Long)].toDF("node", "pr") else {
+          val nodes = (es.map(_._1) ++ es.map(_._2)).distinct.sorted
+          val n = nodes.length.toLong
+          val deg = es.groupBy(_._1).view.mapValues(_.length.toLong).toMap
+          // incoming edge multiplicities per dst — summation order is
+          // irrelevant for exactness (integer adds commute), kept sorted
+          // for reproducible iteration anyway
+          val in = es.groupBy(_._2).view
+            .mapValues(_.groupBy(_._1).view.mapValues(_.length.toLong)
+              .toSeq.sortBy(_._1)).toMap
+          val base = (15L * scale) / (100L * n)
+          var pr = nodes.map(_ -> scale / n).toMap
+          for (_ <- 1 to iters) {
+            pr = nodes.map { v =>
+              val inSum = in.getOrElse(v, Seq.empty).iterator.map {
+                case (u, m) => m * ((pr(u) * 85L) / (100L * deg(u)))
+              }.sum
+              v -> (base + inSum)
+            }.toMap
+          }
+          nodes.map(v => (v, pr(v))).toSeq.toDF("node", "pr")
+        }
     }
+
+  /** [[pageRank]]'s distributed rounds, at any graph size. */
+  private[graft] def pageRankDistributed(edges: DataFrame, srcCol: String,
+                                         dstCol: String, iters: Int,
+                                         scale: Long = 1000000000000L)
+      : DataFrame = {
+    val e = edgeList(edges, srcCol, dstCol, iters, scale)
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
     val nCount = nodes.agg(count(lit(1)).as("__n"))
@@ -109,6 +102,19 @@ object GraphOps {
             coalesce(col("__in"), lit(0L))).as("pr"))
     }
     pr
+  }
+
+  /** The (src, dst) long edge list both paths rank, after checking
+    * `iters` and `scale`. A NULL endpoint is a malformed edge, dropped
+    * here — so the local/distributed outputs stay identical, and the
+    * local branch's primitive getLong never sees a null. */
+  private def edgeList(edges: DataFrame, srcCol: String, dstCol: String,
+                       iters: Int, scale: Long): DataFrame = {
+    require(iters >= 1, s"iters must be >= 1, got $iters")
+    require(scale >= 100L, s"scale must be >= 100, got $scale")
+    edges.select(col(srcCol).cast("long").as("src"),
+      col(dstCol).cast("long").as("dst"))
+      .where(col("src").isNotNull && col("dst").isNotNull)
   }
 
   /** Snapshot diff — the incremental-maintenance primitive for a corpus

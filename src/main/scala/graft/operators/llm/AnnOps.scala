@@ -137,12 +137,13 @@ object AnnOps {
 
   /**
    * IVF top-k with REAL centroid assignment (vs [[bucketedTopK]]'s
-   * precomputed label): `seedPred` picks the centroid vectors (in
-   * production: k-means output; here: deterministic seed rows so the
-   * oracle can recompute assignment). Centroids are collected once and
-   * folded into a literal argmax expression — the assignment is MAP-SIDE
-   * (zero shuffle at any scale; an assignment window over a crossJoin
-   * would shuffle every vector ×centroids). Ties go to the lowest seed id
+   * precomputed label) against a PRECOMPUTED codebook — the production
+   * shape: a codebook is trained offline ([[KMeans.codebook]]) and
+   * reused across queries and jobs, so assignment needs no seed-harvest
+   * job at all. `codebook` is (centroid id, quantized vector), folded
+   * into a literal argmax expression — the assignment is MAP-SIDE (zero
+   * shuffle at any scale; an assignment window over a crossJoin would
+   * shuffle every vector ×centroids). Ties go to the lowest centroid id
    * (max over struct(sdot, -sid)). Only the final top-k window shuffles,
    * and it carries (query, cand, dot) pairs, not vectors.
    *
@@ -157,20 +158,6 @@ object AnnOps {
    * the vector, where the fold assigns map-side. The crossover is
    * codebook size, not a constant win.)
    */
-  def ivfTopK(emb: DataFrame, idCol: String, vecCol: String,
-              seedPred: Column, queryPred: Column, k: Int): DataFrame = {
-    val e = emb.select(col(idCol), quantize(col(vecCol)).as("__q"))
-    val seedRows = e.where(seedPred)
-      .select(col(idCol).cast("long"), col("__q")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1)))
-      .sortBy(_._1)
-    ivfTopKWithCodebook(emb, idCol, vecCol, seedRows.toSeq, queryPred, k)
-  }
-
-  /** [[ivfTopK]] with a PRECOMPUTED codebook — the production shape: a
-    * codebook is trained offline (k-means) and reused across queries and
-    * jobs, so assignment needs no seed-harvest job at all. `codebook` is
-    * (centroid id, quantized vector), folded into the map-side argmax. */
   def ivfTopKWithCodebook(emb: DataFrame, idCol: String, vecCol: String,
                           codebook: Seq[(Long, Seq[Long])],
                           queryPred: Column, k: Int): DataFrame = {
@@ -255,9 +242,9 @@ object AnnOps {
       dot(q, typedLit(hyperplane(p, dim)))): _*).as("proj"))
   }
 
-  /** LSH-bucketed ANN top-k — the alternative scale path to [[ivfTopK]]:
-    * no codebook to train or broadcast; the bucket is a pure function of
-    * the vector itself. `probes = 0` is single-probe (the query's own
+  /** LSH-bucketed ANN top-k — the alternative scale path to
+    * [[ivfTopKWithCodebook]]: no codebook to train or broadcast; the
+    * bucket is a pure function of the vector itself. `probes = 0` is single-probe (the query's own
     * bucket only); `probes = t > 0` is standard multi-probe: each query
     * ADDITIONALLY visits the `t` adjacent buckets reached by flipping
     * one sign bit at the planes where its |dot| margin is smallest —
@@ -438,8 +425,9 @@ object AnnOps {
    * of the broadcast join carries ONLY (id, codes); scoring is mSub
    * element_at + adds (plain codegen, no HOF). Exhaustive over
    * candidates by design — PQ's point is making the exhaustive scan
-   * cheap and the scan input small; compose with [[ivfTopK]]'s coarse
-   * buckets for IVF-PQ when even the code scan must prune.
+   * cheap and the scan input small; compose with
+   * [[ivfTopKWithCodebook]]'s coarse buckets for IVF-PQ when even the
+   * code scan must prune.
    */
   def pqTopK(emb: DataFrame, idCol: String, vecCol: String,
              queryPred: Column, mSub: Int, kCodes: Int, dim: Int,
@@ -454,53 +442,59 @@ object AnnOps {
     * are floor-divided exact integer means (deterministic, like every
     * integer op here), densely re-indexed in cluster-id order (dead
     * clusters drop). `seedPred` picks the initial centroid rows as in
-    * [[ivfTopK]]. Feed the result to [[pqTopKWithCodebooks]]. */
+    * [[KMeans.lloyd]]. Feed the result to [[pqTopKWithCodebooks]]. */
   def pqTrain(emb: DataFrame, idCol: String, vecCol: String,
               seedPred: Column, mSub: Int, dim: Int,
-              iters: Int = 3, localBelow: Long = 0L): Seq[Seq[Seq[Long]]] = {
-    require(mSub >= 1 && dim % mSub == 0,
-      s"dim=$dim must split evenly into mSub=$mSub subspaces")
-    val subDim = dim / mSub
-    // `localBelow` is the Lloyd small-input endgame: below it ALL
-    // subspaces train off ONE take(n+1) probe of the full quantized
-    // vectors, sliced driver-side (quantize is element-wise, so
-    // quantize-then-slice ≡ slice-then-quantize) — training really is
-    // one job, not one per subspace. Labels pinned identical to the
-    // distributed rounds (the q126 oracle replays those).
-    if (localBelow > 0L) {
-      require(localBelow < Int.MaxValue, "localBelow must fit an Int take()")
-      val probe = emb.select(col(idCol).cast("long").as("__id"),
-          quantize(col(vecCol)).as("__q"), seedPred.as("__seed"))
-        .take(localBelow.toInt + 1)
-      if (probe.length <= localBelow) {
-        val (data, seeds) = KMeans.probeData(probe)
-        data.headOption.foreach { case (_, q) =>
-          require(q.length >= dim,
-            s"vectors have ${q.length} components, need dim=$dim") }
-        return (0 until mSub).map { m =>
-          floorMeans(KMeans.localCodebookWithCounts(
-            data.map { case (id, q) =>
-              (id, java.util.Arrays.copyOfRange(q, m * subDim,
-                (m + 1) * subDim))
-            },
-            seeds.map { case (id, q) =>
-              (id, java.util.Arrays.copyOfRange(q, m * subDim,
-                (m + 1) * subDim))
-            }, iters))
-        }
-      }
+              iters: Int = 3): Seq[Seq[Seq[Long]]] =
+    KMeans.probed(emb, idCol, vecCol, seedPred) match {
+      case Some((data, seeds)) => localPqTrain(data, seeds, mSub, dim, iters)
+      case None =>
+        pqTrainDistributed(emb, idCol, vecCol, seedPred, mSub, dim, iters)
     }
-    // one k-means per subspace, sequential — acceptable because
-    // codebook training is a ONE-TIME offline step that amortizes over
-    // every later encode/search (the rehearsal reports it separately);
-    // if retraining ever becomes hot, the fusion is one Lloyd loop
-    // whose per-round agg groups by (subspace, cluster)
+
+  /** [[pqTrain]]'s small-input endgame: ALL subspaces train off ONE
+    * probe of the full quantized vectors, sliced driver-side (quantize
+    * is element-wise, so quantize-then-slice ≡ slice-then-quantize) —
+    * training really is one job, not one per subspace. Codebooks pinned
+    * identical to [[pqTrainDistributed]] (the q126 oracle replays
+    * those rounds). */
+  private def localPqTrain(data: Array[(Long, Array[Long])],
+                           seeds: Seq[(Long, Array[Long])], mSub: Int,
+                           dim: Int, iters: Int): Seq[Seq[Seq[Long]]] = {
+    val subDim = subspaceDim(mSub, dim)
+    data.headOption.foreach { case (_, q) =>
+      require(q.length >= dim,
+        s"vectors have ${q.length} components, need dim=$dim") }
+    (0 until mSub).map { m =>
+      def sub(r: (Long, Array[Long])) = (r._1,
+        java.util.Arrays.copyOfRange(r._2, m * subDim, (m + 1) * subDim))
+      floorMeans(KMeans.localCodebookWithCounts(data.map(sub),
+        seeds.map(sub), iters))
+    }
+  }
+
+  /** [[pqTrain]]'s distributed rounds, at any input size: one
+    * k-means per subspace, sequential — acceptable because codebook
+    * training is a ONE-TIME offline step that amortizes over every
+    * later encode/search (the rehearsal reports it separately); if
+    * retraining ever becomes hot, the fusion is one Lloyd loop whose
+    * per-round agg groups by (subspace, cluster). */
+  private[graft] def pqTrainDistributed(emb: DataFrame, idCol: String,
+      vecCol: String, seedPred: Column, mSub: Int, dim: Int,
+      iters: Int = 3): Seq[Seq[Seq[Long]]] = {
+    val subDim = subspaceDim(mSub, dim)
     (0 until mSub).map { m =>
       val sub = emb.select(col(idCol),
         slice(col(vecCol), m * subDim + 1, subDim).as("__sub"))
-      floorMeans(KMeans.codebookWithCounts(sub, idCol, "__sub", seedPred,
-        iters))
+      floorMeans(KMeans.codebookWithCountsDistributed(sub, idCol, "__sub",
+        seedPred, iters))
     }
+  }
+
+  private def subspaceDim(mSub: Int, dim: Int): Int = {
+    require(mSub >= 1 && dim % mSub == 0,
+      s"dim=$dim must split evenly into mSub=$mSub subspaces")
+    dim / mSub
   }
 
   /** Exact integer floor-means of a codebook-with-counts — the PQ
@@ -514,50 +508,29 @@ object AnnOps {
   /** One-probe training for the fully-trained IVF-PQ stack (q128/q129
     * shape): the COARSE full-vector codebook ([[KMeans.codebook]]'s
     * integer sum vectors) and the per-subspace PQ codebooks
-    * ([[pqTrain]]'s floor-divided means) computed from a SINGLE
-    * take(localBelow+1) probe of (id, quantized vector, seed). The two
-    * trainings previously each ran an IDENTICAL probe of the same
-    * projection — same select, same rows — so below `localBelow` this
-    * halves the training jobs and scans (r21 opt, guide §1.2 step 1:
-    * don't compute things twice). Outputs are PINNED identical to the
-    * separate calls (same probeData, same localCodebookWithCounts
-    * math); above the threshold it falls back to exactly those calls. */
+    * ([[pqTrain]]'s floor-divided means). A small input trains both
+    * from a SINGLE probe of (id, quantized vector, seed) — separate
+    * calls would each run an IDENTICAL probe of the same projection, so
+    * this halves the training jobs and scans (r21 opt, guide §1.2 step
+    * 1: don't compute things twice). Outputs are PINNED identical to
+    * the distributed bodies ([[KMeans.codebookWithCountsDistributed]],
+    * [[pqTrainDistributed]]), which a larger input runs after its one
+    * probe. */
   def pqTrainWithCoarse(emb: DataFrame, idCol: String, vecCol: String,
                         seedPred: Column, mSub: Int, dim: Int,
-                        iters: Int = 3, localBelow: Long = 0L)
-      : (Seq[(Long, Seq[Long])], Seq[Seq[Seq[Long]]]) = {
-    require(mSub >= 1 && dim % mSub == 0,
-      s"dim=$dim must split evenly into mSub=$mSub subspaces")
-    val subDim = dim / mSub
-    if (localBelow > 0L) {
-      require(localBelow < Int.MaxValue, "localBelow must fit an Int take()")
-      val probe = emb.select(col(idCol).cast("long").as("__id"),
-          quantize(col(vecCol)).as("__q"), seedPred.as("__seed"))
-        .take(localBelow.toInt + 1)
-      if (probe.length <= localBelow) {
-        val (data, seeds) = KMeans.probeData(probe)
-        data.headOption.foreach { case (_, q) =>
-          require(q.length >= dim,
-            s"vectors have ${q.length} components, need dim=$dim") }
-        val coarse = KMeans.localCodebookWithCounts(data, seeds, iters)
-          .map { case (id, _, s) => (id, s) }
-        val cbs = (0 until mSub).map { m =>
-          floorMeans(KMeans.localCodebookWithCounts(
-            data.map { case (id, q) =>
-              (id, java.util.Arrays.copyOfRange(q, m * subDim,
-                (m + 1) * subDim))
-            },
-            seeds.map { case (id, q) =>
-              (id, java.util.Arrays.copyOfRange(q, m * subDim,
-                (m + 1) * subDim))
-            }, iters))
-        }
-        return (coarse, cbs)
-      }
+                        iters: Int = 3)
+      : (Seq[(Long, Seq[Long])], Seq[Seq[Seq[Long]]]) =
+    KMeans.probed(emb, idCol, vecCol, seedPred) match {
+      case Some((data, seeds)) =>
+        val cbs = localPqTrain(data, seeds, mSub, dim, iters)
+        (KMeans.localCodebookWithCounts(data, seeds, iters)
+          .map { case (id, _, s) => (id, s) }, cbs)
+      case None =>
+        val cbs =
+          pqTrainDistributed(emb, idCol, vecCol, seedPred, mSub, dim, iters)
+        (KMeans.codebookWithCountsDistributed(emb, idCol, vecCol, seedPred,
+          iters).map { case (id, _, s) => (id, s) }, cbs)
     }
-    (KMeans.codebook(emb, idCol, vecCol, seedPred, iters),
-      pqTrain(emb, idCol, vecCol, seedPred, mSub, dim, iters))
-  }
 
   /** [[pqTopK]] with explicit codebooks — the trained-codebook
     * production shape (per-subspace k-means output, [[pqTrain]]).
@@ -583,10 +556,11 @@ object AnnOps {
   /**
    * IVF-PQ — the composed published architecture (coarse quantizer +
    * product codes): the coarse codebook prunes candidates to the
-   * query's bucket via the map-side argmax fold (as [[ivfTopK]]), and
-   * PQ codes make scanning the survivors cheap — the candidate side of
-   * the join carries (id, bucket, mSub codes), never a vector; ADC
-   * scores via the query's broadcast LUT exactly as [[pqTopK]]. At
+   * query's bucket via the map-side argmax fold (as
+   * [[ivfTopKWithCodebook]]), and PQ codes make scanning the survivors
+   * cheap — the candidate side of the join carries (id, bucket, mSub
+   * codes), never a vector; ADC scores via the query's broadcast LUT
+   * exactly as [[pqTopK]]. At
    * 100 TB this is the standard billion-scale ANN shape: vectors are
    * read once at encode time, search touches only buckets and codes.
    */

@@ -2,6 +2,7 @@ package graft.operators.llm
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /**
  * Connected components over a candidate-pair graph — the dedup-clustering
@@ -46,15 +47,13 @@ import org.apache.spark.sql.functions._
  * does, a web-scale one does not; the default stays the co-partitioned
  * shuffle join, which is size-unbounded.
  *
- * `localBelow = n` (opt-in) finishes SMALL graphs in one task: when the
- * persisted edge cache holds <= n rows, a single-task union-find with
- * path compression replaces the whole fixpoint — R rounds × (agg +
- * jumps + checkpoint) collapse to one job whose labels are identical
- * (min-root union ⇒ component = min node id). This is the standard
- * endgame for iterative graph jobs: distribute while the graph is big,
- * finish locally once it fits a task. Callers that KNOW their graph is
- * small (oracle-scale queries, per-shard subgraphs) set it; web-scale
- * runs keep 0 and pay only one extra count over the edge cache if set.
+ * A graph whose edge cache holds at most `LocalEdges` (4M) rows
+ * finishes in one task: a union-find with path compression replaces the
+ * whole fixpoint — R rounds × (agg + jumps + checkpoint) collapse to one
+ * job whose labels are identical (min-root union ⇒ component = min node
+ * id). Distribute while the graph is big, finish locally once it fits a
+ * task; the edge count doubles as the cache materialization the first
+ * iteration would otherwise perform.
  *
  * Scale notes: each iteration's labels are persisted and the previous
  * iteration's cache dropped, so lineage stays one iteration deep; the
@@ -68,12 +67,42 @@ import org.apache.spark.sql.functions._
  */
 object ConnectedComponents {
 
+  /** Edge-cache rows up to which [[apply]] takes the union-find: 4M
+    * edges of boxed state fit one task's working set. */
+  private val LocalEdges = 1L << 22
+
   def apply(pairs: DataFrame, aCol: String, bCol: String,
             maxIter: Int = 20, shortcut: Boolean = false,
             jumpsPerRound: Int = 2,
-            broadcastJumpTable: Boolean = false,
-            localBelow: Long = 0L): DataFrame = {
-    require(jumpsPerRound >= 1, s"jumpsPerRound must be >= 1, got $jumpsPerRound")
+            broadcastJumpTable: Boolean = false): DataFrame =
+    withEdges(pairs, aCol, bCol) { edges =>
+      // integral ids only: localUnionFind orders ids NUMERICALLY via a
+      // long cast, the distributed fixpoint orders by the column's own
+      // type — for string ids ("9" vs "10") the two orders disagree and
+      // the paths would label components differently; float/decimal ids
+      // would silently truncate (r19 review finding). Non-integral ids
+      // simply keep the distributed path, which handles any orderable
+      // type. The result is eagerly checkpointed BEFORE the edge cache
+      // it reads from is released.
+      if (Seq(ByteType, ShortType, IntegerType, LongType)
+            .contains(edges.schema("a").dataType) &&
+          edges.count() <= LocalEdges)
+        localUnionFind(edges).localCheckpoint(true)
+      else fixpoint(edges, maxIter, shortcut, jumpsPerRound,
+        broadcastJumpTable)
+    }
+
+  /** [[apply]]'s distributed fixpoint, at any graph size. */
+  private[graft] def distributed(pairs: DataFrame, aCol: String,
+      bCol: String, maxIter: Int = 20, shortcut: Boolean = false,
+      jumpsPerRound: Int = 2, broadcastJumpTable: Boolean = false)
+      : DataFrame = withEdges(pairs, aCol, bCol)(
+    fixpoint(_, maxIter, shortcut, jumpsPerRound, broadcastJumpTable))
+
+  /** `body` over the persisted both-direction edge cache (a, b), which
+    * is released when `body` returns. */
+  private def withEdges(pairs: DataFrame, aCol: String, bCol: String)(
+      body: DataFrame => DataFrame): DataFrame = {
     // both edge directions from ONE scan — a self-union would evaluate the
     // (possibly expensive) pairs lineage twice to materialize the cache.
     // No dedup pass: min/max label aggregation is duplicate-insensitive,
@@ -92,156 +121,132 @@ object ConnectedComponents {
       .repartition(col("b"))
       .sortWithinPartitions(col("b"))
       .persist()
-    try {
-      // Local finish (opt-in): when the edge set fits one task, the whole
-      // fixpoint is job-scheduling overhead — a single-task union-find
-      // replaces R rounds × (agg + jumps + checkpoint) with ONE job over
-      // the already-persisted cache. This is the standard endgame for
-      // iterative graph jobs (distribute while big, finish locally when
-      // small); production web-scale graphs keep localBelow = 0 and the
-      // co-partitioned fixpoint. The count also serves as the cache
-      // materialization the first iteration would otherwise perform.
-      // the result is eagerly checkpointed BEFORE the finally block
-      // releases the edge cache it reads from
-      // integral ids only: localUnionFind orders ids NUMERICALLY via a
-      // long cast, the distributed fixpoint orders by the column's own
-      // type — for string ids ("9" vs "10") the two orders disagree and
-      // the paths would label components differently; float/decimal ids
-      // would silently truncate (r19 review finding). Non-integral ids
-      // simply keep the distributed path, which handles any orderable
-      // type.
-      if (localBelow > 0L && integralIdType(edges) &&
-          edges.count() <= localBelow)
-        return localUnionFind(edges).localCheckpoint(true)
-      var cached: DataFrame = null
-      var labels: DataFrame = null
-      // shortcut mode's per-iteration storage is a localCheckpoint'd RDD
-      // the cache manager can't see — hold its handle so each iteration
-      // (and the failure path) releases the PREVIOUS iteration's blocks
-      var ckHandle: Option[org.apache.spark.rdd.RDD[_]] = None
-      var iter = 0
-      var converged = false
-      while (!converged && iter < maxIter) {
-        // each node keeps the min of (own label, neighbors' labels); a
-        // node CHANGED iff the winning min came from a neighbor with a
-        // strictly smaller label — on ties the struct ordering prefers
-        // from_neighbor=0, so "neighbor merely equal" is not a change
-        val afterNb = if (iter == 0) {
-          // the first iteration folds init + join + agg into ONE
-          // aggregation straight off the edge cache: against identity
-          // labels, the neighbor min IS min(b), so there is no label
-          // table to build and no join to run — min(b) vs a decides
-          // both the component and the changed flag
-          edges.groupBy(col("a"))
-            .agg(min(col("b")).as("__nb"))
-            .select(col("a").as("node"),
-              least(col("a"), col("__nb")).as("component"),
-              (col("__nb") < col("a")).as("changed"))
-        } else {
-          val viaNeighbors = edges
-            .join(labels, edges("b") === labels("node"))
-            .select(edges("a").as("node"), col("component"),
-              lit(1).as("from_neighbor"))
-          val own = labels.select(col("node"), col("component"),
-            lit(0).as("from_neighbor"))
-          own.unionByName(viaNeighbors)
-            .groupBy(col("node"))
-            .agg(min(struct(col("component"), col("from_neighbor"))).as("m"))
-            .select(col("node"), col("m.component").as("component"),
-              (col("m.from_neighbor") === 1).as("changed"))
-        }
-        val (next, nextHandle, changedKnown) =
-          if (!shortcut) (afterNb.persist(), None, None) else {
-          // pointer doubling, jumpsPerRound times: each jump makes every
-          // node adopt its current label's own label, so label-tree depth
-          // divides by ~2 per jump — more jumps converge a deep chain in
-          // fewer rounds, and each round's fixed cost (checkpoint job +
-          // convergence read) dominates at the oracle scale while round
-          // COUNT dominates on a real cluster.
-          // Each jump's input is persisted so it feeds both join sides
-          // without re-running its lineage, and the round's final result
-          // is plan-TRUNCATED with an eager local checkpoint: self-joins
-          // otherwise double the logical plan per jump (2^jumps subtrees —
-          // planner/treeString blowup long before data is a problem). The
-          // shim variant hands back the checkpointed RDD —
-          // Dataset.localCheckpoint hides it, making unpersist() on the
-          // result a silent no-op. Local (executor-cached) checkpoints
-          // trade re-computability on executor loss for zero external
-          // storage — the standard trade for iterative graph steps; a
-          // production run on a flaky cluster would swap in reliable
-          // checkpoints on the same schedule.
-          var cur = afterNb.persist()
-          val roundCaches = List.newBuilder[DataFrame]
-          roundCaches += cur
-          var jump = 0
-          while (jump < jumpsPerRound) {
-            val tbl = cur.select(col("node").as("__jn"),
-              col("component").as("__jc"))
-            // left join: a node whose label is a component root (its
-            // label is itself) matches with no improvement; labels are
-            // always existing node ids, so non-matches cannot occur —
-            // coalesce is belt-and-braces for the degenerate empty side
-            val bTbl = if (broadcastJumpTable) broadcast(tbl) else tbl
-            val jumped = cur
-              .join(bTbl, cur("component") === col("__jn"), "left")
-              .select(cur("node"),
-                coalesce(col("__jc"), cur("component")).as("component"),
-                (cur("changed") ||
-                  coalesce(col("__jc"), cur("component")) < cur("component"))
-                  .as("changed"))
-            jump += 1
-            if (jump < jumpsPerRound) { cur = jumped.persist(); roundCaches += cur }
-            else cur = jumped
-          }
-          // the convergence flag rides the checkpoint's own materializing
-          // job (accumulator on the copy-map) — one driver action per
-          // round, not checkpoint + a separate max(changed) collect
-          val (ck, handle, nChanged) =
-            org.apache.spark.sql.graftshim.CheckpointShim
-              .localCheckpointCounting(cur, cur.schema.fieldIndex("changed"))
-          roundCaches.result().foreach(_.unpersist(blocking = false))
-          (ck, Some(handle), Some(nChanged > 0L))
-        }
-        converged = changedKnown match {
-          case Some(anyChanged) => !anyChanged
-          case None =>
-            // plain mode: this collect IS the action that materializes the
-            // round's persist, so it is already the round's only job
-            val row = next.agg(max(col("changed"))).collect()(0)
-            row.isNullAt(0) || !row.getBoolean(0)
-        }
-        // release the previous iteration's storage: the persisted
-        // DataFrame in plain mode, the checkpointed RDD in shortcut mode
-        if (cached != null) cached.unpersist(blocking = false)
-        ckHandle.foreach(_.unpersist(blocking = false))
-        ckHandle = nextHandle
-        cached = next
-        labels = next.select(col("node"), col("component"))
-        iter += 1
-      }
-      if (!converged) {
-        // release the last iteration's storage before failing — repeated
-        // failed runs in one session would otherwise accumulate cached
-        // label tables until the context cleaner collects them
-        if (cached != null) cached.unpersist(blocking = false)
-        ckHandle.foreach(_.unpersist(blocking = false))
-        throw new IllegalArgumentException(
-          s"connected components did not converge in $maxIter iterations " +
-            "(graph deeper than expected — raise maxIter, or pass " +
-            "shortcut = true for O(log n) pointer-doubling convergence)")
-      }
-      labels
-    } finally edges.unpersist(blocking = false)
+    try body(edges) finally edges.unpersist(blocking = false)
   }
 
-  /** The local endgame relies on a lossless round-trip through long —
-    * true exactly for the integral types (byte/short/int/long). */
-  private def integralIdType(edges: DataFrame): Boolean = {
-    import org.apache.spark.sql.types._
-    edges.schema("a").dataType match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
+  /** Min-label propagation to fixpoint over the edge cache. */
+  private def fixpoint(edges: DataFrame, maxIter: Int, shortcut: Boolean,
+                       jumpsPerRound: Int,
+                       broadcastJumpTable: Boolean): DataFrame = {
+    require(jumpsPerRound >= 1, s"jumpsPerRound must be >= 1, got $jumpsPerRound")
+    var cached: DataFrame = null
+    var labels: DataFrame = null
+    // shortcut mode's per-iteration storage is a localCheckpoint'd RDD
+    // the cache manager can't see — hold its handle so each iteration
+    // (and the failure path) releases the PREVIOUS iteration's blocks
+    var ckHandle: Option[org.apache.spark.rdd.RDD[_]] = None
+    var iter = 0
+    var converged = false
+    while (!converged && iter < maxIter) {
+      // each node keeps the min of (own label, neighbors' labels); a
+      // node CHANGED iff the winning min came from a neighbor with a
+      // strictly smaller label — on ties the struct ordering prefers
+      // from_neighbor=0, so "neighbor merely equal" is not a change
+      val afterNb = if (iter == 0) {
+        // the first iteration folds init + join + agg into ONE
+        // aggregation straight off the edge cache: against identity
+        // labels, the neighbor min IS min(b), so there is no label
+        // table to build and no join to run — min(b) vs a decides
+        // both the component and the changed flag
+        edges.groupBy(col("a"))
+          .agg(min(col("b")).as("__nb"))
+          .select(col("a").as("node"),
+            least(col("a"), col("__nb")).as("component"),
+            (col("__nb") < col("a")).as("changed"))
+      } else {
+        val viaNeighbors = edges
+          .join(labels, edges("b") === labels("node"))
+          .select(edges("a").as("node"), col("component"),
+            lit(1).as("from_neighbor"))
+        val own = labels.select(col("node"), col("component"),
+          lit(0).as("from_neighbor"))
+        own.unionByName(viaNeighbors)
+          .groupBy(col("node"))
+          .agg(min(struct(col("component"), col("from_neighbor"))).as("m"))
+          .select(col("node"), col("m.component").as("component"),
+            (col("m.from_neighbor") === 1).as("changed"))
+      }
+      val (next, nextHandle, changedKnown) =
+        if (!shortcut) (afterNb.persist(), None, None) else {
+        // pointer doubling, jumpsPerRound times: each jump makes every
+        // node adopt its current label's own label, so label-tree depth
+        // divides by ~2 per jump — more jumps converge a deep chain in
+        // fewer rounds, and each round's fixed cost (checkpoint job +
+        // convergence read) dominates at the oracle scale while round
+        // COUNT dominates on a real cluster.
+        // Each jump's input is persisted so it feeds both join sides
+        // without re-running its lineage, and the round's final result
+        // is plan-TRUNCATED with an eager local checkpoint: self-joins
+        // otherwise double the logical plan per jump (2^jumps subtrees —
+        // planner/treeString blowup long before data is a problem). The
+        // shim variant hands back the checkpointed RDD —
+        // Dataset.localCheckpoint hides it, making unpersist() on the
+        // result a silent no-op. Local (executor-cached) checkpoints
+        // trade re-computability on executor loss for zero external
+        // storage — the standard trade for iterative graph steps; a
+        // production run on a flaky cluster would swap in reliable
+        // checkpoints on the same schedule.
+        var cur = afterNb.persist()
+        val roundCaches = List.newBuilder[DataFrame]
+        roundCaches += cur
+        var jump = 0
+        while (jump < jumpsPerRound) {
+          val tbl = cur.select(col("node").as("__jn"),
+            col("component").as("__jc"))
+          // left join: a node whose label is a component root (its
+          // label is itself) matches with no improvement; labels are
+          // always existing node ids, so non-matches cannot occur —
+          // coalesce is belt-and-braces for the degenerate empty side
+          val bTbl = if (broadcastJumpTable) broadcast(tbl) else tbl
+          val jumped = cur
+            .join(bTbl, cur("component") === col("__jn"), "left")
+            .select(cur("node"),
+              coalesce(col("__jc"), cur("component")).as("component"),
+              (cur("changed") ||
+                coalesce(col("__jc"), cur("component")) < cur("component"))
+                .as("changed"))
+          jump += 1
+          if (jump < jumpsPerRound) { cur = jumped.persist(); roundCaches += cur }
+          else cur = jumped
+        }
+        // the convergence flag rides the checkpoint's own materializing
+        // job (accumulator on the copy-map) — one driver action per
+        // round, not checkpoint + a separate max(changed) collect
+        val (ck, handle, nChanged) =
+          org.apache.spark.sql.graftshim.CheckpointShim
+            .localCheckpointCounting(cur, cur.schema.fieldIndex("changed"))
+        roundCaches.result().foreach(_.unpersist(blocking = false))
+        (ck, Some(handle), Some(nChanged > 0L))
+      }
+      converged = changedKnown match {
+        case Some(anyChanged) => !anyChanged
+        case None =>
+          // plain mode: this collect IS the action that materializes the
+          // round's persist, so it is already the round's only job
+          val row = next.agg(max(col("changed"))).collect()(0)
+          row.isNullAt(0) || !row.getBoolean(0)
+      }
+      // release the previous iteration's storage: the persisted
+      // DataFrame in plain mode, the checkpointed RDD in shortcut mode
+      if (cached != null) cached.unpersist(blocking = false)
+      ckHandle.foreach(_.unpersist(blocking = false))
+      ckHandle = nextHandle
+      cached = next
+      labels = next.select(col("node"), col("component"))
+      iter += 1
     }
+    if (!converged) {
+      // release the last iteration's storage before failing — repeated
+      // failed runs in one session would otherwise accumulate cached
+      // label tables until the context cleaner collects them
+      if (cached != null) cached.unpersist(blocking = false)
+      ckHandle.foreach(_.unpersist(blocking = false))
+      throw new IllegalArgumentException(
+        s"connected components did not converge in $maxIter iterations " +
+          "(graph deeper than expected — raise maxIter, or pass " +
+          "shortcut = true for O(log n) pointer-doubling convergence)")
+    }
+    labels
   }
 
   /** Single-task exact CC: union-find with path compression and

@@ -1,7 +1,9 @@
 package graft.operators.llm
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+
+import graft.operators.SmallInput
 
 /**
  * Deterministic spherical k-means (Lloyd) over an embedding column —
@@ -51,38 +53,32 @@ object KMeans {
     * `iters` counts assignments: iters=3 is assign/update, assign/
     * update, assign-and-emit.
     *
-    * `localBelow = n` (opt-in) finishes SMALL inputs in the driver:
-    * a single take(n+1) both guards the size and IS the data, so
-    * iters × (assign + K-row agg + collect) collapse to one job plus
-    * in-driver rounds over the same integer sums and exact-double
-    * cosine — labels identical (pinned). The [[ConnectedComponents]]
-    * `localBelow` endgame, applied to Lloyd's per-round job overhead;
-    * production corpora keep 0 and never pay the probe. */
+    * An input of at most [[SmallInput.Rows]] rows finishes in the
+    * driver: the one probe yields seeds AND members, so iters × (assign
+    * + K-row agg + collect) collapse to one job plus in-driver rounds
+    * over the same integer sums and exact-double cosine — labels
+    * identical to [[lloydDistributed]] (pinned). */
   def lloyd(emb: DataFrame, idCol: String, vecCol: String,
-            seedPred: Column, iters: Int = 3,
-            localBelow: Long = 0L): DataFrame = {
+            seedPred: Column, iters: Int = 3): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
-    require(localBelow < Int.MaxValue, "localBelow must fit an Int take()")
-    // the seed flag rides the projection so the small-input probe below
-    // yields seeds AND members from ONE take() — no separate seed
-    // collect job on the local path
-    val e0 = emb.select(col(idCol).cast("long").as("__id"),
-      AnnOps.quantize(col(vecCol)).as("__q"), seedPred.as("__seed"))
-    val e = e0.select(col("__id"), col("__q"))
-
-    if (localBelow > 0L) {
-      val probe = e0.take(localBelow.toInt + 1)
-      if (probe.length <= localBelow) {
-        val (data, seeds) = probeData(probe)
+    probed(emb, idCol, vecCol, seedPred) match {
+      case Some((data, seeds)) =>
         val cents = localLloyd(data, seeds, iters)
         val norms = checkedNorms(cents)
         import emb.sparkSession.implicits._
-        return data
-          .map(d => (d._1, assignLocalWithNorms(cents, norms, d._2))).toSeq
+        data.map(d => (d._1, assignLocalWithNorms(cents, norms, d._2))).toSeq
           .toDF(idCol, "cluster")
-      }
+      case None => lloydDistributed(emb, idCol, vecCol, seedPred, iters)
     }
+  }
 
+  /** [[lloyd]]'s distributed rounds, at any input size. */
+  private[graft] def lloydDistributed(emb: DataFrame, idCol: String,
+                                      vecCol: String, seedPred: Column,
+                                      iters: Int = 3): DataFrame = {
+    require(iters >= 1, "iters must be >= 1")
+    val e0 = projected(emb, idCol, vecCol, seedPred)
+    val e = e0.select(col("__id"), col("__q"))
     var centroids: Seq[(Long, Array[Long])] =
       e0.where(col("__seed")).select(col("__id"), col("__q"))
         .collect()
@@ -105,40 +101,57 @@ object KMeans {
     e.select(col("__id").as(idCol), assign(centroids).as("cluster"))
   }
 
-  /** Probe rows → (data, seeds): rows are (id, quantized vec, seed
-    * flag). NULL seedPred (nullable column) must read as false,
-    * matching the distributed path's where(col("__seed")) — getBoolean
-    * on a null cell NPEs. */
-  private[llm] def probeData(probe: Array[org.apache.spark.sql.Row])
-      : (Array[(Long, Array[Long])], Seq[(Long, Array[Long])]) =
-    (probe.map(r => (r.getLong(0), r.getSeq[Long](1).toArray)),
-      probe.filter(r => !r.isNullAt(2) && r.getBoolean(2))
-        .map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
-        .sortBy(_._1).toSeq)
+  /** (id, quantized vector, seed flag): the seed flag rides the
+    * projection so the small-input probe yields seeds AND members from
+    * ONE take() — no separate seed collect job on the local path. */
+  private def projected(emb: DataFrame, idCol: String, vecCol: String,
+                        seedPred: Column): DataFrame =
+    emb.select(col(idCol).cast("long").as("__id"),
+      AnnOps.quantize(col(vecCol)).as("__q"), seedPred.as("__seed"))
 
-  /** Driver-side Lloyd over a probed small input — the shared localBelow
-    * endgame body: returns centroids after iters-1 updates. Labels from
+  /** The small-input probe of [[projected]] as (data, seeds), or None
+    * past [[SmallInput.Rows]] — the one probe behind [[lloyd]],
+    * [[codebookWithCounts]] and [[AnnOps.pqTrain]]. A NULL seedPred
+    * (nullable column) reads as false, matching the distributed path's
+    * where(col("__seed")) — getBoolean on a null cell NPEs. */
+  private[llm] def probed(emb: DataFrame, idCol: String, vecCol: String,
+                          seedPred: Column)
+      : Option[(Array[(Long, Array[Long])], Seq[(Long, Array[Long])])] =
+    SmallInput.probe(projected(emb, idCol, vecCol, seedPred), SmallInput.Rows)
+      .map { probe =>
+        def vec(r: Row) = (r.getLong(0), r.getSeq[Long](1).toArray)
+        (probe.map(vec), probe.filter(r => !r.isNullAt(2) && r.getBoolean(2))
+          .map(vec).sortBy(_._1).toSeq)
+      }
+
+  /** Driver-side Lloyd over a probed small input — the shared endgame
+    * body: returns centroids after iters-1 updates. Labels from
     * [[assignLocalWithNorms]] against these centroids are pinned
     * identical to the distributed path's. */
   private def localLloyd(data: Array[(Long, Array[Long])],
                          seeds: Seq[(Long, Array[Long])],
                          iters: Int): Seq[(Long, Array[Long])] = {
+    require(seeds.nonEmpty, "seedPred matched no rows")
     var centroids = seeds
-    require(centroids.nonEmpty, "seedPred matched no rows")
-    val dim = centroids.head._2.length
-    for (_ <- 1 until iters) {
-      val norms = checkedNorms(centroids)
-      centroids = data
-        .groupBy(d => assignLocalWithNorms(centroids, norms, d._2))
-        .toSeq.sortBy(_._1)
-        .map { case (cid, members) =>
-          val s = new Array[Long](dim)
-          members.foreach(m =>
-            (0 until dim).foreach(i => s(i) += m._2(i)))
-          (cid, s)
-        }
-    }
+    for (_ <- 1 until iters)
+      centroids = clusterSums(data, centroids).map { case (c, _, s) => (c, s) }
     centroids
+  }
+
+  /** Member count and exact integer sum vector of each cluster that
+    * `data` forms around `centroids`, sorted by cluster id. */
+  private def clusterSums(data: Array[(Long, Array[Long])],
+                          centroids: Seq[(Long, Array[Long])])
+      : Seq[(Long, Long, Array[Long])] = {
+    val norms = checkedNorms(centroids)
+    val dim = centroids.head._2.length
+    data.groupBy(d => assignLocalWithNorms(centroids, norms, d._2))
+      .toSeq.sortBy(_._1)
+      .map { case (cid, members) =>
+        val s = new Array[Long](dim)
+        members.foreach(m => (0 until dim).foreach(i => s(i) += m._2(i)))
+        (cid, members.length.toLong, s)
+      }
   }
 
   /** Driver-side [[codebookWithCounts]] over already-probed data — the
@@ -148,19 +161,9 @@ object KMeans {
     * cluster, sorted by cluster id. */
   private[llm] def localCodebookWithCounts(
       data: Array[(Long, Array[Long])], seeds: Seq[(Long, Array[Long])],
-      iters: Int): Seq[(Long, Long, Seq[Long])] = {
-    val cents = localLloyd(data, seeds, iters)
-    val dim = cents.head._2.length
-    val norms = checkedNorms(cents)
-    data.groupBy(d => assignLocalWithNorms(cents, norms, d._2))
-      .toSeq.sortBy(_._1)
-      .map { case (cid, members) =>
-        val s = new Array[Long](dim)
-        members.foreach(m =>
-          (0 until dim).foreach(i => s(i) += m._2(i)))
-        (cid, members.length.toLong, s.toSeq)
-      }
-  }
+      iters: Int): Seq[(Long, Long, Seq[Long])] =
+    clusterSums(data, localLloyd(data, seeds, iters))
+      .map { case (cid, n, s) => (cid, n, s.toSeq) }
 
   /** Squared norms of the sum vectors, overflow-CHECKED: a plain Long
     * sum of squares wraps silently once a centroid sum component passes
@@ -204,32 +207,30 @@ object KMeans {
   /** Final centroids as a driver-side codebook (id, sum-vector) — the
     * shape [[AnnOps.ivfTopKWithCodebook]] takes. */
   def codebook(emb: DataFrame, idCol: String, vecCol: String,
-               seedPred: Column, iters: Int = 3,
-               localBelow: Long = 0L): Seq[(Long, Seq[Long])] =
-    codebookWithCounts(emb, idCol, vecCol, seedPred, iters, localBelow)
+               seedPred: Column, iters: Int = 3): Seq[(Long, Seq[Long])] =
+    codebookWithCounts(emb, idCol, vecCol, seedPred, iters)
       .map { case (id, _, s) => (id, s) }
 
   /** [[codebook]] plus member counts — (cluster id, count, sum-vector);
     * count enables exact integer MEAN centroids ([[AnnOps.pqTrain]]).
-    * `localBelow` is [[lloyd]]'s small-input endgame, extended to the
-    * codebook stats: the one take(n+1) probe yields seeds, members AND
-    * final counts/sums in the driver — training collapses to ONE job
-    * (the same labels/sums, pinned by the q80/q126 oracles which replay
-    * the distributed rounds). */
+    * A small input takes [[lloyd]]'s endgame, extended to the codebook
+    * stats: the one probe yields seeds, members AND final counts/sums
+    * in the driver — training collapses to ONE job (the same sums as
+    * [[codebookWithCountsDistributed]], pinned). */
   def codebookWithCounts(emb: DataFrame, idCol: String, vecCol: String,
-                         seedPred: Column, iters: Int = 3,
-                         localBelow: Long = 0L): Seq[(Long, Long, Seq[Long])] = {
-    require(localBelow < Int.MaxValue, "localBelow must fit an Int take()")
-    if (localBelow > 0L) {
-      val probe = emb.select(col(idCol).cast("long").as("__id"),
-          AnnOps.quantize(col(vecCol)).as("__q"), seedPred.as("__seed"))
-        .take(localBelow.toInt + 1)
-      if (probe.length <= localBelow) {
-        val (data, seeds) = probeData(probe)
-        return localCodebookWithCounts(data, seeds, iters)
-      }
+                         seedPred: Column, iters: Int = 3)
+      : Seq[(Long, Long, Seq[Long])] =
+    probed(emb, idCol, vecCol, seedPred) match {
+      case Some((data, seeds)) => localCodebookWithCounts(data, seeds, iters)
+      case None =>
+        codebookWithCountsDistributed(emb, idCol, vecCol, seedPred, iters)
     }
-    val assigned = lloyd(emb, idCol, vecCol, seedPred, iters)
+
+  /** [[codebookWithCounts]] over [[lloydDistributed]]'s rounds. */
+  private[graft] def codebookWithCountsDistributed(emb: DataFrame,
+      idCol: String, vecCol: String, seedPred: Column,
+      iters: Int = 3): Seq[(Long, Long, Seq[Long])] = {
+    val assigned = lloydDistributed(emb, idCol, vecCol, seedPred, iters)
     val e = emb.select(col(idCol).cast("long").as("__id"),
       AnnOps.quantize(col(vecCol)).as("__q"))
     val dim = e.select(size(col("__q"))).head().getInt(0)

@@ -4,6 +4,8 @@ import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 
+import graft.operators.SmallInput
+
 /**
  * Sequence packing for LLM pretraining (beyond-reference surface): the
  * concatenate-then-chunk assignment — documents are laid out in a
@@ -37,38 +39,45 @@ object Packing {
     * whose lineage would otherwise be recomputed whole. `tokCol` must
     * be non-negative; null counts as 0. `idCol` must be UNIQUE — ties
     * have no defined layout order, so duplicate ids would make their
-    * rows' prefix sums partition-placement-dependent. */
-  /** `localBelow = n` (opt-in) finishes SMALL inputs in the driver — the
-    * KMeans/ConnectedComponents/PageRank endgame applied to the prefix
-    * sum: one take(n+1) both guards the row count and IS the data, so
-    * the range shuffle + persist + totals collect + offset pass collapse
-    * to one job plus an in-driver sort and running sum over the same
-    * longs — output bit-identical (pinned). Production corpora keep 0
-    * and never pay the probe. */
+    * rows' prefix sums partition-placement-dependent.
+    *
+    * An input of at most [[SmallInput.Rows]] rows finishes in the
+    * driver — the KMeans/PageRank endgame applied to the prefix sum:
+    * the one probe both guards the row count and IS the data, so the
+    * range shuffle + persist + totals collect + offset pass collapse to
+    * one job plus an in-driver sort and running sum over the same
+    * longs — output bit-identical to [[byTokenBudgetDistributed]]
+    * (pinned). */
   def byTokenBudget(df: DataFrame, idCol: String, tokCol: String,
-                    budget: Long, localBelow: Long = 0L): DataFrame = {
-    require(budget >= 1L, s"budget must be >= 1 token, got $budget")
-    require(localBelow < Int.MaxValue, "localBelow must fit an Int take()")
-    val spark = df.sparkSession
-    val narrow = df.select(col(idCol).cast("long").as("__id"),
-      coalesce(col(tokCol).cast("long"), lit(0L)).as("__tok"))
-
-    if (localBelow > 0L) {
-      val probe = narrow.take(localBelow.toInt + 1)
-      if (probe.length <= localBelow) {
-        import spark.implicits._
+                    budget: Long): DataFrame =
+    SmallInput.probe(narrow(df, idCol, tokCol, budget), SmallInput.Rows) match {
+      case None => byTokenBudgetDistributed(df, idCol, tokCol, budget)
+      case Some(probe) =>
+        import df.sparkSession.implicits._
         var acc = 0L
-        return probe.map(r => (r.getLong(0), r.getLong(1)))
+        probe.map(r => (r.getLong(0), r.getLong(1)))
           .sortBy(_._1).toSeq
           .map { case (id, tok) =>
             val start = acc; acc += tok
             (id, tok, start, start / budget)
           }
           .toDF(idCol, tokCol, "global_start", "seq_id")
-      }
     }
 
-    val sorted = narrow
+  /** (id, token count) as longs, null counts as 0; checks `budget`. */
+  private def narrow(df: DataFrame, idCol: String, tokCol: String,
+                     budget: Long): DataFrame = {
+    require(budget >= 1L, s"budget must be >= 1 token, got $budget")
+    df.select(col(idCol).cast("long").as("__id"),
+      coalesce(col(tokCol).cast("long"), lit(0L)).as("__tok"))
+  }
+
+  /** [[byTokenBudget]]'s distributed prefix sum, at any input size. */
+  private[graft] def byTokenBudgetDistributed(df: DataFrame, idCol: String,
+                                              tokCol: String,
+                                              budget: Long): DataFrame = {
+    val spark = df.sparkSession
+    val sorted = narrow(df, idCol, tokCol, budget)
       .repartitionByRange(col("__id"))
       .sortWithinPartitions(col("__id"))
       .persist()

@@ -5,6 +5,8 @@ import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.SmallInput
+
 /**
  * Deterministic, engine-portable sampling/split assignment for corpus
  * curation (beyond-reference surface): every row's fate is a pure
@@ -36,8 +38,7 @@ object Sampling {
     require(bounds.map(_._2).distinct.length == bounds.length,
       "bounds must be strictly ascending — a duplicate bound makes the " +
         "later label unreachable (its range is empty)")
-    val prefix = substring(
-      graft.functions.Md5Functions.md5Hex(concat(lit(salt + "|"), col(idCol).cast("string"))), 1, 2)
+    val prefix = substring(saltedMd5(salt, col(idCol)), 1, 2)
     val label = bounds.foldRight(lit(defaultLabel): Column) {
       case ((lbl, hi), acc) => when(prefix < lit(hi), lit(lbl)).otherwise(acc)
     }
@@ -51,9 +52,7 @@ object Sampling {
   def hashSample(df: DataFrame, idCol: String, salt: String,
                  bound: String): DataFrame = {
     requireHexBound(bound, "sample")
-    df.where(substring(
-      graft.functions.Md5Functions.md5Hex(concat(lit(salt + "|"), col(idCol).cast("string"))), 1, 2)
-      < lit(bound))
+    df.where(substring(saltedMd5(salt, col(idCol)), 1, 2) < lit(bound))
   }
 
   /** Stratified deterministic subsample: each stratum keeps rows whose
@@ -70,8 +69,7 @@ object Sampling {
       case ((stratum, b), acc) =>
         when(col(strataCol) === stratum, lit(b)).otherwise(acc)
     }
-    df.where(substring(
-      graft.functions.Md5Functions.md5Hex(concat(lit(salt + "|"), col(idCol).cast("string"))), 1, 2) < bound)
+    df.where(substring(saltedMd5(salt, col(idCol)), 1, 2) < bound)
   }
 
   /** Budget-driven mixture sampling — the data-mixing step of corpus
@@ -129,9 +127,7 @@ object Sampling {
         when(col("__budget") >= col("__n"), lit("g"))
           .otherwise(lpad(lower(hex(
             expr("(__budget * 65536) div __n"))), 4, "0")))
-      .where(substring(
-        graft.functions.Md5Functions.md5Hex(concat(lit(salt + "|"), col(idCol).cast("string"))), 1, 4)
-        < col("__bound"))
+      .where(substring(saltedMd5(salt, col(idCol)), 1, 4) < col("__bound"))
       .drop("__stratum", "__n", "__budget", "__bound")
   }
 
@@ -319,26 +315,17 @@ object Sampling {
     * drop the hint and let the corpus shuffle-join on stratum. */
   def capPerStratum(df: DataFrame, idCol: String, strataCol: String,
                     salt: String, cap: Long,
-                    prefixLen: Int = 4, localBelow: Long = 0L): DataFrame = {
-    require(cap >= 0L, s"cap must be >= 0, got $cap")
-    require(prefixLen >= 1 && prefixLen <= 8,
-      s"prefixLen must be in [1, 8], got $prefixLen")
-    require(localBelow < Int.MaxValue, "localBelow must fit an Int take()")
-    val outCols = df.columns.map(col).toSeq
-
-    // small-input endgame (opt-in, the deterministicShard pattern): below
-    // the threshold the bucket-count/cutoff machinery is pure job
-    // overhead — ONE take(n+1) carries the rows, the per-stratum
-    // selection runs in-driver over the same (md5(salt|id), id) order,
-    // kept set bit-identical (pinned; idCol is unique — the operator's
-    // premise — so hash ties cannot arise). Production corpora pass 0.
-    if (localBelow > 0L) {
-      val hashed = df.withColumn("__h",
-        graft.functions.Md5Functions.md5Hex(concat(lit(salt + "|"), col(idCol).cast("string"))))
-      val probe = hashed.take(localBelow.toInt + 1)
-      if (probe.length <= localBelow) {
+                    prefixLen: Int = 4): DataFrame =
+    // small-input endgame: the per-stratum selection runs in-driver
+    // over the same (md5(salt|id), id) order, kept set bit-identical to
+    // capPerStratumDistributed (pinned; idCol is unique, so no hash ties)
+    SmallInput.probe(capInput(df, idCol, salt, cap, prefixLen),
+        SmallInput.Rows) match {
+      case None =>
+        capPerStratumDistributed(df, idCol, strataCol, salt, cap, prefixLen)
+      case Some(probe) if probe.isEmpty => df.limit(0)
+      case Some(probe) =>
         val spark = df.sparkSession
-        if (probe.isEmpty) return df.limit(0)
         val sIdx = probe.head.fieldIndex(strataCol)
         val hIdx = probe.head.fieldIndex("__h")
         val keepN = math.min(cap, Int.MaxValue.toLong).toInt
@@ -347,13 +334,25 @@ object Sampling {
           .map(r => org.apache.spark.sql.Row.fromSeq(
             df.schema.fieldNames.toSeq.map(f => r.get(r.fieldIndex(f)))))
           .toSeq
-        return spark.createDataFrame(
-          spark.sparkContext.parallelize(kept, 1), df.schema)
-      }
+        spark.createDataFrame(spark.sparkContext.parallelize(kept, 1),
+          df.schema)
     }
-    val withH = df
-      .withColumn("__h",
-        graft.functions.Md5Functions.md5Hex(concat(lit(salt + "|"), col(idCol).cast("string"))))
+
+  /** `df` with its salted hash `__h`, after checking the arguments. */
+  private def capInput(df: DataFrame, idCol: String, salt: String,
+                       cap: Long, prefixLen: Int): DataFrame = {
+    require(cap >= 0L, s"cap must be >= 0, got $cap")
+    require(prefixLen >= 1 && prefixLen <= 8,
+      s"prefixLen must be in [1, 8], got $prefixLen")
+    df.withColumn("__h", saltedMd5(salt, col(idCol)))
+  }
+
+  /** [[capPerStratum]]'s distributed selection, at any input size. */
+  private[graft] def capPerStratumDistributed(df: DataFrame, idCol: String,
+      strataCol: String, salt: String, cap: Long,
+      prefixLen: Int = 4): DataFrame = {
+    val outCols = df.columns.map(col).toSeq
+    val withH = capInput(df, idCol, salt, cap, prefixLen)
       .withColumn("__b", substring(col("__h"), 1, prefixLen))
     val counts = withH.groupBy(col(strataCol).as("__stratum"), col("__b"))
       .agg(count(lit(1)).as("__n"))
@@ -399,35 +398,39 @@ object Sampling {
     * cluster build), per-partition row counts to the driver (one row of
     * metadata per partition), then each partition emits offset + local
     * position map-side. The same technique as [[Packing.byTokenBudget]]'s
-    * prefix sum, with row count as the measure. */
-  /** `localBelow = n` (opt-in): the [[graft.operators.llm.Packing]]
-    * endgame for the shard rank — below the threshold one take(n+1)
-    * carries the (id, salted hash) rows and the rank is an in-driver
-    * sort over the same (hash, id) order (lowercase-hex ASCII compares
-    * identically as a Java String and as UTF8String bytes), output
-    * bit-identical (pinned). Production corpora keep 0. */
+    * prefix sum, with row count as the measure.
+    *
+    * Small-input endgame: up to [[SmallInput.Rows]] rows the one
+    * probe carries the (id, salted hash) rows and the rank is an
+    * in-driver sort over the same (hash, id) order (lowercase-hex ASCII
+    * compares identically as a Java String and as UTF8String bytes),
+    * output bit-identical to [[deterministicShardDistributed]] (pinned). */
   def deterministicShard(df: DataFrame, idCol: String, salt: String,
-                         shardSize: Long, localBelow: Long = 0L): DataFrame = {
-    require(shardSize >= 1L, s"shardSize must be >= 1, got $shardSize")
-    require(localBelow < Int.MaxValue, "localBelow must fit an Int take()")
-    val spark = df.sparkSession
-    val hashed = df
-      .select(col(idCol).cast("long").as("__id"))
-      .select(col("__id"),
-        graft.functions.Md5Functions.md5Hex(concat(lit(salt + "|"), col("__id").cast("string"))).as("__h"))
-
-    if (localBelow > 0L) {
-      val probe = hashed.take(localBelow.toInt + 1)
-      if (probe.length <= localBelow) {
-        import spark.implicits._
-        return probe.map(r => (r.getLong(0), r.getString(1)))
+                         shardSize: Long): DataFrame =
+    SmallInput.probe(shardInput(df, idCol, salt, shardSize),
+        SmallInput.Rows) match {
+      case None => deterministicShardDistributed(df, idCol, salt, shardSize)
+      case Some(probe) =>
+        import df.sparkSession.implicits._
+        probe.map(r => (r.getLong(0), r.getString(1)))
           .sortBy { case (id, h) => (h, id) }.toSeq.zipWithIndex
           .map { case ((id, _), r) => (id, r.toLong, r.toLong / shardSize) }
           .toDF(idCol, "rank", "shard")
-      }
     }
 
-    val keyed = hashed
+  /** (id as long, salted hash), after checking `shardSize`. */
+  private def shardInput(df: DataFrame, idCol: String, salt: String,
+                         shardSize: Long): DataFrame = {
+    require(shardSize >= 1L, s"shardSize must be >= 1, got $shardSize")
+    df.select(col(idCol).cast("long").as("__id"))
+      .select(col("__id"), saltedMd5(salt, col("__id")).as("__h"))
+  }
+
+  /** [[deterministicShard]]'s distributed rank, at any input size. */
+  private[graft] def deterministicShardDistributed(df: DataFrame,
+      idCol: String, salt: String, shardSize: Long): DataFrame = {
+    val spark = df.sparkSession
+    val keyed = shardInput(df, idCol, salt, shardSize)
       .repartitionByRange(col("__h"), col("__id"))
       .sortWithinPartitions(col("__h"), col("__id"))
       .persist()
@@ -463,6 +466,12 @@ object Sampling {
       ranked.localCheckpoint(true)
     } finally keyed.unpersist(blocking = false)
   }
+
+  /** md5 hex of "salt|id" — the salted hash every sampler orders or
+    * buckets by. */
+  private def saltedMd5(salt: String, id: Column): Column =
+    graft.functions.Md5Functions.md5Hex(
+      concat(lit(salt + "|"), id.cast("string")))
 
   /** Bounds compare lexicographically against LOWERCASE md5 hex — an
     * uppercase, non-hex, or wrong-length bound (e.g. "CC", "c") would

@@ -223,10 +223,12 @@ class BatchOpsSpec extends AnyFunSuite with SparkTestSession {
     // must follow ID order, not input order
     val rows = scala.util.Random.shuffle(
       (1L to 200L).map(i => (i, i)).toList)
-    for (parts <- Seq(1, 7); localBelow <- Seq(0L, 1000L)) {
+    // both bodies: the small-input endgame and the distributed prefix sum
+    for (parts <- Seq(1, 7);
+         pack <- Seq(Packing.byTokenBudget _,
+           Packing.byTokenBudgetDistributed _)) {
       val df = rows.toDF("doc_id", "n_tok").repartition(parts)
-      val got = Packing.byTokenBudget(df, "doc_id", "n_tok", budget = 100L,
-          localBelow = localBelow)
+      val got = pack(df, "doc_id", "n_tok", 100L)
         .as[(Long, Long, Long, Long)].collect()
         .map { case (id, tok, start, seq) =>
           assert(tok == id) // the token column rides through unchanged
@@ -246,12 +248,12 @@ class BatchOpsSpec extends AnyFunSuite with SparkTestSession {
       .where($"doc_id" === 14L)
       .as[(Long, Long, Long, Long)].collect()(0)
     assert(s14 == ((14L, 14L, 91L, 0L)))
-    // empty input and invalid budget
-    assert(Packing.byTokenBudget(
-      Seq.empty[(Long, Long)].toDF("doc_id", "n_tok"), "doc_id", "n_tok",
-      8L).count() == 0)
+    // invalid budget, on both bodies
     intercept[IllegalArgumentException] {
       Packing.byTokenBudget(df2, "doc_id", "n_tok", 0L)
+    }
+    intercept[IllegalArgumentException] {
+      Packing.byTokenBudgetDistributed(df2, "doc_id", "n_tok", 0L)
     }
   }
 
@@ -281,8 +283,10 @@ class BatchOpsSpec extends AnyFunSuite with SparkTestSession {
     val df = ((0L until 40L).map(i => (i, "big")) ++
       (100L until 103L).map(i => (i, "small")) ++
       (200L until 210L).map(i => (i, null: String))).toDF("doc_id", "src")
+    // prefixLen only shapes the distributed selection's buckets
     for (pl <- Seq(1, 2, 4)) {
-      val kept = Sampling.capPerStratum(df, "doc_id", "src", "t", 5L, pl)
+      val kept = Sampling.capPerStratumDistributed(df, "doc_id", "src", "t",
+          5L, pl)
         .as[(Long, String)].collect()
       val byStratum = kept.groupBy(_._2).view.mapValues(_.map(_._1).toSet)
       // exact sizes: capped, whole, capped — at every bucket width
@@ -301,18 +305,15 @@ class BatchOpsSpec extends AnyFunSuite with SparkTestSession {
     // cap 0 drops everything; cap >= all keeps everything
     assert(Sampling.capPerStratum(df, "doc_id", "src", "t", 0L).count() == 0)
     assert(Sampling.capPerStratum(df, "doc_id", "src", "t", 99L).count() == 53)
-    // the localBelow endgame is BIT-IDENTICAL to the distributed path —
-    // capped / whole / NULL strata, at threshold and above it
-    val dist = Sampling.capPerStratum(df, "doc_id", "src", "t", 5L)
-      .as[(Long, String)].collect().toSet
-    for (lb <- Seq(53L, 1000L)) {
-      val local = Sampling.capPerStratum(df, "doc_id", "src", "t", 5L,
-        localBelow = lb).as[(Long, String)].collect().toSet
-      assert(local == dist, s"localBelow=$lb diverged")
+    // the small-input endgame is BIT-IDENTICAL to the distributed path —
+    // capped / whole / NULL strata, at every cap
+    for (cap <- Seq(0L, 5L, 99L)) {
+      val dist = Sampling.capPerStratumDistributed(df, "doc_id", "src", "t",
+        cap).as[(Long, String)].collect().toSet
+      val local = Sampling.capPerStratum(df, "doc_id", "src", "t", cap)
+        .as[(Long, String)].collect().toSet
+      assert(local == dist, s"cap=$cap diverged")
     }
-    // threshold BELOW the input: probe overflows, distributed path runs
-    assert(Sampling.capPerStratum(df, "doc_id", "src", "t", 5L,
-      localBelow = 10L).as[(Long, String)].collect().toSet == dist)
   }
 
   test("dsirSelect: target-like raw docs outrank off-distribution ones; " +
@@ -405,7 +406,7 @@ class BatchOpsSpec extends AnyFunSuite with SparkTestSession {
   test("deterministic shard: exact hash-order permutation, partition-invariant") {
     import graft.operators.llm.Sampling
     val df = (0L until 200L).toDF("doc_id")
-    val out = Sampling.deterministicShard(df, "doc_id", "s", 32L)
+    val out = Sampling.deterministicShardDistributed(df, "doc_id", "s", 32L)
       .as[(Long, Long, Long)].collect()
     // ranks are exactly the permutation 0..n-1
     assert(out.map(_._2).sorted.toSeq == (0L until 200L).toSeq)
@@ -418,19 +419,14 @@ class BatchOpsSpec extends AnyFunSuite with SparkTestSession {
     // shard is the rank's block
     assert(out.forall { case (_, r, sh) => sh == r / 32L })
     // input partitioning must not change a single assignment
-    val out2 = Sampling.deterministicShard(
+    val out2 = Sampling.deterministicShardDistributed(
       df.repartition(7), "doc_id", "s", 32L)
       .as[(Long, Long, Long)].collect().toSet
     assert(out2 == out.toSet)
-    // the localBelow endgame is bit-identical to the distributed rank
+    // the small-input endgame is bit-identical to the distributed rank
     val outLocal = Sampling.deterministicShard(
-      df.repartition(7), "doc_id", "s", 32L, localBelow = 1000L)
+      df.repartition(7), "doc_id", "s", 32L)
       .as[(Long, Long, Long)].collect().toSet
     assert(outLocal == out.toSet)
-    // threshold bypass: larger inputs still run distributed
-    val outBypass = Sampling.deterministicShard(
-      df, "doc_id", "s", 32L, localBelow = 10L)
-      .as[(Long, Long, Long)].collect().toSet
-    assert(outBypass == out.toSet)
   }
 }

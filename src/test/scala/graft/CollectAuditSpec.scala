@@ -42,8 +42,6 @@ class CollectAuditSpec extends AnyFunSuite {
   //    BOUNDED md5-bucket space (<= buckets rows).
   //  - operators/llm/Sampling.scala: per-stratum count tables
   //    (|strata| rows) and exact-rank range boundaries (partitions).
-  //  - operators/llm/AnnOps.scala: the IVF seed-codebook harvest —
-  //    require()d <= 256 centroids.
   //  - operators/llm/Packing.scala: per-partition row counts for the
   //    exact distributed prefix sum (partitions rows).
   //  - operators/llm/ConnectedComponents.scala: the 1-row convergence
@@ -68,7 +66,6 @@ class CollectAuditSpec extends AnyFunSuite {
     "graft/operators/llm/KMeans.scala" -> 3,
     "graft/operators/llm/TextOps.scala" -> 2,
     "graft/operators/llm/Sampling.scala" -> 2,
-    "graft/operators/llm/AnnOps.scala" -> 1,
     "graft/operators/llm/Packing.scala" -> 1,
     "graft/operators/llm/ConnectedComponents.scala" -> 1,
     "graft/operators/Sketches.scala" -> 1,

@@ -39,21 +39,18 @@ class GraphOpsSpec extends AnyFunSuite with SparkTestSession {
     assert(pr(2L) > pr(3L))
   }
 
-  test("pageRank: localBelow endgame is bit-identical to the distributed rounds") {
-    // multi-edges, a sink-only node, a self-loop — every code path
-    val edges = Seq((1L, 2L), (1L, 2L), (2L, 3L), (3L, 1L), (1L, 4L),
-      (4L, 4L), (2L, 1L)).toDF("src", "dst")
-    val dist = GraphOps.pageRank(edges, "src", "dst", iters = 3)
+  test("pageRank: the small-input endgame is bit-identical to the distributed rounds") {
+    // multi-edges, a sink-only node, a self-loop, a NULL endpoint —
+    // every code path
+    val edges = (Seq((1L, 2L), (1L, 2L), (2L, 3L), (3L, 1L), (1L, 4L),
+      (4L, 4L), (2L, 1L)).map { case (s, d) => (s, Option(d)) } :+
+      ((5L, None))).toDF("src", "dst")
+    val dist = GraphOps.pageRankDistributed(edges, "src", "dst", iters = 3)
       .as[(Long, Long)].collect().toMap
-    val local = GraphOps.pageRank(edges, "src", "dst", iters = 3,
-      localBelow = 1000L)
+    val local = GraphOps.pageRank(edges, "src", "dst", iters = 3)
       .as[(Long, Long)].collect().toMap
     assert(dist == local)
-    // threshold bypass: a graph larger than localBelow still runs
-    // distributed and agrees
-    val bypass = GraphOps.pageRank(edges, "src", "dst", iters = 3,
-      localBelow = 3L).as[(Long, Long)].collect().toMap
-    assert(bypass == dist)
+    assert(local.keySet == Set(1L, 2L, 3L, 4L))
   }
 
   test("snapshotDiff classifies all four statuses") {

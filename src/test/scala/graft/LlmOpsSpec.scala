@@ -121,6 +121,8 @@ class LlmOpsSpec extends AnyFunSuite with SparkTestSession {
   test("connected components: empty pair set converges to empty output") {
     val pairs = Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
     assert(ConnectedComponents(pairs, "doc_a", "doc_b").count() == 0)
+    assert(ConnectedComponents.distributed(pairs, "doc_a", "doc_b")
+      .count() == 0)
   }
 
   test("connected components: un-converged run fails loudly") {
@@ -129,7 +131,8 @@ class LlmOpsSpec extends AnyFunSuite with SparkTestSession {
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L))
       .toDF("doc_a", "doc_b")
     val e = intercept[IllegalArgumentException] {
-      ConnectedComponents(pairs, "doc_a", "doc_b", maxIter = 1).collect()
+      ConnectedComponents.distributed(pairs, "doc_a", "doc_b", maxIter = 1)
+        .collect()
     }
     assert(e.getMessage.contains("did not converge"))
   }
@@ -141,20 +144,21 @@ class LlmOpsSpec extends AnyFunSuite with SparkTestSession {
     // done within 5 rounds, pinning the double-jump convergence rate
     val chain = (0L until 32L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
     assertThrows[IllegalArgumentException] {
-      ConnectedComponents(chain, "doc_a", "doc_b", maxIter = 8).collect()
+      ConnectedComponents.distributed(chain, "doc_a", "doc_b", maxIter = 8)
+        .collect()
     }
-    val cc = ConnectedComponents(chain, "doc_a", "doc_b", maxIter = 5,
-      shortcut = true).as[(Long, Long)].collect()
+    val cc = ConnectedComponents.distributed(chain, "doc_a", "doc_b",
+      maxIter = 5, shortcut = true).as[(Long, Long)].collect()
     assert(cc.length == 33 && cc.forall(_._2 == 0L))
   }
 
   test("connected components: shortcut agrees with plain on mixed shapes") {
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (11L, 12L),
       (10L, 12L), (20L, 21L)).toDF("doc_a", "doc_b")
-    val plain = ConnectedComponents(pairs, "doc_a", "doc_b")
+    val plain = ConnectedComponents.distributed(pairs, "doc_a", "doc_b")
       .as[(Long, Long)].collect().toMap
-    val fast = ConnectedComponents(pairs, "doc_a", "doc_b", shortcut = true)
-      .as[(Long, Long)].collect().toMap
+    val fast = ConnectedComponents.distributed(pairs, "doc_a", "doc_b",
+      shortcut = true).as[(Long, Long)].collect().toMap
     assert(plain == fast)
   }
 
@@ -164,36 +168,43 @@ class LlmOpsSpec extends AnyFunSuite with SparkTestSession {
     val pairs = (Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (11L, 12L),
       (10L, 12L), (20L, 21L), (30L, 30L)) ++
       (100L until 164L).map(i => (i, i + 1))).toDF("doc_a", "doc_b")
-    val dist = ConnectedComponents(pairs, "doc_a", "doc_b", shortcut = true)
+    val dist = ConnectedComponents.distributed(pairs, "doc_a", "doc_b",
+      shortcut = true).as[(Long, Long)].collect().toMap
+    val local = ConnectedComponents(pairs, "doc_a", "doc_b")
       .as[(Long, Long)].collect().toMap
-    val local = ConnectedComponents(pairs, "doc_a", "doc_b",
-      localBelow = 1L << 20).as[(Long, Long)].collect().toMap
     assert(local == dist)
     assert(local.get(30L).contains(30L)) // self-edge node labeled by both
-    // above the threshold the distributed path still runs (and a 65-deep
-    // chain at maxIter=2 cannot converge — proving which path executed)
+    // a 65-deep chain at maxIter=2 cannot converge in the fixpoint, and
+    // the endgame has no iteration limit — proving which path executed
     assertThrows[IllegalArgumentException] {
-      ConnectedComponents(pairs, "doc_a", "doc_b", maxIter = 2,
-        localBelow = 3L).collect()
+      ConnectedComponents.distributed(pairs, "doc_a", "doc_b", maxIter = 2)
+        .collect()
     }
+    assert(ConnectedComponents(pairs, "doc_a", "doc_b", maxIter = 2)
+      .as[(Long, Long)].collect().toMap == dist)
     // output id type follows the input edge type (int stays int)
     val intPairs = Seq((1, 2), (2, 3)).toDF("doc_a", "doc_b")
-    val t = ConnectedComponents(intPairs, "doc_a", "doc_b",
-      localBelow = 1L << 20)
-    assert(t.schema("node").dataType ==
-      org.apache.spark.sql.types.IntegerType)
-    assert(t.as[(Int, Int)].collect().toMap == Map(1 -> 1, 2 -> 1, 3 -> 1))
+    for (t <- Seq(ConnectedComponents(intPairs, "doc_a", "doc_b"),
+        ConnectedComponents.distributed(intPairs, "doc_a", "doc_b"))) {
+      assert(t.schema("node").dataType ==
+        org.apache.spark.sql.types.IntegerType)
+      assert(t.as[(Int, Int)].collect().toMap == Map(1 -> 1, 2 -> 1, 3 -> 1))
+    }
     // STRING ids: the local endgame's long-cast ordering ("9" < "10")
     // disagrees with the column type's own ordering ("10" < "9"), so
-    // localBelow must decline and keep the distributed path — labels
-    // identical with and without the flag (r19 review finding)
+    // apply must decline the endgame and keep the distributed path —
+    // labels identical to the distributed body's (r19 review finding)
     val strPairs = Seq(("9", "10"), ("10", "11")).toDF("doc_a", "doc_b")
-    val strDist = ConnectedComponents(strPairs, "doc_a", "doc_b")
+    val strDist = ConnectedComponents.distributed(strPairs, "doc_a", "doc_b")
       .as[(String, String)].collect().toMap
-    val strLocal = ConnectedComponents(strPairs, "doc_a", "doc_b",
-      localBelow = 1L << 20).as[(String, String)].collect().toMap
+    val strLocal = ConnectedComponents(strPairs, "doc_a", "doc_b")
+      .as[(String, String)].collect().toMap
     assert(strDist == Map("9" -> "10", "10" -> "10", "11" -> "10"))
     assert(strLocal == strDist)
+    // ...and the fixpoint it runs is the one that needs a second round
+    assertThrows[IllegalArgumentException] {
+      ConnectedComponents(strPairs, "doc_a", "doc_b", maxIter = 1).collect()
+    }
   }
 
   test("hash split: deterministic, exhaustive, order-insensitive") {
@@ -371,8 +382,8 @@ class LlmOpsSpec extends AnyFunSuite with SparkTestSession {
     // cache is released on exit)
     val before = spark.sparkContext.getPersistentRDDs.size
     val chain = (0L until 32L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val cc = ConnectedComponents(chain, "doc_a", "doc_b", maxIter = 8,
-      shortcut = true)
+    val cc = ConnectedComponents.distributed(chain, "doc_a", "doc_b",
+      maxIter = 8, shortcut = true)
     assert(cc.count() == 33)
     val after = spark.sparkContext.getPersistentRDDs.size
     assert(after - before <= 1,
@@ -502,13 +513,12 @@ class LlmOpsSpec extends AnyFunSuite with SparkTestSession {
     // trained centroids separate the clusters, so ADC ranks the
     // query's own cluster (ids 1-9) above every other prototype
     assert(got.forall(_ < 10), s"top-5 leaked other clusters: $got")
-    // the localBelow endgame must train the IDENTICAL codebooks (the
+    // the small-input endgame must train the IDENTICAL codebooks (the
     // q126 oracle replays the distributed rounds, so any divergence in
     // the driver path breaks the gate)
-    val cbsLocal = AnnOps.pqTrain(df, "vec_id", "embedding",
-      seedPred = col("vec_id") % 10 === 0, mSub, dim,
-      localBelow = 1000L)
-    assert(cbsLocal == cbs, "localBelow pqTrain diverged from distributed")
+    val cbsDist = AnnOps.pqTrainDistributed(df, "vec_id", "embedding",
+      seedPred = col("vec_id") % 10 === 0, mSub, dim)
+    assert(cbsDist == cbs, "pqTrain endgame diverged from distributed")
   }
 
   test("shared IVF-PQ encode: ivfPqTopKFromCodes and pqTopKRerankedFromCodes " +
@@ -561,16 +571,18 @@ class LlmOpsSpec extends AnyFunSuite with SparkTestSession {
       (((i * 11 + d * 3) % 17) - 8).toFloat / 2.0f)))
     val df = vecs.toDF("vec_id", "embedding")
     val sp = col("vec_id") < 3
-    for (below <- Seq(0L, 1000L)) {
-      val (coarse, cbs) = AnnOps.pqTrainWithCoarse(df, "vec_id",
-        "embedding", sp, mSub, dim, iters = 2, localBelow = below)
-      assert(coarse == KMeans.codebook(df, "vec_id", "embedding", sp,
-        iters = 2, localBelow = below),
-        s"coarse diverged at localBelow=$below")
-      assert(cbs == AnnOps.pqTrain(df, "vec_id", "embedding", sp, mSub,
-        dim, iters = 2, localBelow = below),
-        s"pq codebooks diverged at localBelow=$below")
-    }
+    val (coarse, cbs) = AnnOps.pqTrainWithCoarse(df, "vec_id",
+      "embedding", sp, mSub, dim, iters = 2)
+    assert(coarse == KMeans.codebook(df, "vec_id", "embedding", sp,
+      iters = 2), "coarse diverged from KMeans.codebook")
+    assert(cbs == AnnOps.pqTrain(df, "vec_id", "embedding", sp, mSub,
+      dim, iters = 2), "pq codebooks diverged from pqTrain")
+    // off the endgame: the distributed bodies its large-input branch runs
+    assert(coarse == KMeans.codebookWithCountsDistributed(df, "vec_id",
+      "embedding", sp, iters = 2).map { case (id, _, s) => (id, s) },
+      "coarse diverged from the distributed rounds")
+    assert(cbs == AnnOps.pqTrainDistributed(df, "vec_id", "embedding", sp,
+      mSub, dim, iters = 2), "pq codebooks diverged from the distributed rounds")
   }
 
   test("vocab: df dedups per doc, tf counts occurrences, ties break on token") {
@@ -752,34 +764,32 @@ class LlmOpsSpec extends AnyFunSuite with SparkTestSession {
     val quant = rows.map { case (id, q) =>
       (id, q.map(v => math.round((v / 1000.0f).toDouble * 1000)))
     }
-    for (iters <- Seq(1, 2, 4)) {
-      val got = graft.operators.llm.KMeans.lloyd(
-        toEmb(rows), "vec_id", "embedding", col("vec_id") < 5, iters)
-        .as[(Long, Long)].collect().toMap
+    for (iters <- Seq(1, 2, 4);
+         lloyd <- Seq(KMeans.lloyd _, KMeans.lloydDistributed _)) {
+      val got = lloyd(toEmb(rows), "vec_id", "embedding", col("vec_id") < 5,
+        iters).as[(Long, Long)].collect().toMap
       assert(got == refLloyd(quant, Set(0L, 1L, 2L, 3L, 4L), iters),
         s"iters=$iters")
     }
   }
 
-  test("kmeans: localBelow endgame labels == distributed; big threshold bypasses") {
+  test("kmeans: the small-input endgame labels == the distributed rounds") {
     val r = new scala.util.Random(7)
     val rows = (0L until 50L).map(i =>
       (i, Array.fill(5)((r.nextInt(2001) - 1000).toLong)))
     for (iters <- Seq(1, 3)) {
-      val dist = graft.operators.llm.KMeans.lloyd(
+      val dist = KMeans.lloydDistributed(
         toEmb(rows), "vec_id", "embedding", col("vec_id") < 4, iters)
         .as[(Long, Long)].collect().toMap
-      val local = graft.operators.llm.KMeans.lloyd(
-        toEmb(rows), "vec_id", "embedding", col("vec_id") < 4, iters,
-        localBelow = 1L << 16)
+      val local = KMeans.lloyd(
+        toEmb(rows), "vec_id", "embedding", col("vec_id") < 4, iters)
         .as[(Long, Long)].collect().toMap
       assert(local == dist, s"iters=$iters")
-      // threshold smaller than the input: probe overflows, distributed path
-      val bypass = graft.operators.llm.KMeans.lloyd(
-        toEmb(rows), "vec_id", "embedding", col("vec_id") < 4, iters,
-        localBelow = 10L)
-        .as[(Long, Long)].collect().toMap
-      assert(bypass == dist, s"iters=$iters bypass")
+      // the codebook stats: counts and exact sums per final cluster
+      assert(KMeans.codebookWithCounts(toEmb(rows), "vec_id", "embedding",
+          col("vec_id") < 4, iters) ==
+        KMeans.codebookWithCountsDistributed(toEmb(rows), "vec_id",
+          "embedding", col("vec_id") < 4, iters), s"iters=$iters codebook")
     }
   }
 
@@ -790,13 +800,13 @@ class LlmOpsSpec extends AnyFunSuite with SparkTestSession {
     val rows = Seq((0L, Array(4.0e15f)), (1L, Array(1.0f)))
       .toDF("vec_id", "embedding")
     val e = intercept[IllegalArgumentException] {
-      graft.operators.llm.KMeans.lloyd(rows, "vec_id", "embedding",
-        col("vec_id") === 0L, iters = 1, localBelow = 1L << 16).collect()
+      KMeans.lloyd(rows, "vec_id", "embedding",
+        col("vec_id") === 0L, iters = 1).collect()
     }
     assert(e.getMessage.contains("exceeds int64"))
     // distributed path hits the same guard when it builds the assignment
     val e2 = intercept[IllegalArgumentException] {
-      graft.operators.llm.KMeans.lloyd(rows, "vec_id", "embedding",
+      KMeans.lloydDistributed(rows, "vec_id", "embedding",
         col("vec_id") === 0L, iters = 1).collect()
     }
     assert(e2.getMessage.contains("exceeds int64"))
@@ -804,17 +814,16 @@ class LlmOpsSpec extends AnyFunSuite with SparkTestSession {
 
   test("kmeans: NULL-valued seedPred reads as false on both paths") {
     // when() with no otherwise: NULL for non-seeds — getBoolean on the
-    // localBelow probe must not NPE, and NULL must mean "not a seed"
+    // endgame's probe must not NPE, and NULL must mean "not a seed"
     // exactly like the distributed where()
     val r = new scala.util.Random(11)
     val rows = (0L until 30L).map(i =>
       (i, Array.fill(4)((r.nextInt(2001) - 1000).toLong)))
     val pred = when(col("vec_id") < 3, true)
-    val dist = graft.operators.llm.KMeans.lloyd(
+    val dist = KMeans.lloydDistributed(
       toEmb(rows), "vec_id", "embedding", pred, 2)
       .as[(Long, Long)].collect().toMap
-    val local = graft.operators.llm.KMeans.lloyd(
-      toEmb(rows), "vec_id", "embedding", pred, 2, localBelow = 1L << 16)
+    val local = KMeans.lloyd(toEmb(rows), "vec_id", "embedding", pred, 2)
       .as[(Long, Long)].collect().toMap
     assert(local == dist)
     assert(dist.keySet == rows.map(_._1).toSet)

@@ -68,7 +68,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestSession {
       "q93_bpe_pairs" -> 2,     // word-freq agg + vocab-sized pair agg
       "q94_collocation" -> 5,   // bigram/unigram aggs + join exchanges
       "q95_bpe_apply" -> 1,     // replace chain is map-side; one doc agg
-      // q96 itself takes the localBelow endgame at audit scale (a
+      // q96 itself takes the small-input endgame at audit scale (a
       // LocalTableScan); the DISTRIBUTED PageRank plan is pinned by its
       // own check below
       "q96_pagerank" -> 18,
@@ -101,7 +101,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestSession {
       "q127_fuzzy_decontaminate" -> 3,
       // round-16 second sweep: the e2e pipelines and map-side claims.
       // NOTE these are AUDIT-SCALE budgets — q69/q76/q86 take the
-      // localBelow/CC endgames at sf0.001 (distributed shapes are
+      // small-input/CC endgames at sf0.001 (distributed shapes are
       // pinned by their own rehearsal decades in SCALE.md)
       "q20_doc_dedup" -> 1,     // one digest keep-min agg
       "q22_ngram_jaccard" -> 2, // shingle scan + pair agg
@@ -125,7 +125,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestSession {
       if (n > max) Some(s"$name: $n shuffles > budget $max") else None
     }
     assert(over.isEmpty, over.mkString("; "))
-    // the DISTRIBUTED PageRank plan (localBelow = 0 — the shape q96's
+    // the DISTRIBUTED PageRank plan (its distributed body — the shape q96's
     // endgame bypasses at audit scale): 3 unrolled rounds x (2 joins +
     // sum) + spine joins stay within budget and never go cartesian
     locally {
@@ -133,7 +133,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestSession {
       val edges = docs.selectExpr("CAST(doc_id AS LONG) % 97 AS src",
         "(CAST(doc_id AS LONG) * 31 + 7) % 97 AS dst")
       val prPlan = graft.operators.GraphOps
-        .pageRank(edges, "src", "dst", iters = 3)
+        .pageRankDistributed(edges, "src", "dst", iters = 3)
         .queryExecution.executedPlan.toString
       val n = shuffles(prPlan)
       assert(n <= 18, s"distributed pageRank: $n shuffles > budget 18")

@@ -83,6 +83,8 @@ class CliArgsSpec extends AnyFunSuite {
         "http-import").foreach { verb =>
       rejected(verb +: minimal(verb) :+ "extra": _*)("too many arguments")
     }
+    // dedup takes at most five positionals; the last is cap:int
+    rejected("dedup", "c", "o", "id", "text", "10", "0")("too many arguments")
     assert(parse("warc-extract", "out", "a", "b", "c").map(_.pos) ==
       Right(Vector("out", "a", "b", "c")))
   }
@@ -103,8 +105,8 @@ class CliArgsSpec extends AnyFunSuite {
   test("every malformed number exits 2 before any work starts") {
     val bad: Seq[(Seq[String], String)] = Seq(
       Seq("dedup", "c", "o", "id", "text", "1O000") -> "bad cap:int: 1O000",
-      Seq("dedup", "c", "o", "id", "text", "10", "x") ->
-        "bad localBelow:long: x",
+      Seq("decontaminate", "c", "e", "o", "8", "9223372036854775808") ->
+        "bad dropAt:long: 9223372036854775808",
       Seq("cluster-build", "-", "in", "out", "--shards", "x") ->
         "--shards needs a N:int value",
       Seq("cluster-build", "-", "in", "out", "--zipnum-lines=x") ->
