@@ -315,18 +315,9 @@ object TextGates {
           |FROM reach GROUP BY 1""".stripMargin)) { (s, dir) =>
       val pairs = graft.operators.llm.MinHashLsh(
         nearDupCorpus(s, dir, fan = true), "doc_id", "text")
-      // the fixpoint loop runs EAGERLY inside the builder; under AQE
-      // every stage of every iteration becomes its own job, so driver
-      // round-trips — not data — dominate at oracle scale. Scope AQE off
-      // and size the shuffle for the (tiny) label table; at production
-      // scale the iteration count is the same and AQE earns its keep.
-      withScopedConf(s,
-        "spark.sql.adaptive.enabled" -> "false",
-        "spark.sql.shuffle.partitions" -> "8") {
-        // a few thousand edges at this scale: CC's union-find endgame
-        graft.operators.llm.ConnectedComponents(pairs, "doc_a", "doc_b")
-          .select(col("node").as("doc_id"), col("component"))
-      }
+      // a few thousand edges at this scale: CC's union-find endgame
+      graft.operators.llm.ConnectedComponents(pairs, "doc_a", "doc_b")
+        .select(col("node").as("doc_id"), col("component"))
     },
 
     // Deterministic train/val/test split: assignment is a pure function
@@ -531,11 +522,7 @@ object TextGates {
           |  (SELECT node FROM cc WHERE node != component)""".stripMargin)) { (s, dir) =>
       val corpus = nearDupCorpus(s, dir, fan = true)
       val pairs = graft.operators.llm.MinHashLsh(corpus, "doc_id", "text")
-      val cc = withScopedConf(s,
-        "spark.sql.adaptive.enabled" -> "false",
-        "spark.sql.shuffle.partitions" -> "8") {
-        graft.operators.llm.ConnectedComponents(pairs, "doc_a", "doc_b")
-      }
+      val cc = graft.operators.llm.ConnectedComponents(pairs, "doc_a", "doc_b")
       val nonCanonical = cc.where(col("node") =!= col("component"))
         .select(col("node").as("doc_id"))
       corpus.select(col("doc_id"))

@@ -141,7 +141,7 @@ object GlobalCdxCleanup {
     var curKey: String = null
     var curDay: String = null
     var count = 0
-    in.flatMap { line =>
+    sortTies(in.flatMap { line =>
       graft.model.Cdx.parseLine(line) match {
         case None => None
         case Some(r) =>
@@ -169,6 +169,41 @@ object GlobalCdxCleanup {
             }
           }
       }
+    })
+  }
+
+  /** Puts each run of lines sharing urlkey and timestamp back in byte
+    * order, as the ZipNum writer requires. Cutting digests to 3 chars can
+    * invert two lines that agree up to the digest: `… ABCA - - 300 …`
+    * sorts above `… ABCZ - - 200 …`, but cut, `… ABC - - 300 …` sorts
+    * below `… ABC - - 200 …`. Lines with other (urlkey, timestamp) keep
+    * their order, so a run is sorted only when it is out of order. */
+  private def sortTies(in: Iterator[String]): Iterator[String] = {
+    val it = in.buffered
+    // the next line continues `first`'s run: same urlkey and timestamp
+    def sameRun(first: String, keyEnd: Int): Boolean =
+      it.hasNext && it.head.regionMatches(0, first, 0, keyEnd)
+    new Iterator[String] {
+      private var run: Iterator[String] = Iterator.empty
+      def hasNext: Boolean = run.hasNext || it.hasNext
+      def next(): String =
+        if (run.hasNext) run.next()
+        else {
+          val first = it.next()
+          val keyEnd = first.indexOf(' ', first.indexOf(' ') + 1) + 1
+          if (keyEnd == 0 || !sameRun(first, keyEnd)) first
+          else {
+            val buf = scala.collection.mutable.ArrayBuffer(first)
+            var inOrder = true
+            while (sameRun(first, keyEnd)) {
+              val l = it.next()
+              inOrder &&= graft.util.KeyOrder.compare(buf.last, l) <= 0
+              buf += l
+            }
+            run = (if (inOrder) buf else buf.sorted(graft.util.KeyOrder)).iterator
+            run.next()
+          }
+        }
     }
   }
 }

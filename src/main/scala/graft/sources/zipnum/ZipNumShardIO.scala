@@ -16,6 +16,7 @@ private[zipnum] final class ShardStream(fs: FileSystem, tmpDir: String,
   private val idxOut = fs.create(new Path(s"$tmpDir/$tmpName-idx"), true)
   private val blockLines = new java.io.ByteArrayOutputStream(1 << 20)
   private var firstKey: String = _
+  private var prevLine: String = _
   private var count = 0
   private var offset = 0L
   private var nLines = 0L
@@ -29,13 +30,28 @@ private[zipnum] final class ShardStream(fs: FileSystem, tmpDir: String,
     blockLines.reset(); firstKey = null; count = 0
   }
 
+  /** Append one line. Summary pruning and the reader's early stop at the
+    * range end both assume a shard in [[graft.util.KeyOrder]] (unsigned
+    * UTF-8 byte order) with no LF inside a line, so a line that breaks
+    * either fails the task rather than commit a cluster whose lookups
+    * silently return too few rows. */
   def add(line: String): Unit = {
+    if (line.indexOf('\n') >= 0)
+      refuse("holds an LF; a ZipNum line cannot contain '\\n'")
+    if (prevLine != null && graft.util.KeyOrder.compare(prevLine, line) > 0)
+      refuse(s"sorts below line $nLines; a shard must be in unsigned " +
+        "UTF-8 byte order")
     if (count == 0) firstKey = ZipNumFormat.summaryKey(line)
     blockLines.write(line.getBytes(UTF_8))
     blockLines.write('\n')
+    prevLine = line
     count += 1; nLines += 1
     if (count == linesPerBlock) flushBlock()
   }
+
+  private def refuse(why: String): Nothing =
+    throw new IllegalArgumentException(
+      s"zipnum: line ${nLines + 1} of $part $why")
 
   /** Flush + close; returns the line count. */
   def finish(): Long = { flushBlock(); gzOut.close(); idxOut.close(); nLines }

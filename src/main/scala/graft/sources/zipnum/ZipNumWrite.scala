@@ -15,7 +15,9 @@ import org.apache.spark.util.SerializableConfiguration
  * of CDX lines whose partitioning/order IS the shard layout (range-partition
  * + sortWithinPartitions upstream, e.g. via BoundaryPartitioner — same
  * assumption Pig's ordered store made). Partition i becomes shard
- * `part-a-<i>`; an empty partition writes no shard.
+ * `part-a-<i>`; an empty partition writes no shard. A partition out of
+ * byte order, or a line holding an LF, fails its task (see
+ * [[ShardStream.add]]) and the write commits nothing.
  *
  * Modes: `overwrite` replaces `dir` (or creates it); `append` creates
  * `dir` and refuses if it is present — a cluster is never extended in

@@ -96,6 +96,20 @@ class FilterEdgeSpec extends AnyFunSuite with SparkTestSession {
     assert(streamed.size == 3) // dayLimit 2 admits 3, under the '-' day
   }
 
+  test("streamed cleanup keeps byte order when cutting digests inverts " +
+      "two lines of one urlkey and timestamp") {
+    def line(key: String, digest: String, size: Int) =
+      s"org,x)/$key 20120101000000 http://x.org/$key text/html 200 " +
+        s"$digest - - $size 100 crawl/w.warc.gz"
+    val in = Seq(line("p", "ABCA", 300), line("p", "ABCZ", 200),
+      line("q", "ABCA", 300))
+    assert(in == in.sorted(graft.util.KeyOrder))
+    val out = graft.operators.GlobalCdxCleanup
+      .streamingLine(dayLimit = 0)(in.iterator).toSeq
+    assert(out == Seq(line("p", "ABC", 200), line("p", "ABC", 300),
+      line("q", "ABC", 300)))
+  }
+
   test("CdxFilter passes a NULL key through (it is not a dropped " +
       "pseudo-capture prefix; three-valued logic used to discard it)") {
     val df = Seq(Some("org,x)/p"), Some("dns:example.org"), None)

@@ -58,6 +58,59 @@ class ZipNumFormatSpec extends AnyFunSuite {
     assert(new String(in.readAllBytes(), "UTF-8") == "one\ntwo\n")
   }
 
+  /** `lines` sorted CDX-11 lines shaped like the benchmark's merged
+    * (global-CDX) cluster, seeded: SURT keys of several captures each,
+    * 14-digit timestamps, base32 digests cut to 3 chars as the global-CDX
+    * merge writes them, 9-10 digit offsets. */
+  private def cdxBlock(seed: Long, lines: Int): Seq[String] = {
+    val r = new java.util.SplittableRandom(seed)
+    def pick(n: Int) = r.nextInt(n)
+    Iterator.from(0).flatMap { i =>
+      val host = s"h${i / 12 % 997}-${i / 12 % 13}"
+      val path = s"p/${i % 3}/x${i * 31 % 100000}.html"
+      Iterator.fill(1 + pick(8)) {
+        val ts = f"202403${1 + pick(28)}%02d${pick(24)}%02d${pick(60)}%02d" +
+          f"${pick(60)}%02d"
+        val status = if (pick(10) == 0) "404" else "200"
+        val digest = Seq.fill(3)("ABCDEFGHIJKLMNOPQRSTUVWXYZ234567".charAt(pick(32)))
+          .mkString
+        s"example,$host)/$path $ts http://$host.example/$path text/html " +
+          s"$status $digest - - ${200 + pick(500)} " +
+          s"${100000000 + pick(Int.MaxValue - 100000000)} " +
+          s"crawl-${"ab".charAt(pick(2))}-${f"${pick(8)}%05d"}.warc.gz"
+      }
+    }.take(lines).toSeq.sorted
+  }
+
+  test("level-7 byte budget: a 3,000-line CDX block costs at most 2% more " +
+      "than a raw level-9 deflate plus the member framing") {
+    val payload = cdxBlock(seed = 11L, lines = 3000)
+      .map(_ + "\n").mkString.getBytes("UTF-8")
+    val member = ZipNumFormat.gzipMember(payload)
+    val level9 = {
+      val d = new java.util.zip.Deflater(9, /*nowrap=*/ true)
+      try {
+        d.setInput(payload); d.finish()
+        val buf = new Array[Byte](payload.length + 1024)
+        var n = 0
+        while (!d.finished()) n += d.deflate(buf, n, buf.length - n)
+        n
+      } finally d.`end`()
+    }
+    // 28 framing bytes: the 20-byte SL header and the 8-byte footer. On
+    // this block a level-6 member is 75,921 B against level 9's
+    // 72,974 B + 28 (+4.0%), so a drop to any level of 1-6 fails here.
+    val budget = 1.02 * (level9 + 28)
+    assert(member.length <= budget,
+      s"member ${member.length} B > 1.02 x (level-9 $level9 B + 28)")
+    val in = new java.util.zip.GZIPInputStream(
+      new java.io.ByteArrayInputStream(member))
+    assert(java.util.Arrays.equals(in.readAllBytes(), payload))
+    val sl = (16 until 20).map(i => (member(i) & 0xffL) << (8 * (i - 16))).sum
+    assert(sl + 20 == member.length,
+      "SL = the member's length past its 20-byte header")
+  }
+
   test("summaryKey = first two fields, tabs escaped") {
     assert(ZipNumFormat.summaryKey("com,a)/ 20120101000000 http://a.com/ rest") ==
       "com,a)/ 20120101000000")

@@ -223,6 +223,38 @@ class ZipNumWriteSpec extends AnyFunSuite with SparkTestSession {
       IndexedSeq("org,w0005)/"), linesPerBlock = 0))
   }
 
+  test("the writer refuses an unsorted shard or a line holding an LF, " +
+      "and leaves no cluster behind; an interior CR is data") {
+    val d = SparkTestSession.tmpDir("guard")
+    def refused(name: String, lines: Seq[String], why: String): Unit = {
+      val dir = d.resolve(name).toString
+      val e = intercept[Exception] {
+        lines.toDF("line").coalesce(1)
+          .write.format("zipnum").mode("append").save(dir)
+      }
+      assert(msgs(e).exists(m => m.contains("zipnum: line 2 of part-a-00000") &&
+        m.contains(why)), msgs(e))
+      assert(d.toFile.list().filter(_.startsWith(name)).isEmpty,
+        s"a refused write must leave neither target nor stage: ${d.toFile.list().toSeq}")
+    }
+    refused("unsorted", Seq(
+      "org,b)/ 20120101000000 http://b.org/ text/html 200 D - - 1 0 f.gz",
+      "org,a)/ 20120101000000 http://a.org/ text/html 200 D - - 1 0 f.gz"),
+      "sorts below line 1")
+    refused("lf", Seq(
+      "org,a)/ 20120101000000 http://a.org/ text/html 200 D - - 1 0 f.gz",
+      "org,b)/ 20120101000000 http://b.org/ text/html 302 D http://b.org/\nx - 1 0 f.gz"),
+      "holds an LF")
+    val dir = d.resolve("cr").toString
+    val cr = Seq(
+      "org,a)/ 20120101000000 http://a.org/ text/html 200 D - - 1 0 f.gz",
+      "org,b)/ 20120101000000 http://b.org/ text/html 302 D http://b.org/\rx - 1 0 f.gz")
+    cr.toDF("line").coalesce(1).write.format("zipnum").mode("append").save(dir)
+    assert(served(dir) == cr)
+    assert(graft.operators.ClusterOps.range(spark, Some("org,a)/"), None,
+      Seq(dir)).toSeq == cr)
+  }
+
   test("an empty partition writes no shard; the manifest lists only the " +
       "written shards") {
     val dir = SparkTestSession.tmpDir("dsv2empty").resolve("c").toString
