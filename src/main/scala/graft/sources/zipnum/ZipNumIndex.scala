@@ -15,9 +15,10 @@ import graft.sources.zipnum.ZipNumFormat.Block
  * summary entry strictly BELOW start, then iterate;
  * /root/reference/src/main/java/org/archive/hadoop/cdx/ClusterRange.java:49-66:
  * stop once a block's first key is >= end — inclusive start, exclusive end).
- * The summary is tiny relative to the data (1 line per 3000-record block:
- * ~100 MB of index per 100 TB of cluster), so driver-side planning holds at
- * scale; the data itself never touches the driver.
+ * The summary is tiny relative to the data (1 line per 1000-record block
+ * at [[ZipNumFormat.DefaultLinesPerBlock]]: about 300 MB of index per
+ * 100 TB of cluster), so driver-side planning holds at scale; the data
+ * itself never touches the driver.
  */
 object ZipNumIndex {
 

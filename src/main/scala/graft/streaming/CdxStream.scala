@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.model.{Cdx, CdxRecord}
+import graft.sources.zipnum.ZipNumFormat
 
 /**
  * Structured Streaming over a CDX firehose — an EXTENSION beyond the
@@ -93,7 +94,7 @@ object CdxStream {
    */
   def zipnumGenerations(lines: Dataset[String], outDir: String,
                         checkpointDir: String, nShards: Int = 4,
-                        linesPerBlock: Int = 3000,
+                        linesPerBlock: Int = ZipNumFormat.DefaultLinesPerBlock,
                         fixedBoundaries: Option[IndexedSeq[String]] = None,
                         trigger: Option[org.apache.spark.sql.streaming.Trigger]
                           = None)

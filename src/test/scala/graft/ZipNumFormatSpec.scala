@@ -82,9 +82,11 @@ class ZipNumFormatSpec extends AnyFunSuite {
     }.take(lines).toSeq.sorted
   }
 
-  test("level-7 byte budget: a 3,000-line CDX block costs at most 2% more " +
-      "than a raw level-9 deflate plus the member framing") {
-    val payload = cdxBlock(seed = 11L, lines = 3000)
+  /** The byte budget of level [[ZipNumFormat.DeflateLevel]] on one
+    * `lines`-line block: at most 2% over a raw level-9 deflate plus the
+    * 28 framing bytes, and the member inflates back to the payload. */
+  private def checkLevel7Budget(lines: Int): Unit = {
+    val payload = cdxBlock(seed = 11L, lines = lines)
       .map(_ + "\n").mkString.getBytes("UTF-8")
     val member = ZipNumFormat.gzipMember(payload)
     val level9 = {
@@ -111,6 +113,15 @@ class ZipNumFormatSpec extends AnyFunSuite {
       "SL = the member's length past its 20-byte header")
   }
 
+  test("level-7 byte budget: a 3,000-line CDX block costs at most 2% more " +
+      "than a raw level-9 deflate plus the member framing") {
+    checkLevel7Budget(3000)
+  }
+
+  test("level-7 byte budget holds on a DefaultLinesPerBlock-line block") {
+    checkLevel7Budget(ZipNumFormat.DefaultLinesPerBlock)
+  }
+
   test("summaryKey = first two fields, tabs escaped") {
     assert(ZipNumFormat.summaryKey("com,a)/ 20120101000000 http://a.com/ rest") ==
       "com,a)/ 20120101000000")
@@ -121,6 +132,57 @@ class ZipNumFormatSpec extends AnyFunSuite {
   test("summary line format roundtrip") {
     val b = Block("com,a)/ 20120101000000", "part-a-00001", 12345L, 678L)
     assert(ZipNumFormat.parseSummaryLine(ZipNumFormat.formatSummaryLine(b)) == b)
+  }
+
+  /** The summary parse before it became one pass: split on tabs (which
+    * drops trailing empty fields), take the last three fields from the
+    * end, rejoin the front as the key. */
+  private def splitParse(line: String): Block = {
+    val parts = line.split('\t')
+    require(parts.length >= 4, s"bad summary line: $line")
+    val n = parts.length
+    Block(parts.take(n - 3).mkString("\t"), parts(n - 3),
+      parts(n - 2).toLong, parts(n - 1).toLong)
+  }
+
+  test("parseSummaryLine == the split-based parse on generated lines: " +
+      "literal tabs in keys, %09, U+FFFD, U+1F600, and malformed lines " +
+      "throw IllegalArgumentException in both") {
+    import scala.util.{Failure, Success, Try}
+    val r = new java.util.SplittableRandom(16L)
+    val keyBits = IndexedSeq("com,a)/", "org,b)/p", " 20120101000000", "\t",
+      "%09", "\uFFFD", "\uD83D\uDE00", "", "x y", "-1", "\t\t")
+    val numbers = IndexedSeq("0", "7", "12345", "9223372036854775807",
+      "9223372036854775808", "-5", "+5", "00042", "", "x", "1.5", " 1",
+      "\u0661", "12a")
+    def pick(xs: IndexedSeq[String]) = xs(r.nextInt(xs.size))
+    def line(): String = {
+      val key = Seq.fill(r.nextInt(5))(pick(keyBits)).mkString
+      val fields = Seq(key, s"part-a-0000${r.nextInt(4)}", pick(numbers),
+        pick(numbers))
+      // drop fields from the front or the back, or add tabs at the end
+      val kept = r.nextInt(6) match {
+        case 0 => fields.drop(1 + r.nextInt(3))
+        case 1 => fields.dropRight(1 + r.nextInt(3))
+        case _ => fields
+      }
+      kept.mkString("\t") + "\t" * (if (r.nextInt(4) == 0) 1 + r.nextInt(2) else 0)
+    }
+    val lines = Seq("", "\t", "\t\t\t", "\t\t\t\t", "k\tp\t1\t2\t",
+      "k\tp\t1\t", "\tp\t1\t2", "k\t\t1\t2", "k\tp\t\t2", "k\tp\t1\t\t2",
+      "a\tb\tk\tp\t1\t2") ++ Seq.fill(5000)(line())
+    var ok = 0
+    lines.foreach { l =>
+      (Try(ZipNumFormat.parseSummaryLine(l)), Try(splitParse(l))) match {
+        case (Success(a), Success(b)) => assert(a == b, l); ok += 1
+        case (Failure(a), Failure(b)) =>
+          assert(a.isInstanceOf[IllegalArgumentException], s"$l: $a")
+          assert(b.isInstanceOf[IllegalArgumentException], s"$l: $b")
+        case (a, b) => fail(s"${l.replace("\t", "<TAB>")}: one-pass $a, split $b")
+      }
+    }
+    // the generator must reach both outcomes in earnest
+    assert(ok > 1000 && lines.size - ok > 1000, s"$ok of ${lines.size} parsed")
   }
 
   // ---- pruning ----
