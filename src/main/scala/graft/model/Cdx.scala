@@ -114,38 +114,15 @@ object Cdx {
         timestamp = c(1),
         originalUrl = c(2),
         mimetype = c(3),
-        statuscode = Option(intCell(c(4))).map(_.intValue),
+        statuscode = Option(c(4)).flatMap(_.toIntOption),
         digest = c(5),
         redirectUrl = Option(c(6)),
         metaFlags = Option(c(7)),
-        compressedSize = Option(longCell(c(8))).map(_.longValue),
-        offset = Option(longCell(c(9))).map(_.longValue),
+        compressedSize = Option(c(8)).flatMap(_.toLongOption),
+        offset = Option(c(9)).flatMap(_.toLongOption),
         filename = c(10)
       )
     }
-
-  /** A numeric cell as `toIntOption` reads it, boxed, or null for a null or
-    * non-numeric cell. A plain cell (a sign and at most 9 ASCII digits,
-    * which cannot overflow) goes to Java's parser; anything else (more
-    * digits, non-ASCII digits, malformed text) to Scala's, so the accepted
-    * strings and values are exactly `toIntOption`'s. */
-  def intCell(s: String): java.lang.Integer =
-    if (s == null) null
-    else if (plainDigits(s, 9)) Int.box(java.lang.Integer.parseInt(s))
-    else s.toIntOption.map(Int.box).orNull
-
-  /** [[intCell]] for `toLongOption`: a plain cell has at most 18 digits. */
-  def longCell(s: String): java.lang.Long =
-    if (s == null) null
-    else if (plainDigits(s, 18)) Long.box(java.lang.Long.parseLong(s))
-    else s.toLongOption.map(Long.box).orNull
-
-  private def plainDigits(s: String, maxDigits: Int): Boolean = {
-    var i = if (s.nonEmpty && (s.charAt(0) == '-' || s.charAt(0) == '+')) 1 else 0
-    if (i == s.length || s.length - i > maxDigits) return false
-    while (i < s.length && s.charAt(i) >= '0' && s.charAt(i) <= '9') i += 1
-    i == s.length
-  }
 
   /**
    * Convert a legacy CDX-9/10 line to the 11-field layout, re-keyed with a
@@ -185,12 +162,16 @@ object Cdx {
       timestamp = parts(1),
       originalUrl = origUrl,
       mimetype = nullable(parts(3)),
-      statuscode = Option(intCell(nullable(parts(4)))).map(_.intValue),
+      statuscode = nullable(parts(4)) match {
+        case null => None; case s => s.toIntOption
+      },
       digest = nullable(parts(5)),
       redirectUrl = if (noRedirect) None else Option(nullable(parts(6))),
       metaFlags = metaFlags,
       compressedSize = None,
-      offset = Option(longCell(nullable(parts(offsetIdx)))).map(_.longValue),
+      offset = nullable(parts(offsetIdx)) match {
+        case null => None; case s => s.toLongOption
+      },
       filename = nullable(parts(offsetIdx + 1))
     ))
   }

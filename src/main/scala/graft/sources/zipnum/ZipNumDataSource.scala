@@ -297,8 +297,8 @@ private[zipnum] class ZipNumPartitionReader(conf: Configuration,
   private def convert(ord: Int, cell: String): Any = {
     if (cell == null) return null
     ord match {
-      case 4 => Cdx.intCell(cell)
-      case 8 | 9 => Cdx.longCell(cell)
+      case 4 => cell.toIntOption.map(Int.box).orNull
+      case 8 | 9 => cell.toLongOption.map(Long.box).orNull
       case _ => UTF8String.fromString(cell)
     }
   }

@@ -9,10 +9,10 @@ import graft.sources.zipnum.ZipNumIndex.Slice
 import graft.util.KeyOrder
 
 /** Block size is a write-side choice only: one seeded CDX set written with
-  * the reference's 3000 lines per block, with
-  * [[ZipNumFormat.DefaultLinesPerBlock]] and with 1 line per block serves
-  * the same lines for exact, prefix and wide bounds through every read
-  * API, and the default cluster's blocks hold at most the default. */
+  * the reference's 3000 lines per block and with the writer's default
+  * ([[ZipNumFormat.DefaultLinesPerBlock]]) serves the same lines for exact,
+  * prefix and wide bounds through every read API, and the default
+  * cluster's full blocks hold exactly the default. */
 class ZipNumBlockSizeSpec extends AnyFunSuite with SparkTestSession {
 
   private lazy val conf = spark.sparkContext.hadoopConfiguration
@@ -34,41 +34,35 @@ class ZipNumBlockSizeSpec extends AnyFunSuite with SparkTestSession {
     }.sorted(KeyOrder)
   }
 
-  private lazy val clusters: Map[Int, String] = {
+  /** The reference layout (3000) and the writer's default, the latter
+    * built without a `linesPerBlock` argument. */
+  private lazy val (reference, default) = {
     val rdd = spark.sparkContext.parallelize(lines.reverse, 5)
     val interior = IndexedSeq(1, 2, 3).map(q =>
       lines(lines.size * q / 4).takeWhile(_ != ' '))
-    Seq(3000, ZipNumFormat.DefaultLinesPerBlock, 1).map { n =>
-      val dir = SparkTestSession.tmpDir(s"zipnum-lpb-$n").toString + "/c"
-      ClusterOps.build(spark, rdd, dir, interior, linesPerBlock = n)
-      n -> dir
-    }.toMap
+    def dir(name: String) = SparkTestSession.tmpDir(s"zipnum-lpb-$name").toString + "/c"
+    val (ref, dflt) = (dir("3000"), dir("default"))
+    ClusterOps.build(spark, rdd, ref, interior, linesPerBlock = 3000)
+    ClusterOps.build(spark, rdd, dflt, interior)
+    (ref, dflt)
   }
 
-  /** (kind, start, end): one urlkey, one host prefix, ~1% of the keys. */
-  private lazy val bounds: Seq[(String, String, String)] = {
-    val keys = lines.map(_.takeWhile(_ != ' ')).distinct
-    val r = new java.util.SplittableRandom(7L)
-    Seq.fill(12) {
-      val k = keys(r.nextInt(keys.size))
-      val host = k.substring(0, k.indexOf(')'))
-      val lo = r.nextInt(keys.size - 60)
-      Seq(("exact", k, k + "!"), ("prefix", host, host.dropRight(1) +
-        (host.last + 1).toChar), ("wide", keys(lo), keys(lo + 50)))
-    }.flatten
-  }
-
-  private def brute(start: String, end: String): Seq[String] =
-    lines.filter(l => KeyOrder.gteq(l, start) && KeyOrder.lt(l, end))
-
-  test("3000, DefaultLinesPerBlock and 1 line per block serve identical " +
+  test("the reference's 3000-line blocks and the default serve identical " +
       "lines through ClusterOps.range, localLines and format(\"zipnum\")") {
     assert(lines.size > 9000 && lines.size < 11000, lines.size)
+    val keys = lines.map(_.takeWhile(_ != ' ')).distinct
+    val k = keys(keys.size / 3)
+    val host = k.substring(0, k.indexOf(')'))
+    val lo = keys.size * 2 / 3
+    // one urlkey, one host prefix, ~1% of the keys
+    val bounds = Seq(("exact", k, k + "!"),
+      ("prefix", host, host.dropRight(1) + (host.last + 1).toChar),
+      ("wide", keys(lo), keys(lo + 50)))
     bounds.foreach { case (kind, start, end) =>
-      val want = brute(start, end)
+      val want = lines.filter(l => KeyOrder.gteq(l, start) && KeyOrder.lt(l, end))
       assert(want.nonEmpty, s"$kind [$start, $end) selects nothing")
-      clusters.foreach { case (n, dir) =>
-        val what = s"linesPerBlock=$n $kind [$start, $end)"
+      Seq(reference, default).foreach { dir =>
+        val what = s"$dir $kind [$start, $end)"
         assert(ClusterOps.range(conf, Some(start), Some(end), Seq(dir)).toSeq == want,
           s"range, $what")
         assert(ZipNumReader.localLines(conf, dir, Some(start), Some(end)).toSeq == want,
@@ -88,18 +82,16 @@ class ZipNumBlockSizeSpec extends AnyFunSuite with SparkTestSession {
     }
   }
 
-  test("the default cluster's blocks each hold at most DefaultLinesPerBlock " +
-      "lines, and its summary has a line per block") {
-    val dir = clusters(ZipNumFormat.DefaultLinesPerBlock)
-    val blocks = ZipNumIndex.load(dir, conf).blocks
+  test("the default cluster's full blocks hold DefaultLinesPerBlock lines, " +
+      "and its summary has a line per block") {
+    val blocks = ZipNumIndex.load(default, conf).blocks
     val sizes = blocks.map(b => ZipNumReader.readSlice(conf,
-      Slice(s"$dir/${b.part}.gz", b.offset, b.length, 1), None, None).size)
+      Slice(s"$default/${b.part}.gz", b.offset, b.length, 1), None, None).size)
     assert(sizes.sum == lines.size)
-    assert(sizes.max <= ZipNumFormat.DefaultLinesPerBlock, sizes)
-    // 4 shards, each cut into full blocks and one partial block
+    // each of the 4 ~2.5k-line shards is cut into full blocks and one partial
+    assert(sizes.max == ZipNumFormat.DefaultLinesPerBlock, sizes)
     assert(blocks.map(_.part).distinct.size == 4)
     assert(blocks.size <= lines.size / ZipNumFormat.DefaultLinesPerBlock + 4)
-    assert(ZipNumIndex.load(clusters(3000), conf).blocks.size <= lines.size / 3000 + 4)
-    assert(ZipNumIndex.load(clusters(1), conf).blocks.size == lines.size)
+    assert(ZipNumIndex.load(reference, conf).blocks.size == 4)
   }
 }
