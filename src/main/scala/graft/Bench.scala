@@ -18,12 +18,13 @@ package graft
  *  - failures are NOT swallowed: a failed query records `-1` AND the error
  *    is reported in an `errors` map (a broken query must never bench green);
  *  - the session IS GraftCli.session (the one factory every main and
- *    test uses), plus two measured single-host sizing settings;
+ *    test uses, which also sizes the generated-class cache), plus one
+ *    measured single-host setting, shuffle compression off;
  *  - every pass runs inside one `graft.util.SparkMeter` window; the
- *    LAST pass's job and stage counts (phase-free, unlike wall time) go
- *    to the sidecar report as `jobs`/`stages` — the first pass of a
- *    fixture-backed gate also builds its fixtures, so with
- *    GRAFT_BENCH_REPS=1 the counts still include those builds.
+ *    LAST pass's job, stage and class-compile counts (phase-free, unlike
+ *    wall time) go to the sidecar report as `jobs`/`stages`/`compiles` —
+ *    the first pass of a fixture-backed gate also builds its fixtures, so
+ *    with GRAFT_BENCH_REPS=1 the counts still include those builds.
  */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -35,11 +36,6 @@ object Bench {
     // pays for its re-planning jobs even at sf0.1, so the production
     // setting is also the fast local one.
     val spark = graft.cli.GraftCli.session("graft-bench", cpus, Map(
-      // 72 queries × many stages ≫ the default 100-entry generated-class
-      // cache; at 100 every cross-query pass recompiles nearly every stage
-      // (the round-8 interleave experiment measured +35% total from exactly
-      // this). With all passes' classes resident, rep order stops mattering.
-      "spark.sql.codegen.cache.maxEntries" -> "10000",
       // Local-mode shuffle blocks are KB-to-low-MB and never cross a
       // network, so lz4 costs more CPU than the page-cache I/O it saves:
       // measured on the then-current full suite (94 queries,
@@ -60,6 +56,7 @@ object Bench {
 
     val jobs = scala.collection.mutable.LinkedHashMap.empty[String, Long]
     val stages = scala.collection.mutable.LinkedHashMap.empty[String, Long]
+    val compiles = scala.collection.mutable.LinkedHashMap.empty[String, Long]
 
     // tolerate a malformed env value: a bench must always emit its report.
     // 5 reps: 3 was not enough — the round-7 report showed q21 at 3.17s
@@ -78,9 +75,9 @@ object Bench {
     // samples across the whole run lets min-of-reps reject any burst shorter
     // than the run. Round 8 tried this and measured +35% total — that cost
     // was the 100-entry whole-stage-codegen class cache recompiling every
-    // stage each pass, eliminated by raising
-    // spark.sql.codegen.cache.maxEntries above (re-measured: interleaved ≈
-    // consecutive with the larger cache).
+    // stage each pass, eliminated by the larger
+    // spark.sql.codegen.cache.maxEntries that GraftCli.session sets
+    // (re-measured: interleaved ≈ consecutive with the larger cache).
     // first error per query only (duplicate JSON keys would be collapsed
     // arbitrarily by parsers)
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
@@ -102,6 +99,7 @@ object Bench {
       if (rep == reps) {
         jobs(name) = work.jobs
         stages(name) = work.stages
+        compiles(name) = work.compiles
       }
     }
     // EVERY rep must succeed — a query that crashed on any rep benches
@@ -190,7 +188,7 @@ object Bench {
     // cpus in-band (r22): the driver benches at two core counts; the
     // report must say which one produced it (additive field).
     val cpusField = s""","cpus":$cpus"""
-    val report = s"""{"metric":"total","value":${jnum(total)},"unit":"sec"$cpusField,"queries":$qs,"errors":$errJson,"jobs":${counts(jobs)},"stages":${counts(stages)},"notes":${jstr(notes)},"sf":${jstr(sfDir)}$duckField}"""
+    val report = s"""{"metric":"total","value":${jnum(total)},"unit":"sec"$cpusField,"queries":$qs,"errors":$errJson,"jobs":${counts(jobs)},"stages":${counts(stages)},"compiles":${counts(compiles)},"notes":${jstr(notes)},"sf":${jstr(sfDir)}$duckField}"""
     // Short stdout line: everything an auditor of the committed tail needs —
     // totals, counts, the duck denominator, the ratio, and where the full
     // per-query map lives. Must stay well under the driver's 2000-char tail.

@@ -36,8 +36,8 @@ object GraftCli {
 
   /** The one session factory: every main, tool and test session is built
     * here, so their configs cannot drift apart. `conf` adds settings on
-    * top of the shared ones (Bench's measured sizing knobs, the test
-    * warehouse dir). */
+    * top of the shared ones (Bench's single-host shuffle setting, the
+    * test warehouse dir). */
   def session(appName: String, cpus: Int = defaultCpus,
               conf: Map[String, String] = Map.empty): SparkSession = {
     val builder = SparkSession.builder()
@@ -45,6 +45,11 @@ object GraftCli {
       .appName(appName)
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.adaptive.enabled", "true")
+      // The battery's queries × stages ≫ Spark's default 100-entry
+      // generated-class cache: at 100 every cross-query pass recompiles
+      // nearly every stage (+35% total in the round-8 interleave
+      // experiment). Spark reads it once, when the JVM first generates code.
+      .config("spark.sql.codegen.cache.maxEntries", "10000")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.ui.enabled", "false")

@@ -3,6 +3,7 @@ package graft.util
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.SparkContext
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerTaskEnd}
 import org.apache.spark.sql.graftshim.ListenerShim
@@ -10,10 +11,13 @@ import org.apache.spark.sql.graftshim.ListenerShim
 /** The Spark work one measured window did: its wall time in seconds,
   * the jobs it submitted, their stages (counted at job start, so a stage
   * a job skips because it reuses shuffle output is included, as the
-  * Spark UI lists it), the tasks that ended, and the shuffle bytes those
-  * tasks read and wrote. */
+  * Spark UI lists it), the tasks that ended, the shuffle bytes those
+  * tasks read and wrote, and the generated classes compiled (misses of
+  * Spark's generated-class cache). `compiles` is JVM-wide, not per
+  * SparkContext: a compile on any thread during the window counts. */
 final case class Work(wallS: Double, jobs: Long, stages: Long, tasks: Long,
-                      shuffleReadBytes: Long, shuffleWriteBytes: Long)
+                      shuffleReadBytes: Long, shuffleWriteBytes: Long,
+                      compiles: Long)
 
 /** The one way the program counts Spark work. */
 object SparkMeter {
@@ -29,13 +33,17 @@ object SparkMeter {
     val counter = new Counter
     sc.addSparkListener(counter)
     try {
+      val compiled0 = compiled
       val t0 = System.nanoTime()
       val result = body
       val wallS = (System.nanoTime() - t0) / 1e9
       ListenerShim.drain(sc)
-      (result, counter.work(wallS))
+      (result, counter.work(wallS, compiled - compiled0))
     } finally sc.removeSparkListener(counter)
   }
+
+  private def compiled: Long =
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   private final class Counter extends SparkListener {
     private val jobs, stages, tasks, read, write = new AtomicLong
@@ -54,7 +62,8 @@ object SparkMeter {
       }
     }
 
-    def work(wallS: Double): Work =
-      Work(wallS, jobs.get, stages.get, tasks.get, read.get, write.get)
+    def work(wallS: Double, compiles: Long): Work =
+      Work(wallS, jobs.get, stages.get, tasks.get, read.get, write.get,
+        compiles)
   }
 }

@@ -1,16 +1,31 @@
 package graft
 
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Add, BoundReference,
+  Expression, Literal, Subtract, UnsafeProjection}
+import org.apache.spark.sql.types.LongType
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.util.SparkMeter
 
 /** `SparkMeter.measure`'s counts on plans whose work is known exactly:
   * RDD plans, whose jobs, stages and tasks do not depend on the SQL
-  * planner's adaptive re-planning. */
+  * planner's adaptive re-planning, and driver-side projections, whose
+  * generated classes need no Spark job. */
 class SparkMeterSpec extends AnyFunSuite with SparkTestSession {
 
   private def measure[T](body: => T) =
     SparkMeter.measure(spark.sparkContext)(body)
+
+  /** Builds and runs one generated projection per expression. Each
+    * literal is inlined in the generated code, so each is its own class. */
+  private def project(exprs: Seq[Expression]): Unit = exprs.foreach { e =>
+    assert(UnsafeProjection.create(Seq(e))(InternalRow(1L)).getLong(0) ==
+      e.eval(InternalRow(1L)))
+  }
+
+  private def plus(i: Long) = Add(BoundReference(0, LongType, nullable = false),
+    Literal(i))
 
   test("a driver-local action does no Spark work") {
     import spark.implicits._
@@ -51,5 +66,27 @@ class SparkMeterSpec extends AnyFunSuite with SparkTestSession {
     assert(outer.shuffleWriteBytes > inner.shuffleWriteBytes &&
       outer.shuffleReadBytes > inner.shuffleReadBytes, s"$outer vs $inner")
     assert(outer.wallS >= inner.wallS, s"$outer vs $inner")
+  }
+
+  test("the factory's generated-class cache holds a 150-class pass, so " +
+      "the second pass compiles nothing") {
+    // Spark sizes the cache from the active session's conf when the JVM
+    // first generates code; `measure` builds the factory session before
+    // its body runs
+    val pass = (0L until 150L).map(i => plus(7_000_000L + i))
+    val (_, first) = measure(project(pass))
+    val (_, second) = measure(project(pass))
+    assert(first.compiles >= 150 && second.compiles == 0, s"$first then $second")
+  }
+
+  test("a compiled projection counts no compile, a first-seen one counts") {
+    val e = plus(8_000_000L)
+    project(Seq(e))
+    val (_, again) = measure(project(Seq(e)))
+    assert(again.compiles == 0, again)
+    val (_, fresh) = measure(project(Seq(
+      Subtract(BoundReference(0, LongType, nullable = false),
+        Literal(8_000_001L)))))
+    assert(fresh.compiles >= 1 && fresh.jobs == 0, fresh)
   }
 }
